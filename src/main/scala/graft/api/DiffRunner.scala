@@ -1,6 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
@@ -14,10 +18,16 @@ import graft.sources.SourceProvider
   * DiffJob.java:73-84).
   *
   * Lifecycle (mirrors SURVEY §3.1 steps 2-9, minus what Catalyst now owns):
-  *  1. acquire the run lock (O21)
-  *  2. per table: rangeStats + mismatches as ONE lazily-planned query each
-  *  3. journal: task_status (bucket progress), mismatches, job_results
-  *  4. release lock; post-hook gets the final per-table stats
+  *  1. acquire the run lock (O21); restore stored params; journal
+  *     job_summary + table_params
+  *  2. tables run concurrently, at most `defaultParallelism` at once (the
+  *     reference compares every table of a split in one executor task,
+  *     Differ.java:150-236): per table, partition stats as ONE persisted
+  *     query; its journal writes keep their order — mismatches, then
+  *     task_status (bucket progress), then bucket digests, then reverse
+  *     checks and job_results
+  *  3. once EVERY table has ended: metrics, post-hooks (final per-table
+  *     stats), lock release — a failed table rethrows only then
   */
 final case class DiffJobConfig(
     jobId: String,
@@ -186,272 +196,11 @@ final class DiffRunner(
               t.uniqueKey))
           .toDF("job_id", "table_name", "pk", "clustering", "regular",
             "unique_key"))
-      val results = tables.map { spec0 =>
-        require(spec0.pk.nonEmpty,
-          s"table ${spec0.table}: partition key columns must be declared")
-        val spec = spec0.bind(source.table(spark, spec0.table))
-        // O15: quarantine structurally invalid rows per side (origin
-        // tagged), journal them, diff the clean remainder
-        val sq = graft.engine.Quarantine.split(source.table(spark, spec.table), spec, "source")
-        val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
-        store.write("errors",
-          sq.errors.unionByName(tq.errors)
-            .withColumn("table_name", lit(spec.table))
-            .withColumn("job_id", lit(config.jobId)))
-        // O12 resume: completed buckets of a previous run of this job are
-        // skipped (rerun=true re-compares them — Differ.java:166-171)
-        val journal =
-          if (store.exists("task_status")) {
-            // latest row per bucket: after a rerun the append-only journal
-            // holds one row per bucket PER RUN, and feeding duplicates to
-            // the per-row pending join would replicate input rows
-            import org.apache.spark.sql.expressions.Window
-            val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-            store.read("task_status")
-              .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
-              .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-              .select(col("bucket"), col("status"), col("last_token"))
-          } else spark.emptyDataFrame
-        val resuming = journal.columns.nonEmpty && !journal.isEmpty
-        // The pending test is a pure per-row predicate of the key (token =
-        // f(pk), bucket = pmod(token), journal lookup per bucket), so it is
-        // applied directly to each side with a BROADCAST join against the
-        // journal (≤ options.buckets rows) — the earlier key-scan +
-        // semi-join shape scanned every input twice per side just to
-        // rediscover values derivable row-by-row.
-        def onlyPending(df: DataFrame): DataFrame =
-          if (!resuming || config.rerun || config.incremental) df
-          else {
-            val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-            val bucketed = keyed.withColumn("__bucket",
-              DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
-            Resume.pending(bucketed, broadcast(journal), config.rerun,
-                tokenCol = "__token", bucketCol = "__bucket")
-              .drop("__token", "__bucket")
-          }
-        val fsrc = DiffEngine.applyTokenFilters(onlyPending(sq.valid), spec,
-          options, token)
-        val ftgt = DiffEngine.applyTokenFilters(onlyPending(tq.valid), spec,
-          options, token)
-        // Incremental mode: digest both sides at the journal-bucket
-        // granularity (digest bucket rule == task_status bucket rule, so
-        // the latest-per-bucket totals below replay unchanged buckets from
-        // the previous run), restrict the diff to changed buckets, and
-        // journal this run's digests for the next one. The unchanged set
-        // is ≤ options.buckets longs — collected and re-broadcast rather
-        // than left lazy so the digest pass runs exactly once.
-        val curDigests =
-          if (config.incremental)
-            Some(DiffEngine.sideDigests(fsrc, ftgt, spec, options.buckets,
-              token).persist())
-          else None
-        val priorDigests = curDigests.flatMap { _ =>
-          if (!store.exists("bucket_digests")) None
-          else {
-            import org.apache.spark.sql.expressions.Window
-            val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-            Some(store.read("bucket_digests", mergeSchema = true)
-              .filter(col("job_id") === config.jobId &&
-                col("table_name") === spec.table)
-              .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1))
-          }
-        }
-        val unchangedBuckets: Seq[Long] = (curDigests, priorDigests) match {
-          case (Some(cur), Some(prior)) =>
-            DiffEngine.unchangedDigestBuckets(cur, prior)
-              .as[Long].collect().toSeq
-          case _ => Nil
-        }
-        // RETIRED buckets: journaled last run, gone from both sides now.
-        // They take the fresh path (no current rows ⇒ an empty diff), but
-        // with no partitionStats rows they would never get a new journal
-        // row and the latest-per-bucket totals would replay their stale
-        // counters forever — so they get explicit zero rows below.
-        val retiredBuckets: Seq[Long] = (curDigests, priorDigests) match {
-          case (Some(cur), Some(prior)) =>
-            prior.select("bucket").as[Long].collect().toSeq
-              .diff(cur.select("bucket").as[Long].collect().toSeq)
-          case _ => Nil
-        }
-        def changedOnly(df: DataFrame): DataFrame =
-          if (unchangedBuckets.isEmpty) df
-          else {
-            val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-            val bucketed = keyed.withColumn("__bucket",
-              DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
-            bucketed.join(
-                broadcast(unchangedBuckets.toDF("__same_bucket")),
-                col("__bucket") === col("__same_bucket"), "left_anti")
-              .drop("__token", "__bucket")
-          }
-        // digest-first fast path: persisted so its two consumers (the
-        // dirty-set collect and the clean journal rows) run the narrow
-        // digest aggregation once. The dirty set is ≤ options.buckets
-        // longs — collected and re-broadcast like the incremental path's
-        // unchanged set.
-        val digestPre =
-          if (config.digestFirst)
-            Some(DiffEngine.digestProgress(changedOnly(fsrc),
-              changedOnly(ftgt), spec, options.buckets, token).persist())
-          else None
-        val dirtySet: Seq[Long] = digestPre match {
-          case Some(d) => d.filter(!col("digest_match"))
-            .select(col("bucket").cast("long")).as[Long].collect().toSeq
-          case None => Nil
-        }
-        def dirtyOnly(df: DataFrame): DataFrame = digestPre match {
-          case None => df
-          case Some(_) =>
-            val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-            val bucketed = keyed.withColumn("__bucket",
-              DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
-            bucketed.join(broadcast(dirtySet.toDF("__dirty_bucket")),
-                col("__bucket") === col("__dirty_bucket"), "left_semi")
-              .drop("__token", "__bucket")
-        }
-        val src = dirtyOnly(changedOnly(fsrc))
-        val tgt = dirtyOnly(changedOnly(ftgt))
-        // ONE diff computation per table: persist the per-partition stats
-        // and derive progress, mismatches and totals from it (without the
-        // persist, each journal sink would re-run the join+agg)
-        val ps = DiffEngine.partitionStats(src, tgt, spec, token,
-          tolerances = config.tolerances.getOrElse(spec.table, Map.empty))
-          .persist()
-        try {
-          val runTs = System.currentTimeMillis()
-          // checkpoint ordering mirrors the reference (mismatches recorded
-          // BEFORE a range is marked complete, RangeComparator.java:201-241):
-          // a crash between the writes must re-compare, never lose records.
-          // journal datasets are partitioned by job_id so per-job endpoint
-          // filters prune at the directory level.
-          store.write("mismatches",
-            DiffEngine.mismatchesFromPartitions(ps, spec, options.buckets)
-              .select("table_name", "bucket", "token", "mismatch_type")
-              .withColumn("job_id", lit(config.jobId))
-              .withColumn("run_ts", lit(runTs)),
-            partitionBy = Seq("job_id"))
-          // repair script: recorded with the mismatches (same
-          // crash-safety rule — never after the range is marked done).
-          // Normalized to (token, action, statement) so the journal
-          // dataset has ONE schema across tables with different keys;
-          // token is the same per-partition address the mismatch rows
-          // carry, so an operator can join script rows to mismatch rows.
-          if (config.repair)
-            store.write("repair_scripts",
-              graft.engine.Repair.repairStatements(src, tgt, spec)
-                .withColumn("token", token(spec.pk.map(col)))
-                .select(col("token"), col("action"), col("statement"))
-                .withColumn("table_name", lit(spec.table))
-                .withColumn("job_id", lit(config.jobId))
-                .withColumn("run_ts", lit(runTs)),
-              partitionBy = Seq("job_id"))
-          // with digestFirst, ps covers only dirty buckets — clean
-          // buckets journal their digest-derived arithmetic rows
-          val progress = {
-            val fromDiff =
-              DiffEngine.bucketProgressFromPartitions(ps, spec, options.buckets)
-            digestPre match {
-              case Some(d) => fromDiff.unionByName(
-                d.filter(col("digest_match")).drop("digest_match"))
-              case None => fromDiff
-            }
-          }
-          store.write("task_status", progress
-              .withColumn("status", lit("done"))
-              .withColumn("job_id", lit(config.jobId))
-              .withColumn("run_ts", lit(runTs)),
-            partitionBy = Seq("job_id"))
-          // retired buckets (journaled before, empty on both sides now)
-          // get explicit zero rows so the latest-per-bucket totals stop
-          // replaying their stale counters
-          if (retiredBuckets.nonEmpty) {
-            val tokenType = fsrc
-              .select(token(spec.pk.map(col)).as("__t")).schema("__t").dataType
-            var zero = retiredBuckets.toDF("bucket")
-            Seq("matched_partitions", "mismatched_partitions",
-              "only_in_source", "only_in_target", "matched_rows",
-              "matched_values", "mismatched_values")
-              .foreach(c => zero = zero.withColumn(c, lit(0L)))
-            store.write("task_status", zero
-              .withColumn("last_token", lit(null).cast(tokenType))
-              .withColumn("table_name", lit(spec.table))
-              .withColumn("status", lit("done"))
-              .withColumn("job_id", lit(config.jobId))
-              .withColumn("run_ts", lit(runTs)),
-              partitionBy = Seq("job_id"))
-          }
-          // digests are journaled LAST: a crash before this point leaves
-          // the OLD digests in place, so the next incremental run still
-          // sees the affected buckets as changed and re-compares them —
-          // writing digests first would instead mask a half-journaled run
-          // as fully unchanged and lose its records permanently
-          curDigests.foreach { cur =>
-            store.write("bucket_digests", cur
-              .withColumn("table_name", lit(spec.table))
-              .withColumn("job_id", lit(config.jobId))
-              .withColumn("run_ts", lit(runTs)),
-              partitionBy = Seq("job_id"))
-            cur.unpersist()
-          }
-          // O3: the sampled reverse-read validation pass
-          // (DiffContext.java:54-57) — re-compare sampled partitions with
-          // reversed duplicate pairing; journal any verdict disagreement
-          if (options.reverseReadProbability > 0.0)
-            store.write("reverse_checks",
-              DiffEngine.reverseValidation(src, tgt, spec,
-                  options.reverseReadProbability, token)
-                .filter(!col("agree"))
-                .select(col("token"), col("fwd_classification"),
-                  col("rev_classification"))
-                .withColumn("table_name", lit(spec.table))
-                .withColumn("job_id", lit(config.jobId))
-                .withColumn("run_ts", lit(runTs)),
-              partitionBy = Seq("job_id"))
-          // whole-job totals: newest journal row per bucket across ALL runs
-          // of this job_id (a resumed run's own frame covers only the
-          // pending remainder; the journal carries the rest)
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-          val latest = store.read("task_status")
-            .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
-            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          val counters = Seq("matched_partitions", "mismatched_partitions",
-            "only_in_source", "only_in_target", "matched_rows",
-            "matched_values", "mismatched_values")
-          val sums = counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
-          val totalsRow = latest.agg(sums.head, sums.tail: _*).collect()(0)
-          val skippedRow =
-            if (options.disallowedTokens.isEmpty && !options.samplingEnabled &&
-              options.specificTokens.isEmpty) 0L
-            else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
-              token).count()
-          val stats = RangeStats(
-            matchedPartitions = totalsRow.getAs[Long]("matched_partitions"),
-            mismatchedPartitions = totalsRow.getAs[Long]("mismatched_partitions"),
-            onlyInSource = totalsRow.getAs[Long]("only_in_source"),
-            onlyInTarget = totalsRow.getAs[Long]("only_in_target"),
-            matchedRows = totalsRow.getAs[Long]("matched_rows"),
-            matchedValues = totalsRow.getAs[Long]("matched_values"),
-            mismatchedValues = totalsRow.getAs[Long]("mismatched_values"),
-            skippedPartitions = skippedRow)
-          import spark.implicits._
-          store.write("job_results", Seq((
-            config.jobId, spec.table, runTs,
-            stats.matchedPartitions, stats.mismatchedPartitions,
-            stats.onlyInSource, stats.onlyInTarget, stats.matchedRows,
-            stats.matchedValues, stats.mismatchedValues, stats.skippedPartitions))
-            .toDF("job_id", "table_name", "run_ts",
-              "matched_partitions", "mismatched_partitions", "only_in_source",
-              "only_in_target", "matched_rows", "matched_values",
-              "mismatched_values", "skipped_partitions"),
-            partitionBy = Seq("job_id"))
-          spec.table -> stats
-        } finally {
-          ps.unpersist()
-          digestPre.foreach(_.unpersist())
-          curDigests.foreach(_.unpersist()) // no-op if already freed
-        }
-      }.toMap
+      // tables run concurrently: one table's driver-side planning, file
+      // publishing and small-job scheduling overlap the other's tasks
+      val results = DiffRunner.concurrently(tables,
+        spark.sparkContext.defaultParallelism)(
+        diffTable(store, options, token, _)).toMap
       // metrics parity: the reference's per-table counter series
       // (Differ.updateMetrics) as named Spark accumulators
       results.foreach { case (table, stats) =>
@@ -460,5 +209,307 @@ final class DiffRunner(
       postJobHooks.foreach(_(results))
       results
     } finally store.releaseRunLock(config.jobId)
+  }
+
+  /** One table's pipeline: quarantine → resume/digest restrictions →
+    * persisted partitionStats → journal sinks → totals. Its journal
+    * writes keep the reference's order: mismatches (and the repair
+    * script), then task_status, then bucket digests last.
+    */
+  private def diffTable(store: MetadataStore, options: DiffOptions,
+      token: Seq[Column] => Column, spec0: TableSpec): (String, RangeStats) = {
+    import spark.implicits._
+    // every frame this table persists, freed however the table ends
+    val persisted = ListBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = { persisted += df; df.persist() }
+    try {
+      require(spec0.pk.nonEmpty,
+        s"table ${spec0.table}: partition key columns must be declared")
+      val spec = spec0.bind(source.table(spark, spec0.table))
+      // O15: quarantine structurally invalid rows per side (origin
+      // tagged), journal them, diff the clean remainder
+      val sq = graft.engine.Quarantine.split(source.table(spark, spec.table), spec, "source")
+      val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
+      store.write("errors",
+        sq.errors.unionByName(tq.errors)
+          .withColumn("table_name", lit(spec.table))
+          .withColumn("job_id", lit(config.jobId)))
+      // O12 resume: completed buckets of a previous run of this job are
+      // skipped (rerun=true re-compares them — Differ.java:166-171)
+      val journal =
+        if (store.exists("task_status")) {
+          // latest row per bucket: after a rerun the append-only journal
+          // holds one row per bucket PER RUN, and feeding duplicates to
+          // the per-row pending join would replicate input rows
+          import org.apache.spark.sql.expressions.Window
+          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
+          store.read("task_status")
+            .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
+            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+            .select(col("bucket"), col("status"), col("last_token"))
+        } else spark.emptyDataFrame
+      val resuming = journal.columns.nonEmpty && !journal.isEmpty
+      // The pending test is a pure per-row predicate of the key (token =
+      // f(pk), bucket = pmod(token), journal lookup per bucket), so it is
+      // applied directly to each side with a BROADCAST join against the
+      // journal (≤ options.buckets rows) — the earlier key-scan +
+      // semi-join shape scanned every input twice per side just to
+      // rediscover values derivable row-by-row.
+      def onlyPending(df: DataFrame): DataFrame =
+        if (!resuming || config.rerun || config.incremental) df
+        else {
+          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
+          val bucketed = keyed.withColumn("__bucket",
+            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
+          Resume.pending(bucketed, broadcast(journal), config.rerun,
+              tokenCol = "__token", bucketCol = "__bucket")
+            .drop("__token", "__bucket")
+        }
+      val fsrc = DiffEngine.applyTokenFilters(onlyPending(sq.valid), spec,
+        options, token)
+      val ftgt = DiffEngine.applyTokenFilters(onlyPending(tq.valid), spec,
+        options, token)
+      // Incremental mode: digest both sides at the journal-bucket
+      // granularity (digest bucket rule == task_status bucket rule, so
+      // the latest-per-bucket totals below replay unchanged buckets from
+      // the previous run), restrict the diff to changed buckets, and
+      // journal this run's digests for the next one. The unchanged set
+      // is ≤ options.buckets longs — collected and re-broadcast rather
+      // than left lazy so the digest pass runs exactly once.
+      val curDigests =
+        if (config.incremental)
+          Some(persist(DiffEngine.sideDigests(fsrc, ftgt, spec,
+            options.buckets, token)))
+        else None
+      val priorDigests = curDigests.flatMap { _ =>
+        if (!store.exists("bucket_digests")) None
+        else {
+          import org.apache.spark.sql.expressions.Window
+          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
+          Some(store.read("bucket_digests", mergeSchema = true)
+            .filter(col("job_id") === config.jobId &&
+              col("table_name") === spec.table)
+            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1))
+        }
+      }
+      val unchangedBuckets: Seq[Long] = (curDigests, priorDigests) match {
+        case (Some(cur), Some(prior)) =>
+          DiffEngine.unchangedDigestBuckets(cur, prior)
+            .as[Long].collect().toSeq
+        case _ => Nil
+      }
+      // RETIRED buckets: journaled last run, gone from both sides now.
+      // They take the fresh path (no current rows ⇒ an empty diff), but
+      // with no partitionStats rows they would never get a new journal
+      // row and the latest-per-bucket totals would replay their stale
+      // counters forever — so they get explicit zero rows below.
+      val retiredBuckets: Seq[Long] = (curDigests, priorDigests) match {
+        case (Some(cur), Some(prior)) =>
+          prior.select("bucket").as[Long].collect().toSeq
+            .diff(cur.select("bucket").as[Long].collect().toSeq)
+        case _ => Nil
+      }
+      def changedOnly(df: DataFrame): DataFrame =
+        if (unchangedBuckets.isEmpty) df
+        else {
+          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
+          val bucketed = keyed.withColumn("__bucket",
+            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
+          bucketed.join(
+              broadcast(unchangedBuckets.toDF("__same_bucket")),
+              col("__bucket") === col("__same_bucket"), "left_anti")
+            .drop("__token", "__bucket")
+        }
+      // digest-first fast path: persisted so its two consumers (the
+      // dirty-set collect and the clean journal rows) run the narrow
+      // digest aggregation once. The dirty set is ≤ options.buckets
+      // longs — collected and re-broadcast like the incremental path's
+      // unchanged set.
+      val digestPre =
+        if (config.digestFirst)
+          Some(persist(DiffEngine.digestProgress(changedOnly(fsrc),
+            changedOnly(ftgt), spec, options.buckets, token)))
+        else None
+      val dirtySet: Seq[Long] = digestPre match {
+        case Some(d) => d.filter(!col("digest_match"))
+          .select(col("bucket").cast("long")).as[Long].collect().toSeq
+        case None => Nil
+      }
+      def dirtyOnly(df: DataFrame): DataFrame = digestPre match {
+        case None => df
+        case Some(_) =>
+          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
+          val bucketed = keyed.withColumn("__bucket",
+            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
+          bucketed.join(broadcast(dirtySet.toDF("__dirty_bucket")),
+              col("__bucket") === col("__dirty_bucket"), "left_semi")
+            .drop("__token", "__bucket")
+      }
+      val src = dirtyOnly(changedOnly(fsrc))
+      val tgt = dirtyOnly(changedOnly(ftgt))
+      // ONE diff computation per table: persist the per-partition stats
+      // and derive progress, mismatches and totals from it (without the
+      // persist, each journal sink would re-run the join+agg)
+      val ps = persist(DiffEngine.partitionStats(src, tgt, spec, token,
+        tolerances = config.tolerances.getOrElse(spec.table, Map.empty)))
+      val runTs = System.currentTimeMillis()
+      // checkpoint ordering mirrors the reference (mismatches recorded
+      // BEFORE a range is marked complete, RangeComparator.java:201-241):
+      // a crash between the writes must re-compare, never lose records.
+      // journal datasets are partitioned by job_id so per-job endpoint
+      // filters prune at the directory level.
+      store.write("mismatches",
+        DiffEngine.mismatchesFromPartitions(ps, spec, options.buckets)
+          .select("table_name", "bucket", "token", "mismatch_type")
+          .withColumn("job_id", lit(config.jobId))
+          .withColumn("run_ts", lit(runTs)),
+        partitionBy = Seq("job_id"))
+      // repair script: recorded with the mismatches (same
+      // crash-safety rule — never after the range is marked done).
+      // Normalized to (token, action, statement) so the journal
+      // dataset has ONE schema across tables with different keys;
+      // token is the same per-partition address the mismatch rows
+      // carry, so an operator can join script rows to mismatch rows.
+      if (config.repair)
+        store.write("repair_scripts",
+          graft.engine.Repair.repairStatements(src, tgt, spec)
+            .withColumn("token", token(spec.pk.map(col)))
+            .select(col("token"), col("action"), col("statement"))
+            .withColumn("table_name", lit(spec.table))
+            .withColumn("job_id", lit(config.jobId))
+            .withColumn("run_ts", lit(runTs)),
+          partitionBy = Seq("job_id"))
+      // with digestFirst, ps covers only dirty buckets — clean
+      // buckets journal their digest-derived arithmetic rows
+      val progress = {
+        val fromDiff =
+          DiffEngine.bucketProgressFromPartitions(ps, spec, options.buckets)
+        digestPre match {
+          case Some(d) => fromDiff.unionByName(
+            d.filter(col("digest_match")).drop("digest_match"))
+          case None => fromDiff
+        }
+      }
+      store.write("task_status", progress
+          .withColumn("status", lit("done"))
+          .withColumn("job_id", lit(config.jobId))
+          .withColumn("run_ts", lit(runTs)),
+        partitionBy = Seq("job_id"))
+      // retired buckets (journaled before, empty on both sides now)
+      // get explicit zero rows so the latest-per-bucket totals stop
+      // replaying their stale counters
+      if (retiredBuckets.nonEmpty) {
+        val tokenType = fsrc
+          .select(token(spec.pk.map(col)).as("__t")).schema("__t").dataType
+        var zero = retiredBuckets.toDF("bucket")
+        Seq("matched_partitions", "mismatched_partitions",
+          "only_in_source", "only_in_target", "matched_rows",
+          "matched_values", "mismatched_values")
+          .foreach(c => zero = zero.withColumn(c, lit(0L)))
+        store.write("task_status", zero
+          .withColumn("last_token", lit(null).cast(tokenType))
+          .withColumn("table_name", lit(spec.table))
+          .withColumn("status", lit("done"))
+          .withColumn("job_id", lit(config.jobId))
+          .withColumn("run_ts", lit(runTs)),
+          partitionBy = Seq("job_id"))
+      }
+      // digests are journaled LAST: a crash before this point leaves
+      // the OLD digests in place, so the next incremental run still
+      // sees the affected buckets as changed and re-compares them —
+      // writing digests first would instead mask a half-journaled run
+      // as fully unchanged and lose its records permanently
+      curDigests.foreach { cur =>
+        store.write("bucket_digests", cur
+          .withColumn("table_name", lit(spec.table))
+          .withColumn("job_id", lit(config.jobId))
+          .withColumn("run_ts", lit(runTs)),
+          partitionBy = Seq("job_id"))
+      }
+      // O3: the sampled reverse-read validation pass
+      // (DiffContext.java:54-57) — re-compare sampled partitions with
+      // reversed duplicate pairing; journal any verdict disagreement
+      if (options.reverseReadProbability > 0.0)
+        store.write("reverse_checks",
+          DiffEngine.reverseValidation(src, tgt, spec,
+              options.reverseReadProbability, token)
+            .filter(!col("agree"))
+            .select(col("token"), col("fwd_classification"),
+              col("rev_classification"))
+            .withColumn("table_name", lit(spec.table))
+            .withColumn("job_id", lit(config.jobId))
+            .withColumn("run_ts", lit(runTs)),
+          partitionBy = Seq("job_id"))
+      // whole-job totals: newest journal row per bucket across ALL runs
+      // of this job_id (a resumed run's own frame covers only the
+      // pending remainder; the journal carries the rest)
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
+      val latest = store.read("task_status")
+        .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      val counters = Seq("matched_partitions", "mismatched_partitions",
+        "only_in_source", "only_in_target", "matched_rows",
+        "matched_values", "mismatched_values")
+      val sums = counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
+      val totalsRow = latest.agg(sums.head, sums.tail: _*).collect()(0)
+      val skippedRow =
+        if (options.disallowedTokens.isEmpty && !options.samplingEnabled &&
+          options.specificTokens.isEmpty) 0L
+        else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
+          token).count()
+      val stats = RangeStats(
+        matchedPartitions = totalsRow.getAs[Long]("matched_partitions"),
+        mismatchedPartitions = totalsRow.getAs[Long]("mismatched_partitions"),
+        onlyInSource = totalsRow.getAs[Long]("only_in_source"),
+        onlyInTarget = totalsRow.getAs[Long]("only_in_target"),
+        matchedRows = totalsRow.getAs[Long]("matched_rows"),
+        matchedValues = totalsRow.getAs[Long]("matched_values"),
+        mismatchedValues = totalsRow.getAs[Long]("mismatched_values"),
+        skippedPartitions = skippedRow)
+      store.write("job_results", Seq((
+        config.jobId, spec.table, runTs,
+        stats.matchedPartitions, stats.mismatchedPartitions,
+        stats.onlyInSource, stats.onlyInTarget, stats.matchedRows,
+        stats.matchedValues, stats.mismatchedValues, stats.skippedPartitions))
+        .toDF("job_id", "table_name", "run_ts",
+          "matched_partitions", "mismatched_partitions", "only_in_source",
+          "only_in_target", "matched_rows", "matched_values",
+          "mismatched_values", "skipped_partitions"),
+        partitionBy = Seq("job_id"))
+      spec.table -> stats
+    } finally persisted.foreach(_.unpersist())
+  }
+}
+
+object DiffRunner {
+
+  /** `body` over every table on a pool this call creates and shuts down,
+    * `min(tables, parallelism)` threads. The calling thread submits every
+    * task and so creates every worker, which inherits its Spark local
+    * properties (job group, scheduler pool) — cancelling the caller's job
+    * group cancels the tables too. Returns only once every table has
+    * ended; the first failure in table order is rethrown with the others
+    * attached as suppressed.
+    */
+  private def concurrently[T](tables: Seq[TableSpec], parallelism: Int)(
+      body: TableSpec => T): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tables.size, parallelism)))
+    try {
+      val outcomes = tables
+        .map(t => pool.submit(new Callable[T] { def call(): T = body(t) }))
+        .map { f =>
+          try Right(f.get())
+          catch { case e: ExecutionException => Left(e.getCause) }
+        }
+      outcomes.collect { case Left(e) => e } match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => outcomes.collect { case Right(v) => v }
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 }

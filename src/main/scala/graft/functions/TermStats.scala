@@ -449,7 +449,9 @@ object TermStats {
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     for (r <- 1 to nMerges) {
       val syms = split(trim(col("s"), "⟨⟩"), "⟩⟨")
-      val best = vocab
+      // a fully merged word (one symbol) has no pairs: without the filter
+      // sequence(1, 0) counts DOWN and element_at reads index 0
+      val best = vocab.filter(size(syms) > 1)
         .select(col("c"), explode(
             transform(sequence(lit(1), size(syms) - 1), i =>
               struct(element_at(syms, i).as("a"),

@@ -34,27 +34,40 @@ final class MetadataStore(val root: String,
 
   private def path(table: String): String = s"$root/$table"
 
+  /** Append `df` to the journal dataset `table` in one pass over `df`.
+    * A dynamic-partition write of an EMPTY frame emits no files at all,
+    * leaving a directory spark.read cannot infer a schema from (the
+    * healthy outcomes — clean diff ⇒ empty mismatches, agreeing reverse
+    * checks — hit exactly this). So when the append published no part
+    * file, the schema is recorded in a `_schema` sidecar instead
+    * (underscore-prefixed dirs are invisible to Spark's file index, so
+    * later real appends are unaffected); `read` falls back to it when the
+    * dataset holds no data files.
+    */
   def write(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit =
-    if (partitionBy.isEmpty)
-      appendAtomic(table, df, Nil)
-    else {
-      // a dynamic-partition write of an EMPTY frame emits no files at all,
-      // leaving a directory spark.read cannot infer a schema from (the
-      // healthy outcomes — clean diff ⇒ empty mismatches, agreeing reverse
-      // checks — hit exactly this). Record the schema in a `_schema`
-      // sidecar instead (underscore-prefixed dirs are invisible to Spark's
-      // file index, so later real appends are unaffected); `read` falls
-      // back to it when the dataset holds no data files.
-      val materialized = df.persist()
-      try {
-        if (materialized.isEmpty)
-          retry.retry(s"journal schema marker $table") {
-            materialized.limit(0).write.mode(SaveMode.Overwrite)
-              .parquet(path(table) + "/_schema")
-          }
-        else appendAtomic(table, materialized, partitionBy)
-      } finally materialized.unpersist()
+    if (appendAtomic(table, df, partitionBy) == 0) writeSchemaMarker(table, df)
+
+  /** Concurrent writers of the same empty dataset each stage the marker
+    * in a write-unique hidden dir and rename it into place; the first
+    * rename wins and the others drop their copy (every copy carries the
+    * same schema).
+    */
+  private def writeSchemaMarker(table: String, df: DataFrame): Unit = {
+    val marker = Paths.get(path(table), "_schema")
+    if (!Files.exists(marker)) {
+      val staged =
+        Paths.get(path(table), s".schema-${java.util.UUID.randomUUID}")
+      retry.retry(s"journal schema marker $table") {
+        df.limit(0).write.mode(SaveMode.Overwrite).parquet(staged.toString)
+      }
+      try Files.move(staged, marker)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException |
+            _: java.nio.file.DirectoryNotEmptyException =>
+          deleteRecursively(staged)
+      }
     }
+  }
 
   /** Retry-safe append. A raw `SaveMode.Append` is NOT idempotent under
     * [[RetryPolicy]]: an attempt that dies after (or during) job commit can
@@ -67,10 +80,11 @@ final class MetadataStore(val root: String,
     * fully-successful attempt is published by renaming the staged part
     * files into the dataset (driver-local metadata moves, no data rewrite;
     * dot-prefixed dirs are invisible to Spark's file index, so a crashed
-    * attempt's leftover staging is inert until cleaned).
+    * attempt's leftover staging is inert until cleaned). Returns the
+    * number of parquet part files published.
     */
   private def appendAtomic(table: String, df: DataFrame,
-      partitionBy: Seq[String]): Unit = {
+      partitionBy: Seq[String]): Int = {
     val staging =
       Paths.get(path(table), s".staging-${java.util.UUID.randomUUID}")
     retry.retry(s"journal write $table") {
@@ -90,10 +104,11 @@ final class MetadataStore(val root: String,
   }
 
   /** Move staged parquet files (keeping their partition subdirs) into the
-    * live dataset, then drop the staging tree. Part-file names carry a
-    * per-write UUID, so renames cannot collide with existing data.
+    * live dataset, then drop the staging tree; returns how many were
+    * moved. Part-file names carry a per-write UUID, so renames cannot
+    * collide with existing data.
     */
-  private def publish(staging: Path, dest: Path): Unit = {
+  private def publish(staging: Path, dest: Path): Int = {
     Files.createDirectories(dest)
     val walk = Files.walk(staging)
     val parts =
@@ -109,6 +124,7 @@ final class MetadataStore(val root: String,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     deleteRecursively(staging)
+    parts.size
   }
 
   private def deleteRecursively(dir: Path): Unit = {
@@ -129,7 +145,7 @@ final class MetadataStore(val root: String,
   def read(table: String, mergeSchema: Boolean): DataFrame = {
     val base = Paths.get(path(table))
     val marker = base.resolve("_schema")
-    if (Files.exists(marker) && !hasDataFiles(base, marker))
+    if (Files.exists(marker) && !hasDataFiles(base))
       spark.read.parquet(marker.toString)
     else
       spark.read.option("mergeSchema", mergeSchema.toString)
@@ -138,22 +154,45 @@ final class MetadataStore(val root: String,
 
   /** Any parquet data file Spark's file index would actually see — i.e.
     * outside the `_schema` sidecar and outside hidden (`.`/`_`-prefixed)
-    * dirs such as a crashed attempt's `.staging-*` leftovers?
+    * dirs such as other writers' `.staging-*` dirs? Hidden subtrees are
+    * never entered, and an entry that vanishes mid-walk (a concurrent
+    * writer dropping its staging dir) is skipped.
     */
-  private def hasDataFiles(base: Path, marker: Path): Boolean = {
-    val walk = Files.walk(base)
-    try walk.anyMatch { f =>
-      val rel = base.relativize(f)
-      f.toString.endsWith(".parquet") && !f.startsWith(marker) &&
-        (0 until rel.getNameCount).forall { i =>
-          val n = rel.getName(i).toString
-          !n.startsWith(".") && !n.startsWith("_")
-        }
+  private def hasDataFiles(base: Path): Boolean = {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    var found = false
+    def hidden(p: Path): Boolean = p != base && {
+      val n = p.getFileName.toString
+      n.startsWith(".") || n.startsWith("_")
     }
-    finally walk.close()
+    Files.walkFileTree(base, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path,
+          a: BasicFileAttributes): FileVisitResult =
+        if (hidden(d)) FileVisitResult.SKIP_SUBTREE
+        else FileVisitResult.CONTINUE
+      override def visitFile(f: Path,
+          a: BasicFileAttributes): FileVisitResult =
+        if (!hidden(f) && f.toString.endsWith(".parquet")) {
+          found = true; FileVisitResult.TERMINATE
+        } else FileVisitResult.CONTINUE
+      override def visitFileFailed(f: Path,
+          e: java.io.IOException): FileVisitResult = e match {
+        case _: NoSuchFileException => FileVisitResult.CONTINUE
+        case _ => throw e
+      }
+    })
+    found
   }
 
-  def exists(table: String): Boolean = Files.exists(Paths.get(path(table)))
+  /** Is there a readable dataset — data files, or the schema marker of
+    * one whose appends were all empty? A directory holding only other
+    * writers' in-flight staging does not count.
+    */
+  def exists(table: String): Boolean = {
+    val base = Paths.get(path(table))
+    Files.exists(base.resolve("_schema")) || hasDataFiles(base)
+  }
 
   def readOrEmpty(table: String, schemaOf: => DataFrame): DataFrame =
     if (exists(table)) read(table) else schemaOf.limit(0)

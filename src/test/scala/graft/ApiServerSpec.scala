@@ -12,7 +12,7 @@ import graft.engine.Perturb
 import graft.journal.MetadataStore
 import graft.sources.{FormatSource, ParquetSource, SourceProvider}
 
-class ApiServerSpec extends SparkSpec {
+class ApiServerSpec extends SparkSpec with NoLeakedPersists {
 
   test("HTTP results server serves journal queries as JSON") {
     implicit val s: SparkSession = spark

@@ -12,7 +12,7 @@ import graft.sources.CqlSchema.{Clustering, CqlColumn, PartitionKey, Regular, St
   * would serve) — plus a full offline diff driven end-to-end by the
   * discovered specs over a parquet stand-in.
   */
-class CassandraSourceSpec extends SparkSpec {
+class CassandraSourceSpec extends SparkSpec with NoLeakedPersists {
 
   test("CQL scalar types map to their Catalyst equivalents") {
     val want = Map(

@@ -2102,6 +2102,26 @@ class DedupSimilaritySpec extends SparkSpec {
       (4L, "l", "o", 7L)))
   }
 
+  test("BPE merge learning: a fully merged word offers no more pairs") {
+    import graft.functions.TermStats
+    // ab×5 cd×3. Round 1 ties (a,b)=(b,/w)=5 → (a,b); round 2 (ab,/w)=5
+    // leaves ab as the single symbol ⟨ab/w⟩, which must drop out of the
+    // pair count; rounds 3-4 then merge cd the same way.
+    val text = (Seq.fill(5)("ab") ++ Seq.fill(3)("cd")).mkString(" ")
+    val df = Seq((1L, text)).toDF("doc_id", "text")
+    val got = TermStats.bpeLearnMerges(df, "text", nMerges = 4)
+      .as[(Long, String, String, Long)].collect().sortBy(_._1).toList
+    assert(got === List(
+      (1L, "a", "b", 5L),
+      (2L, "ab", "/w", 5L),
+      (3L, "c", "d", 3L),
+      (4L, "cd", "/w", 3L)))
+    // both words end as one token each
+    val enc = TermStats.bpeEncodeStats(df, "doc_id", "text", nMerges = 4)
+      .select("n_words", "n_bpe_tokens").as[(Long, Long)].collect().toList
+    assert(enc === List((8L, 8L)))
+  }
+
   test("BPE encode: subword counts under the learned vocabulary") {
     import graft.functions.TermStats
     // same canonical corpus as the merge-learning test, split over two

@@ -11,7 +11,7 @@ import graft.engine.Perturb
 import graft.journal.{MetadataStore, Resume}
 import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
 
-class JournalApiSpec extends SparkSpec {
+class JournalApiSpec extends SparkSpec with NoLeakedPersists {
   import spark.implicits._
 
   private def tmpRoot(): String =
@@ -284,6 +284,61 @@ class JournalApiSpec extends SparkSpec {
     assert(store.read("bypart").count() === 3)
   }
 
+  test("concurrent appends to one partitioned dataset read back as their union") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val store = new MetadataStore(root)
+    // half the writers append EMPTY frames, racing on the one `_schema`
+    // marker, while the others publish data and drop their staging dirs
+    // under a reader: whenever the dataset exists it must also read
+    val frames = (0 until 8).map { i =>
+      if (i % 2 == 0) Seq.empty[(Long, String)].toDF("v", "job_id")
+      else Seq((i.toLong, s"j${i % 3}"), (i * 10L, "j0")).toDF("v", "job_id")
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size + 1)
+    try {
+      val writes = frames.map(df => pool.submit(new Runnable {
+        def run(): Unit = store.write("shared", df, partitionBy = Seq("job_id"))
+      }))
+      val reader = pool.submit(new Runnable {
+        def run(): Unit = while (!writes.forall(_.isDone))
+          if (store.exists("shared")) store.read("shared").schema
+      })
+      writes.foreach(_.get())
+      reader.get()
+    } finally pool.shutdown()
+    val expected = frames.flatMap(_.as[(Long, String)].collect()).sorted
+    assert(store.read("shared").select("v", "job_id").as[(Long, String)]
+      .collect().sorted.toSeq === expected)
+    // one marker, no staging left behind
+    val names = new java.io.File(root, "shared").list().toSet
+    assert(names.contains("_schema"))
+    assert(!names.exists(_.startsWith(".")), names)
+  }
+
+  test("a failing table: the others finish journaling, then the run throws and unlocks") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val src = ParquetSource(Sf)
+    // two tables whose parquet is missing fail at once; orders must
+    // still journal every bucket before run() rethrows
+    val missing = Seq("no_such_a", "no_such_b")
+      .map(t => graft.core.TableSpec(t, Seq("id")))
+    val e = intercept[Exception](new DiffRunner(src, src,
+      DiffJobConfig("half-job", missing.head +: Perturb.ordersSpec +: missing.tail,
+        DiffOptions(buckets = 4), metadataRoot = root)).run())
+    assert(e.getMessage.contains("no_such_a"), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).exists(_.contains("no_such_b")))
+    val store = new MetadataStore(root)
+    assert(!store.isRunning("half-job"))
+    assert(store.read("task_status")
+      .filter(col("job_id") === "half-job" && col("table_name") === "orders")
+      .select("bucket").distinct().count() === 4)
+    val walk = Files.walk(java.nio.file.Paths.get(root))
+    try assert(!walk.anyMatch(_.getFileName.toString.startsWith(".staging-")))
+    finally walk.close()
+  }
+
   test("fully-matched job: every journal table reads back, empties included") {
     implicit val s: SparkSession = spark
     val root = tmpRoot()
@@ -291,9 +346,9 @@ class JournalApiSpec extends SparkSpec {
     // identical sides + reverse validation on: mismatches AND
     // reverse_checks are both EMPTY partitioned sinks — they must still
     // come back as readable (zero-row) datasets, not schema-inference
-    // failures
+    // failures. Two tables journal those empty sinks concurrently.
     new DiffRunner(src, src,
-      DiffJobConfig("clean-job", Seq(Perturb.ordersSpec),
+      DiffJobConfig("clean-job", Seq(Perturb.ordersSpec, Perturb.lineitemSpec),
         DiffOptions(buckets = 4, reverseReadProbability = 1.0),
         metadataRoot = root)).run()
     val store = new MetadataStore(root)
@@ -305,7 +360,8 @@ class JournalApiSpec extends SparkSpec {
     val api = new ResultsApi(store)
     assert(api.jobMismatches("clean-job").count() === 0)
     assert(api.mismatchSummary("clean-job").count() === 0)
-    assert(api.jobResults("clean-job").count() === 1)
+    assert(api.jobResults("clean-job").count() === 2)
+    assert(api.jobStatus("clean-job").count() === 8) // 4 buckets × 2 tables
     // a later job with real mismatches appends fine after the empty marker
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame =

@@ -9,6 +9,16 @@ OUT=$(mktemp -d /tmp/graft-verify.XXXX)
 echo "== compile + test =="
 sbt -batch compile test
 
+echo "== diff job end to end (perfbench dirty_full smoke) =="
+# the real job path: YAML -> DiffRunner -> journal -> ResultsApi, with
+# every counter and read-back checked against the generator's values
+LAST=$(python3 perfbench/run.py --workload dirty_full --seed 1 --seconds 10 \
+  --trace 0 | tail -n 1)
+echo "$LAST"
+python3 -c 'import json, sys
+r = json.loads(sys.argv[1])
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$LAST"
+
 echo "== verify vs duckdb oracle ($SF) =="
 # strict: any query that throws or times out fails the local gate (the
 # driver's own invocation is lenient-but-loud; see Verify.scala)
