@@ -236,18 +236,14 @@ final class DiffRunner(
           .withColumn("job_id", lit(config.jobId)))
       // O12 resume: completed buckets of a previous run of this job are
       // skipped (rerun=true re-compares them — Differ.java:166-171)
+      // latest row per bucket: after a rerun the append-only journal
+      // holds one row per bucket PER RUN, and feeding duplicates to the
+      // per-row pending join would replicate input rows
       val journal =
-        if (store.exists("task_status")) {
-          // latest row per bucket: after a rerun the append-only journal
-          // holds one row per bucket PER RUN, and feeding duplicates to
-          // the per-row pending join would replicate input rows
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-          store.read("task_status")
-            .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
-            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+        if (store.exists("task_status"))
+          latestPerBucket(store, "task_status", spec.table)
             .select(col("bucket"), col("status"), col("last_token"))
-        } else spark.emptyDataFrame
+        else spark.emptyDataFrame
       val resuming = journal.columns.nonEmpty && !journal.isEmpty
       // The pending test is a pure per-row predicate of the key (token =
       // f(pk), bucket = pmod(token), journal lookup per bucket), so it is
@@ -258,9 +254,9 @@ final class DiffRunner(
       def onlyPending(df: DataFrame): DataFrame =
         if (!resuming || config.rerun || config.incremental) df
         else {
-          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-          val bucketed = keyed.withColumn("__bucket",
-            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
+          val tok = token(spec.pk.map(col))
+          val bucketed = df.withColumn("__token", tok)
+            .withColumn("__bucket", DiffEngine.bucketOf(df, tok, options.buckets))
           Resume.pending(bucketed, broadcast(journal), config.rerun,
               tokenCol = "__token", bucketCol = "__bucket")
             .drop("__token", "__bucket")
@@ -281,17 +277,10 @@ final class DiffRunner(
           Some(persist(DiffEngine.sideDigests(fsrc, ftgt, spec,
             options.buckets, token)))
         else None
-      val priorDigests = curDigests.flatMap { _ =>
-        if (!store.exists("bucket_digests")) None
-        else {
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-          Some(store.read("bucket_digests", mergeSchema = true)
-            .filter(col("job_id") === config.jobId &&
-              col("table_name") === spec.table)
-            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1))
-        }
-      }
+      val priorDigests =
+        if (curDigests.isEmpty || !store.exists("bucket_digests")) None
+        else Some(latestPerBucket(store, "bucket_digests", spec.table,
+          mergeSchema = true))
       val unchangedBuckets: Seq[Long] = (curDigests, priorDigests) match {
         case (Some(cur), Some(prior)) =>
           DiffEngine.unchangedDigestBuckets(cur, prior)
@@ -309,17 +298,12 @@ final class DiffRunner(
             .diff(cur.select("bucket").as[Long].collect().toSeq)
         case _ => Nil
       }
+      def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
+        DiffEngine.restrictBuckets(df, spec, options.buckets, token,
+          ids.toDF("bucket"), how)
       def changedOnly(df: DataFrame): DataFrame =
         if (unchangedBuckets.isEmpty) df
-        else {
-          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-          val bucketed = keyed.withColumn("__bucket",
-            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
-          bucketed.join(
-              broadcast(unchangedBuckets.toDF("__same_bucket")),
-              col("__bucket") === col("__same_bucket"), "left_anti")
-            .drop("__token", "__bucket")
-        }
+        else restrict(df, unchangedBuckets, "left_anti")
       // digest-first fast path: persisted so its two consumers (the
       // dirty-set collect and the clean journal rows) run the narrow
       // digest aggregation once. The dirty set is ≤ options.buckets
@@ -335,16 +319,8 @@ final class DiffRunner(
           .select(col("bucket").cast("long")).as[Long].collect().toSeq
         case None => Nil
       }
-      def dirtyOnly(df: DataFrame): DataFrame = digestPre match {
-        case None => df
-        case Some(_) =>
-          val keyed = df.withColumn("__token", token(spec.pk.map(col)))
-          val bucketed = keyed.withColumn("__bucket",
-            DiffEngine.bucketOf(keyed, options.buckets, tokenCol = "__token"))
-          bucketed.join(broadcast(dirtySet.toDF("__dirty_bucket")),
-              col("__bucket") === col("__dirty_bucket"), "left_semi")
-            .drop("__token", "__bucket")
-      }
+      def dirtyOnly(df: DataFrame): DataFrame =
+        if (digestPre.isEmpty) df else restrict(df, dirtySet, "left_semi")
       val src = dirtyOnly(changedOnly(fsrc))
       val tgt = dirtyOnly(changedOnly(ftgt))
       // ONE diff computation per table: persist the per-partition stats
@@ -401,12 +377,8 @@ final class DiffRunner(
       if (retiredBuckets.nonEmpty) {
         val tokenType = fsrc
           .select(token(spec.pk.map(col)).as("__t")).schema("__t").dataType
-        var zero = retiredBuckets.toDF("bucket")
-        Seq("matched_partitions", "mismatched_partitions",
-          "only_in_source", "only_in_target", "matched_rows",
-          "matched_values", "mismatched_values")
-          .foreach(c => zero = zero.withColumn(c, lit(0L)))
-        store.write("task_status", zero
+        store.write("task_status", retiredBuckets.toDF("bucket")
+          .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
           .withColumn("last_token", lit(null).cast(tokenType))
           .withColumn("table_name", lit(spec.table))
           .withColumn("status", lit("done"))
@@ -443,30 +415,15 @@ final class DiffRunner(
       // whole-job totals: newest journal row per bucket across ALL runs
       // of this job_id (a resumed run's own frame covers only the
       // pending remainder; the journal carries the rest)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-      val latest = store.read("task_status")
-        .filter(col("job_id") === config.jobId && col("table_name") === spec.table)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      val counters = Seq("matched_partitions", "mismatched_partitions",
-        "only_in_source", "only_in_target", "matched_rows",
-        "matched_values", "mismatched_values")
-      val sums = counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
-      val totalsRow = latest.agg(sums.head, sums.tail: _*).collect()(0)
-      val skippedRow =
-        if (options.disallowedTokens.isEmpty && !options.samplingEnabled &&
-          options.specificTokens.isEmpty) 0L
+      val sums = DiffEngine.counterSums
+      val totalsRow = latestPerBucket(store, "task_status", spec.table)
+        .agg(sums.head, sums.tail: _*).collect()(0)
+      val skipped =
+        if (!options.filtersTokens) 0L
         else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
           token).count()
-      val stats = RangeStats(
-        matchedPartitions = totalsRow.getAs[Long]("matched_partitions"),
-        mismatchedPartitions = totalsRow.getAs[Long]("mismatched_partitions"),
-        onlyInSource = totalsRow.getAs[Long]("only_in_source"),
-        onlyInTarget = totalsRow.getAs[Long]("only_in_target"),
-        matchedRows = totalsRow.getAs[Long]("matched_rows"),
-        matchedValues = totalsRow.getAs[Long]("matched_values"),
-        mismatchedValues = totalsRow.getAs[Long]("mismatched_values"),
-        skippedPartitions = skippedRow)
+      val stats = MetadataStore.toRangeStats(totalsRow)
+        .copy(skippedPartitions = skipped)
       store.write("job_results", Seq((
         config.jobId, spec.table, runTs,
         stats.matchedPartitions, stats.mismatchedPartitions,
@@ -479,6 +436,19 @@ final class DiffRunner(
         partitionBy = Seq("job_id"))
       spec.table -> stats
     } finally persisted.foreach(_.unpersist())
+  }
+
+  /** The newest journal row per bucket of `table` in this job's
+    * `dataset`, across every run of the job id.
+    */
+  private def latestPerBucket(store: MetadataStore, dataset: String,
+      table: String, mergeSchema: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
+    store.read(dataset, mergeSchema)
+      .filter(col("job_id") === config.jobId && col("table_name") === table)
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .drop("__rn")
   }
 }
 

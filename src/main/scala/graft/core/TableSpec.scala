@@ -69,9 +69,10 @@ object Classification {
   val Skipped = "SKIPPED"
 }
 
-/** The nine mergeable counters of the reference's `RangeStats`
-  * (spark-job/.../RangeStats.java:29-198). A monoid: `merge` is the
-  * reference's `accumulate(RangeStats)` (RangeStats.java:167-178).
+/** The nine counters of the reference's `RangeStats`
+  * (spark-job/.../RangeStats.java:29-198). The engine sums them in Spark
+  * (`DiffEngine.counterSums`), where the reference merges them by hand
+  * (`accumulate(RangeStats)`, RangeStats.java:167-178).
   */
 final case class RangeStats(
     matchedPartitions: Long = 0L,
@@ -82,21 +83,7 @@ final case class RangeStats(
     matchedValues: Long = 0L,
     mismatchedValues: Long = 0L,
     skippedPartitions: Long = 0L,
-    errorPartitions: Long = 0L) {
-
-  def merge(o: RangeStats): RangeStats = RangeStats(
-    matchedPartitions + o.matchedPartitions,
-    mismatchedPartitions + o.mismatchedPartitions,
-    onlyInSource + o.onlyInSource,
-    onlyInTarget + o.onlyInTarget,
-    matchedRows + o.matchedRows,
-    matchedValues + o.matchedValues,
-    mismatchedValues + o.mismatchedValues,
-    skippedPartitions + o.skippedPartitions,
-    errorPartitions + o.errorPartitions)
-
-  def isEmpty: Boolean = this == RangeStats()
-}
+    errorPartitions: Long = 0L)
 
 /** Options governing one diff run — the data-path subset of the reference's
   * `JobConfiguration` (common/.../JobConfiguration.java:33-110).
@@ -127,4 +114,9 @@ final case class DiffOptions(
   require(reverseReadProbability >= 0.0 && reverseReadProbability <= 1.0,
     "reverse_read_probability must be in [0, 1]")
   def samplingEnabled: Boolean = samplingNum < samplingDen
+  /** Whether a token list or the sampler is set, so partitions can be
+    * skipped and the skipped count needs its own key scan.
+    */
+  def filtersTokens: Boolean =
+    disallowedTokens.nonEmpty || specificTokens.nonEmpty || samplingEnabled
 }

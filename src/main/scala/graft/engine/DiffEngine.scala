@@ -92,9 +92,7 @@ object DiffEngine {
   def applyTokenFilters(df: DataFrame, spec: TableSpec, opts: DiffOptions,
       token: Seq[Column] => Column): DataFrame = {
     val tok = token(spec.pk.map(col))
-    val numericToken = df.select(tok.as("__t")).schema("__t").dataType !=
-      org.apache.spark.sql.types.StringType
-    require(numericToken ||
+    require(!isStringToken(df, tok) ||
       (opts.specificTokens.isEmpty && opts.disallowedTokens.isEmpty),
       "specific/disallowed token lists are numeric; a string-token " +
         "partitioner (random) cannot match them — filter by key instead")
@@ -103,12 +101,8 @@ object DiffEngine {
       out = out.filter(tok.isin(opts.specificTokens: _*))
     if (opts.disallowedTokens.nonEmpty)
       out = out.filter(!tok.isin(opts.disallowedTokens: _*))
-    if (opts.samplingEnabled) {
-      // string tokens (127-bit decimals) cannot pmod directly; hash them
-      // first — still deterministic per key
-      val samplable = if (numericToken) tok else xxhash64(tok)
-      out = out.filter(pmod(samplable, lit(opts.samplingDen)) < lit(opts.samplingNum))
-    }
+    if (opts.samplingEnabled)
+      out = out.filter(sampledIn(df, tok, opts))
     out
   }
 
@@ -122,18 +116,43 @@ object DiffEngine {
     val keys = keyScan(src, spec, token)
       .unionByName(keyScan(tgt, spec, token)).distinct()
     val tok = col("token")
-    val numericToken = keys.schema("token").dataType !=
-      org.apache.spark.sql.types.StringType
-    val samplable = if (numericToken) tok else xxhash64(tok)
     var rejected: Column = lit(false)
     if (opts.disallowedTokens.nonEmpty)
       rejected = rejected || tok.isin(opts.disallowedTokens: _*)
     if (opts.samplingEnabled)
-      rejected = rejected || pmod(samplable, lit(opts.samplingDen)) >= lit(opts.samplingNum)
+      rejected = rejected || !sampledIn(keys, tok, opts)
     if (opts.specificTokens.nonEmpty)
       rejected = rejected && tok.isin(opts.specificTokens: _*)
     keys.filter(rejected)
   }
+
+  /** One-row `skipped_partitions` frame: [[skippedPartitions]] counted,
+    * or a literal 0 without its dual key scan when nothing filters tokens.
+    */
+  private def skippedCount(src: DataFrame, tgt: DataFrame, spec: TableSpec,
+      opts: DiffOptions, token: Seq[Column] => Column): DataFrame =
+    if (!opts.filtersTokens)
+      src.sparkSession.range(1).select(lit(0L).as("skipped_partitions"))
+    else skippedPartitions(src, tgt, spec, opts, token)
+      .agg(count(lit(1)).as("skipped_partitions"))
+
+  /** Whether a token expression over `df` yields strings
+    * (RandomPartitioner's 127-bit decimals) rather than numbers.
+    */
+  private def isStringToken(df: DataFrame, tok: Column): Boolean =
+    df.select(tok.as("__t")).schema("__t").dataType ==
+      org.apache.spark.sql.types.StringType
+
+  /** A token as a number for modulus: numeric tokens as they are
+    * (oracle-stable), string tokens hashed first — still deterministic
+    * per key.
+    */
+  private def numericToken(df: DataFrame, tok: Column): Column =
+    if (isStringToken(df, tok)) xxhash64(tok) else tok
+
+  /** The deterministic sampler's keep predicate. */
+  private def sampledIn(df: DataFrame, tok: Column, opts: DiffOptions): Column =
+    pmod(numericToken(df, tok), lit(opts.samplingDen)) < lit(opts.samplingNum)
 
   /** O4 (partition-key level): full-outer join of the two key scans with
     * null-side classification — the reference's lock-step iterator merge
@@ -381,14 +400,28 @@ object DiffEngine {
     val fs = applyTokenFilters(src, spec, opts, token)
     val ft = applyTokenFilters(tgt, spec, opts, token)
     val ps = partitionStats(fs, ft, spec, token, tolerances = tolerances)
-    val noFilters = opts.disallowedTokens.isEmpty && !opts.samplingEnabled &&
-      opts.specificTokens.isEmpty
-    val skipped =
-      if (noFilters) // nothing can be skipped — avoid the extra dual scan
-        src.sparkSession.range(1).select(lit(0L).as("skipped_partitions"))
-      else skippedPartitions(src, tgt, spec, opts, token)
-        .agg(count(lit(1)).as("skipped_partitions"))
-    rangeStatsFromPartitions(ps, spec, skipped)
+    rangeStatsFromPartitions(ps, spec, skippedCount(src, tgt, spec, opts, token))
+  }
+
+  /** The seven summable RangeStats counters, in journal column order —
+    * every counter row (task_status, digest credit, stats) carries them.
+    */
+  val Counters: Seq[String] = Seq("matched_partitions",
+    "mismatched_partitions", "only_in_source", "only_in_target",
+    "matched_rows", "matched_values", "mismatched_values")
+
+  /** Aggregate sums of [[Counters]] over counter rows; 0 over no rows. */
+  val counterSums: Seq[Column] =
+    Counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
+
+  /** One partitionStats row as its [[Counters]] contribution. */
+  private def partitionCounters: Seq[Column] = {
+    val both = col("in_src") && col("in_tgt")
+    def is(cls: String) = when(col("classification") === cls, 1L).otherwise(0L)
+    def ifBoth(c: String) = when(both, col(c)).otherwise(0L)
+    Seq(is(C.Matched), is(C.PartitionMismatch), is(C.OnlyInSource),
+      is(C.OnlyInTarget), ifBoth("matched_rows"), ifBoth("matched_values"),
+      ifBoth("mismatched_values")).zip(Counters).map { case (e, n) => e.as(n) }
   }
 
   /** Final RangeStats aggregation over a (possibly persisted)
@@ -397,65 +430,34 @@ object DiffEngine {
     * re-running the diff join per sink.
     */
   def rangeStatsFromPartitions(ps: DataFrame, spec: TableSpec,
-      skipped: DataFrame): DataFrame = {
-    val both = col("in_src") && col("in_tgt")
-    val stats = ps.agg(
-      sum(when(col("classification") === C.Matched, 1L).otherwise(0L)).as("matched_partitions"),
-      sum(when(col("classification") === C.PartitionMismatch, 1L).otherwise(0L)).as("mismatched_partitions"),
-      sum(when(col("classification") === C.OnlyInSource, 1L).otherwise(0L)).as("only_in_source"),
-      sum(when(col("classification") === C.OnlyInTarget, 1L).otherwise(0L)).as("only_in_target"),
-      sum(when(both, col("matched_rows")).otherwise(0L)).as("matched_rows"),
-      sum(when(both, col("matched_values")).otherwise(0L)).as("matched_values"),
-      sum(when(both, col("mismatched_values")).otherwise(0L)).as("mismatched_values"))
-    // tiny 1x1 cross join to attach the skipped counter — both sides are
-    // single-row aggregates, so this is a broadcast nested loop over 1 row
-    stats.crossJoin(skipped)
+      skipped: DataFrame): DataFrame =
+    withSkipped(ps.select(partitionCounters: _*), spec, skipped)
+
+  /** [[counterSums]] of counter rows with the skipped counter attached —
+    * both sides are single-row aggregates, so the cross join is a
+    * broadcast nested loop over 1 row.
+    */
+  private def withSkipped(counterRows: DataFrame, spec: TableSpec,
+      skipped: DataFrame): DataFrame =
+    counterRows.agg(counterSums.head, counterSums.tail: _*)
+      .crossJoin(skipped)
       .withColumn("table_name", lit(spec.table))
-  }
 
   /** [[mismatches]] over a precomputed partitionStats frame. */
   def mismatchesFromPartitions(ps: DataFrame, spec: TableSpec, buckets: Int): DataFrame =
     ps.filter(col("classification") =!= C.Matched)
       .withColumn("table_name", lit(spec.table))
-      .withColumn("bucket", bucketOf(ps, buckets))
+      .withColumn("bucket", bucketOf(ps, col("token"), buckets))
       .select(Seq(col("table_name"), col("bucket"), col("token"),
         col("classification").as("mismatch_type")) ++ spec.pk.map(col): _*)
 
   /** [[bucketProgress]] over a precomputed partitionStats frame. */
-  def bucketProgressFromPartitions(ps: DataFrame, spec: TableSpec, buckets: Int): DataFrame = {
-    val both = col("in_src") && col("in_tgt")
-    ps.withColumn("bucket", bucketOf(ps, buckets))
+  def bucketProgressFromPartitions(ps: DataFrame, spec: TableSpec, buckets: Int): DataFrame =
+    ps.select(bucketOf(ps, col("token"), buckets).as("bucket") +: col("token") +:
+        partitionCounters: _*)
       .groupBy(col("bucket"))
-      .agg(
-        sum(when(col("classification") === C.Matched, 1L).otherwise(0L)).as("matched_partitions"),
-        sum(when(col("classification") === C.PartitionMismatch, 1L).otherwise(0L)).as("mismatched_partitions"),
-        sum(when(col("classification") === C.OnlyInSource, 1L).otherwise(0L)).as("only_in_source"),
-        sum(when(col("classification") === C.OnlyInTarget, 1L).otherwise(0L)).as("only_in_target"),
-        sum(when(both, col("matched_rows")).otherwise(0L)).as("matched_rows"),
-        sum(when(both, col("matched_values")).otherwise(0L)).as("matched_values"),
-        sum(when(both, col("mismatched_values")).otherwise(0L)).as("mismatched_values"),
-        max(col("token")).as("last_token"))
+      .agg(counterSums.head, counterSums.tail :+ max(col("token")).as("last_token"): _*)
       .withColumn("table_name", lit(spec.table))
-  }
-
-  /** Typed variant of [[rangeStats]]: per-partition rows fold through the
-    * [[graft.core.RangeStatsAggregator]] monoid into a
-    * `Dataset[RangeStats]` — the Dataset/Aggregator API surface
-    * (SURVEY §7.3). Skipped-partition accounting stays with the untyped
-    * path (it is not a per-partition property).
-    */
-  def rangeStatsTyped(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      token: Seq[Column] => Column = defaultToken)
-      : org.apache.spark.sql.Dataset[graft.core.RangeStats] = {
-    val ps = partitionStats(src, tgt, spec, token)
-    val session = ps.sparkSession
-    import session.implicits._
-    ps.select(col("in_src"), col("in_tgt"), col("matched_rows"),
-        col("rows_only_in_source"), col("rows_only_in_target"),
-        col("matched_values"), col("mismatched_values"), col("classification"))
-      .as[graft.core.PartitionStatsRow]
-      .select(graft.core.RangeStatsAggregator.toColumn)
-  }
 
   /** O14: the mismatch sink — every non-MATCHED partition as a journal row
     * `(table, token, pk..., mismatch_type)` (MismatchType.java:22-28;
@@ -474,19 +476,14 @@ object DiffEngine {
   /** O11/O13: journal-sharding bucket of a token — the reference's
     * `bucket = splitNumber % numBuckets` (DiffJob.java:245-267) re-keyed
     * to the partition token so it is stable across any partitioning.
+    * The engine's one bucket rule: `token` is an expression over `df`;
+    * numeric tokens keep the reference's plain modulus (oracle-stable),
+    * string tokens (RandomPartitioner's 127-bit decimals) hash first.
+    * Journal buckets, digest buckets and bucket restrictions all use it,
+    * so they always agree.
     */
-  def bucket(token: Column, buckets: Int): Column = pmod(token, lit(buckets))
-
-  /** Bucket of a frame's `token` column, tolerant of token type: numeric
-    * tokens keep the reference's plain modulus (oracle-stable); string
-    * tokens (RandomPartitioner's 127-bit decimals) hash first.
-    */
-  def bucketOf(df: DataFrame, buckets: Int, tokenCol: String = "token"): Column =
-    df.schema(tokenCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        pmod(xxhash64(col(tokenCol)), lit(buckets))
-      case _ => pmod(col(tokenCol), lit(buckets))
-    }
+  def bucketOf(df: DataFrame, token: Column, buckets: Int): Column =
+    pmod(numericToken(df, token), lit(buckets))
 
   /** O13: per-bucket progress — running stats + highest completed token
     * per (table, bucket), the reference's checkpoint row
@@ -564,6 +561,10 @@ object DiffEngine {
   // instead of everything. Phase 1 is a pure scan + map-side partial
   // aggregate whose shuffle is `buckets` rows per side, regardless of
   // data size.
+  //
+  // Every digest op below is a composition of three pieces: [[sideDigest]]
+  // (one side's per-bucket aggregate), [[digestMatch]] (the verdict) and
+  // [[restrictBuckets]] (the broadcast bucket filter).
 
   /** Order-independent full-row content hash. Each column is hashed
     * separately with its ordinal as a leading seed and the per-column
@@ -579,61 +580,80 @@ object DiffEngine {
       xxhash64(lit(i), col(c)) }: _*)
   }
 
-  /** Digest bucket of a frame's token expression, tolerant of token type
-    * like [[bucketOf]]: numeric tokens take the plain modulus (oracle-
-    * stable); RandomPartitioner's 127-bit decimal strings hash first.
+  /** The digest of a bucket: row count, wrap-free decimal sum and xor of
+    * the row content hash.
     */
-  private def digestBucket(df: DataFrame, tok: Column, buckets: Int): Column = {
-    val t = df.select(tok.as("__t")).schema("__t").dataType
-    if (t == org.apache.spark.sql.types.StringType)
-      pmod(xxhash64(tok), lit(buckets))
-    else pmod(tok, lit(buckets))
-  }
+  private val DigestFields = Seq("rows", "sum", "xor")
 
-  /** Phase 1 of [[digestDiff]]: per-bucket digest of one side —
-    * row count, wrap-free decimal sum and xor of the row content hash.
-    * Sum (multiset-faithful) + xor + count together make an accidental
-    * digest collision on differing buckets a ~2⁻¹²⁸ event; the
+  /** Phase 1: per-bucket digest of one side — `(bucket, rows, sum, xor,
+    * extra…)`. Sum (multiset-faithful) + xor + count together make an
+    * accidental digest collision on differing buckets a ~2⁻¹²⁸ event; the
     * `diff_digest_buckets` oracle cross-checks the verdict against a
     * DuckDB multiset comparison on every run. The groupBy partial-
     * aggregates map-side, so the shuffle ships at most `buckets` rows.
+    * `extra` aggregates may read the pk columns and the row's token as
+    * `__tok`.
     */
-  def bucketDigest(df: DataFrame, spec0: TableSpec, buckets: Int,
-      token: Seq[Column] => Column = defaultToken,
-      partitionCounts: Boolean = false): DataFrame = {
+  private def sideDigest(df: DataFrame, spec0: TableSpec, buckets: Int,
+      token: Seq[Column] => Column, extra: Seq[Column] = Nil): DataFrame = {
+    require(buckets > 0, s"digest buckets must be positive, got $buckets")
     val spec = spec0.bind(df)
-    val base = df.select(
-      digestBucket(df, token(spec.pk.map(col)), buckets).as("bucket") +:
+    val tok = token(spec.pk.map(col))
+    df.select(bucketOf(df, tok, buckets).as("bucket") +: tok.as("__tok") +:
         spec.pk.map(col) :+ rowContentHash(spec).as("__h"): _*)
-    val aggs = Seq(count(lit(1)).as("rows"),
-      sum(col("__h").cast("decimal(38,0)")).as("hash_sum"),
-      expr("bit_xor(__h)").as("hash_xor")) ++
-      // [[digestRangeStats]] needs the per-bucket partition count to
-      // credit clean buckets with matched_partitions without joining them
-      (if (partitionCounts) Seq(countDistinct(spec.pk.head,
-        spec.pk.tail: _*).as("parts")) else Nil)
-    base.groupBy("bucket").agg(aggs.head, aggs.tail: _*)
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("rows"),
+        sum(col("__h").cast("decimal(38,0)")).as("sum") +:
+          bit_xor(col("__h")).as("xor") +: extra: _*)
+  }
+
+  /** Both sides' [[sideDigest]]s full-outer joined on `bucket`, every
+    * digest and `srcExtra` column prefixed `src_`/`tgt_`. A bucket seen on
+    * one side only reads null on the other.
+    */
+  private def digestSides(src: DataFrame, tgt: DataFrame, spec: TableSpec,
+      buckets: Int, token: Seq[Column] => Column,
+      srcExtra: Seq[Column] = Nil): DataFrame = {
+    def side(df: DataFrame, name: String, extra: Seq[Column]) = {
+      val d = sideDigest(df, spec, buckets, token, extra)
+      d.select(col("bucket") +: d.columns.tail.map(c => col(c).as(s"${name}_$c")): _*)
+    }
+    side(src, "src", srcExtra).join(side(tgt, "tgt", Nil), Seq("bucket"), "full_outer")
+  }
+
+  /** The digest verdict over a `src_`/`tgt_` digest row: every field
+    * null-safe equal, so a bucket present on one side only is a mismatch
+    * by construction.
+    */
+  private def digestMatch: Column =
+    DigestFields.map(f => col(s"src_$f") <=> col(s"tgt_$f")).reduce(_ && _)
+
+  /** `df` restricted by a broadcast join of each row's bucket against
+    * `bucketIds` (a one-column frame of bucket ids): `left_semi` keeps
+    * the listed buckets, `left_anti` drops them. The id set is at most
+    * `buckets` narrow rows, so it broadcasts and the rows of every other
+    * bucket are shed before any shuffle. Callers that restrict both sides
+    * materialize `bucketIds` once first (see [[digestDiff]]).
+    */
+  def restrictBuckets(df: DataFrame, spec: TableSpec, buckets: Int,
+      token: Seq[Column] => Column, bucketIds: DataFrame,
+      how: String): DataFrame = {
+    require(how == "left_semi" || how == "left_anti",
+      s"bucket restriction is left_semi or left_anti, got $how")
+    val ids = bucketIds.select(col(bucketIds.columns.head).as("__bucket_id"))
+    df.join(broadcast(ids),
+      bucketOf(df, token(spec.pk.map(col)), buckets) === col("__bucket_id"), how)
   }
 
   /** Per-bucket digest comparison: `(bucket, src_rows, tgt_rows,
-    * digest_match)`. A bucket present on one side only is a mismatch by
-    * construction (null-safe equality against the absent side's nulls).
+    * digest_match)`.
     */
   def digestCompare(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame = {
-    val s = bucketDigest(src, spec, buckets, token)
-      .select(col("bucket"), col("rows").as("__sr"),
-        col("hash_sum").as("__ss"), col("hash_xor").as("__sx"))
-    val t = bucketDigest(tgt, spec, buckets, token)
-      .select(col("bucket"), col("rows").as("__tr"),
-        col("hash_sum").as("__ts"), col("hash_xor").as("__tx"))
-    s.join(t, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        coalesce(col("__sr"), lit(0L)).as("src_rows"),
-        coalesce(col("__tr"), lit(0L)).as("tgt_rows"),
-        (col("__sr") <=> col("__tr") && col("__ss") <=> col("__ts") &&
-          col("__sx") <=> col("__tx")).as("digest_match"))
-  }
+      buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame =
+    digestSides(src, tgt, spec, buckets, token).select(col("bucket"),
+      coalesce(col("src_rows"), lit(0L)).as("src_rows"),
+      coalesce(col("tgt_rows"), lit(0L)).as("tgt_rows"),
+      digestMatch.as("digest_match"))
 
   /** Phase 2: the full mismatch diff restricted to dirty buckets. The
     * dirty-bucket set (≤ `digestBuckets` rows of one long) broadcasts as
@@ -660,14 +680,10 @@ object DiffEngine {
     // blocks are not recomputable — on a decommission-prone cluster,
     // swap in reliable checkpoints as dupClusters' reliable=true does.
     val dirty = digestCompare(src, tgt, spec, digestBuckets, token)
-      .filter(!col("digest_match"))
-      .select(col("bucket").as("__dirty_bucket"))
+      .filter(!col("digest_match")).select("bucket")
       .localCheckpoint()
-    def restrict(df: DataFrame): DataFrame =
-      df.join(broadcast(dirty),
-        digestBucket(df, token(spec.pk.map(col)), digestBuckets) ===
-          col("__dirty_bucket"),
-        "left_semi")
+    def restrict(df: DataFrame) =
+      restrictBuckets(df, spec, digestBuckets, token, dirty, "left_semi")
     mismatches(restrict(src), restrict(tgt), spec, opts, token)
   }
 
@@ -680,15 +696,8 @@ object DiffEngine {
     * watermark (JobMetadataDb.java:292-315) cannot express.
     */
   def sideDigests(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame = {
-    val s = bucketDigest(src, spec, buckets, token)
-      .select(col("bucket"), col("rows").as("src_rows"),
-        col("hash_sum").as("src_sum"), col("hash_xor").as("src_xor"))
-    val t = bucketDigest(tgt, spec, buckets, token)
-      .select(col("bucket"), col("rows").as("tgt_rows"),
-        col("hash_sum").as("tgt_sum"), col("hash_xor").as("tgt_xor"))
-    s.join(t, Seq("bucket"), "full_outer")
-  }
+      buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame =
+    digestSides(src, tgt, spec, buckets, token)
 
   /** Two-level Merkle digest tree: roll the per-bucket digests up into
     * `buckets / fanout` super-nodes (counts and decimal sums ADD, xors
@@ -717,35 +726,22 @@ object DiffEngine {
     require(fanout >= 2 && buckets % fanout == 0,
       "buckets must be a positive multiple of fanout")
     val spec = spec0.bind(src)
-    // ≤ buckets rows per side; materialized once, read by both levels
-    val sB = bucketDigest(src, spec, buckets, token).localCheckpoint()
-    val tB = bucketDigest(tgt, spec, buckets, token).localCheckpoint()
-    def roll(df: DataFrame) = df
-      .groupBy(expr(s"bucket DIV $fanout").as("node"))
-      .agg(sum(col("rows")).as("rows"), sum(col("hash_sum")).as("hash_sum"),
-        expr("bit_xor(hash_xor)").as("hash_xor"))
-    def cmp(s: DataFrame, t: DataFrame) =
-      s.select(col("node"), col("rows").as("__sr"),
-          col("hash_sum").as("__ss"), col("hash_xor").as("__sx"))
-        .join(t.select(col("node"), col("rows").as("__tr"),
-          col("hash_sum").as("__ts"), col("hash_xor").as("__tx")),
-          Seq("node"), "full_outer")
-        .select(col("node"),
-          coalesce(col("__sr"), lit(0L)).as("src_rows"),
-          coalesce(col("__tr"), lit(0L)).as("tgt_rows"),
-          (col("__sr") <=> col("__tr") && col("__ss") <=> col("__ts") &&
-            col("__sx") <=> col("__tx")).as("digest_match"))
-    val lvl0 = cmp(roll(sB), roll(tB))
-    val dirty = lvl0.filter(!col("digest_match"))
-      .select(col("node").as("__parent"))
-    val lvl1 = cmp(sB.withColumnRenamed("bucket", "node"),
-        tB.withColumnRenamed("bucket", "node"))
-      .join(dirty, expr(s"node DIV $fanout") === col("__parent"),
-        "left_semi")
-    lvl0.select(lit(0).as("level"), col("node"), col("src_rows"),
-        col("tgt_rows"), col("digest_match"))
-      .unionByName(lvl1.select(lit(1).as("level"), col("node"),
-        col("src_rows"), col("tgt_rows"), col("digest_match")))
+    // ≤ buckets rows; materialized once, read by both levels. A side's
+    // absent bucket reads null, which sum and bit_xor skip — so rolling
+    // the joined leaves equals joining the rolled sides.
+    val leaves = sideDigests(src, tgt, spec, buckets, token)
+      .withColumnRenamed("bucket", "node").localCheckpoint()
+    def verdicts(df: DataFrame, level: Int) = df.select(lit(level).as("level"),
+      col("node"), coalesce(col("src_rows"), lit(0L)).as("src_rows"),
+      coalesce(col("tgt_rows"), lit(0L)).as("tgt_rows"),
+      digestMatch.as("digest_match"))
+    val roll = DigestCols.map { c =>
+      (if (c.endsWith("_xor")) bit_xor(col(c)) else sum(col(c))).as(c) }
+    val supers = verdicts(leaves.groupBy(expr(s"node DIV $fanout").as("node"))
+      .agg(roll.head, roll.tail: _*), 0)
+    val dirty = supers.filter(!col("digest_match")).select(col("node").as("__parent"))
+    supers.unionByName(verdicts(leaves, 1)
+      .join(dirty, expr(s"node DIV $fanout") === col("__parent"), "left_semi"))
   }
 
   /** The [[sideDigests]] payload columns — the full set a bucket must
@@ -753,8 +749,8 @@ object DiffEngine {
     * consumers (DiffRunner) share one definition with
     * [[unchangedDigestBuckets]] instead of drifting copies.
     */
-  val DigestCols: Seq[String] = Seq("src_rows", "src_sum", "src_xor",
-    "tgt_rows", "tgt_sum", "tgt_xor")
+  val DigestCols: Seq[String] =
+    for (side <- Seq("src", "tgt"); f <- DigestFields) yield s"${side}_$f"
 
   /** Buckets present in BOTH digest frames with every [[DigestCols]]
     * field null-safe equal — the replay-eligible set of
@@ -788,25 +784,19 @@ object DiffEngine {
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
       token: Seq[Column] => Column = defaultToken): DataFrame = {
     val spec = spec0.bind(src)
-    val cur = sideDigests(src, tgt, spec, digestBuckets, token)
     // ≤ digestBuckets narrow rows behind THREE broadcasts (both fresh
     // sides + the replay semi-join): one materialization, or each
     // broadcast replays the current-digest scans AND the caller's
     // prior-digest derivation. EAGER — same broadcast-timeout rationale
     // (and same executor-local-block caveat) as digestDiff's dirty set.
-    val unchanged = unchangedDigestBuckets(cur, priorDigests)
-      .select(col("bucket").as("__same_bucket"))
+    val unchanged = unchangedDigestBuckets(
+      sideDigests(src, tgt, spec, digestBuckets, token), priorDigests)
       .localCheckpoint()
-    def fresh(df: DataFrame): DataFrame =
-      df.join(broadcast(unchanged),
-        digestBucket(df, token(spec.pk.map(col)), digestBuckets) ===
-          col("__same_bucket"),
-        "left_anti")
-    val replay = priorMismatches.join(broadcast(unchanged),
-      bucketOf(priorMismatches, digestBuckets) === col("__same_bucket"),
-      "left_semi")
-    mismatches(fresh(src), fresh(tgt), spec, opts, token)
-      .unionByName(replay)
+    def fresh(df: DataFrame) =
+      restrictBuckets(df, spec, digestBuckets, token, unchanged, "left_anti")
+    val replay = restrictBuckets(priorMismatches, spec, digestBuckets,
+      _ => col("token"), unchanged, "left_semi")
+    mismatches(fresh(src), fresh(tgt), spec, opts, token).unionByName(replay)
   }
 
   /** Single-run digest prefilter at the JOURNAL bucket granularity — the
@@ -826,49 +816,31 @@ object DiffEngine {
   def digestProgress(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame = {
     val spec = spec0.bind(src)
-    def side(df: DataFrame): DataFrame = {
-      val tok = token(spec.pk.map(col))
-      df.select(digestBucket(df, tok, buckets).as("bucket") +:
-          tok.as("__tok") +:
-          (spec.pk.map(col) :+ rowContentHash(spec).as("__h")): _*)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("rows"),
-          sum(col("__h").cast("decimal(38,0)")).as("hash_sum"),
-          expr("bit_xor(__h)").as("hash_xor"),
-          countDistinct(spec.pk.head, spec.pk.tail: _*).as("parts"),
-          max(col("__tok")).as("last_token"))
-    }
-    val s = side(src).select(col("bucket"), col("rows").as("__sr"),
-      col("hash_sum").as("__ss"), col("hash_xor").as("__sx"),
-      col("parts").as("__sp"), col("last_token").as("__st"))
-    val t = side(tgt).select(col("bucket"), col("rows").as("__tr"),
-      col("hash_sum").as("__ts"), col("hash_xor").as("__tx"))
-    s.join(t, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        (col("__sr") <=> col("__tr") && col("__ss") <=> col("__ts") &&
-          col("__sx") <=> col("__tx")).as("digest_match"),
-        coalesce(col("__sp"), lit(0L)).as("matched_partitions"),
-        lit(0L).as("mismatched_partitions"),
-        lit(0L).as("only_in_source"),
-        lit(0L).as("only_in_target"),
-        coalesce(col("__sr"), lit(0L)).as("matched_rows"),
-        (coalesce(col("__sr"), lit(0L)) *
-          lit(spec.regular.size.toLong)).as("matched_values"),
-        lit(0L).as("mismatched_values"),
-        col("__st").as("last_token"))
+    val rows = coalesce(col("src_rows"), lit(0L))
+    val credit = Map(
+      "matched_partitions" -> coalesce(col("src_parts"), lit(0L)),
+      "matched_rows" -> rows,
+      "matched_values" -> rows * lit(spec.regular.size.toLong))
+    digestSides(src, tgt, spec, buckets, token, Seq(
+        countDistinct(spec.pk.head, spec.pk.tail: _*).as("parts"),
+        max(col("__tok")).as("last_token")))
+      .select(col("bucket") +: digestMatch.as("digest_match") +:
+        Counters.map(c => credit.getOrElse(c, lit(0L)).as(c)) :+
+        col("src_last_token").as("last_token"): _*)
       .withColumn("table_name", lit(spec.table))
   }
 
   /** [[rangeStats]] through the digest prefilter — the headline query's
     * 100 TB shape. Clean buckets never reach the join: their counter
-    * contribution is pure arithmetic (every partition matched, every row
-    * matched, every value matched — `rows × |regular|`), with the
-    * per-bucket distinct-pk count carried by phase 1. Only dirty buckets
-    * run [[partitionStats]]. The result is bit-identical to
-    * [[rangeStats]] (same oracle), but on a mostly-matching corpus the
-    * wide shuffle shrinks to the dirty fraction; the extra cost is the
-    * phase-1 distinct-pk partial aggregate, which ships one narrow row
-    * per partition instead of every data row with payloads.
+    * contribution is the [[digestProgress]] credit (every partition
+    * matched, every row matched, every value matched — `rows ×
+    * |regular|`), with the per-bucket distinct-pk count carried by
+    * phase 1. Only dirty buckets run [[partitionStats]]. The result is
+    * bit-identical to [[rangeStats]] (same oracle), but on a
+    * mostly-matching corpus the wide shuffle shrinks to the dirty
+    * fraction; the extra cost is the phase-1 distinct-pk partial
+    * aggregate, which ships one narrow row per partition instead of
+    * every data row with payloads.
     */
   def digestRangeStats(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
@@ -877,62 +849,20 @@ object DiffEngine {
     spec.validateSides(src, tgt)
     val fs = applyTokenFilters(src, spec, opts, token)
     val ft = applyTokenFilters(tgt, spec, opts, token)
-    val s = bucketDigest(fs, spec, digestBuckets, token, partitionCounts = true)
-      .select(col("bucket"), col("rows").as("__sr"), col("parts").as("__sp"),
-        col("hash_sum").as("__ss"), col("hash_xor").as("__sx"))
-    val t = bucketDigest(ft, spec, digestBuckets, token, partitionCounts = true)
-      .select(col("bucket"), col("rows").as("__tr"),
-        col("hash_sum").as("__ts"), col("hash_xor").as("__tx"))
     // ≤ digestBuckets narrow rows feeding THREE consumers (the clean
-    // credit aggregate, and the dirty set behind both restrict sides) —
-    // without the barrier each consumer re-runs phase 1's two full
-    // digest scans. EAGER — the dirty set broadcasts, same
-    // broadcast-timeout rationale as digestDiff.
-    val cmp = s.join(t, Seq("bucket"), "full_outer")
-      .withColumn("__match",
-        col("__sr") <=> col("__tr") && col("__ss") <=> col("__ts") &&
-          col("__sx") <=> col("__tx"))
+    // credit, and the dirty set behind both restrict sides) — without
+    // the barrier each consumer re-runs phase 1's two full digest scans.
+    // EAGER — the dirty set broadcasts, same broadcast-timeout rationale
+    // as digestDiff.
+    val progress = digestProgress(fs, ft, spec, digestBuckets, token)
       .localCheckpoint()
-    val clean = cmp.filter(col("__match")).agg(
-      coalesce(sum(col("__sp")), lit(0L)).as("__clean_parts"),
-      coalesce(sum(col("__sr")), lit(0L)).as("__clean_rows"))
-    val dirtyBuckets = cmp.filter(!col("__match"))
-      .select(col("bucket").as("__dirty_bucket"))
-    def restrict(df: DataFrame): DataFrame =
-      df.join(broadcast(dirtyBuckets),
-        digestBucket(df, token(spec.pk.map(col)), digestBuckets) ===
-          col("__dirty_bucket"),
-        "left_semi")
+    val dirty = progress.filter(!col("digest_match")).select("bucket")
+    def restrict(df: DataFrame) =
+      restrictBuckets(df, spec, digestBuckets, token, dirty, "left_semi")
     val ps = partitionStats(restrict(fs), restrict(ft), spec, token)
-    val both = col("in_src") && col("in_tgt")
-    val dirty = ps.agg(
-      sum(when(col("classification") === C.Matched, 1L).otherwise(0L)).as("__d_mp"),
-      sum(when(col("classification") === C.PartitionMismatch, 1L).otherwise(0L)).as("__d_mm"),
-      sum(when(col("classification") === C.OnlyInSource, 1L).otherwise(0L)).as("__d_os"),
-      sum(when(col("classification") === C.OnlyInTarget, 1L).otherwise(0L)).as("__d_ot"),
-      sum(when(both, col("matched_rows")).otherwise(0L)).as("__d_mr"),
-      sum(when(both, col("matched_values")).otherwise(0L)).as("__d_mv"),
-      sum(when(both, col("mismatched_values")).otherwise(0L)).as("__d_mmv"))
-    val noFilters = opts.disallowedTokens.isEmpty && !opts.samplingEnabled &&
-      opts.specificTokens.isEmpty
-    val skipped =
-      if (noFilters)
-        src.sparkSession.range(1).select(lit(0L).as("skipped_partitions"))
-      else skippedPartitions(src, tgt, spec, opts, token)
-        .agg(count(lit(1)).as("skipped_partitions"))
-    // all three sides are single-row aggregates — 1x1 attaches, like
-    // rangeStatsFromPartitions' skipped counter
-    clean.crossJoin(dirty).select(
-        (col("__clean_parts") + coalesce(col("__d_mp"), lit(0L))).as("matched_partitions"),
-        coalesce(col("__d_mm"), lit(0L)).as("mismatched_partitions"),
-        coalesce(col("__d_os"), lit(0L)).as("only_in_source"),
-        coalesce(col("__d_ot"), lit(0L)).as("only_in_target"),
-        (col("__clean_rows") + coalesce(col("__d_mr"), lit(0L))).as("matched_rows"),
-        (col("__clean_rows") * lit(spec.regular.size.toLong) +
-          coalesce(col("__d_mv"), lit(0L))).as("matched_values"),
-        coalesce(col("__d_mmv"), lit(0L)).as("mismatched_values"))
-      .crossJoin(skipped)
-      .withColumn("table_name", lit(spec.table))
+    withSkipped(ps.select(partitionCounters: _*).unionByName(
+        progress.filter(col("digest_match")).select(Counters.map(col): _*)),
+      spec, skippedCount(src, tgt, spec, opts, token))
   }
 
   /** THREE-replica reconciliation — the N-way extension of the 2-way

@@ -66,8 +66,8 @@ object OpsQueries {
     // O12: resume — pending work per bucket given a task_status journal
     "diff_resume" -> ((s, dir) => {
       import s.implicits._
-      val keys = DiffEngine.keyScan(li(s, dir), lineitemSpec, idTok)
-        .withColumn("bucket", DiffEngine.bucket(col("token"), 16))
+      val scan = DiffEngine.keyScan(li(s, dir), lineitemSpec, idTok)
+      val keys = scan.withColumn("bucket", DiffEngine.bucketOf(scan, col("token"), 16))
       val journal = journalFixture.toDF("bucket", "status", "last_token")
       Resume.pending(keys, journal)
         .groupBy("bucket").agg(count(lit(1)).as("n_pending"),

@@ -312,21 +312,6 @@ class DiffEngineSpec extends SparkSpec {
     assert(stats.getAs[Long]("mismatched_values") === 1)
   }
 
-  test("typed Aggregator path equals the untyped RangeStats") {
-    val li = graft.engine.Tables.load(spark, Sf, "lineitem")
-    val tgt = graft.engine.Perturb.lineitemTarget(li)
-    val spec = graft.engine.Perturb.lineitemSpec
-    val untyped = DiffEngine.rangeStats(li, tgt, spec, DiffOptions(), idTok).collect()(0)
-    val typed = DiffEngine.rangeStatsTyped(li, tgt, spec, idTok).head()
-    assert(typed.matchedPartitions === untyped.getAs[Long]("matched_partitions"))
-    assert(typed.mismatchedPartitions === untyped.getAs[Long]("mismatched_partitions"))
-    assert(typed.onlyInSource === untyped.getAs[Long]("only_in_source"))
-    assert(typed.onlyInTarget === untyped.getAs[Long]("only_in_target"))
-    assert(typed.matchedRows === untyped.getAs[Long]("matched_rows"))
-    assert(typed.matchedValues === untyped.getAs[Long]("matched_values"))
-    assert(typed.mismatchedValues === untyped.getAs[Long]("mismatched_values"))
-  }
-
   test("schema validation rejects mismatched regular columns") {
     val src = wide((1L, 1, "a", 10))
     val tgt = src.withColumnRenamed("v2", "v3")
@@ -450,26 +435,52 @@ class DiffEngineSpec extends SparkSpec {
     val li = graft.engine.Tables.load(spark, Sf, "lineitem")
     val tgt = graft.engine.Perturb.lineitemTarget(li)
     val spec = graft.engine.Perturb.lineitemSpec
-    val p1 = DiffEngine.digestCompare(li, tgt, spec, 64, idTok)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    def exchanges(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).length
+    def bucketKeyed(p: String) = "hashpartitioning\\(bucket".r.findAllIn(p).length
+    val p1 = plan(DiffEngine.digestCompare(li, tgt, spec, 64, idTok))
     // one bucket-keyed exchange per side (post partial-agg, so it ships
     // at most `buckets` digest rows), nothing else
-    assert("\\(\\d+\\) Exchange".r.findAllIn(p1).length === 2,
+    assert(exchanges(p1) === 2,
       s"phase 1 must shuffle only the two digest aggregations in:\n$p1")
-    assert("hashpartitioning\\(bucket".r.findAllIn(p1).length === 2,
+    assert(bucketKeyed(p1) === 2,
       s"phase-1 exchanges must key on bucket in:\n$p1")
-    val p2 = DiffEngine.digestDiff(li, tgt, spec, DiffOptions(),
-        digestBuckets = 512, token = idTok)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    // the runner's phase 1 adds the distinct-pk count: one more exchange,
+    // still keyed on bucket (then pk) — never on the data rows alone
+    val pp = plan(DiffEngine.digestProgress(li, tgt, spec, 64, idTok))
+    assert(exchanges(pp) === 3 && bucketKeyed(pp) === 3,
+      s"digestProgress must shuffle only bucket-keyed digest rows in:\n$pp")
     // the dirty-bucket restriction must be broadcast semi joins — never a
     // shuffle of the data on the bucket key (one per side, and more when
     // the filter pushes into union branches, which is desirable)
-    assert("BroadcastHashJoin .*LeftSemi".r.findAllIn(p2).length >= 2,
-      s"expected broadcast semi joins on both sides in:\n$p2")
-    assert(!"hashpartitioning\\(__dirty_bucket".r.findAllIn(p2).hasNext,
-      s"dirty-bucket set must broadcast, not shuffle, in:\n$p2")
+    def restrictsByBroadcast(p: String, what: String): Unit = {
+      assert("BroadcastHashJoin .*LeftSemi".r.findAllIn(p).length >= 2,
+        s"$what: expected broadcast semi joins on both sides in:\n$p")
+      assert(!"hashpartitioning\\(__bucket_id".r.findAllIn(p).hasNext,
+        s"$what: dirty-bucket set must broadcast, not shuffle, in:\n$p")
+    }
+    val p2 = plan(DiffEngine.digestDiff(li, tgt, spec, DiffOptions(),
+      digestBuckets = 512, token = idTok))
+    restrictsByBroadcast(p2, "digestDiff")
+    assert(exchanges(p2) === 3, s"digestDiff exchanges in:\n$p2")
+    // phase 2 of digestRangeStats: one pk-keyed exchange per side (the
+    // full-PK join reuses it), the pk groupBy, and ONE single-partition
+    // final aggregate over dirty counters and clean credit together
+    val p3 = plan(DiffEngine.digestRangeStats(li, tgt, spec, DiffOptions(),
+      digestBuckets = 512, token = idTok))
+    restrictsByBroadcast(p3, "digestRangeStats")
+    assert(exchanges(p3) === 4, s"digestRangeStats exchanges in:\n$p3")
+  }
+
+  test("every digest op rejects a non-positive bucket count") {
+    val t = wide((1L, 1, "a", 10))
+    assertThrows[IllegalArgumentException] {
+      DiffEngine.digestTree(t, t, wideSpec, buckets = 0, fanout = 8, token = idTok)
+    }
+    assertThrows[IllegalArgumentException] {
+      DiffEngine.digestCompare(t, t, wideSpec, 0, idTok)
+    }
   }
 
   test("repair statements: exact CQL per action, escaping and NULL rules") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.{DiffJobConfig, DiffRunner, ResultsApi}
 import graft.core.DiffOptions
-import graft.engine.Perturb
+import graft.engine.{DiffEngine, Perturb}
 import graft.journal.{MetadataStore, Resume}
 import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
 
@@ -501,6 +501,65 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val b = Seq("t2", "t3", "t4", "sys")
     assert(SchemaOps.intersect(a, b, Set("sys")) === Seq("t2", "t3"))
     assert(SchemaOps.difference(a, b) === Seq("t1", "t4"))
+  }
+
+  test("digestFirst on and off journal the same results: both partitioners, first run and incremental re-run") {
+    implicit val s: SparkSession = spark
+    val src = ParquetSource(Sf)
+    def tgtOf(f: DataFrame => DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = f(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    val buckets = 256
+    val li = src.table(spark, "lineitem")
+    for (partitioner <- Seq("xxhash64", "random")) {
+      // the fixture must reach both digest-first branches: clean buckets
+      // credited from their digests, dirty buckets through the wide join
+      val verdicts = DiffEngine.digestProgress(li, Perturb.lineitemTargetStale(li),
+          Perturb.lineitemSpec, buckets, DiffEngine.tokenFunction(partitioner))
+        .select("digest_match").as[Boolean].collect().toSet
+      assert(verdicts === Set(true, false), s"$partitioner: vacuous digest split")
+      // per run: stats, latest-per-bucket task_status counters, mismatches
+      def job(digestFirst: Boolean) = {
+        val root = tmpRoot()
+        val cfg = DiffJobConfig("df-eq", Seq(Perturb.lineitemSpec),
+          DiffOptions(buckets = buckets), metadataRoot = root,
+          partitioner = partitioner, incremental = true,
+          digestFirst = digestFirst)
+        val store = new MetadataStore(root)
+        def journaled() = {
+          import org.apache.spark.sql.expressions.Window
+          val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
+          val latest = store.read("task_status")
+            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+            .select(col("bucket") +: col("last_token").cast("string") +:
+              DiffEngine.Counters.map(col): _*)
+          val mism = new ResultsApi(store).jobMismatches("df-eq")
+            .select(col("bucket"), col("token").cast("string"), col("mismatch_type"))
+          (latest.collect().map(_.toSeq).toSet, mism.collect().map(_.toSeq).toSet)
+        }
+        // run 1: the stale target; run 2: the cell mutations landed, so
+        // the incremental re-run restricts to the changed buckets
+        val first = new DiffRunner(src, tgtOf(Perturb.lineitemTargetStale), cfg)
+          .run()("lineitem")
+        val firstJournal = journaled()
+        val firstRows = store.read("task_status").count()
+        val second = new DiffRunner(src, tgtOf(Perturb.lineitemTarget), cfg)
+          .run()("lineitem")
+        val secondRows = store.read("task_status").count() - firstRows
+        assert(secondRows > 0 && secondRows < firstRows,
+          s"$partitioner: re-run journaled $secondRows of $firstRows buckets")
+        Seq((first, firstJournal), (second, journaled()))
+      }
+      val runs = Seq("first run", "incremental re-run")
+      runs.zip(job(digestFirst = true).zip(job(digestFirst = false))).foreach {
+        case (run, ((stats, (status, mism)), (stats0, (status0, mism0)))) =>
+          val what = s"$partitioner, $run"
+          assert(stats === stats0, what)
+          assert(status === status0, s"$what: task_status")
+          assert(mism === mism0 && mism.nonEmpty, s"$what: mismatches")
+      }
+    }
   }
 
   test("digestFirst: identical sides skip the wide join; perturbed results identical") {
