@@ -4,8 +4,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
 import graft.engine.DiffEngine
@@ -234,44 +235,23 @@ final class DiffRunner(
         sq.errors.unionByName(tq.errors)
           .withColumn("table_name", lit(spec.table))
           .withColumn("job_id", lit(config.jobId)))
-      // O12 resume: completed buckets of a previous run of this job are
-      // skipped (rerun=true re-compares them — Differ.java:166-171)
-      // latest row per bucket: after a rerun the append-only journal
-      // holds one row per bucket PER RUN, and feeding duplicates to the
-      // per-row pending join would replicate input rows
-      val journal =
-        if (store.exists("task_status"))
-          latestPerBucket(store, "task_status", spec.table)
-            .select(col("bucket"), col("status"), col("last_token"))
-        else spark.emptyDataFrame
-      val resuming = journal.columns.nonEmpty && !journal.isEmpty
-      // The pending test is a pure per-row predicate of the key (token =
-      // f(pk), bucket = pmod(token), journal lookup per bucket), so it is
-      // applied directly to each side with a BROADCAST join against the
-      // journal (≤ options.buckets rows) — the earlier key-scan +
-      // semi-join shape scanned every input twice per side just to
-      // rediscover values derivable row-by-row.
-      def onlyPending(df: DataFrame): DataFrame =
-        if (!resuming || config.rerun || config.incremental) df
-        else {
-          val tok = token(spec.pk.map(col))
-          val bucketed = df.withColumn("__token", tok)
-            .withColumn("__bucket", DiffEngine.bucketOf(df, tok, options.buckets))
-          Resume.pending(bucketed, broadcast(journal), config.rerun,
-              tokenCol = "__token", bucketCol = "__bucket")
-            .drop("__token", "__bucket")
-        }
-      val fsrc = DiffEngine.applyTokenFilters(onlyPending(sq.valid), spec,
-        options, token)
-      val ftgt = DiffEngine.applyTokenFilters(onlyPending(tq.valid), spec,
-        options, token)
+      // this table's rows of a journal dataset, newest run per bucket
+      def latestPerBucket(dataset: String, mergeSchema: Boolean = false) =
+        store.latest(dataset, config.jobId, Seq("table_name", "bucket"),
+          mergeSchema).filter(col("table_name") === spec.table)
+      // bucket id sets are ≤ options.buckets longs: collected, then
+      // re-broadcast by `restrict` as one join per side
+      def buckets(df: DataFrame): Seq[Long] =
+        df.select(col("bucket").cast("long")).as[Long].collect().toSeq
+      def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
+        DiffEngine.restrictBuckets(df, spec, options.buckets, token,
+          ids.toDF("bucket"), how)
+      val fsrc = DiffEngine.applyTokenFilters(sq.valid, spec, options, token)
+      val ftgt = DiffEngine.applyTokenFilters(tq.valid, spec, options, token)
       // Incremental mode: digest both sides at the journal-bucket
       // granularity (digest bucket rule == task_status bucket rule, so
       // the latest-per-bucket totals below replay unchanged buckets from
-      // the previous run), restrict the diff to changed buckets, and
-      // journal this run's digests for the next one. The unchanged set
-      // is ≤ options.buckets longs — collected and re-broadcast rather
-      // than left lazy so the digest pass runs exactly once.
+      // the previous run) and journal this run's digests for the next.
       val curDigests =
         if (config.incremental)
           Some(persist(DiffEngine.sideDigests(fsrc, ftgt, spec,
@@ -279,67 +259,71 @@ final class DiffRunner(
         else None
       val priorDigests =
         if (curDigests.isEmpty || !store.exists("bucket_digests")) None
-        else Some(latestPerBucket(store, "bucket_digests", spec.table,
-          mergeSchema = true))
-      val unchangedBuckets: Seq[Long] = (curDigests, priorDigests) match {
+        else Some(latestPerBucket("bucket_digests", mergeSchema = true))
+      // The buckets this run does not re-compare; their journal rows
+      // stand. Incremental mode skips the digest-unchanged buckets.
+      // Otherwise this is O12 resume: the buckets a previous run of this
+      // job finished are skipped (rerun=true re-compares them —
+      // Differ.java:166-171). The runner journals only `done` rows, so
+      // there is no in-progress watermark to honour.
+      val skip: Seq[Long] =
+        if (config.incremental)
+          priorDigests.fold(Seq.empty[Long])(prior =>
+            buckets(DiffEngine.unchangedDigestBuckets(curDigests.get, prior)))
+        else if (config.rerun || !store.exists("task_status")) Nil
+        else buckets(latestPerBucket("task_status")
+          .filter(col("status") === Resume.StatusDone))
+      // RETIRED buckets: live in the prior digests, gone from both sides
+      // now. With no partitionStats rows they would never get a new
+      // journal row and the latest-per-bucket totals would replay their
+      // stale counters forever, so they get zero task_status rows and a
+      // tombstone digest (every digest field null). The tombstone never
+      // equals a current digest: a bucket whose rows come back is
+      // re-diffed, not replayed as zeros. Tombstoned buckets are not
+      // live, so they retire once.
+      val retired: Seq[Long] = (curDigests, priorDigests) match {
         case (Some(cur), Some(prior)) =>
-          DiffEngine.unchangedDigestBuckets(cur, prior)
-            .as[Long].collect().toSeq
+          buckets(prior
+            .filter(col("src_rows").isNotNull || col("tgt_rows").isNotNull)
+            .join(cur, Seq("bucket"), "left_anti"))
         case _ => Nil
       }
-      // RETIRED buckets: journaled last run, gone from both sides now.
-      // They take the fresh path (no current rows ⇒ an empty diff), but
-      // with no partitionStats rows they would never get a new journal
-      // row and the latest-per-bucket totals would replay their stale
-      // counters forever — so they get explicit zero rows below.
-      val retiredBuckets: Seq[Long] = (curDigests, priorDigests) match {
-        case (Some(cur), Some(prior)) =>
-          prior.select("bucket").as[Long].collect().toSeq
-            .diff(cur.select("bucket").as[Long].collect().toSeq)
-        case _ => Nil
-      }
-      def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
-        DiffEngine.restrictBuckets(df, spec, options.buckets, token,
-          ids.toDF("bucket"), how)
-      def changedOnly(df: DataFrame): DataFrame =
-        if (unchangedBuckets.isEmpty) df
-        else restrict(df, unchangedBuckets, "left_anti")
+      def pending(df: DataFrame): DataFrame =
+        if (skip.isEmpty) df else restrict(df, skip, "left_anti")
       // digest-first fast path: persisted so its two consumers (the
       // dirty-set collect and the clean journal rows) run the narrow
-      // digest aggregation once. The dirty set is ≤ options.buckets
-      // longs — collected and re-broadcast like the incremental path's
-      // unchanged set.
+      // digest aggregation once. Only dirty buckets reach the diff.
       val digestPre =
         if (config.digestFirst)
-          Some(persist(DiffEngine.digestProgress(changedOnly(fsrc),
-            changedOnly(ftgt), spec, options.buckets, token)))
+          Some(persist(DiffEngine.digestProgress(pending(fsrc),
+            pending(ftgt), spec, options.buckets, token)))
         else None
-      val dirtySet: Seq[Long] = digestPre match {
-        case Some(d) => d.filter(!col("digest_match"))
-          .select(col("bucket").cast("long")).as[Long].collect().toSeq
-        case None => Nil
-      }
-      def dirtyOnly(df: DataFrame): DataFrame =
-        if (digestPre.isEmpty) df else restrict(df, dirtySet, "left_semi")
-      val src = dirtyOnly(changedOnly(fsrc))
-      val tgt = dirtyOnly(changedOnly(ftgt))
+      val dirty = digestPre.map(d => buckets(d.filter(!col("digest_match"))))
+      def diffed(df: DataFrame): DataFrame =
+        dirty.fold(pending(df))(restrict(pending(df), _, "left_semi"))
+      val src = diffed(fsrc)
+      val tgt = diffed(ftgt)
       // ONE diff computation per table: persist the per-partition stats
       // and derive progress, mismatches and totals from it (without the
       // persist, each journal sink would re-run the join+agg)
       val ps = persist(DiffEngine.partitionStats(src, tgt, spec, token,
         tolerances = config.tolerances.getOrElse(spec.table, Map.empty)))
+      // every row this run journals carries the table, the job id and
+      // the run's stamp; datasets are partitioned by job_id so per-job
+      // endpoint filters prune at the directory level
       val runTs = System.currentTimeMillis()
+      def journal(dataset: String, df: DataFrame): Unit =
+        store.write(dataset, df
+            .withColumn("table_name", lit(spec.table))
+            .withColumn("job_id", lit(config.jobId))
+            .withColumn("run_ts", lit(runTs)),
+          partitionBy = Seq("job_id"))
       // checkpoint ordering mirrors the reference (mismatches recorded
       // BEFORE a range is marked complete, RangeComparator.java:201-241):
       // a crash between the writes must re-compare, never lose records.
-      // journal datasets are partitioned by job_id so per-job endpoint
-      // filters prune at the directory level.
-      store.write("mismatches",
+      journal("mismatches",
         DiffEngine.mismatchesFromPartitions(ps, spec, options.buckets)
-          .select("table_name", "bucket", "token", "mismatch_type")
-          .withColumn("job_id", lit(config.jobId))
-          .withColumn("run_ts", lit(runTs)),
-        partitionBy = Seq("job_id"))
+          .select("table_name", "bucket", "token", "mismatch_type"))
       // repair script: recorded with the mismatches (same
       // crash-safety rule — never after the range is marked done).
       // Normalized to (token, action, statement) so the journal
@@ -347,108 +331,57 @@ final class DiffRunner(
       // token is the same per-partition address the mismatch rows
       // carry, so an operator can join script rows to mismatch rows.
       if (config.repair)
-        store.write("repair_scripts",
+        journal("repair_scripts",
           graft.engine.Repair.repairStatements(src, tgt, spec)
-            .withColumn("token", token(spec.pk.map(col)))
-            .select(col("token"), col("action"), col("statement"))
-            .withColumn("table_name", lit(spec.table))
-            .withColumn("job_id", lit(config.jobId))
-            .withColumn("run_ts", lit(runTs)),
-          partitionBy = Seq("job_id"))
-      // with digestFirst, ps covers only dirty buckets — clean
-      // buckets journal their digest-derived arithmetic rows
-      val progress = {
-        val fromDiff =
-          DiffEngine.bucketProgressFromPartitions(ps, spec, options.buckets)
-        digestPre match {
-          case Some(d) => fromDiff.unionByName(
-            d.filter(col("digest_match")).drop("digest_match"))
-          case None => fromDiff
-        }
-      }
-      store.write("task_status", progress
-          .withColumn("status", lit("done"))
-          .withColumn("job_id", lit(config.jobId))
-          .withColumn("run_ts", lit(runTs)),
-        partitionBy = Seq("job_id"))
-      // retired buckets (journaled before, empty on both sides now)
-      // get explicit zero rows so the latest-per-bucket totals stop
-      // replaying their stale counters
-      if (retiredBuckets.nonEmpty) {
-        val tokenType = fsrc
-          .select(token(spec.pk.map(col)).as("__t")).schema("__t").dataType
-        store.write("task_status", retiredBuckets.toDF("bucket")
-          .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
-          .withColumn("last_token", lit(null).cast(tokenType))
-          .withColumn("table_name", lit(spec.table))
-          .withColumn("status", lit("done"))
-          .withColumn("job_id", lit(config.jobId))
-          .withColumn("run_ts", lit(runTs)),
-          partitionBy = Seq("job_id"))
-      }
+            .select(token(spec.pk.map(col)).as("token"), col("action"),
+              col("statement")))
+      // with digestFirst, ps covers only dirty buckets — clean buckets
+      // journal their digest-derived arithmetic rows; retired buckets
+      // journal zeros (their last_token reads null)
+      val progress = DiffEngine.bucketProgressFromPartitions(ps, spec,
+        options.buckets) +: digestPre.toSeq.map(d =>
+          d.filter(col("digest_match")).drop("digest_match"))
+      val zeroes = retired.toDF("bucket")
+        .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
+      journal("task_status", (progress :+ zeroes)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .withColumn("status", lit(Resume.StatusDone)))
       // digests are journaled LAST: a crash before this point leaves
       // the OLD digests in place, so the next incremental run still
       // sees the affected buckets as changed and re-compares them —
       // writing digests first would instead mask a half-journaled run
       // as fully unchanged and lose its records permanently
       curDigests.foreach { cur =>
-        store.write("bucket_digests", cur
-          .withColumn("table_name", lit(spec.table))
-          .withColumn("job_id", lit(config.jobId))
-          .withColumn("run_ts", lit(runTs)),
-          partitionBy = Seq("job_id"))
+        journal("bucket_digests", cur.unionByName(retired.toDF("bucket"),
+          allowMissingColumns = true))
       }
       // O3: the sampled reverse-read validation pass
       // (DiffContext.java:54-57) — re-compare sampled partitions with
       // reversed duplicate pairing; journal any verdict disagreement
       if (options.reverseReadProbability > 0.0)
-        store.write("reverse_checks",
+        journal("reverse_checks",
           DiffEngine.reverseValidation(src, tgt, spec,
               options.reverseReadProbability, token)
             .filter(!col("agree"))
             .select(col("token"), col("fwd_classification"),
-              col("rev_classification"))
-            .withColumn("table_name", lit(spec.table))
-            .withColumn("job_id", lit(config.jobId))
-            .withColumn("run_ts", lit(runTs)),
-          partitionBy = Seq("job_id"))
+              col("rev_classification")))
       // whole-job totals: newest journal row per bucket across ALL runs
       // of this job_id (a resumed run's own frame covers only the
       // pending remainder; the journal carries the rest)
       val sums = DiffEngine.counterSums
-      val totalsRow = latestPerBucket(store, "task_status", spec.table)
+      val totals = latestPerBucket("task_status")
         .agg(sums.head, sums.tail: _*).collect()(0)
       val skipped =
         if (!options.filtersTokens) 0L
         else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
           token).count()
-      val stats = MetadataStore.toRangeStats(totalsRow)
+      journal("job_results", spark.createDataFrame(
+        java.util.Collections.singletonList(Row.fromSeq(totals.toSeq :+ skipped)),
+        totals.schema.add("skipped_partitions", LongType)))
+      val stats = MetadataStore.toRangeStats(totals)
         .copy(skippedPartitions = skipped)
-      store.write("job_results", Seq((
-        config.jobId, spec.table, runTs,
-        stats.matchedPartitions, stats.mismatchedPartitions,
-        stats.onlyInSource, stats.onlyInTarget, stats.matchedRows,
-        stats.matchedValues, stats.mismatchedValues, stats.skippedPartitions))
-        .toDF("job_id", "table_name", "run_ts",
-          "matched_partitions", "mismatched_partitions", "only_in_source",
-          "only_in_target", "matched_rows", "matched_values",
-          "mismatched_values", "skipped_partitions"),
-        partitionBy = Seq("job_id"))
       spec.table -> stats
     } finally persisted.foreach(_.unpersist())
-  }
-
-  /** The newest journal row per bucket of `table` in this job's
-    * `dataset`, across every run of the job id.
-    */
-  private def latestPerBucket(store: MetadataStore, dataset: String,
-      table: String, mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
-    store.read(dataset, mergeSchema)
-      .filter(col("job_id") === config.jobId && col("table_name") === table)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn")
   }
 }
 

@@ -18,23 +18,16 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   // mergeSchema: a journal accumulates rows across engine versions; the
   // API must serve mixed-schema datasets, not throw on the first footer
   private def summary: DataFrame = store.read("job_summary", mergeSchema = true)
-  private def results: DataFrame = store.read("job_results", mergeSchema = true)
-  private def status: DataFrame = store.read("task_status", mergeSchema = true)
   // The reference journals mismatches as CQL UPSERTS with PRIMARY KEY
   // ((job_id, bucket), qualified_table_name, mismatching_token) —
   // mismatch_type is a VALUE, so re-recording a token overwrites and the
   // latest classification wins (JobMetadataDb.java:552-559, 229-236).
-  // Parquet appends instead, so reads keep the newest row per key
+  // Parquet appends instead, so reads keep the newest run per key
   // (stale rows of vanished mismatches persisting is reference behavior
   // too: it never deletes mismatch rows).
-  private def mismatch: DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("job_id", "table_name", "bucket", "token")
-      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-    store.read("mismatches", mergeSchema = true)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  private def mismatch(jobId: String): DataFrame =
+    store.latest("mismatches", jobId, Seq("table_name", "bucket", "token"),
+      mergeSchema = true)
   private def errors: DataFrame = store.read("errors", mergeSchema = true)
 
   /** GET /jobs/running (DiffJobsResource.java:60-66). */
@@ -58,36 +51,25 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   /** GET /jobs/{id}/results (DiffJobsResource.java:104-110). Journals are
     * append-only across resumes/re-runs; serve the newest row per table.
     */
-  def jobResults(jobId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("table_name")).orderBy(col("run_ts").desc)
-    results.filter(col("job_id") === jobId)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def jobResults(jobId: String): DataFrame =
+    store.latest("job_results", jobId, Seq("table_name"), mergeSchema = true)
 
   /** GET /jobs/{id}/status — per (table, bucket) progress, newest run per
     * bucket (DiffJobsResource.java:113-119).
     */
-  def jobStatus(jobId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("table_name"), col("bucket"))
-      .orderBy(col("run_ts").desc)
-    status.filter(col("job_id") === jobId)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+  def jobStatus(jobId: String): DataFrame =
+    store.latest("task_status", jobId, Seq("table_name", "bucket"),
+        mergeSchema = true)
       .select("job_id", "table_name", "bucket", "status", "last_token")
-  }
 
   /** GET /jobs/{id}/mismatches (DiffJobsResource.java:122-128). */
-  def jobMismatches(jobId: String): DataFrame =
-    mismatch.filter(col("job_id") === jobId)
+  def jobMismatches(jobId: String): DataFrame = mismatch(jobId)
 
   /** Mismatch counts per (table, type) — the group-merge the API server
     * does client-side (DBService.java:215-228).
     */
   def mismatchSummary(jobId: String): DataFrame =
-    mismatch.filter(col("job_id") === jobId)
-      .groupBy("table_name", "mismatch_type")
+    mismatch(jobId).groupBy("table_name", "mismatch_type")
       .agg(count(lit(1)).as("n"))
 
   /** GET /jobs/{id}/errors (DiffJobsResource.java:131-137). */
@@ -115,20 +97,14 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     * ones wholesale, mirroring the mismatch journal's latest-wins rule.
     */
   def jobRepair(jobId: String, table: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     // repair output is opt-in (DiffJobConfig.repair) — jobs that never
     // enabled it have no dataset; serve the empty script, not a throw
     if (!store.exists("repair_scripts"))
       return Seq.empty[(String, String, Long, String, String)]
         .toDF("job_id", "table_name", "token", "action", "statement")
-    val w = Window.partitionBy("table_name", "token")
-      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-    val base = store.read("repair_scripts", mergeSchema = true)
-      .filter(col("job_id") === jobId)
-      // dense_rank, not row_number: a token carries one statement per
-      // clustering row — keep ALL rows of its newest run
-      .withColumn("__rk", dense_rank().over(w)).filter(col("__rk") === 1)
+    val base = store.latest("repair_scripts", jobId, Seq("table_name", "token"),
+        mergeSchema = true)
       .select("job_id", "table_name", "token", "action", "statement")
     table.fold(base)(t => base.filter(col("table_name") === t))
   }

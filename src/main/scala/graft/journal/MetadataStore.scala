@@ -3,6 +3,7 @@ package graft.journal
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.RangeStats
@@ -194,8 +195,23 @@ final class MetadataStore(val root: String,
     Files.exists(base.resolve("_schema")) || hasDataFiles(base)
   }
 
-  def readOrEmpty(table: String, schemaOf: => DataFrame): DataFrame =
-    if (exists(table)) read(table) else schemaOf.limit(0)
+  /** Every row of each key's newest run among `jobId`'s rows of
+    * `dataset` — the reference's CQL upsert (re-recording a key
+    * overwrites it, JobMetadataDb.java:552-559) read over an append-only
+    * journal. `keys` name the upsert key minus `job_id`. All rows of the
+    * newest run are kept (a repair token carries one statement per
+    * clustering row), and a row with a null `run_ts` loses to any stamped
+    * row. A filter on `keys` applied to the result is pushed below the
+    * window.
+    */
+  def latest(dataset: String, jobId: String, keys: Seq[String],
+      mergeSchema: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
+    read(dataset, mergeSchema).filter(col("job_id") === jobId)
+      .withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
+      .drop("__rank")
+  }
 
   /** O21: the `running_jobs` LWT lock (`INSERT ... IF NOT EXISTS`,
     * JobMetadataDb.java:359-376) emulated with an atomic file create.
@@ -214,10 +230,6 @@ final class MetadataStore(val root: String,
 
   def isRunning(jobId: String): Boolean =
     Files.exists(Paths.get(root, "running_jobs", s"$jobId.lock"))
-
-  /** Final per-table stats row (job_results, JobMetadataDb.java:609-617). */
-  def writeResults(jobId: String, statsByTable: DataFrame): Unit =
-    write("job_results", statsByTable.withColumn("job_id", lit(jobId)))
 }
 
 object MetadataStore {

@@ -186,6 +186,12 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       col("matched_partitions") + col("mismatched_partitions") +
         col("only_in_source") + col("only_in_target") === 0).count()
     assert(zeroed > 0, "expected retired buckets with zero rows")
+    // run 4: the retired buckets' rows come back. Their latest digest is
+    // the tombstone run 3 journaled, so they re-diff; without it they
+    // would match run 2's digests and replay run 3's zeros
+    val incBack = new DiffRunner(src, tgtOf(Perturb.lineitemTarget), mk(root))
+      .run()("lineitem")
+    assert(incBack === full)
   }
 
   test("mismatch reads: latest classification wins per (job, table, bucket, token)") {
@@ -195,14 +201,23 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     // reference PK ((job_id, bucket), table, token): mismatch_type is a
     // VALUE — re-recording a token upserts, latest classification wins
     store.write("mismatches", Seq(
-      ("t1", 1L, 42L, "PARTITION_MISMATCH", "j1", 1000L),
-      ("t1", 1L, 42L, "ONLY_IN_SOURCE", "j1", 2000L),
-      ("t1", 1L, 43L, "ONLY_IN_TARGET", "j1", 1000L))
+      ("t1", 1L, 42L, "PARTITION_MISMATCH", "j1", Some(1000L)),
+      ("t1", 1L, 42L, "ONLY_IN_SOURCE", "j1", Some(2000L)),
+      ("t1", 1L, 43L, "ONLY_IN_TARGET", "j1", Some(1000L)),
+      // an unstamped row loses to any stamped row of its key
+      ("t1", 1L, 44L, "ONLY_IN_SOURCE", "j1", None),
+      ("t1", 1L, 44L, "ONLY_IN_TARGET", "j1", Some(1L)),
+      // every row of a key's newest run is served, none dropped
+      ("t1", 1L, 45L, "ONLY_IN_SOURCE", "j1", Some(1000L)),
+      ("t1", 1L, 45L, "ONLY_IN_TARGET", "j1", Some(3000L)),
+      ("t1", 1L, 45L, "PARTITION_MISMATCH", "j1", Some(3000L)))
       .toDF("table_name", "bucket", "token", "mismatch_type", "job_id", "run_ts"),
       partitionBy = Seq("job_id"))
     val got = new ResultsApi(store).jobMismatches("j1")
       .select("token", "mismatch_type").as[(Long, String)].collect().toSet
-    assert(got === Set((42L, "ONLY_IN_SOURCE"), (43L, "ONLY_IN_TARGET")))
+    assert(got === Set((42L, "ONLY_IN_SOURCE"), (43L, "ONLY_IN_TARGET"),
+      (44L, "ONLY_IN_TARGET"), (45L, "ONLY_IN_TARGET"),
+      (45L, "PARTITION_MISMATCH")))
   }
 
   test("re-run keeps the stored bucket count (params immutability)") {
@@ -337,6 +352,46 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val walk = Files.walk(java.nio.file.Paths.get(root))
     try assert(!walk.anyMatch(_.getFileName.toString.startsWith(".staging-")))
     finally walk.close()
+  }
+
+  test("an interrupted job resumes only the unfinished table") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val src = ParquetSource(Sf)
+    val tgt = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame =
+        if (name == "lineitem") Perturb.lineitemTarget(src.table(sp, name))
+        else Perturb.ordersTarget(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    // the first run's lineitem source fails before anything is journaled
+    val failing = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame =
+        if (name == "lineitem") sys.error("lineitem source down")
+        else src.table(sp, name)
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    val buckets = 8
+    val mk = (root2: String) => DiffJobConfig("partial-job",
+      Seq(Perturb.ordersSpec, Perturb.lineitemSpec),
+      DiffOptions(buckets = buckets), metadataRoot = root2)
+    val e = intercept[Exception](new DiffRunner(failing, tgt, mk(root)).run())
+    assert(e.getMessage.contains("lineitem source down"), e.getMessage)
+    val store = new MetadataStore(root)
+    def statusRows(table: String): Long = store.read("task_status")
+      .filter(col("table_name") === table).count()
+    val ordersRows = statusRows("orders")
+    assert(ordersRows === buckets && statusRows("lineitem") === 0)
+    // the healthy re-run diffs lineitem and skips every orders bucket
+    val resumed = new DiffRunner(src, tgt, mk(root)).run()
+    assert(statusRows("orders") === ordersRows)
+    val whole = new DiffRunner(src, tgt, mk(tmpRoot())).run()
+    assert(resumed === whole)
+    assert(whole("lineitem").mismatchedPartitions > 0 &&
+      whole("orders").mismatchedPartitions > 0)
+    val status = new ResultsApi(store).jobStatus("partial-job")
+    assert(status.count() === 2 * buckets)
+    assert(status.select("table_name", "bucket").distinct().count() === 2 * buckets)
   }
 
   test("fully-matched job: every journal table reads back, empties included") {

@@ -9,15 +9,18 @@ OUT=$(mktemp -d /tmp/graft-verify.XXXX)
 echo "== compile + test =="
 sbt -batch compile test
 
-echo "== diff job end to end (perfbench dirty_full smoke) =="
 # the real job path: YAML -> DiffRunner -> journal -> ResultsApi, with
-# every counter and read-back checked against the generator's values
-LAST=$(python3 perfbench/run.py --workload dirty_full --seed 1 --seconds 10 \
-  --trace 0 | tail -n 1)
-echo "$LAST"
-python3 -c 'import json, sys
+# every counter and read-back checked against the generator's values;
+# dirty_full runs the full diff, clean_digest the digest_first prefilter
+for W in dirty_full clean_digest; do
+  echo "== diff job end to end (perfbench $W smoke) =="
+  LAST=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 10 \
+    --trace 0 | tail -n 1)
+  echo "$LAST"
+  python3 -c 'import json, sys
 r = json.loads(sys.argv[1])
 sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$LAST"
+done
 
 echo "== verify vs duckdb oracle ($SF) =="
 # strict: any query that throws or times out fails the local gate (the
