@@ -1,16 +1,39 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Execution-footprint accounting: total shuffle bytes and spill across
   * the bench — the scale-relevant signal (a fast-but-shuffle-heavy plan
-  * stops being fast at 1000 executors).
+  * stops being fast at 1000 executors) — and the jobs, stages and tasks
+  * each job group scheduled. At small scale the per-action fixed cost
+  * (planning + scheduling + result handling) dominates many queries, so
+  * the job count is the direct measurement behind any "converted an eager
+  * materialization to a lazy one" claim, which a plan dump cannot show.
   */
 private final class FootprintListener extends SparkListener {
   val shuffleRead = new java.util.concurrent.atomic.AtomicLong
   val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
   val spill = new java.util.concurrent.atomic.AtomicLong
+  /** job group → (jobs, stages, tasks); written on the listener-bus
+    * thread only, read once spark.stop() has drained and joined it
+    */
+  val perGroup = mutable.HashMap.empty[String, Array[Long]]
+  private val stageGroup = mutable.HashMap.empty[Int, String]
+  private def count(group: String, i: Int): Unit =
+    perGroup.getOrElseUpdate(group, new Array[Long](3))(i) += 1
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    // the key SparkContext.setJobGroup writes (its constant is private)
+    Option(j.properties).flatMap(p =>
+      Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+      count(g, 0)
+      j.stageIds.foreach(stageGroup(_) = g)
+    }
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    stageGroup.get(s.stageInfo.stageId).foreach(count(_, 1))
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+    stageGroup.get(t.stageId).foreach(count(_, 2))
     val m = t.taskMetrics
     if (m != null) {
       shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
@@ -23,36 +46,7 @@ private final class FootprintListener extends SparkListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one shuffle partition per core (right for the sf0.1
-      // gate); SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for scale-shape
-      // runs where partitions must be sized to the data, not the box
-      // (the r13 100x audit spilled 83.5 GB under the sf0.1-tuned
-      // default — the knob, not the plan)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // let the diff join reuse the occurrence-window's (pk, ck) hash
-      // partitioning — a subset of the join keys (pk, ck, __occ) — instead
-      // of re-shuffling the full data on all three (saves one full-data
-      // exchange per side on the hottest path)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // shuffle/spill to tmpfs: the VM's virtio block device turns the
-      // many small shuffle files into sys-time (observed 80% idle/16% sys)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // this VM exhibits intermittent single-task stalls (one task at 50%
-      // cpu for minutes while the rest park); speculation re-launches
-      // stragglers — same defense a real cluster needs for sick executors
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "1s")
-      .config("spark.speculation.multiplier", "3")
-      .config("spark.speculation.quantile", "0.9")
-      .getOrCreate()
+    val spark = GraftSession.local()
     // SPARK_GRAFT_LOG_LEVEL=INFO surfaces the codegen-fallback notices
     // ("Found too long generated codes…" logs at INFO) for plan audits;
     // default WARN keeps the bench line readable
@@ -68,9 +62,7 @@ object Bench {
     // that some query is inflated nearly every run (observed 25% total
     // swing), while min-of-5 makes that rare for ~2 min extra bench time.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "5").toInt
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
     // untimed warm-up: exercise codegen/JIT/parquet-footer paths once so
     // measured times reflect the engine, not first-query JVM warm-up
     // Force queries through the V2 noop sink, NOT count(): count() lets
@@ -102,13 +94,18 @@ object Bench {
     // surface as a (fast) timing row. Queries with zero successful repeats
     // go in a separate "failed" key, excluded from "queries" and "value"
     // (round 7 shipped 8 time-to-throw entries as the "fastest" queries).
+    // The first timed repeat runs in the query's job group, so the
+    // footprint listener counts the jobs, stages and tasks it scheduled.
     val runs = selected.map { case (name, fn) =>
-      val times = (1 to repeat).flatMap { _ =>
+      val times = (1 to repeat).flatMap { r =>
+        if (r == 1) spark.sparkContext.setJobGroup(name, name)
         val t0 = System.nanoTime()
         val ok = try { force(fn(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name threw: ${e.getMessage}"); false }
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        val t = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.clearJobGroup()
+        if (ok) Some(t) else None
       }
       if (repeat > 1 && times.nonEmpty)
         System.err.println(s"[bench] $name: ${times.map(t => f"$t%.2f").mkString(" ")}")
@@ -116,6 +113,8 @@ object Bench {
     }
     val results = runs.collect { case (n, ts) if ts.nonEmpty => n -> ts.min }
     val failed = runs.collect { case (n, ts) if ts.isEmpty => n }.toSeq
+    // stopping drains the listener bus, so every counter below is final
+    spark.stop()
     // ms precision: 243 queries at full double precision made the one-line
     // JSON ~9 KB and the driver's stdout tail capture truncated its head —
     // PERF had parsed:null (no per-query comparison) for three straight
@@ -136,11 +135,16 @@ object Bench {
     println(json)
     // also persist the full report: stdout tails get truncated by log
     // capture, which has lost per-query times in past runs — the file is
-    // the self-contained artifact
+    // the self-contained artifact, and alone carries each query's
+    // footprint (its first timed repeat)
+    val footprintJson = results.keys.map { n =>
+      val Array(jobs, stages, tasks) = footprint.perGroup.getOrElse(n, Array(0L, 0L, 0L))
+      s""""$n":{"jobs":$jobs,"stages":$stages,"tasks":$tasks}"""
+    }.mkString("{", ",", "}")
+    val report = json.dropRight(1) + s""","footprint":$footprintJson}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_report.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      report.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] report write failed: $e") }
-    spark.stop()
   }
 }

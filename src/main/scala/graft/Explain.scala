@@ -1,23 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper (not part of the driver contract): prints the
   * formatted physical plan of each named `SparkEntry.queries` entry over
   * sf0.01 — the per-operator `.explain` loop PLANS.md is written from.
   * Usage: `sbt "runMain graft.Explain q8_market_share events_pagerank"`;
-  * env `SPARK_GRAFT_SF_DIR` overrides the data dir.
+  * env `SPARK_GRAFT_SF_DIR` overrides the data dir. Runs in Bench's
+  * session ([[GraftSession.local]]), so it explains the plans Bench times.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     if (args.isEmpty) {

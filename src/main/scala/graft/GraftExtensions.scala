@@ -15,9 +15,8 @@ import graft.functions.{CassandraMurmur3TokenExpr, CassandraRandomTokenExpr,
   *   spark.sql("SELECT cassandra_murmur3_token(pk) FROM t")
   *   spark.sql("SELECT vector_dot(a.embedding, b.embedding) FROM ...")
   *
-  * Activate with:
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  * Every session built by [[GraftSession]] activates it (its `engine`
+  * settings name this class in `spark.sql.extensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -35,4 +35,12 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     DiffQueries.oracles ++ OpsQueries.oracles ++ AnalyticsQueries.oracles ++
       TextQueries.oracles ++ VectorQueries.oracles
+
+  /** Local-iteration filter of Bench and Verify: env `SPARK_GRAFT_ONLY`
+    * names the queries to run, comma-separated; unset, every query runs.
+    */
+  def selected(name: String): Boolean = only.forall(_.contains(name))
+
+  private lazy val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -15,24 +14,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy fixtures carried TIMESTAMP(NANOS), which the vectorized
-      // reader rejects; read those as long — Tables.events normalizes
-      // either encoding to a microsecond timestamp
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "1s")
-      .config("spark.speculation.multiplier", "3")
-      .config("spark.speculation.quantile", "0.9")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query watchdog: one pathological query (or a host-level stall)
@@ -40,18 +22,14 @@ object Verify {
     // own job group; on timeout the group is cancelled and the dump moves
     // on — that query alone fails its check.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "600").toLong
-    // Local-iteration filter (NOT used by the driver): comma-separated
-    // query names; restricts both the dump and the emitted oracle json so
-    // tools/check_oracle.py checks exactly the selected queries.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
     import scala.concurrent.{Await, Future, TimeoutException}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     // name -> (error message, was it a timeout)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, (String, Boolean)]
-    val registered = SparkEntry.queries.filter(kv => selected(kv._1))
+    // SPARK_GRAFT_ONLY restricts both the dump and the emitted oracle
+    // json, so tools/check_oracle.py checks exactly the selected queries
+    val registered = SparkEntry.queries.filter(kv => SparkEntry.selected(kv._1))
     registered.foreach { case (name, fn) =>
       val work = Future {
         spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
@@ -77,7 +55,7 @@ object Verify {
     // The driver keys its correctness rows by the result-directory name
     // INCLUDING the ".parquet" suffix; emit each oracle under both the bare
     // name and the suffixed name so either lookup convention resolves.
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => SparkEntry.selected(kv._1))
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -7,6 +7,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
 import graft.journal.MetadataStore
 
 /** Entry point 3 of the reference (SURVEY §3.3): the results HTTP server
@@ -93,7 +94,7 @@ object DiffApiServer {
     */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DiffApiServer <metadataRoot> [port]")
-    implicit val spark: SparkSession = SparkSession.builder()
+    implicit val spark: SparkSession = GraftSession.builder()
       .appName("graft-api")
       .config("spark.master", sys.props.getOrElse("spark.master", "local[4]"))
       .config("spark.ui.enabled", "false")

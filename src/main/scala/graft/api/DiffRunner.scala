@@ -226,10 +226,12 @@ final class DiffRunner(
     try {
       require(spec0.pk.nonEmpty,
         s"table ${spec0.table}: partition key columns must be declared")
-      val spec = spec0.bind(source.table(spark, spec0.table))
+      // each side is opened once: one file listing and schema read
+      val srcTable = source.table(spark, spec0.table)
+      val spec = spec0.bind(srcTable)
       // O15: quarantine structurally invalid rows per side (origin
       // tagged), journal them, diff the clean remainder
-      val sq = graft.engine.Quarantine.split(source.table(spark, spec.table), spec, "source")
+      val sq = graft.engine.Quarantine.split(srcTable, spec, "source")
       val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
       store.write("errors",
         sq.errors.unionByName(tq.errors)

@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.api.{DiffJobConfig, DiffRunner}
 import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
 
@@ -18,14 +19,10 @@ object DiffJobMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: DiffJobMain <config.yaml>")
     val config = JobConfig.load(args(0))
-    implicit val spark: SparkSession = SparkSession.builder()
+    implicit val spark: SparkSession = GraftSession.builder()
       .appName("graft-diff")
       // spark-submit injects spark.master; default for direct invocation
       .config("spark.master", sys.props.getOrElse("spark.master", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

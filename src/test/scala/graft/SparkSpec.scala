@@ -4,19 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{Failed, Outcome, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession (getOrCreate),
-  * local[4], UTC, nanos-tolerant parquet reads.
+/** Shared session for all suites — one JVM-wide SparkSession (getOrCreate)
+  * with the engine settings every graft session carries, at local[4].
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     .getOrCreate()
 
   val Sf = "/root/testdata/sf0.001"

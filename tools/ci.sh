@@ -30,5 +30,12 @@ SPARK_GRAFT_VERIFY_STRICT=1 \
 python3 tools/check_oracle.py "$SF" "$OUT"
 
 echo "== bench ($SF) =="
+REPORT="$OUT/bench_report.json"
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Bench" | grep '"metric"'
+  SPARK_GRAFT_BENCH_OUT="$REPORT" sbt -batch "runMain graft.Bench" | grep '"metric"'
+# every timed query also reports the Spark jobs its first repeat ran
+python3 -c 'import json, sys
+r = json.load(open(sys.argv[1]))
+bad = [q for q in r["queries"] if r["footprint"].get(q, {}).get("jobs", 0) < 1]
+print("queries without a job count:", bad or "none")
+sys.exit(1 if bad else 0)' "$REPORT"

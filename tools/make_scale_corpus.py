@@ -7,11 +7,14 @@ Each table is replicated <copies> times with per-copy key strides so
 cardinalities scale honestly (no duplicate keys; r13 learned that
 copy-synthesized corpora must key-shift EVERY table an audit touches or
 pair-emitting operators inflate quadratically). Foreign keys keep
-pointing into copy 0 so join fan-outs stay constant per row:
+pointing into copy 0 so join fan-outs stay constant per row.
 
-- lineitem: l_orderkey += copy * stride(l_orderkey)
+A table's stride is the smallest power of ten above the largest of its
+shifted keys, and never below 10_000_000, so copies cannot overlap:
+
+- lineitem: l_orderkey += copy * stride
 - orders:   o_orderkey += copy * stride (FK o_custkey untouched)
-- documents: doc_id += copy * 10_000_000 (doc_id arithmetic in the web
+- documents: doc_id += copy * stride (doc_id arithmetic in the web
   corpus derives from doc_id % k, invariant under multiples of 1e7)
 - embeddings: vec_id += copy * stride
 - events: event_id += copy * stride, user_id += copy * stride (sessions
@@ -26,6 +29,20 @@ SPARK_GRAFT_SHUFFLE_PARTITIONS (the r13/r14 audits used 256 at 100x).
 import sys
 
 import duckdb
+
+
+def stride(con, path: str, keys: list) -> int:
+    """Smallest power of ten above every shifted key, at least 10_000_000."""
+    lo, hi = con.execute(
+        f"SELECT least({', '.join(f'min({k})' for k in keys)}), "
+        f"greatest({', '.join(f'max({k})' for k in keys)}) FROM '{path}'"
+    ).fetchone()
+    if lo is not None and lo < 0:
+        sys.exit(f"{path}: negative key {lo}; shifted copies would overlap")
+    s = 10_000_000
+    while hi is not None and s <= hi:
+        s *= 10
+    return s
 
 
 def main() -> None:
@@ -43,9 +60,9 @@ def main() -> None:
     import os
     os.makedirs(out, exist_ok=True)
     for t, keys in shifted.items():
-        stride = 10_000_000
+        step = stride(con, f"{src}/{t}.parquet", keys)
         sel = ", ".join(
-            f"{k} + CAST(c.copy AS BIGINT) * {stride} AS {k}" for k in keys
+            f"{k} + CAST(c.copy AS BIGINT) * {step} AS {k}" for k in keys
         )
         others = f"* EXCLUDE ({', '.join(keys)})"
         con.execute(
@@ -56,7 +73,7 @@ def main() -> None:
             ) TO '{out}/{t}.parquet' (FORMAT PARQUET, COMPRESSION ZSTD)"""
         )
         n = con.execute(f"SELECT count(*) FROM '{out}/{t}.parquet'").fetchone()[0]
-        print(f"{t}: {n} rows ({copies} copies)")
+        print(f"{t}: {n} rows ({copies} copies, stride {step})")
     for t in verbatim:
         con.execute(
             f"""COPY (SELECT * FROM '{src}/{t}.parquet')
