@@ -3,10 +3,12 @@ package graft.api
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
 import graft.engine.DiffEngine
@@ -91,13 +93,13 @@ final class DiffRunner(
       // reference's getJobParams reuse (JobMetadataDb.java:432-490;
       // DiffJob.java:136-143, 213-229). A re-run with conflicting options
       // must not silently diverge from the journal's semantics.
-      // mergeSchema + per-column fallback: a journal written by an older
-      // engine version (fewer columns) must restore the params it HAS and
-      // fall back to the submitted config for the rest, not throw on
-      // fieldIndex of an absent column
+      // per-column fallback: a journal written by an older engine version
+      // (fewer columns) must restore the params it HAS and fall back to
+      // the submitted config for the rest, not throw on fieldIndex of an
+      // absent column
       val priorSummary =
         if (store.exists("job_summary"))
-          store.read("job_summary", mergeSchema = true)
+          store.read("job_summary")
             .filter(col("job_id") === config.jobId)
             .collect().headOption
         else None
@@ -136,7 +138,7 @@ final class DiffRunner(
           // submitted specs (the only roles available).
           val storedSpecs =
             if (store.exists("table_params"))
-              store.read("table_params", mergeSchema = true)
+              store.read("table_params")
                 .filter(col("job_id") === config.jobId)
                 .collect().toSeq
             else Seq.empty
@@ -191,12 +193,13 @@ final class DiffRunner(
         // TableSpecs without trusting the resubmitted config (the
         // reference stores qualified table names and refetches roles from
         // cluster metadata, TableSpec.java:71-89; file sources have no
-        // metadata service, so roles live in the journal)
+        // metadata service, so roles live in the journal); one file, not
+        // one per table row
         store.write("table_params", config.tables.map(t =>
             (config.jobId, t.table, t.pk, t.clustering, t.regular,
               t.uniqueKey))
           .toDF("job_id", "table_name", "pk", "clustering", "regular",
-            "unique_key"))
+            "unique_key").coalesce(1))
       // tables run concurrently: one table's driver-side planning, file
       // publishing and small-job scheduling overlap the other's tasks
       val results = DiffRunner.concurrently(tables,
@@ -238,13 +241,22 @@ final class DiffRunner(
           .withColumn("table_name", lit(spec.table))
           .withColumn("job_id", lit(config.jobId)))
       // this table's rows of a journal dataset, newest run per bucket
-      def latestPerBucket(dataset: String, mergeSchema: Boolean = false) =
-        store.latest(dataset, config.jobId, Seq("table_name", "bucket"),
-          mergeSchema).filter(col("table_name") === spec.table)
+      def latestPerBucket(dataset: String) =
+        store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
+          .filter(col("table_name") === spec.table)
       // bucket id sets are ≤ options.buckets longs: collected, then
       // re-broadcast by `restrict` as one join per side
       def buckets(df: DataFrame): Seq[Long] =
         df.select(col("bucket").cast("long")).as[Long].collect().toSeq
+      def bucket(r: Row): Long = r.getAs[Number]("bucket").longValue
+      def local(rows: Seq[Row], schema: StructType): DataFrame =
+        spark.createDataFrame(rows.asJava, schema)
+      // this table's newest task_status row per bucket from earlier runs
+      // of this job, ≤ options.buckets rows: the resume skip set, and the
+      // totals of the buckets this run does not journal
+      val priorStatus: Seq[Row] =
+        if (store.exists("task_status")) latestPerBucket("task_status").collect().toSeq
+        else Nil
       def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
         DiffEngine.restrictBuckets(df, spec, options.buckets, token,
           ids.toDF("bucket"), how)
@@ -261,7 +273,7 @@ final class DiffRunner(
         else None
       val priorDigests =
         if (curDigests.isEmpty || !store.exists("bucket_digests")) None
-        else Some(latestPerBucket("bucket_digests", mergeSchema = true))
+        else Some(latestPerBucket("bucket_digests"))
       // The buckets this run does not re-compare; their journal rows
       // stand. Incremental mode skips the digest-unchanged buckets.
       // Otherwise this is O12 resume: the buckets a previous run of this
@@ -272,9 +284,9 @@ final class DiffRunner(
         if (config.incremental)
           priorDigests.fold(Seq.empty[Long])(prior =>
             buckets(DiffEngine.unchangedDigestBuckets(curDigests.get, prior)))
-        else if (config.rerun || !store.exists("task_status")) Nil
-        else buckets(latestPerBucket("task_status")
-          .filter(col("status") === Resume.StatusDone))
+        else if (config.rerun) Nil
+        else priorStatus.filter(_.getAs[String]("status") == Resume.StatusDone)
+          .map(bucket)
       // RETIRED buckets: live in the prior digests, gone from both sides
       // now. With no partitionStats rows they would never get a new
       // journal row and the latest-per-bucket totals would replay their
@@ -292,15 +304,17 @@ final class DiffRunner(
       }
       def pending(df: DataFrame): DataFrame =
         if (skip.isEmpty) df else restrict(df, skip, "left_anti")
-      // digest-first fast path: persisted so its two consumers (the
-      // dirty-set collect and the clean journal rows) run the narrow
-      // digest aggregation once. Only dirty buckets reach the diff.
+      // digest-first fast path: its ≤ options.buckets rows are collected
+      // once, and both the dirty set and the clean buckets' journal rows
+      // come from them. Only dirty buckets reach the diff.
       val digestPre =
         if (config.digestFirst)
-          Some(persist(DiffEngine.digestProgress(pending(fsrc),
-            pending(ftgt), spec, options.buckets, token)))
+          Some(DiffEngine.digestProgress(pending(fsrc), pending(ftgt), spec,
+            options.buckets, token))
         else None
-      val dirty = digestPre.map(d => buckets(d.filter(!col("digest_match"))))
+      val digestRows = digestPre.map(_.collect().toSeq)
+      def matched(r: Row): Boolean = r.getAs[Boolean]("digest_match")
+      val dirty = digestRows.map(_.filterNot(matched).map(bucket))
       def diffed(df: DataFrame): DataFrame =
         dirty.fold(pending(df))(restrict(pending(df), _, "left_semi"))
       val src = diffed(fsrc)
@@ -339,15 +353,20 @@ final class DiffRunner(
               col("statement")))
       // with digestFirst, ps covers only dirty buckets — clean buckets
       // journal their digest-derived arithmetic rows; retired buckets
-      // journal zeros (their last_token reads null)
+      // journal zeros (their last_token reads null). The ≤ options.buckets
+      // rows are collected once: journaled as one file, and summed into
+      // the totals below.
       val progress = DiffEngine.bucketProgressFromPartitions(ps, spec,
-        options.buckets) +: digestPre.toSeq.map(d =>
-          d.filter(col("digest_match")).drop("digest_match"))
+        options.buckets) +: digestPre.zip(digestRows).toSeq.map {
+          case (d, rows) => local(rows.filter(matched), d.schema).drop("digest_match")
+        }
       val zeroes = retired.toDF("bucket")
         .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
-      journal("task_status", (progress :+ zeroes)
+      val status = (progress :+ zeroes)
         .reduce(_.unionByName(_, allowMissingColumns = true))
-        .withColumn("status", lit(Resume.StatusDone)))
+        .withColumn("status", lit(Resume.StatusDone))
+      val statusRows = status.collect().toSeq
+      journal("task_status", local(statusRows, status.schema).coalesce(1))
       // digests are journaled LAST: a crash before this point leaves
       // the OLD digests in place, so the next incremental run still
       // sees the affected buckets as changed and re-compares them —
@@ -367,27 +386,33 @@ final class DiffRunner(
             .filter(!col("agree"))
             .select(col("token"), col("fwd_classification"),
               col("rev_classification")))
-      // whole-job totals: newest journal row per bucket across ALL runs
-      // of this job_id (a resumed run's own frame covers only the
-      // pending remainder; the journal carries the rest)
-      val sums = DiffEngine.counterSums
-      val totals = latestPerBucket("task_status")
-        .agg(sums.head, sums.tail: _*).collect()(0)
+      // whole-job totals: the newest journal row per bucket across ALL
+      // runs of this job_id — this run's rows, plus the earlier rows of
+      // the buckets it did not journal (a resumed run covers only the
+      // pending remainder). The run lock excludes every other writer of
+      // this job, so no newer row can exist. Null counters count 0.
+      val journaled = statusRows.map(bucket).toSet
+      val counted = statusRows ++ priorStatus.filterNot(r => journaled(bucket(r)))
+      val sums = DiffEngine.Counters.map(c =>
+        counted.map(r => Option(r.getAs[Number](c)).fold(0L)(_.longValue)).sum)
       val skipped =
         if (!options.filtersTokens) 0L
         else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
           token).count()
-      journal("job_results", spark.createDataFrame(
-        java.util.Collections.singletonList(Row.fromSeq(totals.toSeq :+ skipped)),
-        totals.schema.add("skipped_partitions", LongType)))
-      val stats = MetadataStore.toRangeStats(totals)
-        .copy(skippedPartitions = skipped)
-      spec.table -> stats
+      val totals = new GenericRowWithSchema((sums :+ skipped).toArray,
+        DiffRunner.TotalsSchema)
+      journal("job_results", local(Seq(totals), totals.schema))
+      spec.table -> MetadataStore.toRangeStats(totals)
     } finally persisted.foreach(_.unpersist())
   }
 }
 
 object DiffRunner {
+
+  /** A job_results row: the summed counters, then skipped partitions. */
+  private val TotalsSchema = StructType(
+    DiffEngine.Counters.map(StructField(_, LongType, nullable = false)))
+    .add("skipped_partitions", LongType)
 
   /** `body` over every table on a pool this call creates and shuts down,
     * `min(tables, parallelism)` threads. The calling thread submits every

@@ -15,9 +15,9 @@ import graft.journal.MetadataStore
   */
 final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
 
-  // mergeSchema: a journal accumulates rows across engine versions; the
-  // API must serve mixed-schema datasets, not throw on the first footer
-  private def summary: DataFrame = store.read("job_summary", mergeSchema = true)
+  // every read merges its files' footer schemas: a journal accumulates
+  // rows across engine versions, and the API serves them all
+  private def summary: DataFrame = store.read("job_summary")
   // The reference journals mismatches as CQL UPSERTS with PRIMARY KEY
   // ((job_id, bucket), qualified_table_name, mismatching_token) —
   // mismatch_type is a VALUE, so re-recording a token overwrites and the
@@ -26,9 +26,8 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   // (stale rows of vanished mismatches persisting is reference behavior
   // too: it never deletes mismatch rows).
   private def mismatch(jobId: String): DataFrame =
-    store.latest("mismatches", jobId, Seq("table_name", "bucket", "token"),
-      mergeSchema = true)
-  private def errors: DataFrame = store.read("errors", mergeSchema = true)
+    store.latest("mismatches", jobId, Seq("table_name", "bucket", "token"))
+  private def errors: DataFrame = store.read("errors")
 
   /** GET /jobs/running (DiffJobsResource.java:60-66). */
   def runningJobs(): DataFrame = {
@@ -52,14 +51,13 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     * append-only across resumes/re-runs; serve the newest row per table.
     */
   def jobResults(jobId: String): DataFrame =
-    store.latest("job_results", jobId, Seq("table_name"), mergeSchema = true)
+    store.latest("job_results", jobId, Seq("table_name"))
 
   /** GET /jobs/{id}/status — per (table, bucket) progress, newest run per
     * bucket (DiffJobsResource.java:113-119).
     */
   def jobStatus(jobId: String): DataFrame =
-    store.latest("task_status", jobId, Seq("table_name", "bucket"),
-        mergeSchema = true)
+    store.latest("task_status", jobId, Seq("table_name", "bucket"))
       .select("job_id", "table_name", "bucket", "status", "last_token")
 
   /** GET /jobs/{id}/mismatches (DiffJobsResource.java:122-128). */
@@ -103,8 +101,7 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     if (!store.exists("repair_scripts"))
       return Seq.empty[(String, String, Long, String, String)]
         .toDF("job_id", "table_name", "token", "action", "statement")
-    val base = store.latest("repair_scripts", jobId, Seq("table_name", "token"),
-        mergeSchema = true)
+    val base = store.latest("repair_scripts", jobId, Seq("table_name", "token"))
       .select("job_id", "table_name", "token", "action", "statement")
     table.fold(base)(t => base.filter(col("table_name") === t))
   }

@@ -2,9 +2,15 @@ package graft.journal
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.mutable.ListBuffer
+
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.RangeStats
 
@@ -29,6 +35,11 @@ import graft.core.RangeStats
   *   <root>/job_results/     final per-table RangeStats
   *                           (JobMetadataDb.java:609-617)
   *   <root>/running_jobs/<job_id>.lock   the concurrency lock (O21)
+  *
+  * Reads run no Spark job to learn a schema: a read lists the dataset's
+  * visible parquet files and merges their footer schemas on the driver.
+  * [[latest]] reads one job's `job_id=<id>` directory only, so jobs
+  * whose token columns differ in type share a root.
   */
 final class MetadataStore(val root: String,
     retry: RetryPolicy = RetryPolicy.NoRetry)(implicit spark: SparkSession) {
@@ -138,31 +149,79 @@ final class MetadataStore(val root: String,
     all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
   }
 
-  def read(table: String): DataFrame = read(table, mergeSchema = false)
-
-  /** `mergeSchema` widens the read across journal rows written by older
-    * engine versions with fewer columns (schema evolution tolerance).
+  /** Every row of the dataset `table`. Its visible parquet files are
+    * listed once and their footer schemas merged on the driver (the
+    * schema `mergeSchema = true` infers, so rows journaled by an older
+    * engine version with fewer columns read as nulls), and Spark reads
+    * the dataset with that schema: no read runs a schema-inference job.
+    * A dataset whose appends were all empty reads as its `_schema`
+    * marker, through the marker's own footer.
     */
-  def read(table: String, mergeSchema: Boolean): DataFrame = {
+  def read(table: String): DataFrame = {
     val base = Paths.get(path(table))
+    val files = dataFiles(base)
     val marker = base.resolve("_schema")
-    if (Files.exists(marker) && !hasDataFiles(base))
-      spark.read.parquet(marker.toString)
-    else
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(path(table))
+    if (files.isEmpty && Files.exists(marker)) load(marker, dataFiles(marker))
+    else load(base, files)
   }
 
-  /** Any parquet data file Spark's file index would actually see — i.e.
-    * outside the `_schema` sidecar and outside hidden (`.`/`_`-prefixed)
-    * dirs such as other writers' `.staging-*` dirs? Hidden subtrees are
-    * never entered, and an entry that vanishes mid-walk (a concurrent
-    * writer dropping its staging dir) is skipped.
+  /** [[read]]: every read merges its files' footer schemas, so the flag
+    * changes nothing; it stays for callers written against the
+    * inferring reader.
     */
-  private def hasDataFiles(base: Path): Boolean = {
+  def read(table: String, mergeSchema: Boolean): DataFrame = read(table)
+
+  /** `dir` read with the merged footer schema of `files` (its visible
+    * parquet files) plus `extra` columns. With no files Spark infers, and
+    * fails as it would on any unreadable directory.
+    */
+  private def load(dir: Path, files: Seq[FileStatus],
+      extra: Seq[StructField] = Nil,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    GraftParquetBridge.footerSchema(spark, files)
+      .fold(reader)(s => reader.schema(StructType(s ++ extra)))
+      .parquet(dir.toString)
+  }
+
+  /** `jobId`'s rows of a dataset partitioned by `job_id`: only its
+    * `job_id=<id>` directory (Spark's partition-path escaping) is listed
+    * and read, so jobs whose columns differ in type (a `random` job's
+    * string tokens next to an `xxhash64` job's bigints) share a root.
+    * `job_id` stays a string column. A job with no rows reads as an
+    * empty frame shaped like the dataset's newest file.
+    */
+  private def readJob(dataset: String, jobId: String): DataFrame = {
+    val base = Paths.get(path(dataset))
+    val dir = base.resolve(
+      ExternalCatalogUtils.getPartitionPathString("job_id", jobId))
+    val jobCol = StructField("job_id", StringType)
+    val files = dataFiles(dir)
+    if (files.nonEmpty)
+      load(dir, files, Seq(jobCol), Map("basePath" -> base.toString))
+    else {
+      val newest = dataFiles(base) match {
+        case Seq() => dataFiles(base.resolve("_schema"))
+        case all => Seq(all.maxBy(_.getModificationTime))
+      }
+      GraftParquetBridge.footerSchema(spark, newest) match {
+        case Some(s) => spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType(s.filterNot(_.name == jobCol.name) :+ jobCol))
+        case None => load(base, Nil)
+      }
+    }
+  }
+
+  /** The parquet data files under `base` that Spark's file index would
+    * see — outside hidden (`.`/`_`-prefixed) dirs such as the `_schema`
+    * sidecar and other writers' `.staging-*` dirs — at most `limit` of
+    * them. Hidden subtrees are never entered, and an entry that vanishes
+    * mid-walk (a concurrent writer dropping its staging dir) is skipped.
+    */
+  private def dataFiles(base: Path, limit: Int = Int.MaxValue): Seq[FileStatus] = {
     import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
     import java.nio.file.attribute.BasicFileAttributes
-    var found = false
+    val found = ListBuffer.empty[FileStatus]
     def hidden(p: Path): Boolean = p != base && {
       val n = p.getFileName.toString
       n.startsWith(".") || n.startsWith("_")
@@ -175,7 +234,10 @@ final class MetadataStore(val root: String,
       override def visitFile(f: Path,
           a: BasicFileAttributes): FileVisitResult =
         if (!hidden(f) && f.toString.endsWith(".parquet")) {
-          found = true; FileVisitResult.TERMINATE
+          found += new FileStatus(a.size, false, 1, 0L,
+            a.lastModifiedTime.toMillis, new HPath(f.toUri))
+          if (found.size >= limit) FileVisitResult.TERMINATE
+          else FileVisitResult.CONTINUE
         } else FileVisitResult.CONTINUE
       override def visitFileFailed(f: Path,
           e: java.io.IOException): FileVisitResult = e match {
@@ -183,7 +245,7 @@ final class MetadataStore(val root: String,
         case _ => throw e
       }
     })
-    found
+    found.toList
   }
 
   /** Is there a readable dataset — data files, or the schema marker of
@@ -192,23 +254,22 @@ final class MetadataStore(val root: String,
     */
   def exists(table: String): Boolean = {
     val base = Paths.get(path(table))
-    Files.exists(base.resolve("_schema")) || hasDataFiles(base)
+    Files.exists(base.resolve("_schema")) || dataFiles(base, limit = 1).nonEmpty
   }
 
-  /** Every row of each key's newest run among `jobId`'s rows of
-    * `dataset` — the reference's CQL upsert (re-recording a key
-    * overwrites it, JobMetadataDb.java:552-559) read over an append-only
-    * journal. `keys` name the upsert key minus `job_id`. All rows of the
-    * newest run are kept (a repair token carries one statement per
-    * clustering row), and a row with a null `run_ts` loses to any stamped
-    * row. A filter on `keys` applied to the result is pushed below the
-    * window.
+  /** Every row of each key's newest run among `jobId`'s rows of the
+    * job-partitioned `dataset` — the reference's CQL upsert
+    * (re-recording a key overwrites it, JobMetadataDb.java:552-559) read
+    * over an append-only journal. Only the job's own directory is read.
+    * `keys` name the upsert key minus `job_id`. All rows of the newest
+    * run are kept (a repair token carries one statement per clustering
+    * row), and a row with a null `run_ts` loses to any stamped row. A
+    * filter on `keys` applied to the result is pushed below the window.
     */
-  def latest(dataset: String, jobId: String, keys: Seq[String],
-      mergeSchema: Boolean = false): DataFrame = {
+  def latest(dataset: String, jobId: String, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-    read(dataset, mergeSchema).filter(col("job_id") === jobId)
+    readJob(dataset, jobId)
       .withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
       .drop("__rank")
   }

@@ -17,6 +17,72 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
   private def tmpRoot(): String =
     Files.createTempDirectory("graft-meta").toString
 
+  /** The stats `run()` returned equal the counter sums over each table's
+    * newest task_status row per bucket, and the table's served
+    * job_results row.
+    */
+  private def assertTotalsMatchJournal(root: String, jobId: String,
+      stats: Map[String, graft.core.RangeStats]): Unit = {
+    implicit val s: SparkSession = spark
+    val store = new MetadataStore(root)
+    val served = new ResultsApi(store).jobResults(jobId).collect()
+      .map(r => r.getAs[String]("table_name") -> MetadataStore.toRangeStats(r))
+    assert(served.toMap === stats && served.length === stats.size)
+    val sums = DiffEngine.counterSums
+    stats.foreach { case (table, st) =>
+      val journal = store.latest("task_status", jobId, Seq("table_name", "bucket"))
+        .filter(col("table_name") === table)
+        .agg(sums.head, sums.tail: _*).collect()(0)
+      assert(MetadataStore.toRangeStats(journal) === st.copy(skippedPartitions = 0L),
+        s"$jobId/$table: task_status sums")
+    }
+  }
+
+  /** The call site of every Spark job `body` submits: the innermost
+    * `graft.` frame of its SQL execution, else of its last stage.
+    * Listener events arrive asynchronously but in order, so a marker job
+    * run after `body` is delivered after every job `body` submitted;
+    * waiting for it makes the list complete.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val marker = s"marker-${java.util.UUID.randomUUID}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    def innermost(callSite: String): String =
+      Option(callSite).toSeq.flatMap(_.split("\n")).map(_.trim.stripPrefix("at "))
+        .find(_.startsWith("graft.")).getOrElse("")
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites.put(x.executionId, innermost(x.details))
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == marker)
+          markerSeen.countDown()
+        else sites.add(Option(p).flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id.toLong)))
+          .getOrElse(innermost(e.stageInfos.maxBy(_.stageId).details)))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "job count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toList
+  }
+
   test("run lock: second acquire fails until released (LWT semantics)") {
     implicit val s: SparkSession = spark
     val store = new MetadataStore(tmpRoot())
@@ -96,22 +162,27 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val mkConfig = (rerun: Boolean) => DiffJobConfig("resume-job",
       Seq(Perturb.ordersSpec), DiffOptions(buckets = 4),
       metadataRoot = root, rerun = rerun)
-    val first = new DiffRunner(src, src, mkConfig(false)).run()("orders")
+    def run(rerun: Boolean) = {
+      val stats = new DiffRunner(src, src, mkConfig(rerun)).run()
+      assertTotalsMatchJournal(root, "resume-job", stats)
+      stats("orders")
+    }
+    val first = run(false)
     assert(first.matchedPartitions > 0)
     // all 4 buckets journaled done -> a plain re-run does no new work but
     // still reports the WHOLE job's totals from the journal
     val store = new MetadataStore(root)
     val statusRowsAfterFirst = store.read("task_status").count()
-    val second = new DiffRunner(src, src, mkConfig(false)).run()("orders")
+    val second = run(false)
     assert(second === first)
     assert(store.read("task_status").count() === statusRowsAfterFirst) // no new buckets
     // rerun=true ignores the journal and re-compares everything
-    val third = new DiffRunner(src, src, mkConfig(true)).run()("orders")
+    val third = run(true)
     assert(third.matchedPartitions === first.matchedPartitions)
     // after the rerun the journal holds TWO rows per bucket; a plain
     // resume must take the latest row per bucket, not join data rows
     // against both (which would duplicate input rows into the diff)
-    val fourth = new DiffRunner(src, src, mkConfig(false)).run()("orders")
+    val fourth = run(false)
     assert(fourth === first)
     // append-only journal + latest-run dedupe: the API still serves ONE
     // row per table / bucket
@@ -131,13 +202,17 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val buckets = 64
     val mk = (root2: String) => DiffJobConfig("inc-job", Seq(Perturb.lineitemSpec),
       DiffOptions(buckets = buckets), metadataRoot = root2, incremental = true)
+    def incRun(source: SourceProvider, target: SourceProvider) = {
+      val stats = new DiffRunner(source, target, mk(root)).run()
+      assertTotalsMatchJournal(root, "inc-job", stats)
+      stats("lineitem")
+    }
     // run 1: "yesterday" — stale target (no cell mutations yet)
-    new DiffRunner(src, tgtOf(Perturb.lineitemTargetStale), mk(root)).run()
+    incRun(src, tgtOf(Perturb.lineitemTargetStale))
     val store = new MetadataStore(root)
     val bucketsRun1 = store.read("task_status").select("bucket").distinct().count()
     // run 2: "today" — the cell mutations landed; only their buckets re-diff
-    val inc = new DiffRunner(src, tgtOf(Perturb.lineitemTarget), mk(root))
-      .run()("lineitem")
+    val inc = incRun(src, tgtOf(Perturb.lineitemTarget))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("bucket")).orderBy(col("run_ts").desc)
     val runTss = store.read("task_status").select("run_ts").distinct().count()
@@ -173,7 +248,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
     }
     val shrunkTgt = tgtOf(d => Perturb.lineitemTarget(shrink(d)))
-    val incShrunk = new DiffRunner(srcShrunk, shrunkTgt, mk(root)).run()("lineitem")
+    val incShrunk = incRun(srcShrunk, shrunkTgt)
     val fullShrunk = new DiffRunner(srcShrunk, shrunkTgt,
       DiffJobConfig("full-shrunk", Seq(Perturb.lineitemSpec),
         DiffOptions(buckets = buckets), metadataRoot = tmpRoot())).run()("lineitem")
@@ -189,8 +264,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     // run 4: the retired buckets' rows come back. Their latest digest is
     // the tombstone run 3 journaled, so they re-diff; without it they
     // would match run 2's digests and replay run 3's zeros
-    val incBack = new DiffRunner(src, tgtOf(Perturb.lineitemTarget), mk(root))
-      .run()("lineitem")
+    val incBack = incRun(src, tgtOf(Perturb.lineitemTarget))
     assert(incBack === full)
   }
 
@@ -384,6 +458,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(ordersRows === buckets && statusRows("lineitem") === 0)
     // the healthy re-run diffs lineitem and skips every orders bucket
     val resumed = new DiffRunner(src, tgt, mk(root)).run()
+    assertTotalsMatchJournal(root, "partial-job", resumed)
     assert(statusRows("orders") === ordersRows)
     val whole = new DiffRunner(src, tgt, mk(tmpRoot())).run()
     assert(resumed === whole)
@@ -595,12 +670,15 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         }
         // run 1: the stale target; run 2: the cell mutations landed, so
         // the incremental re-run restricts to the changed buckets
-        val first = new DiffRunner(src, tgtOf(Perturb.lineitemTargetStale), cfg)
-          .run()("lineitem")
+        def run(tgt: SourceProvider) = {
+          val stats = new DiffRunner(src, tgt, cfg).run()
+          assertTotalsMatchJournal(root, "df-eq", stats)
+          stats("lineitem")
+        }
+        val first = run(tgtOf(Perturb.lineitemTargetStale))
         val firstJournal = journaled()
         val firstRows = store.read("task_status").count()
-        val second = new DiffRunner(src, tgtOf(Perturb.lineitemTarget), cfg)
-          .run()("lineitem")
+        val second = run(tgtOf(Perturb.lineitemTarget))
         val secondRows = store.read("task_status").count() - firstRows
         assert(secondRows > 0 && secondRows < firstRows,
           s"$partitioner: re-run journaled $secondRows of $firstRows buckets")
@@ -681,5 +759,103 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val (b, _) = run("df-pert-plain", digest = false, tgt)
     assert(a === b)
     assert(a.mismatchedPartitions > 0 && a.onlyInSource > 0)
+  }
+
+  test("a random job and an xxhash64 job share one metadata root") {
+    implicit val s: SparkSession = spark
+    val src = ParquetSource(Sf)
+    val tgt = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame =
+        Perturb.ordersTarget(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    // their tokens differ in type (39-digit strings vs bigints) in
+    // mismatches, task_status, repair_scripts and the runner's own reads
+    def job(root: String, id: String, partitioner: String) = {
+      val stats = new DiffRunner(src, tgt, DiffJobConfig(id,
+        Seq(Perturb.ordersSpec), DiffOptions(buckets = 4), metadataRoot = root,
+        partitioner = partitioner, repair = true)).run()
+      assertTotalsMatchJournal(root, id, stats)
+      stats
+    }
+    // every endpoint's rows for one job, tokens rendered as strings
+    def served(root: String, id: String): Map[String, Set[Seq[Any]]] = {
+      val api = new ResultsApi(new MetadataStore(root))
+      def rows(df: DataFrame, cols: String*) = df
+        .select(cols.map(c => if (c.contains("token")) col(c).cast("string") else col(c)): _*)
+        .collect().map(_.toSeq).toSet
+      val repair = Seq("table_name", "token", "action", "statement")
+      Map(
+        "job" -> rows(api.job(id), "job_id", "partitioner", "buckets"),
+        "results" -> rows(api.jobResults(id),
+          "table_name" +: DiffEngine.Counters :+ "skipped_partitions": _*),
+        "status" -> rows(api.jobStatus(id), "table_name", "bucket", "status", "last_token"),
+        "mismatches" -> rows(api.jobMismatches(id), "table_name", "bucket", "token",
+          "mismatch_type"),
+        "mismatchSummary" -> rows(api.mismatchSummary(id), "table_name", "mismatch_type", "n"),
+        "errors" -> rows(api.jobErrors(id), "table_name", "token"),
+        "errorSummary" -> rows(api.errorSummary(id), "table_name", "n"),
+        "errorRanges" -> rows(api.errorRanges(id), "table_name", "token"),
+        "repair" -> rows(api.jobRepair(id), repair: _*),
+        "repairOrders" -> rows(api.jobRepair(id, Some("orders")), repair: _*))
+    }
+    val shared = tmpRoot()
+    val a = job(shared, "a", "random")
+    val b = job(shared, "b", "xxhash64")
+    val aAgain = job(shared, "a", "random") // resumes: every bucket done
+    val (freshA, freshB) = (tmpRoot(), tmpRoot())
+    val alone = Map("a" -> job(freshA, "a", "random"),
+      "b" -> job(freshB, "b", "xxhash64"))
+    assert(a === alone("a") && aAgain === alone("a") && b === alone("b"))
+    for ((id, fresh) <- Seq("a" -> freshA, "b" -> freshB)) {
+      val got = served(shared, id)
+      assert(got === served(fresh, id), id)
+      assert(got("mismatches").nonEmpty && got("repair").nonEmpty &&
+        got("status").size === 4, id)
+    }
+    // the random job's tokens really are the 39-digit strings
+    assert(served(shared, "a")("mismatches").forall(
+      _(2).asInstanceOf[String].length === 39))
+  }
+
+  test("journal reads run no Spark job; a one-table run's job count is pinned") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val src = ParquetSource(Sf)
+    val tgt = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame =
+        Perturb.ordersTarget(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    val run = jobsOf {
+      new DiffRunner(src, tgt, DiffJobConfig("count-job", Seq(Perturb.ordersSpec),
+        DiffOptions(buckets = 4), metadataRoot = root)).run()
+    }
+    val journalRead = "graft.journal.MetadataStore.(read|load|readJob|latest)\\b.*"
+    assert(!run.exists(_.matches(journalRead)), run.mkString("\n"))
+    // measured when the runner stopped inferring journal schemas and
+    // re-reading its own totals
+    assert(run.size <= 14, run.mkString("\n"))
+    // every journal dataset and every endpoint resolves its schema from
+    // parquet footers on the driver, an unknown job's empty frame included
+    val store = new MetadataStore(root)
+    val api = new ResultsApi(store)
+    val datasets = new java.io.File(root).list().toSeq.filter(_ != "running_jobs")
+    assert(datasets.contains("mismatches") && datasets.contains("task_status"))
+    var unknown = Option.empty[DataFrame]
+    val reads = jobsOf {
+      datasets.foreach(t => store.read(t).schema)
+      for (id <- Seq("count-job", "nope")) {
+        Seq("task_status", "mismatches", "job_results").foreach(t =>
+          store.latest(t, id, Seq("table_name")).schema)
+        Seq(api.job(id), api.jobResults(id), api.jobStatus(id),
+          api.jobMismatches(id), api.mismatchSummary(id), api.jobErrors(id),
+          api.jobRepair(id), api.recentJobs()).foreach(_.schema)
+      }
+      unknown = Some(store.latest("task_status", "nope", Seq("table_name", "bucket")))
+    }
+    assert(reads.isEmpty, reads.mkString("\n"))
+    assert(unknown.get.count() === 0 &&
+      unknown.get.columns.toSet.contains("last_token"))
   }
 }

@@ -11,15 +11,25 @@ sbt -batch compile test
 
 # the real job path: YAML -> DiffRunner -> journal -> ResultsApi, with
 # every counter and read-back checked against the generator's values;
-# dirty_full runs the full diff, clean_digest the digest_first prefilter
+# dirty_full runs the full diff, clean_digest the digest_first prefilter.
+# dirty_full runs traced: one diff job may submit at most MAX_JOBS Spark
+# jobs (35 when journal reads stopped inferring schemas), so a new
+# fixed per-job cost fails here
+MAX_JOBS=35
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
+  TRACE=$([ "$W" = dirty_full ] && echo 1 || echo 0)
   LAST=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 10 \
-    --trace 0 | tail -n 1)
+    --trace "$TRACE" | tail -n 1)
   echo "$LAST"
   python3 -c 'import json, sys
 r = json.loads(sys.argv[1])
-sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$LAST"
+ok = r.get("correct") is True and r.get("failed") == 0
+jobs = r.get("metrics", {}).get("spark.jobs", {}).get("value")
+if jobs is not None and jobs > int(sys.argv[2]):
+    print(f"spark.jobs {jobs:g} > {sys.argv[2]}")
+    ok = False
+sys.exit(0 if ok else 1)' "$LAST" "$MAX_JOBS"
 done
 
 echo "== verify vs duckdb oracle ($SF) =="
