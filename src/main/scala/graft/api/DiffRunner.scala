@@ -82,8 +82,9 @@ final class DiffRunner(
   /** Run the whole job; returns final stats per table. */
   def run(): Map[String, RangeStats] = {
     val store = new MetadataStore(config.metadataRoot, config.retry)
-    require(store.acquireRunLock(config.jobId),
-      s"job ${config.jobId} already running (running_jobs lock held)") // O21 LWT semantics
+    require(store.acquireRunLock(config.jobId), // O21 LWT semantics
+      s"job ${config.jobId} already running (running_jobs lock held by " +
+        s"${store.runLockOwner(config.jobId).getOrElse("an owner that just released it")})")
     try {
       preJobHooks.foreach(_())
       import spark.implicits._
@@ -193,18 +194,20 @@ final class DiffRunner(
         // TableSpecs without trusting the resubmitted config (the
         // reference stores qualified table names and refetches roles from
         // cluster metadata, TableSpec.java:71-89; file sources have no
-        // metadata service, so roles live in the journal); one file, not
-        // one per table row
+        // metadata service, so roles live in the journal)
         store.write("table_params", config.tables.map(t =>
             (config.jobId, t.table, t.pk, t.clustering, t.regular,
               t.uniqueKey))
           .toDF("job_id", "table_name", "pk", "clustering", "regular",
-            "unique_key").coalesce(1))
+            "unique_key"))
+      // every row this run journals carries the run's one stamp, so a
+      // job directory one run wrote holds a single run_ts
+      val runTs = System.currentTimeMillis()
       // tables run concurrently: one table's driver-side planning, file
       // publishing and small-job scheduling overlap the other's tasks
       val results = DiffRunner.concurrently(tables,
         spark.sparkContext.defaultParallelism)(
-        diffTable(store, options, token, _)).toMap
+        diffTable(store, options, token, runTs, _)).toMap
       // metrics parity: the reference's per-table counter series
       // (Differ.updateMetrics) as named Spark accumulators
       results.foreach { case (table, stats) =>
@@ -221,7 +224,8 @@ final class DiffRunner(
     * script), then task_status, then bucket digests last.
     */
   private def diffTable(store: MetadataStore, options: DiffOptions,
-      token: Seq[Column] => Column, spec0: TableSpec): (String, RangeStats) = {
+      token: Seq[Column] => Column, runTs: Long,
+      spec0: TableSpec): (String, RangeStats) = {
     import spark.implicits._
     // every frame this table persists, freed however the table ends
     val persisted = ListBuffer.empty[DataFrame]
@@ -327,7 +331,6 @@ final class DiffRunner(
       // every row this run journals carries the table, the job id and
       // the run's stamp; datasets are partitioned by job_id so per-job
       // endpoint filters prune at the directory level
-      val runTs = System.currentTimeMillis()
       def journal(dataset: String, df: DataFrame): Unit =
         store.write(dataset, df
             .withColumn("table_name", lit(spec.table))
@@ -354,8 +357,8 @@ final class DiffRunner(
       // with digestFirst, ps covers only dirty buckets — clean buckets
       // journal their digest-derived arithmetic rows; retired buckets
       // journal zeros (their last_token reads null). The ≤ options.buckets
-      // rows are collected once: journaled as one file, and summed into
-      // the totals below.
+      // rows are collected once: journaled from the driver, and summed
+      // into the totals below.
       val progress = DiffEngine.bucketProgressFromPartitions(ps, spec,
         options.buckets) +: digestPre.zip(digestRows).toSeq.map {
           case (d, rows) => local(rows.filter(matched), d.schema).drop("digest_match")
@@ -366,7 +369,7 @@ final class DiffRunner(
         .reduce(_.unionByName(_, allowMissingColumns = true))
         .withColumn("status", lit(Resume.StatusDone))
       val statusRows = status.collect().toSeq
-      journal("task_status", local(statusRows, status.schema).coalesce(1))
+      journal("task_status", local(statusRows, status.schema))
       // digests are journaled LAST: a crash before this point leaves
       // the OLD digests in place, so the next incremental run still
       // sees the affected buckets as changed and re-compares them —

@@ -33,7 +33,7 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   def runningJobs(): DataFrame = {
     val dir = new java.io.File(s"${store.root}/running_jobs")
     val ids = Option(dir.listFiles()).toSeq.flatten
-      .map(_.getName.stripSuffix(".lock"))
+      .map(f => MetadataStore.lockedJobId(f.getName))
     summary.filter(col("job_id").isin(ids: _*))
   }
 

@@ -1,13 +1,14 @@
 package graft.journal
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
-import scala.collection.mutable.ListBuffer
-
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge.dataFiles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -21,9 +22,12 @@ import graft.core.RangeStats
   * partitioned parquet dataset and every "index" is a filter Spark pushes
   * down.
   *
-  * Layout:
+  * Layout (datasets but `job_summary`, `table_params` and `errors` are
+  * partitioned by `job_id`):
   *   <root>/job_summary/     job params + start metadata (job_summary +
   *                           job_start_index tables, JobMetadataDb.java:496-544)
+  *   <root>/table_params/    per-table column roles, so a re-run rebuilds
+  *                           the stored table specs
   *   <root>/task_status/     per (table, bucket) progress: running stats +
   *                           last_token watermark (job_status,
   *                           JobMetadataDb.java:546-570; checkpoint
@@ -34,12 +38,18 @@ import graft.core.RangeStats
   *                           (JobMetadataDb.java:587-607)
   *   <root>/job_results/     final per-table RangeStats
   *                           (JobMetadataDb.java:609-617)
-  *   <root>/running_jobs/<job_id>.lock   the concurrency lock (O21)
+  *   <root>/bucket_digests/  per-bucket side digests of incremental runs
+  *   <root>/repair_scripts/  per-token repair statements (`repair = true`)
+  *   <root>/reverse_checks/  reverse-read verdict disagreements
+  *   <root>/running_jobs/<escaped job_id>.lock   the concurrency lock
+  *                           (O21), holding its owner
   *
   * Reads run no Spark job to learn a schema: a read lists the dataset's
   * visible parquet files and merges their footer schemas on the driver.
   * [[latest]] reads one job's `job_id=<id>` directory only, so jobs
-  * whose token columns differ in type share a root.
+  * whose token columns differ in type share a root, and skips its window
+  * when the footers' statistics show one run wrote the directory. Rows
+  * the driver holds are written by the driver.
   */
 final class MetadataStore(val root: String,
     retry: RetryPolicy = RetryPolicy.NoRetry)(implicit spark: SparkSession) {
@@ -62,7 +72,7 @@ final class MetadataStore(val root: String,
   /** Concurrent writers of the same empty dataset each stage the marker
     * in a write-unique hidden dir and rename it into place; the first
     * rename wins and the others drop their copy (every copy carries the
-    * same schema).
+    * same schema). The marker is one zero-row file written on the driver.
     */
   private def writeSchemaMarker(table: String, df: DataFrame): Unit = {
     val marker = Paths.get(path(table), "_schema")
@@ -70,7 +80,8 @@ final class MetadataStore(val root: String,
       val staged =
         Paths.get(path(table), s".schema-${java.util.UUID.randomUUID}")
       retry.retry(s"journal schema marker $table") {
-        df.limit(0).write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        stage(staged)(GraftParquetBridge.writeRows(spark, staged.toString,
+          df.schema, Nil))
       }
       try Files.move(staged, marker)
       catch {
@@ -79,6 +90,15 @@ final class MetadataStore(val root: String,
           deleteRecursively(staged)
       }
     }
+  }
+
+  /** `body` writing into an emptied `dir`: a retried attempt replaces
+    * its own partial output instead of adding to it.
+    */
+  private def stage[T](dir: Path)(body: => T): T = {
+    if (Files.exists(dir)) deleteRecursively(dir)
+    Files.createDirectories(dir)
+    body
   }
 
   /** Retry-safe append. A raw `SaveMode.Append` is NOT idempotent under
@@ -94,15 +114,25 @@ final class MetadataStore(val root: String,
     * dot-prefixed dirs are invisible to Spark's file index, so a crashed
     * attempt's leftover staging is inert until cleaned). Returns the
     * number of parquet part files published.
+    *
+    * Rows the driver already holds (the optimized plan is a local
+    * relation: job summaries, table params, task status, job results)
+    * are written on the driver, in the layout Spark's writer gives one
+    * task's rows; every other frame goes through a Spark write job.
     */
   private def appendAtomic(table: String, df: DataFrame,
       partitionBy: Seq[String]): Int = {
     val staging =
       Paths.get(path(table), s".staging-${java.util.UUID.randomUUID}")
     retry.retry(s"journal write $table") {
-      val w = df.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
-        .parquet(staging.toString)
+      df.queryExecution.optimizedPlan match {
+        case local: LocalRelation => stage(staging)(GraftParquetBridge
+          .writeRows(spark, staging.toString, local.schema, local.data, partitionBy))
+        case _ =>
+          val w = df.write.mode(SaveMode.Overwrite)
+          (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+            .parquet(staging.toString)
+      }
     }
     // the publish is retried too, and is naturally resumable: each moved
     // file leaves the staging tree, so a re-attempt only moves the
@@ -161,8 +191,8 @@ final class MetadataStore(val root: String,
     val base = Paths.get(path(table))
     val files = dataFiles(base)
     val marker = base.resolve("_schema")
-    if (files.isEmpty && Files.exists(marker)) load(marker, dataFiles(marker))
-    else load(base, files)
+    if (files.isEmpty && Files.exists(marker)) load(marker, footers(dataFiles(marker)))
+    else load(base, footers(files))
   }
 
   /** [[read]]: every read merges its files' footer schemas, so the flag
@@ -171,15 +201,18 @@ final class MetadataStore(val root: String,
     */
   def read(table: String, mergeSchema: Boolean): DataFrame = read(table)
 
-  /** `dir` read with the merged footer schema of `files` (its visible
-    * parquet files) plus `extra` columns. With no files Spark infers, and
-    * fails as it would on any unreadable directory.
+  private def footers(files: Seq[FileStatus]): Seq[Footer] =
+    GraftParquetBridge.footers(spark, files)
+
+  /** `dir` read with the merged schema of `footers` (its visible parquet
+    * files) plus `extra` columns. With no files Spark infers, and fails
+    * as it would on any unreadable directory.
     */
-  private def load(dir: Path, files: Seq[FileStatus],
+  private def load(dir: Path, footers: Seq[Footer],
       extra: Seq[StructField] = Nil,
       options: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.read.options(options)
-    GraftParquetBridge.footerSchema(spark, files)
+    GraftParquetBridge.footerSchema(spark, footers)
       .fold(reader)(s => reader.schema(StructType(s ++ extra)))
       .parquet(dir.toString)
   }
@@ -189,63 +222,31 @@ final class MetadataStore(val root: String,
     * and read, so jobs whose columns differ in type (a `random` job's
     * string tokens next to an `xxhash64` job's bigints) share a root.
     * `job_id` stays a string column. A job with no rows reads as an
-    * empty frame shaped like the dataset's newest file.
+    * empty frame shaped like the dataset's newest file. Also returns
+    * whether every row was journaled by one run: its files' footer
+    * statistics hold a single, non-null `run_ts`.
     */
-  private def readJob(dataset: String, jobId: String): DataFrame = {
+  private def readJob(dataset: String, jobId: String): (DataFrame, Boolean) = {
     val base = Paths.get(path(dataset))
     val dir = base.resolve(
       ExternalCatalogUtils.getPartitionPathString("job_id", jobId))
     val jobCol = StructField("job_id", StringType)
-    val files = dataFiles(dir)
-    if (files.nonEmpty)
-      load(dir, files, Seq(jobCol), Map("basePath" -> base.toString))
+    val parts = footers(dataFiles(dir))
+    if (parts.nonEmpty)
+      (load(dir, parts, Seq(jobCol), Map("basePath" -> base.toString)),
+        GraftParquetBridge.singleValue(parts, "run_ts"))
     else {
       val newest = dataFiles(base) match {
         case Seq() => dataFiles(base.resolve("_schema"))
         case all => Seq(all.maxBy(_.getModificationTime))
       }
-      GraftParquetBridge.footerSchema(spark, newest) match {
+      val empty = GraftParquetBridge.footerSchema(spark, footers(newest)) match {
         case Some(s) => spark.createDataFrame(java.util.Collections.emptyList[Row](),
           StructType(s.filterNot(_.name == jobCol.name) :+ jobCol))
         case None => load(base, Nil)
       }
+      (empty, true)
     }
-  }
-
-  /** The parquet data files under `base` that Spark's file index would
-    * see — outside hidden (`.`/`_`-prefixed) dirs such as the `_schema`
-    * sidecar and other writers' `.staging-*` dirs — at most `limit` of
-    * them. Hidden subtrees are never entered, and an entry that vanishes
-    * mid-walk (a concurrent writer dropping its staging dir) is skipped.
-    */
-  private def dataFiles(base: Path, limit: Int = Int.MaxValue): Seq[FileStatus] = {
-    import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    val found = ListBuffer.empty[FileStatus]
-    def hidden(p: Path): Boolean = p != base && {
-      val n = p.getFileName.toString
-      n.startsWith(".") || n.startsWith("_")
-    }
-    Files.walkFileTree(base, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path,
-          a: BasicFileAttributes): FileVisitResult =
-        if (hidden(d)) FileVisitResult.SKIP_SUBTREE
-        else FileVisitResult.CONTINUE
-      override def visitFile(f: Path,
-          a: BasicFileAttributes): FileVisitResult =
-        if (!hidden(f) && f.toString.endsWith(".parquet")) {
-          found += new FileStatus(a.size, false, 1, 0L,
-            a.lastModifiedTime.toMillis, new HPath(f.toUri))
-          if (found.size >= limit) FileVisitResult.TERMINATE
-          else FileVisitResult.CONTINUE
-        } else FileVisitResult.CONTINUE
-      override def visitFileFailed(f: Path,
-          e: java.io.IOException): FileVisitResult = e match {
-        case _: NoSuchFileException => FileVisitResult.CONTINUE
-        case _ => throw e
-      }
-    })
-    found.toList
   }
 
   /** Is there a readable dataset — data files, or the schema marker of
@@ -265,35 +266,57 @@ final class MetadataStore(val root: String,
     * run are kept (a repair token carries one statement per clustering
     * row), and a row with a null `run_ts` loses to any stamped row. A
     * filter on `keys` applied to the result is pushed below the window.
+    * A directory one run wrote needs no window (every row is its key's
+    * newest) and is returned as read.
     */
-  def latest(dataset: String, jobId: String, keys: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-    readJob(dataset, jobId)
-      .withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
-      .drop("__rank")
-  }
+  def latest(dataset: String, jobId: String, keys: Seq[String]): DataFrame =
+    readJob(dataset, jobId) match {
+      case (rows, true) => rows
+      case (rows, false) =>
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
+        rows.withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
+          .drop("__rank")
+    }
 
   /** O21: the `running_jobs` LWT lock (`INSERT ... IF NOT EXISTS`,
     * JobMetadataDb.java:359-376) emulated with an atomic file create.
-    * Returns true iff this caller acquired the lock.
+    * The lock file is named by the escaped job id (Spark's partition-path
+    * escaping, so any id names one file inside `running_jobs`) and holds
+    * its owner: host, pid and start time. Returns true iff this caller
+    * acquired the lock.
     */
   def acquireRunLock(jobId: String): Boolean = {
-    val dir = Paths.get(root, "running_jobs")
-    Files.createDirectories(dir)
-    try { Files.createFile(dir.resolve(s"$jobId.lock")); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    Files.createDirectories(lockFile(jobId).getParent)
+    val owner = s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
+      s"pid=${ProcessHandle.current.pid} started=${java.time.Instant.now}"
+    try {
+      Files.write(lockFile(jobId), owner.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
   }
 
-  /** O21: `markNotRunning` / lock release (JobMetadataDb.java:461-490). */
-  def releaseRunLock(jobId: String): Unit =
-    Files.deleteIfExists(Paths.get(root, "running_jobs", s"$jobId.lock"))
+  /** The owner written into `jobId`'s lock, if it is held. */
+  def runLockOwner(jobId: String): Option[String] =
+    try Some(new String(Files.readAllBytes(lockFile(jobId)), "UTF-8"))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
-  def isRunning(jobId: String): Boolean =
-    Files.exists(Paths.get(root, "running_jobs", s"$jobId.lock"))
+  /** O21: `markNotRunning` / lock release (JobMetadataDb.java:461-490). */
+  def releaseRunLock(jobId: String): Unit = Files.deleteIfExists(lockFile(jobId))
+
+  def isRunning(jobId: String): Boolean = Files.exists(lockFile(jobId))
+
+  private def lockFile(jobId: String): Path = Paths.get(root, "running_jobs",
+    ExternalCatalogUtils.escapePathName(jobId) + MetadataStore.LockSuffix)
 }
 
 object MetadataStore {
+  private val LockSuffix = ".lock"
+
+  /** The job id a `running_jobs` lock file name stands for. */
+  def lockedJobId(fileName: String): String =
+    ExternalCatalogUtils.unescapePathName(fileName.stripSuffix(LockSuffix))
+
   /** Typed view of a job_results/task_status counter row. */
   def toRangeStats(row: org.apache.spark.sql.Row): RangeStats = RangeStats(
     matchedPartitions = row.getAs[Long]("matched_partitions"),

@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
 /** Pluggable table source — the reference's reflection-loaded
   * `ClusterProvider` (common/.../ClusterProvider.java:34-44) re-shaped to
@@ -14,10 +17,21 @@ trait SourceProvider extends Serializable {
   def listTables(spark: SparkSession): Seq[String]
 }
 
-/** Directory-of-parquet source: `<root>/<table>.parquet`. */
+/** Directory-of-parquet source: `<root>/<table>.parquet`. The table's
+  * schema is the footer schema of one of its visible data files, read on
+  * the driver — what Spark's `mergeSchema = false` inference reads, in a
+  * job of its own — and partition columns are discovered as usual. A
+  * directory with no data file is left to Spark's inference, and its
+  * error.
+  */
 final case class ParquetSource(root: String) extends SourceProvider {
-  override def table(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(s"$root/$name.parquet")
+  override def table(spark: SparkSession, name: String): DataFrame = {
+    val dir = s"$root/$name.parquet"
+    val one = GraftParquetBridge.dataFiles(Paths.get(dir), limit = 1)
+    val reader = spark.read
+    GraftParquetBridge.footerSchema(spark, GraftParquetBridge.footers(spark, one))
+      .fold(reader)(reader.schema).parquet(dir)
+  }
   override def listTables(spark: SparkSession): Seq[String] = {
     val dir = new java.io.File(root)
     Option(dir.listFiles()).toSeq.flatten

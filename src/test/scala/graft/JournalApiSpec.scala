@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 import graft.api.{DiffJobConfig, DiffRunner, ResultsApi}
@@ -83,14 +86,92 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     sites.asScala.toList
   }
 
+  /** Does `df`'s physical plan hold a window or an exchange? */
+  private def windowOrExchange(df: DataFrame): Boolean = {
+    def names(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => names(a.inputPlan)
+      case _ => p.nodeName +: p.children.flatMap(names)
+    }
+    names(df.queryExecution.executedPlan)
+      .exists(n => n.contains("Window") || n.contains("Exchange"))
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("run lock: second acquire fails until released (LWT semantics)") {
     implicit val s: SparkSession = spark
-    val store = new MetadataStore(tmpRoot())
+    val root = tmpRoot()
+    val store = new MetadataStore(root)
     assert(store.acquireRunLock("job1"))
     assert(!store.acquireRunLock("job1"))
     assert(store.isRunning("job1"))
     store.releaseRunLock("job1")
     assert(store.acquireRunLock("job1"))
+    // ids that are not plain file names lock one escaped file inside
+    // running_jobs, and the API serves them unescaped
+    for (id <- Seq("a/b", "../x")) {
+      assert(store.acquireRunLock(id), id)
+      assert(!store.acquireRunLock(id) && store.isRunning(id), id)
+    }
+    assert(new java.io.File(root, "running_jobs").list().toSet ===
+      Set("job1.lock", "a%2Fb.lock", "..%2Fx.lock"))
+    assert(new java.io.File(root).list().toSet === Set("running_jobs"))
+    store.write("job_summary", Seq("job1", "a/b", "../x", "idle").toDF("job_id"))
+    assert(new ResultsApi(store).runningJobs().as[String].collect().toSet ===
+      Set("job1", "a/b", "../x"))
+    // the lock names its owner
+    val owner = store.runLockOwner("a/b").get
+    assert(owner.contains(s"pid=${ProcessHandle.current.pid} ") &&
+      owner.contains("host=") && owner.contains("started="), owner)
+    store.releaseRunLock("a/b")
+    assert(!store.isRunning("a/b") && store.runLockOwner("a/b").isEmpty)
+  }
+
+  test("local frames written on the driver read back as Spark writes them") {
+    implicit val s: SparkSession = spark
+    // a job id that needs partition-path escaping
+    val id = "job/1 :x%=y"
+    val params = Seq(
+      (id, "t1", Seq("a", "b"), Seq.empty[String], Seq("c"), true, 7L),
+      (id, "t2", Seq("k"), Seq("c1", "c2"), Seq.empty[String], false, 7L))
+      .toDF("job_id", "table_name", "pk", "clustering", "regular",
+        "unique_key", "run_ts")
+    val summary = Seq(
+      (id, "t1", 4, 0.25, Option(3), Option.empty[Double], 7L),
+      (id, "t2", 16, 1.0, None, Some(-0.5), 7L))
+      .toDF("job_id", "table_name", "buckets", "reverse_read_probability",
+        "sampling_num", "ratio", "run_ts")
+    for ((t, df) <- Seq("table_params" -> params, "job_summary" -> summary);
+        partitionBy <- Seq(Nil, Seq("job_id"))) {
+      val driver = new MetadataStore(tmpRoot())
+      val sparkWritten = new MetadataStore(tmpRoot())
+      assert(jobsOf(driver.write(t, df, partitionBy)).isEmpty)
+      // coalesce(1) keeps the frame off the driver path: a Spark write
+      assert(jobsOf(sparkWritten.write(t, df.coalesce(1), partitionBy)).nonEmpty)
+      def files(st: MetadataStore) =
+        GraftParquetBridge.dataFiles(Paths.get(st.root, t)).map { f =>
+          val rel = Paths.get(st.root, t).relativize(Paths.get(f.getPath.toUri))
+          (rel.toString.replaceAll(
+            "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>"),
+            f.getLen)
+        }
+      // the same directories and file names, one file each, of one size
+      assert(files(driver) === files(sparkWritten), s"$t $partitionBy")
+      def schema(st: MetadataStore) = GraftParquetBridge.footerSchema(spark,
+        GraftParquetBridge.footers(spark,
+          GraftParquetBridge.dataFiles(Paths.get(st.root, t))))
+      assert(schema(driver) === schema(sparkWritten), s"$t $partitionBy")
+      assert(driver.read(t).schema === sparkWritten.read(t).schema)
+      assert(sortedRows(driver.read(t)) === sortedRows(sparkWritten.read(t)))
+      assert(driver.read(t).count() === 2)
+      if (partitionBy.nonEmpty) {
+        val keys = Seq("table_name")
+        assert(sortedRows(driver.latest(t, id, keys)) ===
+          sortedRows(sparkWritten.latest(t, id, keys)))
+        assert(driver.latest(t, id, keys).count() === 2)
+      }
+    }
   }
 
   test("resume: done buckets skipped, in-progress watermarked, rerun ignores journal") {
@@ -292,6 +373,34 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(got === Set((42L, "ONLY_IN_SOURCE"), (43L, "ONLY_IN_TARGET"),
       (44L, "ONLY_IN_TARGET"), (45L, "ONLY_IN_TARGET"),
       (45L, "PARTITION_MISMATCH")))
+    val keys = Seq("table_name", "bucket", "token")
+    assert(windowOrExchange(store.latest("mismatches", "j1", keys)))
+    // a job directory one run wrote is read without the window: every
+    // row is its key's newest
+    def journal(rows: Seq[(Long, String, Option[Long])], jobId: String): Unit =
+      store.write("mismatches", rows.map { case (t, m, ts) =>
+          ("t1", 1L, t, m, jobId, ts) }
+        .toDF("table_name", "bucket", "token", "mismatch_type", "job_id", "run_ts"),
+        partitionBy = Seq("job_id"))
+    journal(Seq((1L, "ONLY_IN_SOURCE", Some(5L)), (1L, "ONLY_IN_TARGET", Some(5L)),
+      (2L, "PARTITION_MISMATCH", Some(5L))), "one-run")
+    val oneRun = store.latest("mismatches", "one-run", keys)
+    assert(!windowOrExchange(oneRun))
+    assert(oneRun.count() === 3)
+    // one null run_ts in an otherwise single-stamp run keeps the window
+    journal(Seq((1L, "ONLY_IN_SOURCE", Some(5L)), (1L, "ONLY_IN_TARGET", None)),
+      "null-stamp")
+    val nullStamp = store.latest("mismatches", "null-stamp", keys)
+    assert(windowOrExchange(nullStamp))
+    assert(nullStamp.select("mismatch_type").as[String].collect().toSeq ===
+      Seq("ONLY_IN_SOURCE"))
+    // two runs, each file single-stamped: the window decides
+    journal(Seq((1L, "ONLY_IN_SOURCE", Some(5L))), "two-runs")
+    journal(Seq((1L, "ONLY_IN_TARGET", Some(6L))), "two-runs")
+    val twoRuns = store.latest("mismatches", "two-runs", keys)
+    assert(windowOrExchange(twoRuns))
+    assert(twoRuns.select("mismatch_type").as[String].collect().toSeq ===
+      Seq("ONLY_IN_TARGET"))
   }
 
   test("re-run keeps the stored bucket count (params immutability)") {
@@ -456,9 +565,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       .filter(col("table_name") === table).count()
     val ordersRows = statusRows("orders")
     assert(ordersRows === buckets && statusRows("lineitem") === 0)
+    def latestStatus = store.latest("task_status", "partial-job",
+      Seq("table_name", "bucket"))
+    assert(!windowOrExchange(latestStatus))
     // the healthy re-run diffs lineitem and skips every orders bucket
     val resumed = new DiffRunner(src, tgt, mk(root)).run()
     assertTotalsMatchJournal(root, "partial-job", resumed)
+    // a second run stamped its own rows: the window keeps the newest
+    assert(windowOrExchange(latestStatus))
     assert(statusRows("orders") === ordersRows)
     val whole = new DiffRunner(src, tgt, mk(tmpRoot())).run()
     assert(resumed === whole)
@@ -492,6 +606,9 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(api.mismatchSummary("clean-job").count() === 0)
     assert(api.jobResults("clean-job").count() === 2)
     assert(api.jobStatus("clean-job").count() === 8) // 4 buckets × 2 tables
+    // both tables' rows carry the run's one stamp: no newest-run window
+    assert(!windowOrExchange(api.jobResults("clean-job")))
+    assert(!windowOrExchange(api.jobStatus("clean-job")))
     // a later job with real mismatches appends fine after the empty marker
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame =
@@ -623,7 +740,10 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val src = ParquetSource(Sf)
     val runner = new DiffRunner(src, src,
       DiffJobConfig("busy", Seq(Perturb.ordersSpec), metadataRoot = root))
-    assertThrows[IllegalArgumentException](runner.run())
+    val e = intercept[IllegalArgumentException](runner.run())
+    // the refusal names the lock's owner
+    assert(e.getMessage.contains(store.runLockOwner("busy").get), e.getMessage)
+    assert(store.isRunning("busy"))
   }
 
   test("schema ops: intersect drops disallowed + asymmetric; difference reports both sides") {
@@ -832,10 +952,12 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         DiffOptions(buckets = 4), metadataRoot = root)).run()
     }
     val journalRead = "graft.journal.MetadataStore.(read|load|readJob|latest)\\b.*"
-    assert(!run.exists(_.matches(journalRead)), run.mkString("\n"))
-    // measured when the runner stopped inferring journal schemas and
-    // re-reading its own totals
-    assert(run.size <= 14, run.mkString("\n"))
+    val sourceSchema = "graft.sources.ParquetSource.*"
+    assert(!run.exists(j => j.matches(journalRead) || j.matches(sourceSchema)),
+      run.mkString("\n"))
+    // measured when sources took their schema from one footer and the
+    // journal's local frames were written on the driver
+    assert(run.size <= 8, run.mkString("\n"))
     // every journal dataset and every endpoint resolves its schema from
     // parquet footers on the driver, an unknown job's empty frame included
     val store = new MetadataStore(root)
@@ -857,5 +979,47 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(reads.isEmpty, reads.mkString("\n"))
     assert(unknown.get.count() === 0 &&
       unknown.get.columns.toSet.contains("last_token"))
+    // the journal's local frames are written on the driver
+    val local = Seq(("count-job", "t", 1L)).toDF("job_id", "table_name", "run_ts")
+    assert(jobsOf {
+      store.write("job_summary", local)
+      store.write("task_status", local, partitionBy = Seq("job_id"))
+      store.write("task_status", local.limit(0), partitionBy = Seq("job_id"))
+    }.isEmpty)
+    // a fully matching run journals empty mismatches: their schema
+    // marker is written on the driver too, and reads back
+    val clean = tmpRoot()
+    val cleanRun = jobsOf {
+      new DiffRunner(src, src, DiffJobConfig("clean-job", Seq(Perturb.ordersSpec),
+        DiffOptions(buckets = 4), metadataRoot = clean)).run()
+    }
+    assert(!cleanRun.exists(_.contains("writeSchemaMarker")), cleanRun.mkString("\n"))
+    val cleanStore = new MetadataStore(clean)
+    assert(Files.exists(Paths.get(clean, "mismatches", "_schema")))
+    assert(new ResultsApi(cleanStore).jobMismatches("clean-job").count() === 0)
+    assert(cleanStore.read("mismatches").columns.contains("mismatch_type"))
+  }
+
+  test("a partitioned parquet source reads as spark.read.parquet, without a job") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val rows = (0 until 20).map(i => (i.toLong, s"v$i", i % 3, s"r${i % 2}"))
+      .toDF("id", "v", "year", "region")
+    rows.write.partitionBy("year", "region").parquet(s"$root/events.parquet")
+    rows.write.parquet(s"$root/flat.parquet")
+    for (t <- Seq("events", "flat")) {
+      var got = Option.empty[DataFrame]
+      assert(jobsOf { got = Some(ParquetSource(root).table(spark, t)) }.isEmpty, t)
+      val want = spark.read.parquet(s"$root/$t.parquet")
+      assert(got.get.schema === want.schema, t)
+      assert(sortedRows(got.get) === sortedRows(want), t)
+    }
+    assert(ParquetSource(root).table(spark, "events").schema.fieldNames.toSeq ===
+      Seq("id", "v", "year", "region"))
+    // a directory with no data file fails as Spark's inference does
+    Files.createDirectories(Paths.get(root, "empty.parquet"))
+    val mine = intercept[Exception](ParquetSource(root).table(spark, "empty"))
+    val theirs = intercept[Exception](spark.read.parquet(s"$root/empty.parquet"))
+    assert(mine.getMessage === theirs.getMessage)
   }
 }

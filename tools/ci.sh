@@ -13,9 +13,10 @@ sbt -batch compile test
 # every counter and read-back checked against the generator's values;
 # dirty_full runs the full diff, clean_digest the digest_first prefilter.
 # dirty_full runs traced: one diff job may submit at most MAX_JOBS Spark
-# jobs (35 when journal reads stopped inferring schemas), so a new
-# fixed per-job cost fails here
-MAX_JOBS=35
+# jobs (21 once reads learned schemas and run counts from parquet footers
+# and the driver wrote the rows it holds), so a new fixed per-job cost
+# fails here
+MAX_JOBS=21
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
   TRACE=$([ "$W" = dirty_full ] && echo 1 || echo 0)
