@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths}
   * the run ends with an unmissable `[verify] N/M DUMPED` line on both
   * stdout and stderr. With SPARK_GRAFT_VERIFY_STRICT=1 a shortfall also
   * exits non-zero (used by tools/ci.sh; the driver's invocation stays
-  * zero-exit so one broken query can't void the other results).
+  * zero-exit so one broken query can't void the other results), and
+  * tools/ci.sh also fails unless `dumped == registered >= MIN_QUERIES`.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

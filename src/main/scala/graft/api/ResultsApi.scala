@@ -29,12 +29,16 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     store.latest("mismatches", jobId, Seq("table_name", "bucket", "token"))
   private def errors: DataFrame = store.read("errors")
 
-  /** GET /jobs/running (DiffJobsResource.java:60-66). */
+  /** GET /jobs/running (DiffJobsResource.java:60-66): every id whose run
+    * lock is held, with its `job_summary` columns once they are written
+    * (a first run holds its lock before it writes its summary row).
+    */
   def runningJobs(): DataFrame = {
+    import spark.implicits._
     val dir = new java.io.File(s"${store.root}/running_jobs")
     val ids = Option(dir.listFiles()).toSeq.flatten
-      .map(f => MetadataStore.lockedJobId(f.getName))
-    summary.filter(col("job_id").isin(ids: _*))
+      .map(f => MetadataStore.lockedJobId(f.getName)).toDF("job_id")
+    if (store.exists("job_summary")) ids.join(summary, Seq("job_id"), "left") else ids
   }
 
   /** GET /jobs/recent — ≥10 jobs ordered newest-first

@@ -29,9 +29,9 @@ object AnalyticsQueries {
   private val revenueSql =
     "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(28,6))"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def all: Seq[Query] = Seq(
     // TPC-H Q1-style scan+aggregate
-    "q1_agg" -> ((s, dir) => {
+    Query("q1_agg", (s, dir) => {
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus")).agg(
@@ -39,9 +39,17 @@ object AnalyticsQueries {
           sum(dec("l_extendedprice")).cast("double").as("sum_base_price"),
           sum(revenue).cast("double").as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-    }),
+    },
+      oracle = s"""SELECT l_returnflag, l_linestatus,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+         |  CAST(SUM($revenueSql) AS DOUBLE) AS sum_disc_price,
+         |  COUNT(*) AS count_order
+         |FROM lineitem
+         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+         |GROUP BY l_returnflag, l_linestatus""".stripMargin),
     // TPC-H Q3-style 3-way join + top-k (TakeOrderedAndProject)
-    "q3_topk" -> ((s, dir) => {
+    Query("q3_topk", (s, dir) => {
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
         .filter(col("o_orderdate") < lit("1995-03-15").cast("timestamp"))
@@ -57,9 +65,20 @@ object AnalyticsQueries {
         .agg(sum(revenue).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }),
+    },
+      oracle = s"""SELECT l_orderkey, o_orderdate,
+         |       CAST(SUM($revenueSql) AS DOUBLE) AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |WHERE c_mktsegment = 'BUILDING'
+         |  AND o_orderdate < TIMESTAMP '1995-03-15'
+         |  AND l_shipdate > TIMESTAMP '1995-03-15'
+         |GROUP BY l_orderkey, o_orderdate
+         |ORDER BY revenue DESC, l_orderkey
+         |LIMIT 10""".stripMargin),
     // TPC-H Q5-style 6-way join with broadcast dims
-    "q5_join" -> ((s, dir) => {
+    Query("q5_join", (s, dir) => {
       val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
       val n = t(s, dir, "nation")
       val c = t(s, dir, "customer")
@@ -76,12 +95,23 @@ object AnalyticsQueries {
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(sum(revenue).cast("double").as("revenue"))
-    }),
+    },
+      oracle = s"""SELECT n_name, CAST(SUM($revenueSql) AS DOUBLE) AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN supplier ON l_suppkey = s_suppkey
+         |JOIN customer ON o_custkey = c_custkey AND s_nationkey = c_nationkey
+         |JOIN nation ON c_nationkey = n_nationkey
+         |JOIN region ON n_regionkey = r_regionkey
+         |WHERE r_name = 'ASIA'
+         |  AND o_orderdate >= TIMESTAMP '1995-01-01'
+         |  AND o_orderdate < TIMESTAMP '1997-01-01'
+         |GROUP BY n_name""".stripMargin),
     // TPC-H Q7-style bilateral trade: 6-way join with TWO roles of the
     // same dimension (nation as supplier-side and customer-side), a
     // disjunctive cross-role filter, per-year rollup — the join-reorder
     // + broadcast-dim breadth test q5 doesn't cover
-    "q7_volume_shipping" -> ((s, dir) => {
+    Query("q7_volume_shipping", (s, dir) => {
       val sup = t(s, dir, "supplier")
       val l = t(s, dir, "lineitem").filter(
         col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
@@ -104,13 +134,30 @@ object AnalyticsQueries {
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
         .agg(sum(revenue).cast("double").as("revenue"))
-    }),
+    },
+      oracle = s"""SELECT supp_nation, cust_nation, CAST(l_year AS INT) AS l_year,
+         |  CAST(SUM(volume) AS DOUBLE) AS revenue
+         |FROM (
+         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+         |    year(l_shipdate) AS l_year, $revenueSql AS volume
+         |  FROM lineitem
+         |  JOIN supplier ON l_suppkey = s_suppkey
+         |  JOIN orders ON l_orderkey = o_orderkey
+         |  JOIN customer ON o_custkey = c_custkey
+         |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+         |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+         |  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+         |    AND l_shipdate < TIMESTAMP '1997-01-01'
+         |    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+         |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+         |)
+         |GROUP BY supp_nation, cust_nation, l_year""".stripMargin),
     // TPC-H Q17 (small-quantity revenue, adapted to the corpus's part
     // columns): the correlated-scalar-subquery shape — per-part 0.2·avg
     // quantity threshold — DECORRELATED as a partkey window over the
     // brand-restricted join (group sizes are bounded per part, so the
     // window never concentrates; one shuffle total)
-    "q17_small_quantity" -> ((s, dir) => {
+    Query("q17_small_quantity", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val l = t(s, dir, "lineitem")
       val p = t(s, dir, "part").filter(col("p_brand") === "Brand#12")
@@ -123,14 +170,26 @@ object AnalyticsQueries {
         .filter(col("l_quantity") < col("__thr"))
         .agg((sum(dec("l_extendedprice")).cast("double") / lit(7.0))
           .as("avg_yearly"))
-    }),
+    },
+      // identical decimal window arithmetic
+      oracle = """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |         / 7.0 AS avg_yearly
+        |FROM (
+        |  SELECT l_extendedprice, l_quantity,
+        |    CAST(0.2 AS DOUBLE) *
+        |      (CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+        |              OVER (PARTITION BY l_partkey) AS DOUBLE)
+        |       / CAST(COUNT(*) OVER (PARTITION BY l_partkey) AS DOUBLE)) AS thr
+        |  FROM lineitem JOIN part
+        |    ON p_partkey = l_partkey AND p_brand = 'Brand#12')
+        |WHERE l_quantity < thr""".stripMargin),
     // TPC-H Q13 order-count distribution: the LEFT OUTER join whose
     // predicate belongs to the JOIN (not a post-join WHERE — customers
     // whose only orders are urgent must still land in the zero bucket),
     // then a double aggregation over the per-customer counts. The
     // filter references only the orders side, so it pushes to that scan
     // before the join; both aggs partial-aggregate map-side.
-    "q13_order_distribution" -> ((s, dir) => {
+    Query("q13_order_distribution", (s, dir) => {
       val c = t(s, dir, "customer").select("c_custkey")
       val o = t(s, dir, "orders")
         .filter(!col("o_orderpriority").like("%URGENT%"))
@@ -140,12 +199,20 @@ object AnalyticsQueries {
         .agg(count(col("o_orderkey")).as("c_count"))
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
-    }),
+    },
+      // join-side predicate + double agg
+      oracle = """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
+        |FROM (
+        |  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority NOT LIKE '%URGENT%'
+        |  GROUP BY c_custkey) cc
+        |GROUP BY c_count""".stripMargin),
     // TPC-H Q4-shaped EXISTS: orders in a quarter with at least one
     // returned line, counted per priority — the LEFT SEMI join shape
     // (probe side never duplicates, the build side deduplicates inside
     // the join instead of a distinct-before-join)
-    "q4_priority_semi" -> ((s, dir) => {
+    Query("q4_priority_semi", (s, dir) => {
       val o = t(s, dir, "orders").filter(
         col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
@@ -154,14 +221,22 @@ object AnalyticsQueries {
       o.join(l, o("o_orderkey") === l("l_orderkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count"))
-    }),
+    },
+      // EXISTS as a semi-join
+      oracle = """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+        |  AND o_orderdate < TIMESTAMP '1995-04-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        |GROUP BY o_orderpriority""".stripMargin),
     // TPC-H Q18 large-volume orders: the HAVING-subquery IN shape — a
     // grouped filter on the fact table drives a semi-join back onto the
     // same fact table plus its dimensions. The big-order key set is the
     // output of an aggregation (small by construction: > 300 total
     // quantity is the top ~1% of orders), so AQE broadcasts the semi
     // side; no distinct needed — groupBy already emits unique keys
-    "q18_large_orders" -> ((s, dir) => {
+    Query("q18_large_orders", (s, dir) => {
       val l = t(s, dir, "lineitem")
       val big = l.groupBy(col("l_orderkey"))
         .agg(sum(dec("l_quantity")).as("__sq"))
@@ -176,7 +251,19 @@ object AnalyticsQueries {
         .agg(sum(dec("l_quantity")).cast("double").as("sum_qty"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(20)
-    }),
+    },
+      // grouped-HAVING key set as IN subquery
+      oracle = """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE l_orderkey IN (
+        |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 300)
+        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+        |ORDER BY o_totalprice DESC, o_orderkey
+        |LIMIT 20""".stripMargin),
     // TPC-H Q22-shaped anti-join + uncorrelated scalar subquery:
     // dormant customers (no order since 2000) holding above-average
     // balances, per segment. The average is an exact decimal-sum /
@@ -184,7 +271,7 @@ object AnalyticsQueries {
     // crossJoin convention); the NOT EXISTS is a LEFT ANTI join whose
     // date predicate pushes to the orders scan, so the anti side
     // shuffles only the filtered key column
-    "q22_idle_customers" -> ((s, dir) => {
+    Query("q22_idle_customers", (s, dir) => {
       val c = t(s, dir, "customer")
       val avgBal = c.filter(col("c_acctbal") > 0)
         .agg((sum(dec("c_acctbal")).cast("double") / count(lit(1)))
@@ -198,7 +285,19 @@ object AnalyticsQueries {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("numcust"),
           sum(dec("c_acctbal")).cast("double").as("totacctbal"))
-    }),
+    },
+      // exact decimal-sum/count average, NOT EXISTS anti-join
+      oracle = """WITH a AS (
+        |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+        |           / COUNT(*) AS avg_bal
+        |  FROM customer WHERE c_acctbal > 0)
+        |SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS numcust,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |FROM customer CROSS JOIN a
+        |WHERE c_acctbal > avg_bal
+        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
+        |GROUP BY c_mktsegment""".stripMargin),
     // TPC-H Q2-shaped min-cost supplier (no partsupp table in the test
     // star schema, so lineitem plays the part-supplier relation with
     // min(l_extendedprice) as the supply cost). The correlated MIN
@@ -207,7 +306,7 @@ object AnalyticsQueries {
     // (supplier→nation→region) broadcasts, and the (part, supplier) cost
     // table is a partial-aggregated groupBy so only one row per pair
     // reaches the join
-    "q2_min_cost_supplier" -> ((s, dir) => {
+    Query("q2_min_cost_supplier", (s, dir) => {
       val p = t(s, dir, "part")
         .filter(col("p_size") === 15 && col("p_type") === "STANDARD")
         .select("p_partkey", "p_brand")
@@ -231,14 +330,37 @@ object AnalyticsQueries {
         .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
           col("p_partkey"))
         .limit(20)
-    }),
+    },
+      // q2 oracle kept in the CORRELATED form (the Spark side decorrelates
+      // to a window min — an independent formulation of the same spec)
+      oracle = """WITH ps AS (
+        |  SELECT l_partkey, l_suppkey,
+        |    MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS supplycost_dec
+        |  FROM lineitem GROUP BY 1, 2
+        |), eu AS (
+        |  SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'EUROPE'
+        |)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
+        |  CAST(supplycost_dec AS DOUBLE) AS supplycost
+        |FROM ps JOIN part ON l_partkey = p_partkey
+        |JOIN eu ON l_suppkey = s_suppkey
+        |WHERE p_size = 15 AND p_type = 'STANDARD'
+        |  AND supplycost_dec = (
+        |    SELECT MIN(ps2.supplycost_dec) FROM ps ps2
+        |    JOIN eu eu2 ON ps2.l_suppkey = eu2.s_suppkey
+        |    WHERE ps2.l_partkey = ps.l_partkey)
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 20""".stripMargin),
     // TPC-H Q9-shaped product-type profit: 4-way join with a LIKE
     // pushdown on part, profit = revenue − cost where cost is an exact
     // decimal p_retailprice·l_quantity·0.5 (narrow DECIMAL(12,2) casts
     // keep the 3-factor product inside DuckDB's 38-digit cap). Grouped
     // by supplier nation × order year; nation rides a broadcast, the
     // only data-sized exchange is the final partial/final agg
-    "q9_product_profit" -> ((s, dir) => {
+    Query("q9_product_profit", (s, dir) => {
       val p = t(s, dir, "part").filter(col("p_name").contains("widget"))
         .select(col("p_partkey"),
           col("p_retailprice").cast("decimal(12,2)").as("__rp"))
@@ -256,7 +378,20 @@ object AnalyticsQueries {
         .groupBy(col("n_name"), col("o_year"))
         .agg(sum((revenue - cost).cast("decimal(28,6)")).cast("double")
           .as("sum_profit"))
-    }),
+    },
+      oracle = s"""SELECT n_name, CAST(YEAR(o_orderdate) AS INT) AS o_year,
+        |  CAST(SUM(CAST($revenueSql -
+        |    CAST(CAST(p_retailprice AS DECIMAL(12,2)) *
+        |      CAST(l_quantity AS DECIMAL(12,2)) *
+        |      CAST(0.5 AS DECIMAL(3,2)) AS DECIMAL(28,6))
+        |    AS DECIMAL(28,6))) AS DOUBLE) AS sum_profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%widget%'
+        |GROUP BY 1, 2""".stripMargin),
     // TPC-H Q11-shaped important stock: per-part value restricted to one
     // REGION's suppliers, kept when above 1.5× the mean part value — a
     // SCALE-FREE threshold (a fixed fraction of the total goes vacuous
@@ -264,7 +399,7 @@ object AnalyticsQueries {
     // attaches as a 1-row broadcast crossJoin (never a shuffle), and the
     // threshold compare stays in exact decimal on both engines (narrow
     // casts keep value·n inside both engines' 38-digit cap)
-    "q11_important_stock" -> ((s, dir) => {
+    Query("q11_important_stock", (s, dir) => {
       val supp = t(s, dir, "supplier")
         .join(t(s, dir, "nation").filter(col("n_regionkey") === 3),
           col("s_nationkey") === col("n_nationkey"))
@@ -285,13 +420,31 @@ object AnalyticsQueries {
           col("value_dec").cast("double").as("part_value"))
         .orderBy(col("part_value").desc, col("l_partkey"))
         .limit(50)
-    }),
+    },
+      oracle = """WITH base AS (
+        |  SELECT l_partkey,
+        |    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |      CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,4)))
+        |      AS value_dec
+        |  FROM lineitem
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE n_regionkey = 3
+        |  GROUP BY 1)
+        |SELECT l_partkey, CAST(value_dec AS DOUBLE) AS part_value
+        |FROM base
+        |WHERE CAST(value_dec AS DECIMAL(26,4)) *
+        |    (SELECT CAST(COUNT(*) AS DECIMAL(8,0)) FROM base) >
+        |  (SELECT CAST(SUM(value_dec) AS DECIMAL(28,4)) FROM base) *
+        |    CAST(1.5 AS DECIMAL(2,1))
+        |ORDER BY part_value DESC, l_partkey
+        |LIMIT 50""".stripMargin),
     // TPC-H Q12-shaped shipping-lateness audit (no l_shipmode column, so
     // the band is derived: >60 days from order to ship = SLOW). The
     // CASE-sum pivot runs as one partial/final agg over the join; both
     // engines see midnight-aligned timestamps so datediff/date_diff
     // agree exactly
-    "q12_shipmode" -> ((s, dir) => {
+    Query("q12_shipmode", (s, dir) => {
       t(s, dir, "lineitem")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .withColumn("ship_band",
@@ -304,14 +457,23 @@ object AnalyticsQueries {
           sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
             .otherwise(1L)).as("low_line_count"))
         .orderBy(col("ship_band"))
-    }),
+    },
+      oracle = """SELECT
+        |  CASE WHEN DATE_DIFF('day', o_orderdate, l_shipdate) > 60
+        |       THEN 'SLOW' ELSE 'FAST' END AS ship_band,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |       THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q20-shaped promotion candidates: suppliers holding a "heavy"
     // share (>10%) of any bolt-part's shipped volume, restricted to one
     // region. The correlated per-part total DECORRELATES to a window sum
     // over the (supplier, part) aggregate — the window runs on the
     // already-aggregated frame (≤ one row per pair), and the supplier
     // probe is a LEFT SEMI join so supplier rows never duplicate
-    "q20_potential_promotion" -> ((s, dir) => {
+    Query("q20_potential_promotion", (s, dir) => {
       val parts = t(s, dir, "part").filter(col("p_name").contains("bolt"))
         .select(col("p_partkey"))
       val shipped = t(s, dir, "lineitem")
@@ -330,12 +492,30 @@ object AnalyticsQueries {
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_name"), col("s_acctbal"))
         .orderBy(col("s_name"))
-    }),
+    },
+      // q20 oracle kept in the nested-IN + HAVING-correlated form
+      oracle = """SELECT s_name, s_acctbal
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE n_regionkey = 3 AND s_suppkey IN (
+        |  WITH shipped AS (
+        |    SELECT l_suppkey, l_partkey,
+        |      SUM(CAST(l_quantity AS DECIMAL(12,2))) AS qty
+        |    FROM lineitem
+        |    WHERE l_partkey IN
+        |      (SELECT p_partkey FROM part WHERE p_name LIKE '%bolt%')
+        |    GROUP BY 1, 2)
+        |  SELECT DISTINCT l_suppkey FROM (
+        |    SELECT l_suppkey, qty,
+        |      CAST(SUM(qty) OVER (PARTITION BY l_partkey)
+        |        AS DECIMAL(28,2)) AS part_total
+        |    FROM shipped)
+        |  WHERE qty > part_total * CAST(0.1 AS DECIMAL(2,1)))
+        |ORDER BY s_name""".stripMargin),
     // TPC-H Q16-shaped supplier variety: distinct-count per group AFTER
     // an anti-join exclusion — the countDistinct lands on the grouped
     // keys post-join, the exclusion list (synthetic "complaints" set)
     // never touches the wide columns
-    "q16_supplier_variety" -> ((s, dir) => {
+    Query("q16_supplier_variety", (s, dir) => {
       val p = t(s, dir, "part").filter(col("p_brand") =!= "Brand#45")
         .select("p_partkey", "p_brand", "p_type", "p_size")
       val excl = t(s, dir, "supplier")
@@ -348,7 +528,16 @@ object AnalyticsQueries {
         .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
           col("p_size"))
         .limit(20)
-    }),
+    },
+      oracle = """SELECT p_brand, p_type, p_size,
+        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#45'
+        |  AND l_suppkey NOT IN (
+        |    SELECT s_suppkey FROM supplier WHERE s_suppkey % 7 = 0)
+        |GROUP BY p_brand, p_type, p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+        |LIMIT 20""".stripMargin),
     // TPC-H Q21-shaped blame analysis: orders shipped by >= 2 suppliers
     // where EXACTLY ONE supplier returned lines — that supplier is
     // "blamed". The correlated EXISTS + NOT-EXISTS pair DECORRELATES to
@@ -356,7 +545,7 @@ object AnalyticsQueries {
     // is the EXISTS, n_r=1 ∧ has_r the NOT-EXISTS — one extra shuffle
     // instead of two correlated scans (the oracle keeps the EXISTS form
     // as an independent formulation)
-    "q21_blame_supplier" -> ((s, dir) => {
+    Query("q21_blame_supplier", (s, dir) => {
       val per = t(s, dir, "lineitem")
         .groupBy(col("l_orderkey"), col("l_suppkey"))
         .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0))
@@ -371,13 +560,31 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
         .limit(10)
-    }),
+    },
+      // q21_blame_supplier oracle kept in the CORRELATED form (the Spark
+      // side decorrelates to window counts — an independent formulation
+      // of the same semantics)
+      oracle = """WITH per AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |    MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS has_r
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+        |FROM per p JOIN supplier ON s_suppkey = l_suppkey
+        |WHERE has_r = 1
+        |  AND EXISTS (SELECT 1 FROM per p2
+        |    WHERE p2.l_orderkey = p.l_orderkey
+        |      AND p2.l_suppkey <> p.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM per p3
+        |    WHERE p3.l_orderkey = p.l_orderkey
+        |      AND p3.l_suppkey <> p.l_suppkey AND p3.has_r = 1)
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin),
     // column-stats drift between replicas: ANALYZE both sides of the
     // perturbed-snapshot pair and report which columns' profiles moved —
     // the data-validation report a diff job emits BEFORE row-level work
     // (a drifted NDV/null profile localizes the damage to a column).
     // Reuses TableStats on each side; the join is 4 rows
-    "table_drift" -> ((s, dir) => {
+    Query("table_drift", (s, dir) => {
       val cols = Seq("l_orderkey", "l_quantity", "l_returnflag",
         "l_linestatus")
       val src = graft.functions.TableStats
@@ -396,14 +603,35 @@ object AnalyticsQueries {
           (col("n_distinct") =!= col("n_distinct_tgt")).as("ndv_drift"),
           (col("min_val") =!= col("min_val_tgt") ||
             col("max_val") =!= col("max_val_tgt")).as("range_drift"))
-    }),
+    },
+      // per-column ANALYZE both sides of the perturbed pair
+      oracle = {
+        val cols = Seq("l_orderkey", "l_quantity", "l_returnflag",
+          "l_linestatus")
+        def statsSql(table: String) = cols.map(c =>
+          s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
+             |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+             |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
+             |  CAST(MIN($c) AS VARCHAR) AS min_val,
+             |  CAST(MAX($c) AS VARCHAR) AS max_val
+             |FROM $table""".stripMargin).mkString("\nUNION ALL\n")
+        s"""WITH src AS (${statsSql("lineitem")}),
+           |tgt AS (${statsSql(s"(${graft.engine.Perturb.lineitemTargetSql})")})
+           |SELECT src.col_name, src.n_rows, tgt.n_rows AS n_rows_tgt,
+           |  src.n_nulls, tgt.n_nulls AS n_nulls_tgt,
+           |  src.n_distinct, tgt.n_distinct AS n_distinct_tgt,
+           |  src.n_distinct <> tgt.n_distinct AS ndv_drift,
+           |  (src.min_val <> tgt.min_val OR src.max_val <> tgt.max_val)
+           |    AS range_drift
+           |FROM src JOIN tgt ON src.col_name = tgt.col_name""".stripMargin
+      }),
     // per-user event-type Markov transition matrix: consecutive-event
     // pairs via lead() (one shuffle on user), then a count per (from,
     // to) edge and a row-normalized probability. The normalizing window
     // runs over the AGGREGATED edge frame — at most #types² rows — so
     // the only data-sized exchanges are the sessionization shuffle and
     // the partial-aggregating edge groupBy
-    "events_markov" -> ((s, dir) => {
+    Query("events_markov", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val edges = Tables.events(s, dir)
@@ -415,7 +643,20 @@ object AnalyticsQueries {
       edges.withColumn("__nf", sum(col("n")).over(wf))
         .select(col("from_type"), col("to_type"), col("n"),
           (col("n").cast("double") / col("__nf").cast("double")).as("prob"))
-    }),
+    },
+      // lead() pairs, row-normalized counts
+      oracle = """WITH e AS (
+        |  SELECT event_type AS from_type,
+        |    LEAD(event_type, 1) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS to_type
+        |  FROM events),
+        |c AS (
+        |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM e WHERE to_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_type, to_type, n,
+        |  CAST(n AS DOUBLE) /
+        |    CAST(SUM(n) OVER (PARTITION BY from_type) AS DOUBLE) AS prob
+        |FROM c""".stripMargin),
     // winsorization profile: per-type discrete p05/p95 bounds + clipped
     // accounting — outlier trimming before any value-weighted sampling.
     // The quantile is EXACT but computed on the VALUE HISTOGRAM, not the
@@ -425,7 +666,7 @@ object AnalyticsQueries {
     // row-level sort per type). Rank k = ceil(q·n) in pure integer
     // arithmetic; the bound is the smallest value whose cumulative
     // count reaches k — identical on both engines
-    "events_winsorize" -> ((s, dir) => {
+    Query("events_winsorize", (s, dir) => {
       val ev = Tables.events(s, dir).select("event_type", "value")
       val hist = ev.groupBy(col("event_type"), col("value"))
         .agg(count(lit(1)).as("__c"))
@@ -448,14 +689,36 @@ object AnalyticsQueries {
             .as("n_high"),
           sum(least(greatest(col("value"), col("p05")), col("p95"))
             .cast("decimal(18,4)")).cast("double").as("sum_winsorized"))
-    }),
+    },
+      // histogram cumsum discrete quantile, integer rank arithmetic
+      oracle = """WITH hist AS (
+        |  SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT event_type, value, c,
+        |    SUM(c) OVER (PARTITION BY event_type ORDER BY value
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm,
+        |    SUM(c) OVER (PARTITION BY event_type) AS n
+        |  FROM hist),
+        |b AS (
+        |  SELECT event_type,
+        |    MIN(CASE WHEN cm >= (n * 5 + 99) // 100 THEN value END) AS p05,
+        |    MIN(CASE WHEN cm >= (n * 95 + 99) // 100 THEN value END) AS p95
+        |  FROM cum GROUP BY event_type)
+        |SELECT e.event_type, p05, p95,
+        |  CAST(SUM(CASE WHEN value < p05 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
+        |  CAST(SUM(CASE WHEN value > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
+        |  CAST(SUM(CAST(LEAST(GREATEST(value, p05), p95) AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS sum_winsorized
+        |FROM events e JOIN b ON e.event_type = b.event_type
+        |GROUP BY e.event_type, p05, p95""".stripMargin),
     // incremental view maintenance: merge a pre-aggregated base state
     // with a delta batch's partial aggregate — count/sum states add, so
     // the merged frame equals a full recompute without rescanning the
     // base (the oracle IS the full recompute). The 100 TB pattern for
     // daily-refresh aggregates: only the delta is scanned, the join is
     // keyed on the group key both sides already shuffled on
-    "agg_incremental" -> ((s, dir) => {
+    Query("agg_incremental", (s, dir) => {
       val ev = Tables.events(s, dir)
       val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
       def state(df: DataFrame, nc: String, sc: String) =
@@ -470,14 +733,19 @@ object AnalyticsQueries {
           (coalesce(col("__sb"), lit(0).cast("decimal(28,4)")) +
             coalesce(col("__sd"), lit(0).cast("decimal(28,4)")))
             .cast("double").as("total_value"))
-    }),
+    },
+      // the merged state must equal this full recompute — that equality IS
+      // the incremental-maintenance claim
+      oracle = """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY user_id""".stripMargin),
     // incremental JOIN-view maintenance — the bilinear delta rule:
     // Δ(O ⋈ L) = ΔO⋈L₀ ∪ O₀⋈ΔL ∪ ΔO⋈ΔL, so a refresh joins only
     // delta-sized frames against the other side (never base×base
     // again); merging the four partial states must equal the full
     // recompute — the oracle IS that recompute. States are
     // count + exact decimal sum, so the merge is associative
-    "join_incremental" -> ((s, dir) => {
+    Query("join_incremental", (s, dir) => {
       val cutoff = lit("1997-01-01").cast("timestamp")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))
@@ -495,25 +763,80 @@ object AnalyticsQueries {
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("__n")).as("n_pairs"),
           sum(col("__s")).cast("double").as("revenue"))
-    }),
+    },
+      // the four merged delta states must equal this full join recompute —
+      // that equality IS the bilinear delta-rule claim
+      oracle = s"""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue
+         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+         |GROUP BY o_orderpriority""".stripMargin),
     // join-key skew profile: the 10 heaviest customer keys with share,
     // skew ratio, and the integer salt factor that levels each onto the
     // mean — the measurement that decides plain vs salted joins
-    "skew_profile" -> ((s, dir) =>
+    Query("skew_profile", (s, dir) =>
       graft.functions.Diagnostics.skewProfile(t(s, dir, "orders"),
-        "o_custkey", topK = 10)),
+        "o_custkey", topK = 10),
+      oracle = """WITH c AS (
+        |  SELECT o_custkey AS key, CAST(COUNT(*) AS BIGINT) AS cnt
+        |  FROM orders GROUP BY 1),
+        |t AS (
+        |  SELECT CAST(SUM(cnt) AS BIGINT) AS total,
+        |    CAST(COUNT(*) AS BIGINT) AS n_keys FROM c)
+        |SELECT key, cnt,
+        |  CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE) AS share,
+        |  CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
+        |    / CAST(total AS DOUBLE) AS skew_ratio,
+        |  CAST((cnt * n_keys + total - 1) // total AS BIGINT) AS suggested_salt
+        |FROM c CROSS JOIN t
+        |ORDER BY cnt DESC, key LIMIT 10""".stripMargin),
     // shard-rebalancing move plan: minimal-volume (from, to, n_moved)
     // transfers leveling every shard onto its integer target, paired by
     // cumulative-interval overlap — the layout-maintenance planner; all
     // post-agg work runs on the #shards-row frame
-    "shard_rebalance" -> ((s, dir) =>
+    Query("shard_rebalance", (s, dir) =>
       graft.functions.Diagnostics.shardRebalance(Tables.events(s, dir),
-        pmod(col("user_id"), lit(64)))),
+        pmod(col("user_id"), lit(64))),
+      // same integer targets, same cumulative-interval pairing
+      oracle = """WITH sz AS (
+        |  SELECT user_id % 64 AS shard, CAST(COUNT(*) AS BIGINT) AS sz
+        |  FROM events GROUP BY 1),
+        |t AS (SELECT CAST(SUM(sz) AS BIGINT) AS tot,
+        |  CAST(COUNT(*) AS BIGINT) AS n FROM sz),
+        |p AS (
+        |  SELECT shard, sz, tot, n,
+        |    CAST(row_number() OVER (ORDER BY shard) AS BIGINT) AS rnk
+        |  FROM sz CROSS JOIN t),
+        |p2 AS (
+        |  SELECT shard, sz,
+        |    (tot // n) + CASE WHEN rnk <= tot % n THEN 1 ELSE 0 END AS target
+        |  FROM p),
+        |p3 AS (
+        |  SELECT shard, GREATEST(sz - target, 0) AS excess,
+        |    GREATEST(target - sz, 0) AS deficit
+        |  FROM p2),
+        |d AS (
+        |  SELECT shard AS from_shard,
+        |    SUM(excess) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) - excess AS d_lo,
+        |    SUM(excess) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS d_hi
+        |  FROM p3 WHERE excess > 0),
+        |r AS (
+        |  SELECT shard AS to_shard,
+        |    SUM(deficit) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) - deficit AS r_lo,
+        |    SUM(deficit) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS r_hi
+        |  FROM p3 WHERE deficit > 0)
+        |SELECT from_shard, to_shard,
+        |  CAST(LEAST(d_hi, r_hi) - GREATEST(d_lo, r_lo) AS BIGINT) AS n_moved
+        |FROM d JOIN r ON d_lo < r_hi AND r_lo < d_hi
+        |WHERE LEAST(d_hi, r_hi) - GREATEST(d_lo, r_lo) > 0""".stripMargin),
     // zone-map pruning: per-bucket (event_id DIV 256) min/max of ts +
     // the scan/skip decision for a one-week predicate — event ids are
     // time-correlated, so most buckets skip (the skip ratio measures
     // how well the layout clusters the value)
-    "events_zonemap" -> ((s, dir) => {
+    Query("events_zonemap", (s, dir) => {
       import graft.functions.Diagnostics
       val z = Diagnostics.zoneMaps(t(s, dir, "events"),
         expr("event_id DIV 256"), col("ts"))
@@ -521,25 +844,52 @@ object AnalyticsQueries {
           lit("2024-01-10 00:00:00").cast("timestamp"),
           lit("2024-01-17 00:00:00").cast("timestamp"))
         .select(col("bucket"), col("n_rows"), col("scan"))
-    }),
+    },
+      oracle = """WITH z AS (
+        |  SELECT event_id // 256 AS bucket, MIN(ts) AS min_v, MAX(ts) AS max_v,
+        |    CAST(COUNT(*) AS BIGINT) AS n_rows
+        |  FROM events GROUP BY 1)
+        |SELECT bucket, n_rows,
+        |  NOT (max_v < TIMESTAMP '2024-01-10 00:00:00'
+        |    OR min_v > TIMESTAMP '2024-01-17 00:00:00') AS scan
+        |FROM z""".stripMargin),
     // dictionary-encoding advisor: per string column, plain vs
     // dictionary byte estimates (distinct-value bytes + byte-rounded
     // ceil(log2 ndv)-bit codes) — the storage-layout decision a writer
     // makes per row group, surfaced as an oracle-exact report
-    "table_encoding_advisor" -> ((s, dir) =>
+    Query("table_encoding_advisor", (s, dir) =>
       graft.functions.TableStats.encodingAdvisor(Seq(
         ("lineitem", t(s, dir, "lineitem"),
           Seq("l_returnflag", "l_linestatus")),
         ("orders", t(s, dir, "orders"),
-          Seq("o_orderstatus", "o_orderpriority"))))),
+          Seq("o_orderstatus", "o_orderpriority")))),
+      // same integer CASE-chain bit widths, same byte rounding
+      oracle = {
+        import graft.functions.TableStats.encodingAdvisorSql
+        s"""${encodingAdvisorSql("lineitem", "lineitem",
+              Seq("l_returnflag", "l_linestatus"))}
+           |UNION ALL
+           |${encodingAdvisorSql("orders", "orders",
+              Seq("o_orderstatus", "o_orderpriority"))}""".stripMargin
+      }),
     // ANALYZE-style optimizer statistics: one pass over the table,
     // per-column null/NDV/min/max — the stats-collection operator every
     // engine ships for join planning and data validation
-    "table_stats" -> ((s, dir) =>
+    Query("table_stats", (s, dir) =>
       graft.functions.TableStats.columnStats(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_returnflag", "l_linestatus"))),
+        Seq("l_orderkey", "l_partkey", "l_returnflag", "l_linestatus")),
+      oracle = {
+        val cols = Seq("l_orderkey", "l_partkey", "l_returnflag", "l_linestatus")
+        cols.map(c =>
+          s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
+             |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+             |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
+             |  CAST(MIN($c) AS VARCHAR) AS min_val,
+             |  CAST(MAX($c) AS VARCHAR) AS max_val
+             |FROM lineitem""".stripMargin).mkString("\nUNION ALL\n")
+      }),
     // window function: deterministic running sum per supplier
-    "window_running" -> ((s, dir) => {
+    Query("window_running", (s, dir) => {
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -547,27 +897,47 @@ object AnalyticsQueries {
         .filter(col("l_suppkey") % 100 === 0)
         .withColumn("running_qty", sum(dec("l_quantity")).over(w).cast("double"))
         .select("l_suppkey", "l_orderkey", "l_linenumber", "running_qty")
-    }),
+    },
+      oracle = """SELECT l_suppkey, l_orderkey, l_linenumber,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY l_suppkey
+        |    ORDER BY l_shipdate, l_orderkey, l_linenumber
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
+        |FROM lineitem WHERE l_suppkey % 100 = 0""".stripMargin),
     // rollup (grouping sets) — absent in the reference (SURVEY §2.2),
     // free from Spark; GROUPING() disambiguates the null super-rows
-    "q_rollup" -> ((s, dir) =>
+    Query("q_rollup", (s, dir) =>
       t(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(dec("l_quantity")).cast("double").as("sum_qty"),
           count(lit(1)).as("n"),
           grouping(col("l_returnflag")).cast("int").as("g_rf"),
-          grouping(col("l_linestatus")).cast("int").as("g_ls"))),
+          grouping(col("l_linestatus")).cast("int").as("g_ls")),
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  COUNT(*) AS n,
+        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
+        |FROM lineitem
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
     // full cube over two dims — all four grouping sets in one pass
-    "q_cube" -> ((s, dir) =>
+    Query("q_cube", (s, dir) =>
       t(s, dir, "lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(dec("l_quantity")).cast("double").as("sum_qty"),
           count(lit(1)).as("n"),
           grouping(col("l_returnflag")).cast("int").as("g_rf"),
-          grouping(col("l_linestatus")).cast("int").as("g_ls"))),
+          grouping(col("l_linestatus")).cast("int").as("g_ls")),
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  COUNT(*) AS n,
+        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin),
     // explicit grouping sets — the general form behind rollup/cube:
     // an arbitrary subset of group-bys ((rf,ls),(rf),()), one pass
-    "q_grouping_sets" -> ((s, dir) =>
+    Query("q_grouping_sets", (s, dir) =>
       t(s, dir, "lineitem")
         .groupingSets(
           Seq(Seq(col("l_returnflag"), col("l_linestatus")),
@@ -576,14 +946,21 @@ object AnalyticsQueries {
         .agg(sum(dec("l_quantity")).cast("double").as("sum_qty"),
           count(lit(1)).as("n"),
           grouping(col("l_returnflag")).cast("int").as("g_rf"),
-          grouping(col("l_linestatus")).cast("int").as("g_ls"))),
+          grouping(col("l_linestatus")).cast("int").as("g_ls")),
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  COUNT(*) AS n,
+        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin),
     // exact MODE and discrete MEDIAN per group — the two aggregates
     // Spark lacks as exact builtins, both from the same value histogram
     // (groupBy(key, value) partial-aggregates map-side; the windows see
     // distinct values per key only — the events_winsorize shape). Mode
     // tie-breaks to the smallest value; median is the lower discrete
     // median (rank ceil(n/2) in integer arithmetic)
-    "q_mode_median" -> ((s, dir) => {
+    Query("q_mode_median", (s, dir) => {
       val hist = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_quantity"))
         .agg(count(lit(1)).as("__c"))
@@ -603,14 +980,31 @@ object AnalyticsQueries {
           min(when(col("__cum") >= expr("(__n + 1) DIV 2"),
             col("l_quantity"))).as("median_qty"),
           max(col("__n")).as("n"))
-    }),
+    },
+      // same histogram, same tie-breaks
+      oracle = """WITH hist AS (
+        |  SELECT l_returnflag, l_quantity, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM lineitem GROUP BY 1, 2),
+        |w AS (
+        |  SELECT l_returnflag, l_quantity, c,
+        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
+        |      ORDER BY c DESC, l_quantity) AS rm,
+        |    SUM(c) OVER (PARTITION BY l_returnflag ORDER BY l_quantity
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    SUM(c) OVER (PARTITION BY l_returnflag) AS n
+        |  FROM hist)
+        |SELECT l_returnflag,
+        |  MIN(CASE WHEN rm = 1 THEN l_quantity END) AS mode_qty,
+        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN l_quantity END) AS median_qty,
+        |  CAST(MAX(n) AS BIGINT) AS n
+        |FROM w GROUP BY l_returnflag""".stripMargin),
     // exact MEDIAN ABSOLUTE DEVIATION per group — the robust spread
     // statistic (outlier-immune, unlike stddev): discrete median from
     // the value histogram, then the same rank arithmetic again over the
     // |x − median| deviation histogram. Both passes see distinct values
     // per key only; deviations of integer-valued quantities are exact
     // doubles, so the whole result hash-matches
-    "q_mad" -> ((s, dir) => {
+    Query("q_mad", (s, dir) => {
       val hist = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_quantity"))
         .agg(count(lit(1)).as("__c"))
@@ -637,13 +1031,44 @@ object AnalyticsQueries {
         .agg(min(when(col("__cum") >= expr("(n + 1) DIV 2"),
           col("__dev"))).as("mad"))
         .select(col("l_returnflag"), col("median_qty"), col("mad"), col("n"))
-    }),
+    },
+      // same two chained histograms + rank arithmetic
+      oracle = """WITH hist AS (
+        |  SELECT l_returnflag, l_quantity, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM lineitem GROUP BY 1, 2),
+        |w AS (
+        |  SELECT l_returnflag, l_quantity, c,
+        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag ORDER BY l_quantity
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
+        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS n
+        |  FROM hist),
+        |med AS (
+        |  SELECT l_returnflag,
+        |    MIN(CASE WHEN cum >= (n + 1) // 2 THEN l_quantity END)
+        |      AS median_qty,
+        |    CAST(MAX(n) AS BIGINT) AS n
+        |  FROM w GROUP BY l_returnflag),
+        |dev AS (
+        |  SELECT hist.l_returnflag, median_qty, n,
+        |    ABS(l_quantity - median_qty) AS d,
+        |    CAST(SUM(c) AS BIGINT) AS c
+        |  FROM hist JOIN med USING (l_returnflag)
+        |  GROUP BY 1, 2, 3, 4),
+        |dw AS (
+        |  SELECT l_returnflag, median_qty, n, d, c,
+        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag ORDER BY d
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        |  FROM dev)
+        |SELECT l_returnflag, median_qty,
+        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN d END) AS mad,
+        |  CAST(MAX(n) AS BIGINT) AS n
+        |FROM dw GROUP BY l_returnflag, median_qty""".stripMargin),
     // k-anonymity risk report: group sizes over a quasi-identifier
     // (event_type × hour-of-day), flag groups below k=50 and account
     // the rows at re-identification risk — the governance scan a
     // release pipeline runs before publishing. One partial-aggregating
     // groupBy; the rollup runs on the ≤ |types|·24-row group frame
-    "privacy_k_anon" -> ((s, dir) =>
+    Query("privacy_k_anon", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type"), hour(col("ts")).as("hh"))
         .agg(count(lit(1)).as("__c"))
@@ -654,13 +1079,25 @@ object AnalyticsQueries {
             .as("rows_at_risk"),
           sum(col("__c")).as("n_rows"))
         .withColumn("risk_share",
-          col("rows_at_risk").cast("double") / col("n_rows").cast("double"))),
+          col("rows_at_risk").cast("double") / col("n_rows").cast("double")),
+      oracle = """WITH g AS (
+        |  SELECT event_type, hour(ts) AS hh, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2)
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_groups,
+        |  CAST(SUM(CASE WHEN c < 50 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS risky_groups,
+        |  CAST(SUM(CASE WHEN c < 50 THEN c ELSE 0 END) AS BIGINT)
+        |    AS rows_at_risk,
+        |  CAST(SUM(c) AS BIGINT) AS n_rows,
+        |  CAST(SUM(CASE WHEN c < 50 THEN c ELSE 0 END) AS DOUBLE)
+        |    / CAST(SUM(c) AS DOUBLE) AS risk_share
+        |FROM g GROUP BY event_type""".stripMargin),
     // l-diversity companion to the k-anonymity scan: per quasi-
     // identifier group (event_type × hour) the number of DISTINCT
     // sensitive values (the item interacted with) — a group can be
     // large (k-anonymous) yet still leak if everyone in it shares one
     // sensitive value. Same two-level aggregate shape as privacy_k_anon
-    "privacy_l_diversity" -> ((s, dir) =>
+    Query("privacy_l_diversity", (s, dir) =>
       Tables.events(s, dir)
         .select(col("event_type"), hour(col("ts")).as("hh"),
           get_json_object(col("props"), "$.k").cast("long").as("item"))
@@ -673,14 +1110,30 @@ object AnalyticsQueries {
           sum(when(col("__l") < 5, 1L).otherwise(0L))
             .as("low_diversity_groups"),
           sum(when(col("__l") < 5, col("__c")).otherwise(0L))
-            .as("rows_at_risk"))),
+            .as("rows_at_risk")),
+      oracle = """WITH g AS (
+        |  SELECT event_type, hour(ts) AS hh,
+        |    CAST(COUNT(*) AS BIGINT) AS c,
+        |    CAST(COUNT(DISTINCT item) AS BIGINT) AS l
+        |  FROM (SELECT event_type, ts,
+        |          CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+        |        FROM events)
+        |  WHERE item IS NOT NULL
+        |  GROUP BY 1, 2)
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_groups,
+        |  CAST(MIN(l) AS BIGINT) AS min_l,
+        |  CAST(SUM(CASE WHEN l < 5 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS low_diversity_groups,
+        |  CAST(SUM(CASE WHEN l < 5 THEN c ELSE 0 END) AS BIGINT)
+        |    AS rows_at_risk
+        |FROM g GROUP BY event_type""".stripMargin),
     // k-anonymity generalization ladder: pick the FINEST time
     // granularity (hour-of-day -> 4-hour band -> whole day) at which
     // every quasi-identifier group reaches k=50 — the generalization-
     // hierarchy step of a privacy release pipeline (coarsen until
     // k-anonymous, never more than needed). The band and day levels
     // aggregate the 24-row hour frame, so the ladder costs one scan
-    "privacy_generalization" -> ((s, dir) => {
+    Query("privacy_generalization", (s, dir) => {
       val hourly = Tables.events(s, dir)
         .groupBy(col("event_type"),
           org.apache.spark.sql.functions.hour(col("ts")).as("hh"))
@@ -700,7 +1153,27 @@ object AnalyticsQueries {
             .otherwise("day"))
         .select(col("event_type"), col("n_rows"), col("min_hour_group"),
           col("min_band_group"), col("chosen_level"))
-    }),
+    },
+      // same ladder off the hour frame
+      oracle = """WITH h AS (
+        |  SELECT event_type, EXTRACT(hour FROM ts) AS hh,
+        |    CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |b AS (
+        |  SELECT event_type, CAST(MIN(bc) AS BIGINT) AS min_band_group
+        |  FROM (SELECT event_type, hh // 4 AS bb,
+        |          CAST(SUM(c) AS BIGINT) AS bc
+        |        FROM h GROUP BY 1, 2)
+        |  GROUP BY event_type),
+        |g AS (
+        |  SELECT event_type, CAST(MIN(c) AS BIGINT) AS min_hour_group,
+        |    CAST(SUM(c) AS BIGINT) AS n_rows
+        |  FROM h GROUP BY event_type)
+        |SELECT g.event_type, n_rows, min_hour_group, min_band_group,
+        |  CASE WHEN min_hour_group >= 50 THEN 'hour'
+        |       WHEN min_band_group >= 50 THEN '4hour'
+        |       ELSE 'day' END AS chosen_level
+        |FROM g JOIN b ON g.event_type = b.event_type""".stripMargin),
     // t-closeness companion: per quasi-identifier group, the earth-
     // mover's distance between the group's distribution of an ORDERED
     // sensitive attribute (item id banded to 20 classes) and the global
@@ -711,7 +1184,7 @@ object AnalyticsQueries {
     // first groupBy touches data; the grid is (groups × 20 bands) built
     // from aggregated frames, so the cross join is bounded by the
     // attribute domain, never the corpus
-    "privacy_t_closeness" -> ((s, dir) => {
+    Query("privacy_t_closeness", (s, dir) => {
       val m = 20
       val banded = Tables.events(s, dir)
         .select(col("event_type"),
@@ -749,7 +1222,40 @@ object AnalyticsQueries {
               lit((m - 1).toDouble)))
             .as("t_emd"))
         .withColumn("violates_t", col("t_emd") > 0.2)
-    }),
+    },
+      // integer-exact ordered-EMD; items are non-negative so % == pmod
+      oracle = """WITH banded AS (
+        |  SELECT event_type,
+        |    CAST(json_extract_string(props, '$.k') AS BIGINT) % 20 AS band
+        |  FROM events
+        |  WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) IS NOT NULL),
+        |cell AS (
+        |  SELECT event_type, band, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM banded GROUP BY 1, 2),
+        |groups AS (
+        |  SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_g FROM cell GROUP BY 1),
+        |gdist AS (
+        |  SELECT band, CAST(SUM(c) AS BIGINT) AS d0 FROM cell GROUP BY 1),
+        |grid AS (
+        |  SELECT g.event_type, g.n_g, b.band,
+        |    COALESCE(c.c, 0) AS c, COALESCE(gl.d0, 0) AS d0
+        |  FROM groups g CROSS JOIN (SELECT UNNEST(RANGE(20)) AS band) b
+        |  LEFT JOIN cell c ON c.event_type = g.event_type AND c.band = b.band
+        |  LEFT JOIN gdist gl ON gl.band = b.band),
+        |cum AS (
+        |  SELECT event_type, n_g,
+        |    SUM(c)  OVER (PARTITION BY event_type ORDER BY band) AS cum_c,
+        |    SUM(d0) OVER (PARTITION BY event_type ORDER BY band) AS cum_d
+        |  FROM grid),
+        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM banded)
+        |SELECT event_type, CAST(n_g AS BIGINT) AS n_rows,
+        |  CAST(CAST(SUM(ABS(tot.n * cum_c - n_g * cum_d)) AS DOUBLE) /
+        |    (CAST(n_g AS DOUBLE) * CAST(tot.n AS DOUBLE) * 19.0)
+        |    AS DOUBLE) AS t_emd,
+        |  (CAST(CAST(SUM(ABS(tot.n * cum_c - n_g * cum_d)) AS DOUBLE) /
+        |    (CAST(n_g AS DOUBLE) * CAST(tot.n AS DOUBLE) * 19.0)
+        |    AS DOUBLE) > 0.2) AS violates_t
+        |FROM cum, tot GROUP BY event_type, n_g, tot.n""".stripMargin),
     // 2-D skyline (Pareto front: minimize p_retailprice AND p_size) —
     // the classic dominance operator Spark lacks. Instead of the
     // quadratic NOT-EXISTS self-join, dominance DECORRELATES to
@@ -768,7 +1274,7 @@ object AnalyticsQueries {
     // broadcast back on the bucket key. A part survives iff it
     // achieves its price's min size and beats every cheaper price's
     // best. No data-sized single-partition sort anywhere
-    "q_skyline" -> ((s, dir) => {
+    Query("q_skyline", (s, dir) => {
       val nB = 256
       val p = t(s, dir, "part")
       val perPrice = p.groupBy(col("p_retailprice").as("__price"))
@@ -802,7 +1308,18 @@ object AnalyticsQueries {
             col("__best_cheaper") > col("p_size")))
         .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
         .orderBy(col("p_retailprice"), col("p_size"), col("p_partkey"))
-    }),
+    },
+      // the oracle keeps the quadratic NOT-EXISTS dominance form (the
+      // Spark side decorrelates to per-price min + running min — an
+      // independent formulation of the same spec)
+      oracle = """SELECT p_partkey, p_retailprice, p_size
+        |FROM part p
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM part q
+        |  WHERE q.p_retailprice <= p.p_retailprice
+        |    AND q.p_size <= p.p_size
+        |    AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size))
+        |ORDER BY p_retailprice, p_size, p_partkey""".stripMargin),
     // lag-1 autocorrelation of each event type's hourly volume series —
     // the seasonality screen a pipeline runs before alerting on volume
     // anomalies. All moments are INTEGER-exact: with S = Σc and n terms,
@@ -811,7 +1328,7 @@ object AnalyticsQueries {
     // final division is deterministic double. The series frame is the
     // AGGREGATED types × hours grid, so the lag window and the moment
     // sums never see row-level data
-    "events_autocorr" -> ((s, dir) => {
+    Query("events_autocorr", (s, dir) => {
       val series = Tables.events(s, dir)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hh"))
         .agg(count(lit(1)).as("c"))
@@ -834,13 +1351,35 @@ object AnalyticsQueries {
         .select(col("event_type"), col("n_hours"),
           (col("__num").cast("double") / col("__den").cast("double"))
             .as("autocorr_lag1"))
-    }),
+    },
+      oracle = """WITH series AS (
+        |  SELECT event_type, DATE_TRUNC('hour', ts) AS hh,
+        |    CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |tot AS (
+        |  SELECT event_type, CAST(SUM(c) AS BIGINT) AS s,
+        |    CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM series GROUP BY 1),
+        |lagged AS (
+        |  SELECT se.event_type, t.n, t.s, se.c,
+        |    LAG(se.c) OVER (PARTITION BY se.event_type ORDER BY se.hh)
+        |      AS c_prev
+        |  FROM series se JOIN tot t ON se.event_type = t.event_type)
+        |SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_hours,
+        |  CAST(CAST(SUM(CASE WHEN c_prev IS NOT NULL
+        |      THEN CAST(n*c - s AS DECIMAL(38,0)) *
+        |           CAST(n*c_prev - s AS DECIMAL(38,0))
+        |      ELSE CAST(0 AS DECIMAL(38,0)) END) AS DOUBLE) /
+        |    CAST(SUM(CAST(n*c - s AS DECIMAL(38,0)) *
+        |             CAST(n*c - s AS DECIMAL(38,0))) AS DOUBLE)
+        |    AS DOUBLE) AS autocorr_lag1
+        |FROM lagged GROUP BY event_type""".stripMargin),
     // window-function breadth over per-user event sequences: first/
     // last/nth value with EXPLICIT row frames (engine defaults differ;
     // pinning the frame is the portability lesson), cume_dist on a
     // unique total order, lag with default. Values pass through
     // unchanged — no float arithmetic, so the frame hash-matches
-    "events_window_breadth" -> ((s, dir) => {
+    Query("events_window_breadth", (s, dir) => {
       val ord = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -853,13 +1392,28 @@ object AnalyticsQueries {
           nth_value(col("value"), 2).over(run).as("second_v"),
           cume_dist().over(ord).as("cd"),
           lag(col("value"), 1, 0.0).over(ord).as("prev_v"))
-    }),
+    },
+      // identical explicit frames
+      oracle = """SELECT event_id, user_id, value,
+        |  first_value(value) OVER w_run AS first_v,
+        |  last_value(value) OVER w_full AS last_v,
+        |  nth_value(value, 2) OVER w_run AS second_v,
+        |  cume_dist() OVER w_ord AS cd,
+        |  lag(value, 1, 0.0) OVER w_ord AS prev_v
+        |FROM events
+        |WINDOW
+        |  w_ord AS (PARTITION BY user_id ORDER BY ts, event_id),
+        |  w_run AS (PARTITION BY user_id ORDER BY ts, event_id
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |  w_full AS (PARTITION BY user_id ORDER BY ts, event_id
+        |             ROWS BETWEEN UNBOUNDED PRECEDING
+        |               AND UNBOUNDED FOLLOWING)""".stripMargin),
     // feature-hash collision profile: every term routed to one of 64
     // buckets by the engine-portable 60-bit md5 hash — the vectorizer
     // audit (bucket load balance and collision pressure) run before
     // committing to a hashed feature space. One term-level groupBy,
     // then a 64-row rollup
-    "text_feature_hash" -> ((s, dir) => {
+    Query("text_feature_hash", (s, dir) => {
       val terms = Tables.load(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("n_tokens"))
@@ -870,36 +1424,65 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_terms"),
           sum(col("n_tokens")).as("n_tokens"),
           max(col("n_tokens")).as("max_term_tokens"))
-    }),
+    },
+      // same md5-60-bit bucket route
+      oracle = {
+        val h = graft.functions.Sampling.keyHash60Sql("term")
+        s"""WITH tf AS (
+           |  SELECT term, CAST(COUNT(*) AS BIGINT) AS n_tokens
+           |  FROM (SELECT unnest(string_split(text, ' ')) AS term
+           |        FROM documents)
+           |  GROUP BY term)
+           |SELECT CAST(($h) % 64 AS BIGINT) AS bucket,
+           |  CAST(COUNT(*) AS BIGINT) AS n_terms,
+           |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+           |  CAST(MAX(n_tokens) AS BIGINT) AS max_term_tokens
+           |FROM tf GROUP BY 1""".stripMargin
+      }),
     // distinct aggregation + min/max/avg (avg via exact decimal sum/count)
-    "q_distinct" -> ((s, dir) =>
+    Query("q_distinct", (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_supps"),
           min(col("l_extendedprice")).as("min_price"),
           max(col("l_extendedprice")).as("max_price"),
-          (sum(dec("l_quantity")).cast("double") / count(lit(1))).as("avg_qty"))),
+          (sum(dec("l_quantity")).cast("double") / count(lit(1))).as("avg_qty")),
+      oracle = """SELECT l_returnflag,
+        |  CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
+        |  MIN(l_extendedprice) AS min_price,
+        |  MAX(l_extendedprice) AS max_price,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
     // pivot: per-returnflag row, one column per linestatus
-    "q_pivot" -> ((s, dir) =>
+    Query("q_pivot", (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .pivot("l_linestatus", Seq("F", "O"))
         .agg(sum(dec("l_quantity")).cast("double"))
-        .withColumnRenamed("F", "qty_f").withColumnRenamed("O", "qty_o")),
+        .withColumnRenamed("F", "qty_f").withColumnRenamed("O", "qty_o"),
+      oracle = """SELECT l_returnflag,
+        |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
+        |  CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
     // HLL sketch: approximate distinct. Raw estimates are engine-specific
     // (Spark HLL++ vs DuckDB's sketch never agree bit-for-bit), so the
     // oracle-checked output is the DETERMINISTIC verdict both engines
     // share: the exact count plus "the engine's own sketch landed within
     // ±5% of it" — each side grades its own estimator, and both pass at
     // this cardinality. ScalaTest still bounds the raw relative error.
-    "q_approx_distinct" -> ((s, dir) =>
+    Query("q_approx_distinct", (s, dir) =>
       t(s, dir, "lineitem")
         .agg(approx_count_distinct(col("l_partkey")).as("approx_parts"),
           countDistinct(col("l_partkey")).as("exact_parts"))
         .select(col("exact_parts"),
           (abs(col("approx_parts") - col("exact_parts")) <=
-            col("exact_parts") * lit(0.05)).as("approx_within_5pct"))),
+            col("exact_parts") * lit(0.05)).as("approx_within_5pct")),
+      oracle = s"""SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
+         |  ABS(approx_count_distinct(l_partkey) - COUNT(DISTINCT l_partkey))
+         |    <= COUNT(DISTINCT l_partkey) * 0.05 AS approx_within_5pct
+         |FROM lineitem""".stripMargin),
     // ORACLE-EXACT HyperLogLog (q_approx_distinct's engine sketches are
     // opaque and self-graded; this one is the published algorithm with
     // every step pinned — md5 hash, CASE-chain rho, integer-scaled
@@ -907,7 +1490,7 @@ object AnalyticsQueries {
     // Paired with the exact count: the audit a pipeline runs once per
     // source before trusting approximate NDV everywhere else. Registers
     // partial-aggregate (max per bucket): the vocabulary never shuffles
-    "ndv_hll" -> ((s, dir) => {
+    Query("ndv_hll", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val est = graft.functions.Cardinality.hllNdv(
         li, Seq("l_returnflag"), "l_orderkey", p = 8)
@@ -917,13 +1500,27 @@ object AnalyticsQueries {
         .select(col("l_returnflag"), col("exact_ndv"), col("hll_ndv"),
           ((col("hll_ndv") - col("exact_ndv").cast("double")) /
             col("exact_ndv").cast("double")).as("rel_err"))
-    }),
+    },
+      // the identical pinned HLL dataflow
+      oracle = {
+        val est = graft.functions.Cardinality.hllNdvSql(
+          "SELECT l_returnflag, l_orderkey FROM lineitem",
+          Seq("l_returnflag"), "l_orderkey", p = 8)
+        s"""WITH est AS ($est),
+           |ex AS (SELECT l_returnflag,
+           |         CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_ndv
+           |       FROM lineitem GROUP BY 1)
+           |SELECT est.l_returnflag, exact_ndv, hll_ndv,
+           |  (hll_ndv - CAST(exact_ndv AS DOUBLE)) / CAST(exact_ndv AS DOUBLE)
+           |    AS rel_err
+           |FROM est JOIN ex ON est.l_returnflag = ex.l_returnflag""".stripMargin
+      }),
     // HLL MERGEABILITY — the property that makes sketches the 100 TB
     // answer: the union of two sets estimates from an elementwise MAX
     // of their register frames, no raw values revisited, and the
     // intersection follows by inclusion-exclusion. Estimated here for
     // the R/A returnflag key sets against the exact union count
-    "ndv_hll_union" -> ((s, dir) => {
+    Query("ndv_hll_union", (s, dir) => {
       import graft.functions.Cardinality
       val li = t(s, dir, "lineitem")
       def regs(f: String) = Cardinality.hllRegisters(
@@ -943,7 +1540,30 @@ object AnalyticsQueries {
         .select(col("est_r"), col("est_a"), col("est_union"),
           (col("est_r") + col("est_a") - col("est_union")).as("est_inter"),
           col("exact_union"))
-    }),
+    },
+      // same register max-merge, same inclusion-exclusion term order
+      oracle = {
+        import graft.functions.Cardinality
+        def regs(f: String) = Cardinality.hllRegistersSql(
+          s"SELECT l_orderkey FROM lineitem WHERE l_returnflag = '$f'",
+          Seq.empty, "l_orderkey", p = 8)
+        val eR = Cardinality.hllEstimateSql("SELECT b, mj FROM ra", Seq.empty)
+        val eA = Cardinality.hllEstimateSql("SELECT b, mj FROM rb", Seq.empty)
+        val eU = Cardinality.hllEstimateSql("SELECT b, mj FROM ru", Seq.empty)
+        s"""WITH ra AS (${regs("R")}),
+           |rb AS (${regs("A")}),
+           |ru AS (SELECT b, MAX(mj) AS mj FROM
+           |        (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY b),
+           |er AS (SELECT hll_ndv AS est_r FROM ($eR)),
+           |ea AS (SELECT hll_ndv AS est_a FROM ($eA)),
+           |eu AS (SELECT hll_ndv AS est_union FROM ($eU)),
+           |ex AS (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT)
+           |         AS exact_union
+           |       FROM lineitem WHERE l_returnflag IN ('R', 'A'))
+           |SELECT est_r, est_a, est_union,
+           |  est_r + est_a - est_union AS est_inter, exact_union
+           |FROM er CROSS JOIN ea CROSS JOIN eu CROSS JOIN ex""".stripMargin
+      }),
     // histogram-based join cardinality estimation (the System R
     // optimizer primitive): per-bucket (count, NDV) histograms on each
     // side, est = Σ_b na·nb / max(da, db) under within-bucket
@@ -951,7 +1571,7 @@ object AnalyticsQueries {
     // validation a planner runs before trusting its own estimates.
     // Integer DIV per bucket keeps both engines exact; histograms are
     // two partial-aggregating passes, the estimate sums a 1024-row frame
-    "join_card_estimate" -> ((s, dir) => {
+    Query("join_card_estimate", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey").as("k"))
       val l = t(s, dir, "lineitem").select(col("l_orderkey").as("k"))
       def hist(df: DataFrame) =
@@ -968,17 +1588,48 @@ object AnalyticsQueries {
       est.crossJoin(actual).select(col("est_rows"), col("actual_rows"),
         (col("est_rows").cast("double") / col("actual_rows").cast("double"))
           .as("est_ratio"))
-    }),
+    },
+      // same 1024-bucket histograms, same per-bucket integer DIV
+      oracle = """WITH ho AS (
+        |  SELECT o_orderkey % 1024 AS b, CAST(COUNT(*) AS BIGINT) AS na,
+        |    CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS da
+        |  FROM orders GROUP BY 1),
+        |hl AS (
+        |  SELECT l_orderkey % 1024 AS b, CAST(COUNT(*) AS BIGINT) AS nb,
+        |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS db
+        |  FROM lineitem GROUP BY 1),
+        |e AS (
+        |  SELECT CAST(SUM(na * nb // GREATEST(da, db)) AS BIGINT)
+        |    AS est_rows
+        |  FROM ho JOIN hl USING (b)),
+        |a AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS actual_rows
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)
+        |SELECT est_rows, actual_rows,
+        |  CAST(est_rows AS DOUBLE) / CAST(actual_rows AS DOUBLE)
+        |    AS est_ratio
+        |FROM e CROSS JOIN a""".stripMargin),
     // data-level set ops: keys dropped by the perturbation = EXCEPT
-    "q_setops" -> ((s, dir) => {
+    Query("q_setops", (s, dir) => {
       val src = t(s, dir, "lineitem").select(col("l_orderkey")).distinct()
       val tgt = graft.engine.Perturb.lineitemTarget(t(s, dir, "lineitem"))
         .select(col("l_orderkey")).distinct()
       src.except(tgt).unionByName(tgt.except(src).withColumn("l_orderkey", -col("l_orderkey")))
-    }),
+    },
+      oracle = s"""SELECT l_orderkey FROM (
+         |  SELECT DISTINCT l_orderkey FROM lineitem
+         |  EXCEPT
+         |  SELECT DISTINCT l_orderkey FROM (${graft.engine.Perturb.lineitemTargetSql})
+         |)
+         |UNION ALL
+         |SELECT -l_orderkey FROM (
+         |  SELECT DISTINCT l_orderkey FROM (${graft.engine.Perturb.lineitemTargetSql})
+         |  EXCEPT
+         |  SELECT DISTINCT l_orderkey FROM lineitem
+         |)""".stripMargin),
     // skew-safe salted shuffle join (result-identical to the plain join;
     // the hot-key demo is in JoinsSpec — here the oracle pins equivalence)
-    "q_salted_join" -> ((s, dir) =>
+    Query("q_salted_join", (s, dir) =>
       Joins.saltedJoin(
           t(s, dir, "lineitem").select("l_orderkey", "l_linenumber",
             "l_suppkey", "l_quantity"),
@@ -988,33 +1639,48 @@ object AnalyticsQueries {
           discCol = "l_orderkey", buckets = 8)
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n"),
-          sum(dec("l_quantity")).cast("double").as("sum_qty"))),
+          sum(dec("l_quantity")).cast("double").as("sum_qty")),
+      oracle = """SELECT s_nationkey, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY s_nationkey""".stripMargin),
     // events table: time-bucketed aggregation (streaming-shaped, batch run)
-    "events_by_hour" -> ((s, dir) =>
+    Query("events_by_hour", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))),
+          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value")),
+      oracle = """SELECT date_trunc('hour', ts) AS hour, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin),
     // deterministic negative sampling (word2vec/two-tower prep): 4
     // hash-drawn uniform negatives per positive (user, item) pair from
     // the observed item universe, reproducible on any cluster layout;
     // accidental positives are flagged for masking, never
     // layout-dependently rejected. The dense item index is the
     // two-phase bucketed rank — no single-partition window
-    "events_negative_samples" -> ((s, dir) => {
+    Query("events_negative_samples", (s, dir) => {
       val pos = Tables.events(s, dir)
         .select(col("user_id"),
           get_json_object(col("props"), "$.k").cast("long").as("item"))
         .filter(col("item").isNotNull)
       graft.functions.Sampling.negativeSamples(pos, "user_id", "item", k = 4)
-    }),
+    },
+      // same bucketed index, same hash draw, same collision flag
+      oracle = graft.functions.Sampling.negativeSamplesSql(
+        """SELECT user_id AS k_,
+          |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+          |FROM events
+          |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
+        k = 4, keyName = "user_id")),
     // seasonal-naive forecast baseline with MASE grading (the
     // M-competition sanity bar every forecasting pipeline must beat):
     // forecast(day) = count(day-7), graded against naive(day) =
     // count(day-1) on the same evaluation days, MASE = MAE_f / MAE_n.
     // Absolute errors sum as exact longs on the tiny (type, day)
     // frame; the two divisions are single IEEE ops
-    "events_forecast_baseline" -> ((s, dir) => {
+    Query("events_forecast_baseline", (s, dir) => {
       val byDay = Tables.events(s, dir)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("c"))
@@ -1035,7 +1701,29 @@ object AnalyticsQueries {
           (col("__se").cast("double") / col("__ne").cast("double"))
             .as("mase"))
         .withColumn("beats_naive", col("mase") < 1.0)
-    }),
+    },
+      // same lag frame, same eval-day restriction, same exact error sums
+      oracle = """WITH byday AS (
+        |  SELECT event_type, DATE_TRUNC('day', ts) AS day,
+        |    CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |lagged AS (
+        |  SELECT event_type, c,
+        |    LAG(c, 7) OVER (PARTITION BY event_type ORDER BY day) AS f,
+        |    LAG(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS n
+        |  FROM byday)
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days_eval,
+        |  CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
+        |    / CAST(COUNT(*) AS DOUBLE) AS mae_seasonal,
+        |  CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE)
+        |    / CAST(COUNT(*) AS DOUBLE) AS mae_naive,
+        |  CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
+        |    / CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE) AS mase,
+        |  (CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
+        |    / CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE)) < 1.0
+        |    AS beats_naive
+        |FROM lagged WHERE f IS NOT NULL
+        |GROUP BY event_type""".stripMargin),
     // rolling 7-day distinct users per day (WAU): sliding DISTINCT does
     // not decompose like a sum, and the naive form is a range join
     // (day BETWEEN d-6 AND d) that plans as a nested loop. Instead each
@@ -1044,7 +1732,7 @@ object AnalyticsQueries {
     // after that), anchors without real traffic are semi-joined away,
     // and the distinct runs as two partial-aggregating groupBys. At
     // 100 TB the exchanges carry (day, user_id) pairs only
-    "events_rolling_mau" -> ((s, dir) => {
+    Query("events_rolling_mau", (s, dir) => {
       val ud = Tables.events(s, dir)
         .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
         .distinct()
@@ -1056,12 +1744,25 @@ object AnalyticsQueries {
         .distinct()
         .groupBy(col("d"))
         .agg(count(lit(1)).as("wau_users"))
-    }),
+    },
+      // same 7-anchor fan-out, same semi-join against observed days
+      oracle = """WITH ud AS (
+        |  SELECT DISTINCT DATE_TRUNC('day', ts) AS day, user_id
+        |  FROM events),
+        |days AS (SELECT DISTINCT day AS d FROM ud),
+        |fan AS (
+        |  SELECT DISTINCT g.d, ud.user_id
+        |  FROM ud, LATERAL (
+        |    SELECT UNNEST(generate_series(ud.day,
+        |      ud.day + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS d) g
+        |  WHERE g.d IN (SELECT d FROM days))
+        |SELECT d, CAST(COUNT(*) AS BIGINT) AS wau_users
+        |FROM fan GROUP BY d""".stripMargin),
     // sliding-window aggregation (30 min window, 10 min slide): each
     // event lands in width/slide = 3 overlapping windows — the built-in
     // window() generator fans out map-side, then one groupBy shuffle on
     // (window, type); the streaming-native shape, run as batch
-    "events_sliding" -> ((s, dir) =>
+    Query("events_sliding", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(window(col("ts"), "30 minutes", "10 minutes").as("w"),
           col("event_type"))
@@ -1069,27 +1770,83 @@ object AnalyticsQueries {
           sum(col("value").cast("decimal(18,4)")).cast("double")
             .as("sum_value"))
         .select(col("w.start").as("win_start"), col("event_type"),
-          col("n"), col("sum_value"))),
+          col("n"), col("sum_value")),
+      // each event belongs to exactly width/slide = 3 ten-minute-aligned
+      // windows; win_start = its slide bucket minus i slides, i in 0..2 —
+      // the same epoch-origin alignment Spark's window() uses
+      oracle = """WITH w AS (
+        |  SELECT make_timestamp(((epoch_us(ts) // 600000000) - i) * 600000000)
+        |           AS win_start,
+        |         event_type, value
+        |  FROM events, unnest(range(0, 3)) AS u(i)
+        |)
+        |SELECT win_start, event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM w GROUP BY win_start, event_type""".stripMargin),
     // gap-based sessionization, per-event numbering (12 h gap; event_id
     // tie-break keeps the numbering total)
-    "events_sessionize" -> ((s, dir) =>
+    Query("events_sessionize", (s, dir) =>
       Sessions.sessionize(Tables.events(s, dir), "user_id", "ts",
           gapMicros = 12L * 3600 * 1000000, tieBreak = Seq("event_id"))
-        .select(col("user_id"), col("event_id"), col("session_seq"))),
+        .select(col("user_id"), col("event_id"), col("session_seq")),
+      // boundary rule mirrors Spark's session_window: only a gap STRICTLY
+      // greater than the duration (12 h = 43 200 000 000 us) starts a new
+      // session — an exactly-equal gap merges (pinned in SessionsSpec)
+      oracle = """WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
+        |         THEN 1 ELSE 0 END AS b
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |)
+        |SELECT user_id, event_id,
+        |  CAST(SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+        |FROM g""".stripMargin),
     // hot-key pre-split variant: same session numbering (same oracle),
     // but windowed over (user, day-chunk) with summary-level stitching —
     // the single-user-firehose shape
-    "events_sessionize_salted" -> ((s, dir) =>
+    Query("events_sessionize_salted", (s, dir) =>
       Sessions.sessionizeSalted(Tables.events(s, dir), "user_id", "ts",
           gapMicros = 12L * 3600 * 1000000, tieBreak = Seq("event_id"))
-        .select(col("user_id"), col("event_id"), col("session_seq"))),
+        .select(col("user_id"), col("event_id"), col("session_seq")),
+      // the salted variant must produce the SAME numbering — one oracle,
+      // two physical plans
+      oracle = """WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
+        |         THEN 1 ELSE 0 END AS b
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |)
+        |SELECT user_id, event_id,
+        |  CAST(SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+        |FROM g""".stripMargin),
     // session-level rollup via the built-in session_window grouping
-    "events_sessions" -> ((s, dir) =>
+    Query("events_sessions", (s, dir) =>
       Sessions.sessionStats(Tables.events(s, dir), "user_id", "ts",
-        gap = "12 hours", valueCol = "value")),
+        gap = "12 hours", valueCol = "value"),
+      oracle = """WITH g AS (
+        |  SELECT user_id, ts, value,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
+        |         THEN 1 ELSE 0 END AS b
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        |), s AS (
+        |  SELECT user_id, ts, value,
+        |    SUM(b) OVER (PARTITION BY user_id ORDER BY ts
+        |                 ROWS UNBOUNDED PRECEDING) AS seq
+        |  FROM g
+        |)
+        |SELECT user_id, MIN(ts) AS session_start,
+        |  MAX(ts) + INTERVAL 12 HOUR AS session_end,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM s GROUP BY user_id, seq""".stripMargin),
     // as-of join: each purchase picks the user's latest signup at-or-
     // before it (union-window formulation — one shuffle, no point reads)
-    "asof_join" -> ((s, dir) => {
+    Query("asof_join", (s, dir) => {
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select("user_id", "ts", "event_id", "value")
@@ -1097,10 +1854,18 @@ object AnalyticsQueries {
         .select("user_id", "ts", "event_id", "value")
       Joins.asofJoin(purchases, signups, Seq("user_id"), "ts",
         Seq("event_id", "value"))
-    }),
+    },
+      oracle = """WITH l AS (SELECT user_id, ts, event_id, value FROM events
+        |           WHERE event_type = 'purchase'),
+        |r AS (SELECT user_id, ts, event_id, value FROM events
+        |      WHERE event_type = 'signup')
+        |SELECT l.user_id, l.ts, l.event_id, l.value,
+        |       r.event_id AS event_id_r, r.value AS value_r
+        |FROM l ASOF LEFT JOIN r
+        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin),
     // as-of with a lookback tolerance (merge_asof semantics): signups
     // older than 30 minutes stop matching
-    "asof_join_tolerance" -> ((s, dir) => {
+    Query("asof_join_tolerance", (s, dir) => {
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select("user_id", "ts", "event_id", "value")
@@ -1108,7 +1873,18 @@ object AnalyticsQueries {
         .select("user_id", "ts", "event_id", "value")
       Joins.asofJoin(purchases, signups, Seq("user_id"), "ts",
         Seq("event_id", "value"), toleranceMicros = Some(30L * 60 * 1000000))
-    }),
+    },
+      oracle = """WITH l AS (SELECT user_id, ts, event_id, value FROM events
+        |           WHERE event_type = 'purchase'),
+        |r AS (SELECT user_id, ts, event_id, value FROM events
+        |      WHERE event_type = 'signup')
+        |SELECT l.user_id, l.ts, l.event_id, l.value,
+        |       CASE WHEN r.ts >= l.ts - INTERVAL 30 MINUTE
+        |            THEN r.event_id END AS event_id_r,
+        |       CASE WHEN r.ts >= l.ts - INTERVAL 30 MINUTE
+        |            THEN r.value END AS value_r
+        |FROM l ASOF LEFT JOIN r
+        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin),
     // top user journeys: each user's first-8-event path (ordered,
     // '>'-joined) ranked by frequency — the clickstream path report.
     // The per-user cap bounds path length BEFORE any aggregation (a
@@ -1116,7 +1892,7 @@ object AnalyticsQueries {
     // collected array is pinned by array_sort over (ts, event_id)
     // structs (collect_list alone has no order guarantee), and the
     // top-20 runs as TakeOrdered, never a global sort
-    "events_top_paths" -> ((s, dir) => {
+    Query("events_top_paths", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
@@ -1131,7 +1907,20 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_users"))
         .orderBy(col("n_users").desc, col("path"))
         .limit(20)
-    }),
+    },
+      // same first-8 cap, same pinned ordering
+      oracle = """WITH r AS (
+        |  SELECT user_id, event_type, ts, event_id,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS rn
+        |  FROM events),
+        |p AS (
+        |  SELECT user_id,
+        |    string_agg(event_type, '>' ORDER BY ts, event_id) AS path
+        |  FROM r WHERE rn <= 8 GROUP BY user_id)
+        |SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users
+        |FROM p GROUP BY path
+        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin),
     // last-touch attribution: each purchase credits the latest prior
     // non-purchase event of its user (the as-of join, aggregated into
     // the channel report a marketing pipeline ships). Touches first
@@ -1139,7 +1928,7 @@ object AnalyticsQueries {
     // so as-of tie-breaking can never diverge between engines;
     // purchases with no prior touch report as 'unattributed'. The
     // share divides exact longs once
-    "events_attribution" -> ((s, dir) => {
+    Query("events_attribution", (s, dir) => {
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -1157,17 +1946,58 @@ object AnalyticsQueries {
         .select(col("channel"), col("n_conversions"),
           (col("n_conversions").cast("double") / col("__t").cast("double"))
             .as("share"))
-    }),
+    },
+      // DuckDB's native ASOF LEFT JOIN is the independent mirror of the
+      // union-window formulation, over the same tie-free deduped touch frame
+      oracle = """WITH p AS (SELECT user_id, ts, event_id FROM events
+        |           WHERE event_type = 'purchase'),
+        |t AS (SELECT user_id, ts, MAX(event_type) AS channel
+        |      FROM events WHERE event_type <> 'purchase'
+        |      GROUP BY user_id, ts),
+        |att AS (
+        |  SELECT COALESCE(t.channel, 'unattributed') AS channel
+        |  FROM p ASOF LEFT JOIN t
+        |    ON p.user_id = t.user_id AND p.ts >= t.ts),
+        |bc AS (SELECT channel, CAST(COUNT(*) AS BIGINT) AS n_conversions
+        |       FROM att GROUP BY channel),
+        |tot AS (SELECT CAST(SUM(n_conversions) AS BIGINT) AS t FROM bc)
+        |SELECT channel, n_conversions,
+        |  CAST(n_conversions AS DOUBLE) / CAST(tot.t AS DOUBLE) AS share
+        |FROM bc CROSS JOIN tot""".stripMargin),
     // ordered conversion funnel: first view → first click after it →
     // first purchase after that, one row per user with stage instants
-    "events_funnel" -> ((s, dir) =>
+    Query("events_funnel", (s, dir) =>
       Sessions.funnel(Tables.events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
+        Seq("view", "click", "purchase")),
+      // each stage CTE joins on the previous stage's instant, so a stage
+      // only counts events strictly after the funnel reached it
+      oracle = """WITH u AS (SELECT DISTINCT user_id FROM events),
+        |s0 AS (SELECT user_id, MIN(epoch_us(ts)) AS m0 FROM events
+        |       WHERE event_type = 'view' GROUP BY user_id),
+        |s1 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m1
+        |       FROM events e JOIN s0 ON e.user_id = s0.user_id
+        |       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s0.m0
+        |       GROUP BY e.user_id),
+        |s2 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m2
+        |       FROM events e JOIN s1 ON e.user_id = s1.user_id
+        |       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s1.m1
+        |       GROUP BY e.user_id)
+        |SELECT u.user_id,
+        |  make_timestamp(s0.m0) AS t_view,
+        |  make_timestamp(s1.m1) AS t_click,
+        |  make_timestamp(s2.m2) AS t_purchase,
+        |  CAST(CASE WHEN s2.m2 IS NOT NULL THEN 3
+        |            WHEN s1.m1 IS NOT NULL THEN 2
+        |            WHEN s0.m0 IS NOT NULL THEN 1
+        |            ELSE 0 END AS BIGINT) AS stages_completed
+        |FROM u LEFT JOIN s0 USING (user_id)
+        |       LEFT JOIN s1 USING (user_id)
+        |       LEFT JOIN s2 USING (user_id)""".stripMargin),
     // funnel conversion summary: users reaching each ordered depth plus
     // the step conversion fraction — the dashboard row the per-user
     // funnel feeds; one aggregation over the funnel's ≤1-row-per-user
     // output, then a depth cumulative sum over ≤|stages| rows
-    "events_funnel_rates" -> ((s, dir) => {
+    Query("events_funnel_rates", (s, dir) => {
       val f = Sessions.funnel(Tables.events(s, dir), "user_id",
         "event_type", "ts", Seq("view", "click", "purchase"))
       val byDepth = f.groupBy(col("stages_completed").as("depth"))
@@ -1182,14 +2012,42 @@ object AnalyticsQueries {
         .select(col("depth"), col("n_users"), col("n_reached"),
           (col("n_reached").cast("double") / col("total").cast("double"))
             .as("reach_frac"))
-    }),
+    },
+      oracle = """WITH u AS (SELECT DISTINCT user_id FROM events),
+        |s0 AS (SELECT user_id, MIN(epoch_us(ts)) AS m0 FROM events
+        |       WHERE event_type = 'view' GROUP BY user_id),
+        |s1 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m1
+        |       FROM events e JOIN s0 ON e.user_id = s0.user_id
+        |       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s0.m0
+        |       GROUP BY e.user_id),
+        |s2 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m2
+        |       FROM events e JOIN s1 ON e.user_id = s1.user_id
+        |       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s1.m1
+        |       GROUP BY e.user_id),
+        |dep AS (
+        |  SELECT CAST(CASE WHEN s2.m2 IS NOT NULL THEN 3
+        |              WHEN s1.m1 IS NOT NULL THEN 2
+        |              WHEN s0.m0 IS NOT NULL THEN 1
+        |              ELSE 0 END AS BIGINT) AS depth
+        |  FROM u LEFT JOIN s0 USING (user_id)
+        |         LEFT JOIN s1 USING (user_id)
+        |         LEFT JOIN s2 USING (user_id)),
+        |d AS (SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_users
+        |      FROM dep GROUP BY depth)
+        |SELECT depth, n_users,
+        |  CAST(SUM(n_users) OVER (ORDER BY depth DESC
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_reached,
+        |  CAST(SUM(n_users) OVER (ORDER BY depth DESC
+        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+        |    / CAST(SUM(n_users) OVER () AS DOUBLE) AS reach_frac
+        |FROM d""".stripMargin),
     // cohort retention matrix: users grouped by first-active day, counted
     // per day-offset of later activity. Two partial-aggregating passes +
     // a user-key join (one row per user on the cohort side — broadcast at
     // bench scale, user-key shuffle join at corpus scale); the distinct
     // (user, day) projection collapses each user's day to one row before
     // the join, so the matrix agg never sees raw events
-    "events_retention" -> ((s, dir) => {
+    Query("events_retention", (s, dir) => {
       val ev = Tables.events(s, dir)
       val first = ev.groupBy(col("user_id"))
         .agg(min(to_date(col("ts"))).as("cohort"))
@@ -1199,11 +2057,22 @@ object AnalyticsQueries {
         .groupBy(date_format(col("cohort"), "yyyy-MM-dd").as("cohort"),
           datediff(col("day"), col("cohort")).cast("long").as("day_offset"))
         .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
+    },
+      oracle = """WITH f AS (
+        |  SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort
+        |  FROM events GROUP BY user_id
+        |), a AS (
+        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+        |)
+        |SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort,
+        |  CAST(date_diff('day', f.cohort, a.day) AS BIGINT) AS day_offset,
+        |  CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
+        |FROM a JOIN f USING (user_id)
+        |GROUP BY 1, 2""".stripMargin),
     // interval-overlap join: signup windows (2 h) × error windows (1 h)
     // per user — binned fan-out + equi-join, each pair claimed by its
     // later start bin so no dedup pass exists in the plan
-    "interval_join" -> ((s, dir) => {
+    Query("interval_join", (s, dir) => {
       val ev = Tables.events(s, dir)
       val a = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), col("event_id").as("a_id"),
@@ -1219,11 +2088,24 @@ object AnalyticsQueries {
           (least(unix_micros(col("a_end")), unix_micros(col("b_end"))) -
             greatest(unix_micros(col("a_start")), unix_micros(col("b_start"))))
             .as("overlap_us"))
-    }),
+    },
+      oracle = """WITH a AS (
+        |  SELECT user_id, event_id AS a_id, ts AS a_start,
+        |    ts + INTERVAL 2 HOUR AS a_end
+        |  FROM events WHERE event_type = 'signup'),
+        |b AS (
+        |  SELECT user_id, event_id AS b_id, ts AS b_start,
+        |    ts + INTERVAL 1 HOUR AS b_end
+        |  FROM events WHERE event_type = 'error')
+        |SELECT a.user_id, a_id, b_id,
+        |  least(epoch_us(a_end), epoch_us(b_end)) -
+        |    greatest(epoch_us(a_start), epoch_us(b_start)) AS overlap_us
+        |FROM a JOIN b ON a.user_id = b.user_id
+        |  AND a_start <= b_end AND b_start <= a_end""".stripMargin),
     // per-user inter-event gap profile: lag window over the event
     // sequence, microsecond-integer arithmetic end to end — one user-key
     // exchange, the aggregation reuses the window's partitioning
-    "events_gaps" -> ((s, dir) => {
+    Query("events_gaps", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val m = unix_micros(col("ts"))
@@ -1234,12 +2116,21 @@ object AnalyticsQueries {
           min(col("gap_us")).as("min_gap_us"),
           max(col("gap_us")).as("max_gap_us"),
           sum(col("gap_us")).as("sum_gap_us"))
-    }),
+    },
+      oracle = """WITH g AS (
+        |  SELECT user_id,
+        |    epoch_us(ts) - lag(epoch_us(ts))
+        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+        |  FROM events)
+        |SELECT user_id, COUNT(*) AS n_events,
+        |  MIN(gap_us) AS min_gap_us, MAX(gap_us) AS max_gap_us,
+        |  CAST(SUM(gap_us) AS BIGINT) AS sum_gap_us
+        |FROM g GROUP BY user_id""".stripMargin),
     // hourly-count anomaly flags per event type, INTEGER-exact: flag
     // hours where (n·c − Σc)² > z²·(n·Σc² − (Σc)²) ⇔ |z-score| > z —
     // the float-free rearrangement, so both engines agree bit-for-bit.
     // The per-type stats table is a handful of rows — broadcast back
-    "events_anomaly" -> ((s, dir) => {
+    Query("events_anomaly", (s, dir) => {
       val hourly = Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("c"))
@@ -1253,13 +2144,27 @@ object AnalyticsQueries {
         .filter(col("dev2") > lit(4L) * col("nvar"))
         .select(col("event_type"), col("hour"), col("c").as("n_events"),
           col("dev2"), col("nvar"))
-    }),
+    },
+      oracle = """WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS hour, event_type,
+        |    COUNT(*) AS c
+        |  FROM events GROUP BY 1, 2),
+        |stats AS (
+        |  SELECT event_type, COUNT(*) AS n,
+        |    CAST(SUM(c) AS BIGINT) AS s,
+        |    CAST(SUM(c * c) AS BIGINT) AS ss
+        |  FROM hourly GROUP BY event_type)
+        |SELECT h.event_type, h.hour, h.c AS n_events,
+        |  (st.n * h.c - st.s) * (st.n * h.c - st.s) AS dev2,
+        |  st.n * st.ss - st.s * st.s AS nvar
+        |FROM hourly h JOIN stats st ON h.event_type = st.event_type
+        |WHERE (st.n * h.c - st.s) * (st.n * h.c - st.s) > 4 * (st.n * st.ss - st.s * st.s)""".stripMargin),
     // Z-order layout audit: Morton-interleave (user_id, event second)
     // into a 32-bit clustering key, then per z-PREFIX range (the file
     // boundary a lakehouse OPTIMIZE ZORDER writes) report both
     // dimensions' min/max — the stats a scan planner prunes with. Pure
     // map-side bit expressions + one small aggregation
-    "events_zorder" -> ((s, dir) => {
+    Query("events_zorder", (s, dir) => {
       import graft.sources.Bucketing
       val secs = expr("unix_micros(ts) DIV 1000000")
       val z = Bucketing.zValue(col("user_id"), secs, bits = 16)
@@ -1270,19 +2175,33 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n"),
           min(col("user_id")).as("min_user"), max(col("user_id")).as("max_user"),
           min(col("sec")).as("min_sec"), max(col("sec")).as("max_sec"))
-    }),
+    },
+      oracle = {
+        import graft.sources.Bucketing
+        s"""WITH z AS (
+           |  SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec,
+           |    ${Bucketing.zValueSql("user_id", "(epoch_us(ts) // 1000000)")} AS z
+           |  FROM events)
+           |SELECT z >> 27 AS zbucket, CAST(COUNT(*) AS BIGINT) AS n,
+           |  MIN(user_id) AS min_user, MAX(user_id) AS max_user,
+           |  MIN(sec) AS min_sec, MAX(sec) AS max_sec
+           |FROM z GROUP BY zbucket""".stripMargin
+      }),
     // fixed-width value histogram per event type: bin = floor(value/10)
     // — one partial-aggregating exchange on (type, bin), integer counts
-    "events_histogram" -> ((s, dir) =>
+    Query("events_histogram", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type"),
           floor(col("value") / lit(10.0)).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"))),
+        .agg(count(lit(1)).as("n")),
+      oracle = """SELECT event_type, CAST(FLOOR(value / 10.0) AS BIGINT) AS bin,
+        |  CAST(COUNT(*) AS BIGINT) AS n
+        |FROM events GROUP BY event_type, bin""".stripMargin),
     // per-event trailing-hour rolling aggregate: a RANGE frame over
     // microsecond epoch — the event-time analogue of a sliding window
     // evaluated per row, one user-key exchange; the sum runs in
     // decimal so both engines agree bit-for-bit
-    "events_rolling" -> ((s, dir) => {
+    Query("events_rolling", (s, dir) => {
       val m = unix_micros(col("ts"))
       val w = Window.partitionBy(col("user_id")).orderBy(m)
         .rangeBetween(-3600L * 1000000, 0)
@@ -1290,7 +2209,13 @@ object AnalyticsQueries {
         count(lit(1)).over(w).as("n_1h"),
         sum(col("value").cast("decimal(18,4)")).over(w).cast("double")
           .as("sum_1h"))
-    }),
+    },
+      oracle = """SELECT user_id, event_id,
+        |  CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin),
     // approximate quantiles, self-graded like q_approx_distinct: the
     // sketch result (percentile_approx, accuracy 10k) must land within
     // 1% of the exact DISCRETE percentile (smallest value whose
@@ -1306,7 +2231,7 @@ object AnalyticsQueries {
     // data-sized window, no single final buffer holding every value.
     // The 100 TB path is still percentile_approx alone (mergeable
     // KLL-style buffers); the exact side is now scale-shaped too
-    "q_approx_quantiles" -> ((s, dir) => {
+    Query("q_approx_quantiles", (s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_extendedprice").as("v"))
       val hist = li.groupBy(col("v")).agg(count(lit(1)).as("__c"))
         .withColumn("__b", floor(col("v") / 1024.0).cast("long"))
@@ -1337,14 +2262,33 @@ object AnalyticsQueries {
             .as("p50_close"),
           (abs(col("ap90") - col("ex90")) <= col("ex90") * 0.01)
             .as("p90_close"))
-    }),
+    },
+      // the plan's histogram-cumsum exact side (the events_winsorize
+      // rank convention, global since there is no group key) so ex50/ex90
+      // are hash-gated cross-engine; TRUE asserts the sketch-vs-exact
+      // closeness — if percentile_approx drifts past 1% the flag flips
+      // and the hash gate trips
+      oracle = """WITH h AS (
+        |  SELECT l_extendedprice AS v, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM lineitem GROUP BY 1),
+        |w AS (
+        |  SELECT v,
+        |    SUM(c) OVER (ORDER BY v
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    SUM(c) OVER () AS n
+        |  FROM h)
+        |SELECT CAST(MAX(n) AS BIGINT) AS n_rows,
+        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS ex50,
+        |  MIN(CASE WHEN cum >= (n * 9 + 9) // 10 THEN v END) AS ex90,
+        |  TRUE AS p50_close, TRUE AS p90_close
+        |FROM w""".stripMargin),
     // sketch MERGEABILITY, the property that makes approximate distinct
     // counting distribute: per-stratum DataSketches HLL sketches union
     // into one global estimate (this is exactly how partial aggregates
     // combine across 1000 executors — no stratum ever re-reads another's
     // data). Self-graded like q_approx_distinct: the merged estimate
     // must land within 5% of the in-plan exact distinct
-    "q_approx_distinct_merged" -> ((s, dir) => {
+    Query("q_approx_distinct_merged", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val merged = li.groupBy(col("l_returnflag"))
         .agg(expr("hll_sketch_agg(l_partkey)").as("sk"))
@@ -1354,14 +2298,17 @@ object AnalyticsQueries {
         .select(col("n_exact"),
           (abs(col("est") - col("n_exact")) <=
             col("n_exact").cast("double") * 0.05).as("within_5pct"))
-    }),
+    },
+      oracle = """SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_exact,
+        |  TRUE AS within_5pct
+        |FROM lineitem""".stripMargin),
     // ntile + percent_rank window breadth: within-(type, day) quartile
     // assignment and rank fraction — the feature-binning transform.
     // Partitioning includes the day, so group sizes stay bounded as the
     // corpus grows (the per-type-only window would concentrate); the
     // (value, event_id) order is total, so rank == row_number and both
     // engines agree bit-for-bit
-    "events_ntile" -> ((s, dir) => {
+    Query("events_ntile", (s, dir) => {
       val day = to_date(col("ts"))
       val w = Window.partitionBy(col("event_type"), day)
         .orderBy(col("value"), col("event_id"))
@@ -1371,7 +2318,13 @@ object AnalyticsQueries {
         .select(col("event_id"), col("event_type"),
           col("value"), ntile(4).over(w).as("quartile"),
           percent_rank().over(w).as("pct_rank"))
-    }),
+    },
+      oracle = """SELECT event_id, event_type, value,
+        |  CAST(ntile(4) OVER (PARTITION BY event_type, CAST(ts AS DATE)
+        |    ORDER BY value, event_id) AS INT) AS quartile,
+        |  percent_rank() OVER (PARTITION BY event_type, CAST(ts AS DATE)
+        |    ORDER BY value, event_id) AS pct_rank
+        |FROM events""".stripMargin),
     // Bloom-pre-filtered join: build the deterministic key Bloom from
     // the filtered customer segment (one dense bit row, broadcast),
     // shed non-matching orders BEFORE the shuffle, then run the exact
@@ -1381,7 +2334,7 @@ object AnalyticsQueries {
     // runtime-filter/semi-join-reduction pattern spelled out as an
     // explicit operator: at 100 TB the bloom row is ~KBs while the
     // orders scan drops ~4/5 of its rows pre-exchange
-    "q_bloom_join" -> ((s, dir) => {
+    Query("q_bloom_join", (s, dir) => {
       import graft.functions.Decontaminate
       val mBits = 1 << 16
       val cust = t(s, dir, "customer")
@@ -1398,14 +2351,22 @@ object AnalyticsQueries {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           sum(dec("o_totalprice")).cast("double").as("sum_price"))
-    }),
+    },
+      // q_bloom_join oracle: the PLAIN join — the bloom prefilter must be
+      // invisible in the result
+      oracle = """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY o_orderpriority""".stripMargin),
     // truncated EWMA smoothing per user: α = 1/2 over the last 8 events
     // — every weight is a DYADIC literal (1/2^j), so each term is an
     // exact double scale and the 8-term left-to-right sum is bit-
     // identical cross-engine (the float-discipline trick that makes a
     // smoothing operator oracle-checkable). One shuffle on user; the
     // lag frame is 8 rows deep
-    "events_ewma" -> ((s, dir) => {
+    Query("events_ewma", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val ewma = (1 to 7).foldLeft(col("value") * lit(0.5)) { (acc, j) =>
@@ -1414,7 +2375,17 @@ object AnalyticsQueries {
       }
       Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), ewma.as("ewma"))
-    }),
+    },
+      // identical dyadic weights, identical left-to-right term order
+      oracle = {
+        val terms = "value * 0.5" +: (1 to 7).map { j =>
+          val wgt = 1.0 / (1L << (j + 1))
+          s"COALESCE(LAG(value, $j) OVER (PARTITION BY user_id ORDER BY ts, event_id), 0.0) * $wgt"
+        }
+        s"""SELECT user_id, event_id,
+           |  ${terms.mkString("(", "\n     + ", ")")} AS ewma
+           |FROM events""".stripMargin
+      }),
     // co-visitation matrix: item pairs sharing a user, with the lift
     // statistic (n_ab·n_users / n_a·n_b) — the recsys/co-occurrence
     // join. The self-join is keyed on user_id over the DISTINCT (user,
@@ -1429,7 +2400,7 @@ object AnalyticsQueries {
     // the user total is a 1-row broadcast. Lift divides exact longs
     // once. Marginals and n_users are computed on the CAPPED frame so
     // lift stays consistent with the pairs it describes
-    "events_covisitation" -> ((s, dir) => {
+    Query("events_covisitation", (s, dir) => {
       val maxUserDegree = 512
       val items = graft.functions.Graphs.capKeyDegree(
         Tables.events(s, dir)
@@ -1456,19 +2427,52 @@ object AnalyticsQueries {
             (col("n_a") * col("n_b")).cast("double")).as("lift"))
         .orderBy(col("n_ab").desc, col("item_a"), col("item_b"))
         .limit(20)
-    }),
+    },
+      // the same 512 per-user degree cap
+      oracle = s"""WITH items0 AS (
+        |  SELECT DISTINCT user_id,
+        |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS item
+        |  FROM events
+        |  WHERE json_extract_string(props, '$$.k') IS NOT NULL),
+        |items AS (
+        |${graft.functions.Graphs.capKeyDegreeSql(
+             "SELECT * FROM items0", "user_id", 512)}),
+        |marg AS (
+        |  SELECT item, CAST(COUNT(*) AS BIGINT) AS n FROM items GROUP BY 1),
+        |u AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+        |      FROM items),
+        |pairs AS (
+        |  SELECT x.item AS item_a, y.item AS item_b,
+        |    CAST(COUNT(*) AS BIGINT) AS n_ab
+        |  FROM items x JOIN items y
+        |    ON x.user_id = y.user_id AND x.item < y.item
+        |  GROUP BY 1, 2)
+        |SELECT item_a, item_b, n_ab, a.n AS n_a, b.n AS n_b,
+        |  CAST(n_ab * n_users AS DOUBLE)
+        |    / CAST(a.n * b.n AS DOUBLE) AS lift
+        |FROM pairs
+        |JOIN marg a ON item_a = a.item
+        |JOIN marg b ON item_b = b.item
+        |CROSS JOIN u
+        |ORDER BY n_ab DESC, item_a, item_b
+        |LIMIT 20""".stripMargin),
     // JSON scalar functions over the events props column: extraction,
     // cast, aggregation — pure codegen'd expressions
-    "json_extract" -> ((s, dir) =>
+    Query("json_extract", (s, dir) =>
       Tables.events(s, dir)
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
+          min(col("k")).as("min_k"), max(col("k")).as("max_k")),
+      oracle = """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+        |  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
+        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
+        |FROM events GROUP BY event_type""".stripMargin),
     // range join: purchases inside the hour after a signup (binned
     // interval containment — equi-join on (key, bin), never nested-loop)
-    "range_join" -> ((s, dir) => {
+    Query("range_join", (s, dir) => {
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -1479,7 +2483,16 @@ object AnalyticsQueries {
       Joins.rangeJoin(purchases, sessions, Seq("user_id"), "ts",
           "session_start", "session_end")
         .select("user_id", "event_id", "session_id")
-    }),
+    },
+      oracle = """WITH p AS (SELECT user_id, ts, event_id FROM events
+        |           WHERE event_type = 'purchase'),
+        |s AS (SELECT user_id, ts AS session_start,
+        |             ts + INTERVAL 1 HOUR AS session_end,
+        |             event_id AS session_id
+        |      FROM events WHERE event_type = 'signup')
+        |SELECT p.user_id, p.event_id, s.session_id
+        |FROM p JOIN s ON p.user_id = s.user_id
+        |  AND p.ts >= s.session_start AND p.ts <= s.session_end""".stripMargin),
     // PageRank over the item co-visitation graph (3 damped power
     // iterations): which items sit at the center of the browsing graph
     // — the graph-analytics capability class. Edges are the DISTINCT
@@ -1492,7 +2505,7 @@ object AnalyticsQueries {
     // run before trusting any key-equality join or MERGE (a duplicate
     // key silently fans out every downstream join). One partial-
     // aggregating groupBy per table; the 1-row results union
-    "dq_key_uniqueness" -> ((s, dir) => {
+    Query("dq_key_uniqueness", (s, dir) => {
       def audit(label: String, df: DataFrame, keys: Seq[String]) =
         df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
           .agg(count(lit(1)).as("n_keys"), sum(col("__c")).as("n_rows"),
@@ -1508,19 +2521,40 @@ object AnalyticsQueries {
           Seq("c_custkey")))
         .unionByName(audit("events", Tables.events(s, dir),
           Seq("event_id")))
-    }),
+    },
+      // same per-table key aggregates
+      oracle = {
+        def auditSql(label: String, table: String, keys: String) =
+          s"""SELECT '$label' AS tbl, CAST(SUM(c) AS BIGINT) AS n_rows,
+             |  CAST(COUNT(*) AS BIGINT) AS n_keys,
+             |  CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
+             |    AS dup_keys,
+             |  CAST(MAX(c) AS BIGINT) AS max_multiplicity
+             |FROM (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM $table
+             |      GROUP BY $keys)""".stripMargin
+        Seq(auditSql("orders", "orders", "o_orderkey"),
+          auditSql("lineitem", "lineitem", "l_orderkey, l_linenumber"),
+          auditSql("part", "part", "p_partkey"),
+          auditSql("customer", "customer", "c_custkey"),
+          auditSql("events", "events", "event_id"))
+          .mkString("\nUNION ALL\n")
+      }),
     // range-partition balance audit: sort boundaries estimated from a
     // 1% deterministic key sample (RangePartitioner's own move), then
     // the FULL table's row balance across those estimated ranges — the
     // audit run before committing a global sort or range layout
-    "sort_range_balance" -> ((s, dir) =>
+    Query("sort_range_balance", (s, dir) =>
       graft.functions.Diagnostics.rangeBalance(
         t(s, dir, "lineitem"), "l_orderkey", nRanges = 32,
-        sampleDen = 100)),
+        sampleDen = 100),
+      // same sample, same ceil target ranks
+      oracle = graft.functions.Diagnostics.rangeBalanceSql(
+        "SELECT CAST(l_orderkey AS BIGINT) AS v FROM lineitem",
+        nRanges = 32, sampleDen = 100)),
     // k-core peeling of the co-visitation graph: 4 delete-below-degree
     // rounds at k=3 — the tendril-stripping pass before community
     // analysis; equal consecutive rows show the fixed point
-    "events_kcore" -> ((s, dir) => {
+    Query("events_kcore", (s, dir) => {
       val items = graft.functions.Graphs.capKeyDegree(
         Tables.events(s, dir)
           .select(col("user_id"),
@@ -1535,12 +2569,27 @@ object AnalyticsQueries {
         .distinct()
       graft.functions.Graphs.kCorePeel(edges, "src", "dst", k = 3,
         rounds = 4)
-    }),
+    },
+      // same capped edge build, rounds unrolled
+      oracle = {
+        val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
+          """SELECT DISTINCT user_id,
+            |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+            |FROM events
+            |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
+          "user_id", 512)
+        val edgesSql =
+          s"""SELECT DISTINCT x.item AS src, y.item AS dst
+            |  FROM ($itemsSql) x
+            |  JOIN ($itemsSql) y
+            |    ON x.user_id = y.user_id AND x.item < y.item""".stripMargin
+        graft.functions.Graphs.kCorePeelSql(edgesSql, k = 3, rounds = 4)
+      }),
     // personalized (topic-sensitive) PageRank: teleport restricted to
     // the items seen in PURCHASE events — "what is related to what
     // people buy", the recommender variant of the power iteration.
     // Same capped edge build and fixed-point kernel as events_pagerank
-    "events_pagerank_personalized" -> ((s, dir) => {
+    Query("events_pagerank_personalized", (s, dir) => {
       val items = graft.functions.Graphs.capKeyDegree(
         Tables.events(s, dir)
           .select(col("user_id"),
@@ -1563,8 +2612,33 @@ object AnalyticsQueries {
         .personalizedPageRank(edges, "src", "dst", seeds, iters = 3)
         .orderBy(col("rank").desc, col("node"))
         .limit(20)
-    }),
-    "events_pagerank" -> ((s, dir) => {
+    },
+      // same capped edges, same seed-restricted teleport, same unrolled
+      // fixed-point rounds
+      oracle = {
+        val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
+          """SELECT DISTINCT user_id,
+            |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+            |FROM events
+            |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
+          "user_id", 512)
+        val edgesSql =
+          s"""SELECT DISTINCT x.item AS src, y.item AS dst
+            |  FROM ($itemsSql) x
+            |  JOIN ($itemsSql) y
+            |    ON x.user_id = y.user_id AND x.item <> y.item""".stripMargin
+        val seedsSql =
+          """SELECT DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)
+            |    AS node
+            |  FROM events
+            |  WHERE event_type = 'purchase'
+            |    AND json_extract_string(props, '$.k') IS NOT NULL""".stripMargin
+        s"""SELECT node, rank FROM (
+           |${graft.functions.Graphs.personalizedPageRankSql(
+               edgesSql, seedsSql, iters = 3)}
+           |) pr ORDER BY rank DESC, node LIMIT 20""".stripMargin
+      }),
+    Query("events_pagerank", (s, dir) => {
       // same quadratic-fan-out hygiene as events_covisitation: users
       // above the degree cap contribute no edges (512 = no-op here)
       val items = graft.functions.Graphs.capKeyDegree(
@@ -1582,13 +2656,31 @@ object AnalyticsQueries {
       graft.functions.Graphs.pageRank(edges, "src", "dst", iters = 3)
         .orderBy(col("rank").desc, col("node"))
         .limit(20)
-    }),
+    },
+      // identical unrolled iterations, incl. the 512 per-user degree cap on
+      // the edge build
+      oracle = {
+        val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
+          """SELECT DISTINCT user_id,
+            |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+            |FROM events
+            |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
+          "user_id", 512)
+        val edgesSql =
+          s"""SELECT DISTINCT x.item AS src, y.item AS dst
+            |  FROM ($itemsSql) x
+            |  JOIN ($itemsSql) y
+            |    ON x.user_id = y.user_id AND x.item <> y.item""".stripMargin
+        s"""SELECT node, rank FROM (
+           |${graft.functions.Graphs.pageRankSql(edgesSql, iters = 3)}
+           |) pr ORDER BY rank DESC, node LIMIT 20""".stripMargin
+      }),
     // referential-integrity audit across the star schema's FK edges:
     // child rows / null FKs / orphans / orphan rate per edge — the
     // cross-table validation gate (all-zero orphans on consistent
     // snapshots; any non-zero flags a partial load). Anti-joins on the
     // key; AQE broadcasts the small parents
-    "dq_fk_orphans" -> ((s, dir) => {
+    Query("dq_fk_orphans", (s, dir) => {
       val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
       val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
       graft.functions.TableStats.fkOrphans(Seq(
@@ -1601,7 +2693,37 @@ object AnalyticsQueries {
         ("customer.c_nationkey->nation", c, "c_nationkey", n, "n_nationkey"),
         ("nation.n_regionkey->region", n, "n_regionkey",
           t(s, dir, "region"), "r_regionkey")))
-    }),
+    },
+      // NOT-EXISTS orphan counts per edge
+      oracle = {
+        def edge(label: String, child: String, ck: String,
+            parent: String, pk: String): String =
+          s"""SELECT '$label' AS fk_edge,
+             |  CAST(COUNT(*) AS BIGINT) AS n_child,
+             |  CAST(SUM(CASE WHEN $ck IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+             |    AS n_null_fk,
+             |  CAST(SUM(CASE WHEN $ck IS NOT NULL AND NOT EXISTS
+             |    (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck)
+             |    THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
+             |  CAST(SUM(CASE WHEN $ck IS NOT NULL AND NOT EXISTS
+             |    (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck)
+             |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+             |    AS orphan_rate
+             |FROM $child c""".stripMargin
+        Seq(
+          edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
+            "orders", "o_orderkey"),
+          edge("lineitem.l_partkey->part", "lineitem", "l_partkey",
+            "part", "p_partkey"),
+          edge("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
+            "supplier", "s_suppkey"),
+          edge("orders.o_custkey->customer", "orders", "o_custkey",
+            "customer", "c_custkey"),
+          edge("customer.c_nationkey->nation", "customer", "c_nationkey",
+            "nation", "n_nationkey"),
+          edge("nation.n_regionkey->region", "nation", "n_regionkey",
+            "region", "r_regionkey")).mkString("\nUNION ALL\n")
+      }),
     // integer-exact CUSUM changepoint score over daily event counts:
     // per type, deviations are scaled mean-zero integers
     // (y = D·n_day − T, so no float mean), the CUSUM recursion
@@ -1609,7 +2731,7 @@ object AnalyticsQueries {
     // P_k − min(0, running-min P) over prefix sums — two windows on the
     // tiny (type, day) frame, zero float ops. A sustained rate shift
     // grows S linearly; the peak day locates the changepoint
-    "events_cusum" -> ((s, dir) => {
+    Query("events_cusum", (s, dir) => {
       val byDay = Tables.events(s, dir)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -1623,7 +2745,26 @@ object AnalyticsQueries {
         .withColumn("cusum",
           col("__P") - least(lit(0L), min(col("__P")).over(ord)))
         .select(col("event_type"), col("day"), col("n"), col("cusum"))
-    }),
+    },
+      // same scaled-integer prefix-sum closed form
+      oracle = """WITH d AS (
+        |  SELECT event_type, date_trunc('day', ts) AS day,
+        |         CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |y AS (
+        |  SELECT event_type, day, n,
+        |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) * n -
+        |      CAST(SUM(n) OVER (PARTITION BY event_type) AS BIGINT) AS yy
+        |  FROM d),
+        |p AS (
+        |  SELECT event_type, day, n,
+        |    CAST(SUM(yy) OVER (PARTITION BY event_type ORDER BY day
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pp
+        |  FROM y)
+        |SELECT event_type, day, n,
+        |  CAST(pp - least(0, MIN(pp) OVER (PARTITION BY event_type
+        |    ORDER BY day ROWS UNBOUNDED PRECEDING)) AS BIGINT) AS cusum
+        |FROM p""".stripMargin),
     // exact triangle census of the co-visitation graph: triangle count
     // + global clustering coefficient via the degree-ordered
     // orientation (out-degree bounded by O(√m), so the wedge self-join
@@ -1632,7 +2773,7 @@ object AnalyticsQueries {
     // Edge build drops users above maxUserDegree (Graphs.capKeyDegree)
     // before the pair self-join — the quadratic-fan-out hygiene; see
     // events_covisitation. 512 is a no-op on this corpus
-    "events_triangles" -> ((s, dir) => {
+    Query("events_triangles", (s, dir) => {
       val items = graft.functions.Graphs.capKeyDegree(
         Tables.events(s, dir)
           .select(col("user_id"),
@@ -1646,26 +2787,51 @@ object AnalyticsQueries {
         .select(col("x.item").as("src"), col("y.item").as("dst"))
         .distinct()
       graft.functions.Graphs.triangleStats(edges, "src", "dst")
-    }),
+    },
+      // same orientation + wedge join, incl. the 512 per-user degree cap on
+      // the edge build
+      oracle = {
+        val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
+          """SELECT DISTINCT user_id,
+            |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
+            |FROM events
+            |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
+          "user_id", 512)
+        val edgesSql =
+          s"""SELECT DISTINCT x.item AS src, y.item AS dst
+            |  FROM ($itemsSql) x
+            |  JOIN ($itemsSql) y
+            |    ON x.user_id = y.user_id AND x.item < y.item""".stripMargin
+        graft.functions.Graphs.triangleStatsSql(edgesSql)
+      }),
     // TPC-H Q6 forecast-revenue: the pure filter+aggregate whose value
     // is the SCAN — every predicate (date range, discount band,
     // quantity cap) pushes to the parquet reader, the plan is one
     // WholeStageCodegen over the pruned 4-column read. At 100 TB this
     // is the shape where pushdown is the whole game
-    "q6_band_revenue" -> ((s, dir) =>
+    Query("q6_band_revenue", (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-01-01").cast("timestamp") &&
           col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
           col("l_quantity") < 24)
         .agg(sum((dec("l_extendedprice") * dec("l_discount"))
-            .cast("decimal(28,6)")).cast("double").as("revenue"))),
+            .cast("decimal(28,6)")).cast("double").as("revenue")),
+      // identical decimal product/sum
+      oracle = """SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |    CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(28,6))) AS DOUBLE)
+        |    AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+        |  AND l_shipdate < TIMESTAMP '1996-01-01'
+        |  AND l_discount >= 0.05 AND l_discount <= 0.07
+        |  AND l_quantity < 24""".stripMargin),
     // TPC-H Q8 market share: the 7-way join with CONDITIONAL aggregation
     // — one nation's share of regional volume per year, computed as two
     // exact decimal sums in a single pass (no second scan, no self-join)
     // then one double division. Dims broadcast; the three fact joins
     // shuffle on their natural keys
-    "q8_market_share" -> ((s, dir) => {
+    Query("q8_market_share", (s, dir) => {
       val p = t(s, dir, "part").filter(col("p_type") === "PROMO")
         .select("p_partkey")
       val o = t(s, dir, "orders").filter(
@@ -1694,1338 +2860,9 @@ object AnalyticsQueries {
         .select(col("o_year"),
           (col("__nat").cast("double") / col("__tot").cast("double"))
             .as("mkt_share"))
-    }),
-    // TPC-H Q10 returned-item ranking: fact join + grouped revenue +
-    // top-20 (TakeOrderedAndProject — the heap replaces a global sort).
-    // Grouping carries the customer attributes THROUGH the aggregate
-    // (they're functionally dependent on c_custkey) instead of
-    // re-joining customer after the agg
-    "q10_returned_items" -> ((s, dir) => {
-      val o = t(s, dir, "orders").filter(
-        col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
-      val l = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val n = t(s, dir, "nation")
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("n_name"))
-        .agg(sum(revenue).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-    // TPC-H Q14 promo revenue: conditional share in one aggregation
-    // pass — numerator and denominator as exact decimal sums over the
-    // same joined frame, division once as doubles
-    "q14_promo_revenue" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1995-09-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1995-10-01").cast("timestamp"))
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", revenue)
-            .otherwise(lit(0).cast("decimal(28,6)"))).as("__promo"),
-          sum(revenue).as("__tot"))
-        .select((lit(100.0) * col("__promo").cast("double") /
-          col("__tot").cast("double")).as("promo_revenue"))),
-    // TPC-H Q15 top supplier: the scalar-subquery-over-aggregate shape
-    // — per-supplier quarterly revenue, then suppliers matching the
-    // global max. The max is a 1-row broadcast joined on EXACT decimal
-    // equality (a double round-trip could drop the winner); supplier
-    // attaches after the argmax filter, so only winner rows join
-    "q15_top_supplier" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(revenue).as("__rev"))
-      val mx = rev.agg(max(col("__rev")).as("__mx"))
-      rev.join(broadcast(mx), col("__rev") === col("__mx"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          col("__rev").cast("double").as("total_revenue"))
-        .orderBy(col("s_suppkey"))
-    }),
-    // TPC-H Q19 disjunctive-predicate join: three (brand, size band,
-    // quantity band) arms OR'd inside the join condition. The common
-    // partkey equality extracts as the join key; per-arm part
-    // predicates (brand, size) push into the part scan via
-    // CNF-conversion, quantity bounds into lineitem — the
-    // predicate-normalization test q5/q8 don't exercise
-    "q19_disjunctive" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
-      val arm = (brand: String, szLo: Int, szHi: Int, qLo: Int, qHi: Int) =>
-        col("p_brand") === brand &&
-          col("p_size").between(szLo, szHi) &&
-          col("l_quantity") >= qLo && col("l_quantity") <= qHi
-      l.join(p, col("l_partkey") === col("p_partkey") &&
-          (arm("Brand#12", 1, 5, 1, 11) ||
-            arm("Brand#13", 1, 10, 10, 20) ||
-            arm("Brand#14", 1, 15, 20, 30)))
-        .agg(sum(revenue).cast("double").as("revenue"))
-    }),
-  )
-
-  def oracles: Map[String, String] = Map(
-    // mirrors table_encoding_advisor: same integer CASE-chain bit
-    // widths, same byte rounding
-    "table_encoding_advisor" -> {
-      import graft.functions.TableStats.encodingAdvisorSql
-      s"""${encodingAdvisorSql("lineitem", "lineitem",
-            Seq("l_returnflag", "l_linestatus"))}
-         |UNION ALL
-         |${encodingAdvisorSql("orders", "orders",
-            Seq("o_orderstatus", "o_orderpriority"))}""".stripMargin
     },
-    // mirrors events_negative_samples: same bucketed index, same hash
-    // draw, same collision flag
-    "events_negative_samples" -> graft.functions.Sampling.negativeSamplesSql(
-      """SELECT user_id AS k_,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-        |FROM events
-        |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
-      k = 4, keyName = "user_id"),
-    // mirrors events_forecast_baseline: same lag frame, same eval-day
-    // restriction, same exact error sums
-    "events_forecast_baseline" ->
-      """WITH byday AS (
-        |  SELECT event_type, DATE_TRUNC('day', ts) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |lagged AS (
-        |  SELECT event_type, c,
-        |    LAG(c, 7) OVER (PARTITION BY event_type ORDER BY day) AS f,
-        |    LAG(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS n
-        |  FROM byday)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days_eval,
-        |  CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS mae_seasonal,
-        |  CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS mae_naive,
-        |  CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
-        |    / CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE) AS mase,
-        |  (CAST(CAST(SUM(ABS(c - f)) AS BIGINT) AS DOUBLE)
-        |    / CAST(CAST(SUM(ABS(c - n)) AS BIGINT) AS DOUBLE)) < 1.0
-        |    AS beats_naive
-        |FROM lagged WHERE f IS NOT NULL
-        |GROUP BY event_type""".stripMargin,
-    // mirrors events_rolling_mau: same 7-anchor fan-out, same semi-join
-    // against observed days
-    "events_rolling_mau" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT DATE_TRUNC('day', ts) AS day, user_id
-        |  FROM events),
-        |days AS (SELECT DISTINCT day AS d FROM ud),
-        |fan AS (
-        |  SELECT DISTINCT g.d, ud.user_id
-        |  FROM ud, LATERAL (
-        |    SELECT UNNEST(generate_series(ud.day,
-        |      ud.day + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS d) g
-        |  WHERE g.d IN (SELECT d FROM days))
-        |SELECT d, CAST(COUNT(*) AS BIGINT) AS wau_users
-        |FROM fan GROUP BY d""".stripMargin,
-    // mirrors ndv_hll: the identical pinned HLL dataflow
-    "ndv_hll" -> {
-      val est = graft.functions.Cardinality.hllNdvSql(
-        "SELECT l_returnflag, l_orderkey FROM lineitem",
-        Seq("l_returnflag"), "l_orderkey", p = 8)
-      s"""WITH est AS ($est),
-         |ex AS (SELECT l_returnflag,
-         |         CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_ndv
-         |       FROM lineitem GROUP BY 1)
-         |SELECT est.l_returnflag, exact_ndv, hll_ndv,
-         |  (hll_ndv - CAST(exact_ndv AS DOUBLE)) / CAST(exact_ndv AS DOUBLE)
-         |    AS rel_err
-         |FROM est JOIN ex ON est.l_returnflag = ex.l_returnflag""".stripMargin
-    },
-    // mirrors ndv_hll_union: same register max-merge, same
-    // inclusion-exclusion term order
-    "ndv_hll_union" -> {
-      import graft.functions.Cardinality
-      def regs(f: String) = Cardinality.hllRegistersSql(
-        s"SELECT l_orderkey FROM lineitem WHERE l_returnflag = '$f'",
-        Seq.empty, "l_orderkey", p = 8)
-      val eR = Cardinality.hllEstimateSql("SELECT b, mj FROM ra", Seq.empty)
-      val eA = Cardinality.hllEstimateSql("SELECT b, mj FROM rb", Seq.empty)
-      val eU = Cardinality.hllEstimateSql("SELECT b, mj FROM ru", Seq.empty)
-      s"""WITH ra AS (${regs("R")}),
-         |rb AS (${regs("A")}),
-         |ru AS (SELECT b, MAX(mj) AS mj FROM
-         |        (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY b),
-         |er AS (SELECT hll_ndv AS est_r FROM ($eR)),
-         |ea AS (SELECT hll_ndv AS est_a FROM ($eA)),
-         |eu AS (SELECT hll_ndv AS est_union FROM ($eU)),
-         |ex AS (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT)
-         |         AS exact_union
-         |       FROM lineitem WHERE l_returnflag IN ('R', 'A'))
-         |SELECT est_r, est_a, est_union,
-         |  est_r + est_a - est_union AS est_inter, exact_union
-         |FROM er CROSS JOIN ea CROSS JOIN eu CROSS JOIN ex""".stripMargin
-    },
-    // mirrors join_card_estimate: same 1024-bucket histograms, same
-    // per-bucket integer DIV
-    "join_card_estimate" ->
-      """WITH ho AS (
-        |  SELECT o_orderkey % 1024 AS b, CAST(COUNT(*) AS BIGINT) AS na,
-        |    CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS da
-        |  FROM orders GROUP BY 1),
-        |hl AS (
-        |  SELECT l_orderkey % 1024 AS b, CAST(COUNT(*) AS BIGINT) AS nb,
-        |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS db
-        |  FROM lineitem GROUP BY 1),
-        |e AS (
-        |  SELECT CAST(SUM(na * nb // GREATEST(da, db)) AS BIGINT)
-        |    AS est_rows
-        |  FROM ho JOIN hl USING (b)),
-        |a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS actual_rows
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)
-        |SELECT est_rows, actual_rows,
-        |  CAST(est_rows AS DOUBLE) / CAST(actual_rows AS DOUBLE)
-        |    AS est_ratio
-        |FROM e CROSS JOIN a""".stripMargin,
-    "q_approx_distinct" ->
-      s"""SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-         |  ABS(approx_count_distinct(l_partkey) - COUNT(DISTINCT l_partkey))
-         |    <= COUNT(DISTINCT l_partkey) * 0.05 AS approx_within_5pct
-         |FROM lineitem""".stripMargin,
-    "q1_agg" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         |  CAST(SUM($revenueSql) AS DOUBLE) AS sum_disc_price,
-         |  COUNT(*) AS count_order
-         |FROM lineitem
-         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_topk" ->
-      s"""SELECT l_orderkey, o_orderdate,
-         |       CAST(SUM($revenueSql) AS DOUBLE) AS revenue
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |WHERE c_mktsegment = 'BUILDING'
-         |  AND o_orderdate < TIMESTAMP '1995-03-15'
-         |  AND l_shipdate > TIMESTAMP '1995-03-15'
-         |GROUP BY l_orderkey, o_orderdate
-         |ORDER BY revenue DESC, l_orderkey
-         |LIMIT 10""".stripMargin,
-    "q5_join" ->
-      s"""SELECT n_name, CAST(SUM($revenueSql) AS DOUBLE) AS revenue
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN customer ON o_custkey = c_custkey AND s_nationkey = c_nationkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA'
-         |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-         |  AND o_orderdate < TIMESTAMP '1997-01-01'
-         |GROUP BY n_name""".stripMargin,
-    // mirrors q17_small_quantity: identical decimal window arithmetic
-    "q17_small_quantity" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         / 7.0 AS avg_yearly
-        |FROM (
-        |  SELECT l_extendedprice, l_quantity,
-        |    CAST(0.2 AS DOUBLE) *
-        |      (CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-        |              OVER (PARTITION BY l_partkey) AS DOUBLE)
-        |       / CAST(COUNT(*) OVER (PARTITION BY l_partkey) AS DOUBLE)) AS thr
-        |  FROM lineitem JOIN part
-        |    ON p_partkey = l_partkey AND p_brand = 'Brand#12')
-        |WHERE l_quantity < thr""".stripMargin,
-    // mirrors q13_order_distribution: join-side predicate + double agg
-    "q13_order_distribution" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-        |FROM (
-        |  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority NOT LIKE '%URGENT%'
-        |  GROUP BY c_custkey) cc
-        |GROUP BY c_count""".stripMargin,
-    // mirrors q4_priority_semi: EXISTS as a semi-join
-    "q4_priority_semi" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1995-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority""".stripMargin,
-    // mirrors q18_large_orders: grouped-HAVING key set as IN subquery
-    "q18_large_orders" ->
-      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 300)
-        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    // mirrors q22_idle_customers: exact decimal-sum/count average,
-    // NOT EXISTS anti-join
-    "q22_idle_customers" ->
-      """WITH a AS (
-        |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-        |           / COUNT(*) AS avg_bal
-        |  FROM customer WHERE c_acctbal > 0)
-        |SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS numcust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer CROSS JOIN a
-        |WHERE c_acctbal > avg_bal
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_mktsegment""".stripMargin,
-    // q2 oracle kept in the CORRELATED form (the Spark side decorrelates
-    // to a window min — an independent formulation of the same spec)
-    "q2_min_cost_supplier" ->
-      """WITH ps AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS supplycost_dec
-        |  FROM lineitem GROUP BY 1, 2
-        |), eu AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'EUROPE'
-        |)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-        |  CAST(supplycost_dec AS DOUBLE) AS supplycost
-        |FROM ps JOIN part ON l_partkey = p_partkey
-        |JOIN eu ON l_suppkey = s_suppkey
-        |WHERE p_size = 15 AND p_type = 'STANDARD'
-        |  AND supplycost_dec = (
-        |    SELECT MIN(ps2.supplycost_dec) FROM ps ps2
-        |    JOIN eu eu2 ON ps2.l_suppkey = eu2.s_suppkey
-        |    WHERE ps2.l_partkey = ps.l_partkey)
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 20""".stripMargin,
-    "q9_product_profit" ->
-      s"""SELECT n_name, CAST(YEAR(o_orderdate) AS INT) AS o_year,
-        |  CAST(SUM(CAST($revenueSql -
-        |    CAST(CAST(p_retailprice AS DECIMAL(12,2)) *
-        |      CAST(l_quantity AS DECIMAL(12,2)) *
-        |      CAST(0.5 AS DECIMAL(3,2)) AS DECIMAL(28,6))
-        |    AS DECIMAL(28,6))) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2""".stripMargin,
-    "q11_important_stock" ->
-      """WITH base AS (
-        |  SELECT l_partkey,
-        |    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,4)))
-        |      AS value_dec
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_regionkey = 3
-        |  GROUP BY 1)
-        |SELECT l_partkey, CAST(value_dec AS DOUBLE) AS part_value
-        |FROM base
-        |WHERE CAST(value_dec AS DECIMAL(26,4)) *
-        |    (SELECT CAST(COUNT(*) AS DECIMAL(8,0)) FROM base) >
-        |  (SELECT CAST(SUM(value_dec) AS DECIMAL(28,4)) FROM base) *
-        |    CAST(1.5 AS DECIMAL(2,1))
-        |ORDER BY part_value DESC, l_partkey
-        |LIMIT 50""".stripMargin,
-    "q12_shipmode" ->
-      """SELECT
-        |  CASE WHEN DATE_DIFF('day', o_orderdate, l_shipdate) > 60
-        |       THEN 'SLOW' ELSE 'FAST' END AS ship_band,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |       THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q20 oracle kept in the nested-IN + HAVING-correlated form
-    "q20_potential_promotion" ->
-      """SELECT s_name, s_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_regionkey = 3 AND s_suppkey IN (
-        |  WITH shipped AS (
-        |    SELECT l_suppkey, l_partkey,
-        |      SUM(CAST(l_quantity AS DECIMAL(12,2))) AS qty
-        |    FROM lineitem
-        |    WHERE l_partkey IN
-        |      (SELECT p_partkey FROM part WHERE p_name LIKE '%bolt%')
-        |    GROUP BY 1, 2)
-        |  SELECT DISTINCT l_suppkey FROM (
-        |    SELECT l_suppkey, qty,
-        |      CAST(SUM(qty) OVER (PARTITION BY l_partkey)
-        |        AS DECIMAL(28,2)) AS part_total
-        |    FROM shipped)
-        |  WHERE qty > part_total * CAST(0.1 AS DECIMAL(2,1)))
-        |ORDER BY s_name""".stripMargin,
-    // mirrors q16_supplier_variety
-    "q16_supplier_variety" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#45'
-        |  AND l_suppkey NOT IN (
-        |    SELECT s_suppkey FROM supplier WHERE s_suppkey % 7 = 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        |LIMIT 20""".stripMargin,
-    // q21_blame_supplier oracle kept in the CORRELATED form (the Spark
-    // side decorrelates to window counts — an independent formulation
-    // of the same semantics)
-    "q21_blame_supplier" ->
-      """WITH per AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS has_r
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        |FROM per p JOIN supplier ON s_suppkey = l_suppkey
-        |WHERE has_r = 1
-        |  AND EXISTS (SELECT 1 FROM per p2
-        |    WHERE p2.l_orderkey = p.l_orderkey
-        |      AND p2.l_suppkey <> p.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM per p3
-        |    WHERE p3.l_orderkey = p.l_orderkey
-        |      AND p3.l_suppkey <> p.l_suppkey AND p3.has_r = 1)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin,
-    // mirrors table_drift: per-column ANALYZE both sides of the
-    // perturbed pair
-    "table_drift" -> {
-      val cols = Seq("l_orderkey", "l_quantity", "l_returnflag",
-        "l_linestatus")
-      def statsSql(table: String) = cols.map(c =>
-        s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(MIN($c) AS VARCHAR) AS min_val,
-           |  CAST(MAX($c) AS VARCHAR) AS max_val
-           |FROM $table""".stripMargin).mkString("\nUNION ALL\n")
-      s"""WITH src AS (${statsSql("lineitem")}),
-         |tgt AS (${statsSql(s"(${graft.engine.Perturb.lineitemTargetSql})")})
-         |SELECT src.col_name, src.n_rows, tgt.n_rows AS n_rows_tgt,
-         |  src.n_nulls, tgt.n_nulls AS n_nulls_tgt,
-         |  src.n_distinct, tgt.n_distinct AS n_distinct_tgt,
-         |  src.n_distinct <> tgt.n_distinct AS ndv_drift,
-         |  (src.min_val <> tgt.min_val OR src.max_val <> tgt.max_val)
-         |    AS range_drift
-         |FROM src JOIN tgt ON src.col_name = tgt.col_name""".stripMargin
-    },
-    // mirrors events_markov: lead() pairs, row-normalized counts
-    "events_markov" ->
-      """WITH e AS (
-        |  SELECT event_type AS from_type,
-        |    LEAD(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (
-        |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM e WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  CAST(n AS DOUBLE) /
-        |    CAST(SUM(n) OVER (PARTITION BY from_type) AS DOUBLE) AS prob
-        |FROM c""".stripMargin,
-    // mirrors events_winsorize: histogram cumsum discrete quantile,
-    // integer rank arithmetic
-    "events_winsorize" ->
-      """WITH hist AS (
-        |  SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT event_type, value, c,
-        |    SUM(c) OVER (PARTITION BY event_type ORDER BY value
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm,
-        |    SUM(c) OVER (PARTITION BY event_type) AS n
-        |  FROM hist),
-        |b AS (
-        |  SELECT event_type,
-        |    MIN(CASE WHEN cm >= (n * 5 + 99) // 100 THEN value END) AS p05,
-        |    MIN(CASE WHEN cm >= (n * 95 + 99) // 100 THEN value END) AS p95
-        |  FROM cum GROUP BY event_type)
-        |SELECT e.event_type, p05, p95,
-        |  CAST(SUM(CASE WHEN value < p05 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-        |  CAST(SUM(CASE WHEN value > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-        |  CAST(SUM(CAST(LEAST(GREATEST(value, p05), p95) AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS sum_winsorized
-        |FROM events e JOIN b ON e.event_type = b.event_type
-        |GROUP BY e.event_type, p05, p95""".stripMargin,
-    // mirrors join_incremental: the four merged delta states must
-    // equal this full join recompute — that equality IS the bilinear
-    // delta-rule claim
-    "join_incremental" ->
-      s"""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-         |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue
-         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |GROUP BY o_orderpriority""".stripMargin,
-    // mirrors agg_incremental: the merged state must equal this full
-    // recompute — that equality IS the incremental-maintenance claim
-    "agg_incremental" ->
-      """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q7_volume_shipping" ->
-      s"""SELECT supp_nation, cust_nation, CAST(l_year AS INT) AS l_year,
-         |  CAST(SUM(volume) AS DOUBLE) AS revenue
-         |FROM (
-         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |    year(l_shipdate) AS l_year, $revenueSql AS volume
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-         |    AND l_shipdate < TIMESTAMP '1997-01-01'
-         |    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-         |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-         |)
-         |GROUP BY supp_nation, cust_nation, l_year""".stripMargin,
-    // mirrors shard_rebalance: same integer targets, same cumulative-
-    // interval pairing
-    "shard_rebalance" ->
-      """WITH sz AS (
-        |  SELECT user_id % 64 AS shard, CAST(COUNT(*) AS BIGINT) AS sz
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT CAST(SUM(sz) AS BIGINT) AS tot,
-        |  CAST(COUNT(*) AS BIGINT) AS n FROM sz),
-        |p AS (
-        |  SELECT shard, sz, tot, n,
-        |    CAST(row_number() OVER (ORDER BY shard) AS BIGINT) AS rnk
-        |  FROM sz CROSS JOIN t),
-        |p2 AS (
-        |  SELECT shard, sz,
-        |    (tot // n) + CASE WHEN rnk <= tot % n THEN 1 ELSE 0 END AS target
-        |  FROM p),
-        |p3 AS (
-        |  SELECT shard, GREATEST(sz - target, 0) AS excess,
-        |    GREATEST(target - sz, 0) AS deficit
-        |  FROM p2),
-        |d AS (
-        |  SELECT shard AS from_shard,
-        |    SUM(excess) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) - excess AS d_lo,
-        |    SUM(excess) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS d_hi
-        |  FROM p3 WHERE excess > 0),
-        |r AS (
-        |  SELECT shard AS to_shard,
-        |    SUM(deficit) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) - deficit AS r_lo,
-        |    SUM(deficit) OVER (ORDER BY shard ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS r_hi
-        |  FROM p3 WHERE deficit > 0)
-        |SELECT from_shard, to_shard,
-        |  CAST(LEAST(d_hi, r_hi) - GREATEST(d_lo, r_lo) AS BIGINT) AS n_moved
-        |FROM d JOIN r ON d_lo < r_hi AND r_lo < d_hi
-        |WHERE LEAST(d_hi, r_hi) - GREATEST(d_lo, r_lo) > 0""".stripMargin,
-    "skew_profile" ->
-      """WITH c AS (
-        |  SELECT o_custkey AS key, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM orders GROUP BY 1),
-        |t AS (
-        |  SELECT CAST(SUM(cnt) AS BIGINT) AS total,
-        |    CAST(COUNT(*) AS BIGINT) AS n_keys FROM c)
-        |SELECT key, cnt,
-        |  CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-        |  CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
-        |    / CAST(total AS DOUBLE) AS skew_ratio,
-        |  CAST((cnt * n_keys + total - 1) // total AS BIGINT) AS suggested_salt
-        |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, key LIMIT 10""".stripMargin,
-    "events_zonemap" ->
-      """WITH z AS (
-        |  SELECT event_id // 256 AS bucket, MIN(ts) AS min_v, MAX(ts) AS max_v,
-        |    CAST(COUNT(*) AS BIGINT) AS n_rows
-        |  FROM events GROUP BY 1)
-        |SELECT bucket, n_rows,
-        |  NOT (max_v < TIMESTAMP '2024-01-10 00:00:00'
-        |    OR min_v > TIMESTAMP '2024-01-17 00:00:00') AS scan
-        |FROM z""".stripMargin,
-    "table_stats" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_returnflag", "l_linestatus")
-      cols.map(c =>
-        s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(MIN($c) AS VARCHAR) AS min_val,
-           |  CAST(MAX($c) AS VARCHAR) AS max_val
-           |FROM lineitem""".stripMargin).mkString("\nUNION ALL\n")
-    },
-    "window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY l_suppkey
-        |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-        |FROM lineitem WHERE l_suppkey % 100 = 0""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin,
-    "interval_join" ->
-      """WITH a AS (
-        |  SELECT user_id, event_id AS a_id, ts AS a_start,
-        |    ts + INTERVAL 2 HOUR AS a_end
-        |  FROM events WHERE event_type = 'signup'),
-        |b AS (
-        |  SELECT user_id, event_id AS b_id, ts AS b_start,
-        |    ts + INTERVAL 1 HOUR AS b_end
-        |  FROM events WHERE event_type = 'error')
-        |SELECT a.user_id, a_id, b_id,
-        |  least(epoch_us(a_end), epoch_us(b_end)) -
-        |    greatest(epoch_us(a_start), epoch_us(b_start)) AS overlap_us
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a_start <= b_end AND b_start <= a_end""".stripMargin,
-    "events_gaps" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) - lag(epoch_us(ts))
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events)
-        |SELECT user_id, COUNT(*) AS n_events,
-        |  MIN(gap_us) AS min_gap_us, MAX(gap_us) AS max_gap_us,
-        |  CAST(SUM(gap_us) AS BIGINT) AS sum_gap_us
-        |FROM g GROUP BY user_id""".stripMargin,
-    "events_anomaly" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS hour, event_type,
-        |    COUNT(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    CAST(SUM(c) AS BIGINT) AS s,
-        |    CAST(SUM(c * c) AS BIGINT) AS ss
-        |  FROM hourly GROUP BY event_type)
-        |SELECT h.event_type, h.hour, h.c AS n_events,
-        |  (st.n * h.c - st.s) * (st.n * h.c - st.s) AS dev2,
-        |  st.n * st.ss - st.s * st.s AS nvar
-        |FROM hourly h JOIN stats st ON h.event_type = st.event_type
-        |WHERE (st.n * h.c - st.s) * (st.n * h.c - st.s) > 4 * (st.n * st.ss - st.s * st.s)""".stripMargin,
-    "events_zorder" -> {
-      import graft.sources.Bucketing
-      s"""WITH z AS (
-         |  SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec,
-         |    ${Bucketing.zValueSql("user_id", "(epoch_us(ts) // 1000000)")} AS z
-         |  FROM events)
-         |SELECT z >> 27 AS zbucket, CAST(COUNT(*) AS BIGINT) AS n,
-         |  MIN(user_id) AS min_user, MAX(user_id) AS max_user,
-         |  MIN(sec) AS min_sec, MAX(sec) AS max_sec
-         |FROM z GROUP BY zbucket""".stripMargin
-    },
-    "events_histogram" ->
-      """SELECT event_type, CAST(FLOOR(value / 10.0) AS BIGINT) AS bin,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type, bin""".stripMargin,
-    "events_rolling" ->
-      """SELECT user_id, event_id,
-        |  CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q_approx_distinct_merged" ->
-      """SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_exact,
-        |  TRUE AS within_5pct
-        |FROM lineitem""".stripMargin,
-    // mirrors q_approx_quantiles' histogram-cumsum exact side (the
-    // events_winsorize rank convention, global since there is no group
-    // key) so ex50/ex90 are hash-gated cross-engine; TRUE asserts the
-    // sketch-vs-exact closeness — if percentile_approx drifts past 1%
-    // the flag flips and the hash gate trips
-    "q_approx_quantiles" ->
-      """WITH h AS (
-        |  SELECT l_extendedprice AS v, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
-        |w AS (
-        |  SELECT v,
-        |    SUM(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    SUM(c) OVER () AS n
-        |  FROM h)
-        |SELECT CAST(MAX(n) AS BIGINT) AS n_rows,
-        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS ex50,
-        |  MIN(CASE WHEN cum >= (n * 9 + 9) // 10 THEN v END) AS ex90,
-        |  TRUE AS p50_close, TRUE AS p90_close
-        |FROM w""".stripMargin,
-    "q_distinct" ->
-      """SELECT l_returnflag,
-        |  CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-        |  MIN(l_extendedprice) AS min_price,
-        |  MAX(l_extendedprice) AS max_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
-        |  CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_setops" ->
-      s"""SELECT l_orderkey FROM (
-         |  SELECT DISTINCT l_orderkey FROM lineitem
-         |  EXCEPT
-         |  SELECT DISTINCT l_orderkey FROM (${graft.engine.Perturb.lineitemTargetSql})
-         |)
-         |UNION ALL
-         |SELECT -l_orderkey FROM (
-         |  SELECT DISTINCT l_orderkey FROM (${graft.engine.Perturb.lineitemTargetSql})
-         |  EXCEPT
-         |  SELECT DISTINCT l_orderkey FROM lineitem
-         |)""".stripMargin,
-    "events_by_hour" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin,
-    // each event belongs to exactly width/slide = 3 ten-minute-aligned
-    // windows; win_start = its slide bucket minus i slides, i in 0..2 —
-    // the same epoch-origin alignment Spark's window() uses
-    "events_sliding" ->
-      """WITH w AS (
-        |  SELECT make_timestamp(((epoch_us(ts) // 600000000) - i) * 600000000)
-        |           AS win_start,
-        |         event_type, value
-        |  FROM events, unnest(range(0, 3)) AS u(i)
-        |)
-        |SELECT win_start, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY win_start, event_type""".stripMargin,
-    "q_salted_join" ->
-      """SELECT s_nationkey, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
-    // boundary rule mirrors Spark's session_window: only a gap STRICTLY
-    // greater than the duration (12 h = 43 200 000 000 us) starts a new
-    // session — an exactly-equal gap merges (pinned in SessionsSpec)
-    "events_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |)
-        |SELECT user_id, event_id,
-        |  CAST(SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |FROM g""".stripMargin,
-    // the salted variant must produce the SAME numbering — one oracle,
-    // two physical plans
-    "events_sessionize_salted" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |)
-        |SELECT user_id, event_id,
-        |  CAST(SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |FROM g""".stripMargin,
-    "events_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 43200000000
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), s AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(b) OVER (PARTITION BY user_id ORDER BY ts
-        |                 ROWS UNBOUNDED PRECEDING) AS seq
-        |  FROM g
-        |)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  MAX(ts) + INTERVAL 12 HOUR AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, seq""".stripMargin,
-    // DuckDB's native ASOF LEFT JOIN is the independent mirror of the
-    // union-window formulation
-    // mirrors events_top_paths: same first-8 cap, same pinned ordering
-    "events_top_paths" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id,
-        |    string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-        |  FROM r WHERE rn <= 8 GROUP BY user_id)
-        |SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users
-        |FROM p GROUP BY path
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-    // mirrors events_attribution: native DuckDB ASOF over the same
-    // tie-free deduped touch frame
-    "events_attribution" ->
-      """WITH p AS (SELECT user_id, ts, event_id FROM events
-        |           WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, ts, MAX(event_type) AS channel
-        |      FROM events WHERE event_type <> 'purchase'
-        |      GROUP BY user_id, ts),
-        |att AS (
-        |  SELECT COALESCE(t.channel, 'unattributed') AS channel
-        |  FROM p ASOF LEFT JOIN t
-        |    ON p.user_id = t.user_id AND p.ts >= t.ts),
-        |bc AS (SELECT channel, CAST(COUNT(*) AS BIGINT) AS n_conversions
-        |       FROM att GROUP BY channel),
-        |tot AS (SELECT CAST(SUM(n_conversions) AS BIGINT) AS t FROM bc)
-        |SELECT channel, n_conversions,
-        |  CAST(n_conversions AS DOUBLE) / CAST(tot.t AS DOUBLE) AS share
-        |FROM bc CROSS JOIN tot""".stripMargin,
-    "asof_join" ->
-      """WITH l AS (SELECT user_id, ts, event_id, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, ts, event_id, value FROM events
-        |      WHERE event_type = 'signup')
-        |SELECT l.user_id, l.ts, l.event_id, l.value,
-        |       r.event_id AS event_id_r, r.value AS value_r
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-    "asof_join_tolerance" ->
-      """WITH l AS (SELECT user_id, ts, event_id, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, ts, event_id, value FROM events
-        |      WHERE event_type = 'signup')
-        |SELECT l.user_id, l.ts, l.event_id, l.value,
-        |       CASE WHEN r.ts >= l.ts - INTERVAL 30 MINUTE
-        |            THEN r.event_id END AS event_id_r,
-        |       CASE WHEN r.ts >= l.ts - INTERVAL 30 MINUTE
-        |            THEN r.value END AS value_r
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-    "events_retention" ->
-      """WITH f AS (
-        |  SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort
-        |  FROM events GROUP BY user_id
-        |), a AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-        |)
-        |SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort,
-        |  CAST(date_diff('day', f.cohort, a.day) AS BIGINT) AS day_offset,
-        |  CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
-        |FROM a JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-    // each stage CTE joins on the previous stage's instant, so a stage
-    // only counts events strictly after the funnel reached it
-    "events_funnel" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |s0 AS (SELECT user_id, MIN(epoch_us(ts)) AS m0 FROM events
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s1 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m1
-        |       FROM events e JOIN s0 ON e.user_id = s0.user_id
-        |       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s0.m0
-        |       GROUP BY e.user_id),
-        |s2 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m2
-        |       FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s1.m1
-        |       GROUP BY e.user_id)
-        |SELECT u.user_id,
-        |  make_timestamp(s0.m0) AS t_view,
-        |  make_timestamp(s1.m1) AS t_click,
-        |  make_timestamp(s2.m2) AS t_purchase,
-        |  CAST(CASE WHEN s2.m2 IS NOT NULL THEN 3
-        |            WHEN s1.m1 IS NOT NULL THEN 2
-        |            WHEN s0.m0 IS NOT NULL THEN 1
-        |            ELSE 0 END AS BIGINT) AS stages_completed
-        |FROM u LEFT JOIN s0 USING (user_id)
-        |       LEFT JOIN s1 USING (user_id)
-        |       LEFT JOIN s2 USING (user_id)""".stripMargin,
-    "events_funnel_rates" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |s0 AS (SELECT user_id, MIN(epoch_us(ts)) AS m0 FROM events
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s1 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m1
-        |       FROM events e JOIN s0 ON e.user_id = s0.user_id
-        |       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s0.m0
-        |       GROUP BY e.user_id),
-        |s2 AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS m2
-        |       FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s1.m1
-        |       GROUP BY e.user_id),
-        |dep AS (
-        |  SELECT CAST(CASE WHEN s2.m2 IS NOT NULL THEN 3
-        |              WHEN s1.m1 IS NOT NULL THEN 2
-        |              WHEN s0.m0 IS NOT NULL THEN 1
-        |              ELSE 0 END AS BIGINT) AS depth
-        |  FROM u LEFT JOIN s0 USING (user_id)
-        |         LEFT JOIN s1 USING (user_id)
-        |         LEFT JOIN s2 USING (user_id)),
-        |d AS (SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_users
-        |      FROM dep GROUP BY depth)
-        |SELECT depth, n_users,
-        |  CAST(SUM(n_users) OVER (ORDER BY depth DESC
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_reached,
-        |  CAST(SUM(n_users) OVER (ORDER BY depth DESC
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |    / CAST(SUM(n_users) OVER () AS DOUBLE) AS reach_frac
-        |FROM d""".stripMargin,
-    // mirrors q_mode_median: same histogram, same tie-breaks
-    "q_mode_median" ->
-      """WITH hist AS (
-        |  SELECT l_returnflag, l_quantity, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |w AS (
-        |  SELECT l_returnflag, l_quantity, c,
-        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |      ORDER BY c DESC, l_quantity) AS rm,
-        |    SUM(c) OVER (PARTITION BY l_returnflag ORDER BY l_quantity
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    SUM(c) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM hist)
-        |SELECT l_returnflag,
-        |  MIN(CASE WHEN rm = 1 THEN l_quantity END) AS mode_qty,
-        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN l_quantity END) AS median_qty,
-        |  CAST(MAX(n) AS BIGINT) AS n
-        |FROM w GROUP BY l_returnflag""".stripMargin,
-    // mirrors privacy_k_anon
-    "privacy_k_anon" ->
-      """WITH g AS (
-        |  SELECT event_type, hour(ts) AS hh, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |  CAST(SUM(CASE WHEN c < 50 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS risky_groups,
-        |  CAST(SUM(CASE WHEN c < 50 THEN c ELSE 0 END) AS BIGINT)
-        |    AS rows_at_risk,
-        |  CAST(SUM(c) AS BIGINT) AS n_rows,
-        |  CAST(SUM(CASE WHEN c < 50 THEN c ELSE 0 END) AS DOUBLE)
-        |    / CAST(SUM(c) AS DOUBLE) AS risk_share
-        |FROM g GROUP BY event_type""".stripMargin,
-    // mirrors events_ntile
-    "events_ntile" ->
-      """SELECT event_id, event_type, value,
-        |  CAST(ntile(4) OVER (PARTITION BY event_type, CAST(ts AS DATE)
-        |    ORDER BY value, event_id) AS INT) AS quartile,
-        |  percent_rank() OVER (PARTITION BY event_type, CAST(ts AS DATE)
-        |    ORDER BY value, event_id) AS pct_rank
-        |FROM events""".stripMargin,
-    // q_bloom_join oracle: the PLAIN join — the bloom prefilter must be
-    // invisible in the result
-    "q_bloom_join" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderpriority""".stripMargin,
-    // mirrors events_ewma: identical dyadic weights, identical
-    // left-to-right term order
-    "events_ewma" -> {
-      val terms = "value * 0.5" +: (1 to 7).map { j =>
-        val wgt = 1.0 / (1L << (j + 1))
-        s"COALESCE(LAG(value, $j) OVER (PARTITION BY user_id ORDER BY ts, event_id), 0.0) * $wgt"
-      }
-      s"""SELECT user_id, event_id,
-         |  ${terms.mkString("(", "\n     + ", ")")} AS ewma
-         |FROM events""".stripMargin
-    },
-    // mirrors events_covisitation, incl. the 512 per-user degree cap
-    "events_covisitation" ->
-      s"""WITH items0 AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$$.k') IS NOT NULL),
-        |items AS (
-        |${graft.functions.Graphs.capKeyDegreeSql(
-             "SELECT * FROM items0", "user_id", 512)}),
-        |marg AS (
-        |  SELECT item, CAST(COUNT(*) AS BIGINT) AS n FROM items GROUP BY 1),
-        |u AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |      FROM items),
-        |pairs AS (
-        |  SELECT x.item AS item_a, y.item AS item_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_ab
-        |  FROM items x JOIN items y
-        |    ON x.user_id = y.user_id AND x.item < y.item
-        |  GROUP BY 1, 2)
-        |SELECT item_a, item_b, n_ab, a.n AS n_a, b.n AS n_b,
-        |  CAST(n_ab * n_users AS DOUBLE)
-        |    / CAST(a.n * b.n AS DOUBLE) AS lift
-        |FROM pairs
-        |JOIN marg a ON item_a = a.item
-        |JOIN marg b ON item_b = b.item
-        |CROSS JOIN u
-        |ORDER BY n_ab DESC, item_a, item_b
-        |LIMIT 20""".stripMargin,
-    "json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "range_join" ->
-      """WITH p AS (SELECT user_id, ts, event_id FROM events
-        |           WHERE event_type = 'purchase'),
-        |s AS (SELECT user_id, ts AS session_start,
-        |             ts + INTERVAL 1 HOUR AS session_end,
-        |             event_id AS session_id
-        |      FROM events WHERE event_type = 'signup')
-        |SELECT p.user_id, p.event_id, s.session_id
-        |FROM p JOIN s ON p.user_id = s.user_id
-        |  AND p.ts >= s.session_start AND p.ts <= s.session_end""".stripMargin,
-    // mirrors dq_key_uniqueness: same per-table key aggregates
-    "dq_key_uniqueness" -> {
-      def auditSql(label: String, table: String, keys: String) =
-        s"""SELECT '$label' AS tbl, CAST(SUM(c) AS BIGINT) AS n_rows,
-           |  CAST(COUNT(*) AS BIGINT) AS n_keys,
-           |  CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS dup_keys,
-           |  CAST(MAX(c) AS BIGINT) AS max_multiplicity
-           |FROM (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM $table
-           |      GROUP BY $keys)""".stripMargin
-      Seq(auditSql("orders", "orders", "o_orderkey"),
-        auditSql("lineitem", "lineitem", "l_orderkey, l_linenumber"),
-        auditSql("part", "part", "p_partkey"),
-        auditSql("customer", "customer", "c_custkey"),
-        auditSql("events", "events", "event_id"))
-        .mkString("\nUNION ALL\n")
-    },
-    // mirrors sort_range_balance: same sample, same ceil target ranks
-    "sort_range_balance" -> graft.functions.Diagnostics.rangeBalanceSql(
-      "SELECT CAST(l_orderkey AS BIGINT) AS v FROM lineitem",
-      nRanges = 32, sampleDen = 100),
-    // mirrors events_kcore: same capped edge build, rounds unrolled
-    "events_kcore" -> {
-      val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
-        """SELECT DISTINCT user_id,
-          |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-          |FROM events
-          |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
-        "user_id", 512)
-      val edgesSql =
-        s"""SELECT DISTINCT x.item AS src, y.item AS dst
-          |  FROM ($itemsSql) x
-          |  JOIN ($itemsSql) y
-          |    ON x.user_id = y.user_id AND x.item < y.item""".stripMargin
-      graft.functions.Graphs.kCorePeelSql(edgesSql, k = 3, rounds = 4)
-    },
-    // mirrors events_pagerank_personalized: same capped edges, same
-    // seed-restricted teleport, same unrolled fixed-point rounds
-    "events_pagerank_personalized" -> {
-      val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
-        """SELECT DISTINCT user_id,
-          |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-          |FROM events
-          |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
-        "user_id", 512)
-      val edgesSql =
-        s"""SELECT DISTINCT x.item AS src, y.item AS dst
-          |  FROM ($itemsSql) x
-          |  JOIN ($itemsSql) y
-          |    ON x.user_id = y.user_id AND x.item <> y.item""".stripMargin
-      val seedsSql =
-        """SELECT DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)
-          |    AS node
-          |  FROM events
-          |  WHERE event_type = 'purchase'
-          |    AND json_extract_string(props, '$.k') IS NOT NULL""".stripMargin
-      s"""SELECT node, rank FROM (
-         |${graft.functions.Graphs.personalizedPageRankSql(
-             edgesSql, seedsSql, iters = 3)}
-         |) pr ORDER BY rank DESC, node LIMIT 20""".stripMargin
-    },
-    // mirrors events_pagerank: identical unrolled iterations, incl.
-    // the 512 per-user degree cap on the edge build
-    "events_pagerank" -> {
-      val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
-        """SELECT DISTINCT user_id,
-          |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-          |FROM events
-          |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
-        "user_id", 512)
-      val edgesSql =
-        s"""SELECT DISTINCT x.item AS src, y.item AS dst
-          |  FROM ($itemsSql) x
-          |  JOIN ($itemsSql) y
-          |    ON x.user_id = y.user_id AND x.item <> y.item""".stripMargin
-      s"""SELECT node, rank FROM (
-         |${graft.functions.Graphs.pageRankSql(edgesSql, iters = 3)}
-         |) pr ORDER BY rank DESC, node LIMIT 20""".stripMargin
-    },
-    // mirrors q_mad: same two chained histograms + rank arithmetic
-    "q_mad" ->
-      """WITH hist AS (
-        |  SELECT l_returnflag, l_quantity, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |w AS (
-        |  SELECT l_returnflag, l_quantity, c,
-        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag ORDER BY l_quantity
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS n
-        |  FROM hist),
-        |med AS (
-        |  SELECT l_returnflag,
-        |    MIN(CASE WHEN cum >= (n + 1) // 2 THEN l_quantity END)
-        |      AS median_qty,
-        |    CAST(MAX(n) AS BIGINT) AS n
-        |  FROM w GROUP BY l_returnflag),
-        |dev AS (
-        |  SELECT hist.l_returnflag, median_qty, n,
-        |    ABS(l_quantity - median_qty) AS d,
-        |    CAST(SUM(c) AS BIGINT) AS c
-        |  FROM hist JOIN med USING (l_returnflag)
-        |  GROUP BY 1, 2, 3, 4),
-        |dw AS (
-        |  SELECT l_returnflag, median_qty, n, d, c,
-        |    CAST(SUM(c) OVER (PARTITION BY l_returnflag ORDER BY d
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |  FROM dev)
-        |SELECT l_returnflag, median_qty,
-        |  MIN(CASE WHEN cum >= (n + 1) // 2 THEN d END) AS mad,
-        |  CAST(MAX(n) AS BIGINT) AS n
-        |FROM dw GROUP BY l_returnflag, median_qty""".stripMargin,
-    // mirrors privacy_l_diversity
-    "privacy_l_diversity" ->
-      """WITH g AS (
-        |  SELECT event_type, hour(ts) AS hh,
-        |    CAST(COUNT(*) AS BIGINT) AS c,
-        |    CAST(COUNT(DISTINCT item) AS BIGINT) AS l
-        |  FROM (SELECT event_type, ts,
-        |          CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-        |        FROM events)
-        |  WHERE item IS NOT NULL
-        |  GROUP BY 1, 2)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |  CAST(MIN(l) AS BIGINT) AS min_l,
-        |  CAST(SUM(CASE WHEN l < 5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS low_diversity_groups,
-        |  CAST(SUM(CASE WHEN l < 5 THEN c ELSE 0 END) AS BIGINT)
-        |    AS rows_at_risk
-        |FROM g GROUP BY event_type""".stripMargin,
-    // mirrors privacy_generalization: same ladder off the hour frame
-    "privacy_generalization" ->
-      """WITH h AS (
-        |  SELECT event_type, EXTRACT(hour FROM ts) AS hh,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, CAST(MIN(bc) AS BIGINT) AS min_band_group
-        |  FROM (SELECT event_type, hh // 4 AS bb,
-        |          CAST(SUM(c) AS BIGINT) AS bc
-        |        FROM h GROUP BY 1, 2)
-        |  GROUP BY event_type),
-        |g AS (
-        |  SELECT event_type, CAST(MIN(c) AS BIGINT) AS min_hour_group,
-        |    CAST(SUM(c) AS BIGINT) AS n_rows
-        |  FROM h GROUP BY event_type)
-        |SELECT g.event_type, n_rows, min_hour_group, min_band_group,
-        |  CASE WHEN min_hour_group >= 50 THEN 'hour'
-        |       WHEN min_band_group >= 50 THEN '4hour'
-        |       ELSE 'day' END AS chosen_level
-        |FROM g JOIN b ON g.event_type = b.event_type""".stripMargin,
-    // integer-exact ordered-EMD; items are non-negative so % == pmod
-    "privacy_t_closeness" ->
-      """WITH banded AS (
-        |  SELECT event_type,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) % 20 AS band
-        |  FROM events
-        |  WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) IS NOT NULL),
-        |cell AS (
-        |  SELECT event_type, band, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM banded GROUP BY 1, 2),
-        |groups AS (
-        |  SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_g FROM cell GROUP BY 1),
-        |gdist AS (
-        |  SELECT band, CAST(SUM(c) AS BIGINT) AS d0 FROM cell GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.n_g, b.band,
-        |    COALESCE(c.c, 0) AS c, COALESCE(gl.d0, 0) AS d0
-        |  FROM groups g CROSS JOIN (SELECT UNNEST(RANGE(20)) AS band) b
-        |  LEFT JOIN cell c ON c.event_type = g.event_type AND c.band = b.band
-        |  LEFT JOIN gdist gl ON gl.band = b.band),
-        |cum AS (
-        |  SELECT event_type, n_g,
-        |    SUM(c)  OVER (PARTITION BY event_type ORDER BY band) AS cum_c,
-        |    SUM(d0) OVER (PARTITION BY event_type ORDER BY band) AS cum_d
-        |  FROM grid),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM banded)
-        |SELECT event_type, CAST(n_g AS BIGINT) AS n_rows,
-        |  CAST(CAST(SUM(ABS(tot.n * cum_c - n_g * cum_d)) AS DOUBLE) /
-        |    (CAST(n_g AS DOUBLE) * CAST(tot.n AS DOUBLE) * 19.0)
-        |    AS DOUBLE) AS t_emd,
-        |  (CAST(CAST(SUM(ABS(tot.n * cum_c - n_g * cum_d)) AS DOUBLE) /
-        |    (CAST(n_g AS DOUBLE) * CAST(tot.n AS DOUBLE) * 19.0)
-        |    AS DOUBLE) > 0.2) AS violates_t
-        |FROM cum, tot GROUP BY event_type, n_g, tot.n""".stripMargin,
-    // the oracle keeps the quadratic NOT-EXISTS dominance form (the
-    // Spark side decorrelates to per-price min + running min — an
-    // independent formulation of the same spec)
-    "q_skyline" ->
-      """SELECT p_partkey, p_retailprice, p_size
-        |FROM part p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM part q
-        |  WHERE q.p_retailprice <= p.p_retailprice
-        |    AND q.p_size <= p.p_size
-        |    AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size))
-        |ORDER BY p_retailprice, p_size, p_partkey""".stripMargin,
-    "events_autocorr" ->
-      """WITH series AS (
-        |  SELECT event_type, DATE_TRUNC('hour', ts) AS hh,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT event_type, CAST(SUM(c) AS BIGINT) AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM series GROUP BY 1),
-        |lagged AS (
-        |  SELECT se.event_type, t.n, t.s, se.c,
-        |    LAG(se.c) OVER (PARTITION BY se.event_type ORDER BY se.hh)
-        |      AS c_prev
-        |  FROM series se JOIN tot t ON se.event_type = t.event_type)
-        |SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_hours,
-        |  CAST(CAST(SUM(CASE WHEN c_prev IS NOT NULL
-        |      THEN CAST(n*c - s AS DECIMAL(38,0)) *
-        |           CAST(n*c_prev - s AS DECIMAL(38,0))
-        |      ELSE CAST(0 AS DECIMAL(38,0)) END) AS DOUBLE) /
-        |    CAST(SUM(CAST(n*c - s AS DECIMAL(38,0)) *
-        |             CAST(n*c - s AS DECIMAL(38,0))) AS DOUBLE)
-        |    AS DOUBLE) AS autocorr_lag1
-        |FROM lagged GROUP BY event_type""".stripMargin,
-    // mirrors events_window_breadth: identical explicit frames
-    "events_window_breadth" ->
-      """SELECT event_id, user_id, value,
-        |  first_value(value) OVER w_run AS first_v,
-        |  last_value(value) OVER w_full AS last_v,
-        |  nth_value(value, 2) OVER w_run AS second_v,
-        |  cume_dist() OVER w_ord AS cd,
-        |  lag(value, 1, 0.0) OVER w_ord AS prev_v
-        |FROM events
-        |WINDOW
-        |  w_ord AS (PARTITION BY user_id ORDER BY ts, event_id),
-        |  w_run AS (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  w_full AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING
-        |               AND UNBOUNDED FOLLOWING)""".stripMargin,
-    // mirrors text_feature_hash: same md5-60-bit bucket route
-    "text_feature_hash" -> {
-      val h = graft.functions.Sampling.keyHash60Sql("term")
-      s"""WITH tf AS (
-         |  SELECT term, CAST(COUNT(*) AS BIGINT) AS n_tokens
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS term
-         |        FROM documents)
-         |  GROUP BY term)
-         |SELECT CAST(($h) % 64 AS BIGINT) AS bucket,
-         |  CAST(COUNT(*) AS BIGINT) AS n_terms,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(MAX(n_tokens) AS BIGINT) AS max_term_tokens
-         |FROM tf GROUP BY 1""".stripMargin
-    },
-    // mirrors dq_fk_orphans: NOT-EXISTS orphan counts per edge
-    "dq_fk_orphans" -> {
-      def edge(label: String, child: String, ck: String,
-          parent: String, pk: String): String =
-        s"""SELECT '$label' AS fk_edge,
-           |  CAST(COUNT(*) AS BIGINT) AS n_child,
-           |  CAST(SUM(CASE WHEN $ck IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_null_fk,
-           |  CAST(SUM(CASE WHEN $ck IS NOT NULL AND NOT EXISTS
-           |    (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck)
-           |    THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
-           |  CAST(SUM(CASE WHEN $ck IS NOT NULL AND NOT EXISTS
-           |    (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck)
-           |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-           |    AS orphan_rate
-           |FROM $child c""".stripMargin
-      Seq(
-        edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey"),
-        edge("lineitem.l_partkey->part", "lineitem", "l_partkey",
-          "part", "p_partkey"),
-        edge("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-          "supplier", "s_suppkey"),
-        edge("orders.o_custkey->customer", "orders", "o_custkey",
-          "customer", "c_custkey"),
-        edge("customer.c_nationkey->nation", "customer", "c_nationkey",
-          "nation", "n_nationkey"),
-        edge("nation.n_regionkey->region", "nation", "n_regionkey",
-          "region", "r_regionkey")).mkString("\nUNION ALL\n")
-    },
-    // mirrors events_cusum: same scaled-integer prefix-sum closed form
-    "events_cusum" ->
-      """WITH d AS (
-        |  SELECT event_type, date_trunc('day', ts) AS day,
-        |         CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |y AS (
-        |  SELECT event_type, day, n,
-        |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) * n -
-        |      CAST(SUM(n) OVER (PARTITION BY event_type) AS BIGINT) AS yy
-        |  FROM d),
-        |p AS (
-        |  SELECT event_type, day, n,
-        |    CAST(SUM(yy) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pp
-        |  FROM y)
-        |SELECT event_type, day, n,
-        |  CAST(pp - least(0, MIN(pp) OVER (PARTITION BY event_type
-        |    ORDER BY day ROWS UNBOUNDED PRECEDING)) AS BIGINT) AS cusum
-        |FROM p""".stripMargin,
-    // mirrors events_triangles: same orientation + wedge join, incl.
-    // the 512 per-user degree cap on the edge build
-    "events_triangles" -> {
-      val itemsSql = graft.functions.Graphs.capKeyDegreeSql(
-        """SELECT DISTINCT user_id,
-          |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-          |FROM events
-          |WHERE json_extract_string(props, '$.k') IS NOT NULL""".stripMargin,
-        "user_id", 512)
-      val edgesSql =
-        s"""SELECT DISTINCT x.item AS src, y.item AS dst
-          |  FROM ($itemsSql) x
-          |  JOIN ($itemsSql) y
-          |    ON x.user_id = y.user_id AND x.item < y.item""".stripMargin
-      graft.functions.Graphs.triangleStatsSql(edgesSql)
-    },
-    // mirrors q6_band_revenue: identical decimal product/sum
-    "q6_band_revenue" ->
-      """SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |    CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(28,6))) AS DOUBLE)
-        |    AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        |  AND l_shipdate < TIMESTAMP '1996-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    // mirrors q8_market_share: same single-pass conditional decimal sums
-    "q8_market_share" ->
-      s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+      // same single-pass conditional decimal sums
+      oracle = s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
          |  CAST(SUM(CASE WHEN n2.n_name = 'NATION_3' THEN $revenueSql
          |           ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
          |    / CAST(SUM($revenueSql) AS DOUBLE) AS mkt_share
@@ -3039,10 +2876,28 @@ object AnalyticsQueries {
          |JOIN nation n2 ON s_nationkey = n2.n_nationkey
          |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
          |  AND o_orderdate < TIMESTAMP '1997-01-01'
-         |GROUP BY year(o_orderdate)""".stripMargin,
-    // mirrors q10_returned_items
-    "q10_returned_items" ->
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+         |GROUP BY year(o_orderdate)""".stripMargin),
+    // TPC-H Q10 returned-item ranking: fact join + grouped revenue +
+    // top-20 (TakeOrderedAndProject — the heap replaces a global sort).
+    // Grouping carries the customer attributes THROUGH the aggregate
+    // (they're functionally dependent on c_custkey) instead of
+    // re-joining customer after the agg
+    Query("q10_returned_items", (s, dir) => {
+      val o = t(s, dir, "orders").filter(
+        col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
+          col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
+      val l = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+      val n = t(s, dir, "nation")
+      l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
+          col("n_name"))
+        .agg(sum(revenue).cast("double").as("revenue"))
+        .orderBy(col("revenue").desc, col("c_custkey"))
+        .limit(20)
+    },
+      oracle = s"""SELECT c_custkey, c_name, c_acctbal, n_name,
          |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
@@ -3053,20 +2908,49 @@ object AnalyticsQueries {
          |  AND o_orderdate < TIMESTAMP '1996-01-01'
          |GROUP BY c_custkey, c_name, c_acctbal, n_name
          |ORDER BY revenue DESC, c_custkey
-         |LIMIT 20""".stripMargin,
-    // mirrors q14_promo_revenue
-    "q14_promo_revenue" ->
-      s"""SELECT 100.0 *
+         |LIMIT 20""".stripMargin),
+    // TPC-H Q14 promo revenue: conditional share in one aggregation
+    // pass — numerator and denominator as exact decimal sums over the
+    // same joined frame, division once as doubles
+    Query("q14_promo_revenue", (s, dir) =>
+      t(s, dir, "lineitem")
+        .filter(col("l_shipdate") >= lit("1995-09-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1995-10-01").cast("timestamp"))
+        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+        .agg(
+          sum(when(col("p_type") === "PROMO", revenue)
+            .otherwise(lit(0).cast("decimal(28,6)"))).as("__promo"),
+          sum(revenue).as("__tot"))
+        .select((lit(100.0) * col("__promo").cast("double") /
+          col("__tot").cast("double")).as("promo_revenue")),
+      oracle = s"""SELECT 100.0 *
          |  CAST(SUM(CASE WHEN p_type = 'PROMO' THEN $revenueSql
          |           ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
          |  / CAST(SUM($revenueSql) AS DOUBLE) AS promo_revenue
          |FROM lineitem
          |JOIN part ON l_partkey = p_partkey
          |WHERE l_shipdate >= TIMESTAMP '1995-09-01'
-         |  AND l_shipdate < TIMESTAMP '1995-10-01'""".stripMargin,
-    // mirrors q15_top_supplier: exact-decimal max equality
-    "q15_top_supplier" ->
-      s"""WITH rev AS (
+         |  AND l_shipdate < TIMESTAMP '1995-10-01'""".stripMargin),
+    // TPC-H Q15 top supplier: the scalar-subquery-over-aggregate shape
+    // — per-supplier quarterly revenue, then suppliers matching the
+    // global max. The max is a 1-row broadcast joined on EXACT decimal
+    // equality (a double round-trip could drop the winner); supplier
+    // attaches after the argmax filter, so only winner rows join
+    Query("q15_top_supplier", (s, dir) => {
+      val rev = t(s, dir, "lineitem")
+        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
+        .groupBy(col("l_suppkey"))
+        .agg(sum(revenue).as("__rev"))
+      val mx = rev.agg(max(col("__rev")).as("__mx"))
+      rev.join(broadcast(mx), col("__rev") === col("__mx"))
+        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+        .select(col("s_suppkey"), col("s_name"),
+          col("__rev").cast("double").as("total_revenue"))
+        .orderBy(col("s_suppkey"))
+    },
+      // exact-decimal max equality
+      oracle = s"""WITH rev AS (
          |  SELECT l_suppkey, SUM($revenueSql) AS r
          |  FROM lineitem
          |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -3075,16 +2959,33 @@ object AnalyticsQueries {
          |SELECT s_suppkey, s_name, CAST(r AS DOUBLE) AS total_revenue
          |FROM rev JOIN supplier ON l_suppkey = s_suppkey
          |WHERE r = (SELECT MAX(r) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-    // mirrors q19_disjunctive
-    "q19_disjunctive" ->
-      s"""SELECT CAST(SUM($revenueSql) AS DOUBLE) AS revenue
+         |ORDER BY s_suppkey""".stripMargin),
+    // TPC-H Q19 disjunctive-predicate join: three (brand, size band,
+    // quantity band) arms OR'd inside the join condition. The common
+    // partkey equality extracts as the join key; per-arm part
+    // predicates (brand, size) push into the part scan via
+    // CNF-conversion, quantity bounds into lineitem — the
+    // predicate-normalization test q5/q8 don't exercise
+    Query("q19_disjunctive", (s, dir) => {
+      val l = t(s, dir, "lineitem")
+      val p = t(s, dir, "part")
+      val arm = (brand: String, szLo: Int, szHi: Int, qLo: Int, qHi: Int) =>
+        col("p_brand") === brand &&
+          col("p_size").between(szLo, szHi) &&
+          col("l_quantity") >= qLo && col("l_quantity") <= qHi
+      l.join(p, col("l_partkey") === col("p_partkey") &&
+          (arm("Brand#12", 1, 5, 1, 11) ||
+            arm("Brand#13", 1, 10, 10, 20) ||
+            arm("Brand#14", 1, 15, 20, 30)))
+        .agg(sum(revenue).cast("double").as("revenue"))
+    },
+      oracle = s"""SELECT CAST(SUM($revenueSql) AS DOUBLE) AS revenue
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
          |        AND l_quantity >= 1 AND l_quantity <= 11)
          |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10
          |        AND l_quantity >= 10 AND l_quantity <= 20)
          |   OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 15
-         |        AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin,
+         |        AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin),
   )
 }

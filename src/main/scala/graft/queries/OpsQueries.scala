@@ -54,17 +54,41 @@ object OpsQueries {
       Seq((6L, Resume.StatusInProgress, Some(3000L)),
         (7L, Resume.StatusInProgress, Some(6000L)))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The journal fixture as the rows of a DuckDB VALUES list. */
+  private val journalValues = journalFixture
+    .map { case (b, st, lt) => s"($b, '$st', ${lt.map(_.toString).getOrElse("NULL")})" }
+    .mkString(", ")
+
+  /** DuckDB side of a key filter: each side's rows whose key passes
+    * `keep`, and the skipped-partitions counter of the keys `drop` names.
+    */
+  private def keptSrc(keep: String) = s"SELECT * FROM lineitem WHERE $keep"
+  private def keptTgt(keep: String) =
+    s"SELECT * FROM (${Perturb.lineitemTargetSql}) WHERE $keep"
+  private def skippedSql(drop: String) =
+    s"""SELECT CAST(COUNT(*) AS BIGINT) AS skipped_partitions FROM (
+       |  SELECT l_orderkey FROM lineitem
+       |  UNION
+       |  SELECT l_orderkey FROM (${Perturb.lineitemTargetSql})
+       |) u WHERE $drop""".stripMargin
+
+  def all: Seq[Query] = Seq(
     // O9: disallowed-token reject list → skipped counter
-    "diff_token_filter" -> ((s, dir) =>
+    Query("diff_token_filter", (s, dir) =>
       DiffEngine.rangeStats(li(s, dir), Perturb.lineitemTarget(li(s, dir)),
-        lineitemSpec, DiffOptions(disallowedTokens = Disallowed), idTok)),
+        lineitemSpec, DiffOptions(disallowedTokens = Disallowed), idTok),
+      oracle = OracleSql.rangeStats(lineitemSpec,
+        keptSrc(s"l_orderkey NOT IN ($disallowedSqlList)"),
+        keptTgt(s"l_orderkey NOT IN ($disallowedSqlList)"),
+        skippedSql(s"l_orderkey IN ($disallowedSqlList)"))),
     // O10: deterministic per-key sampling (keep pmod(token,10) < 3)
-    "diff_sampling" -> ((s, dir) =>
+    Query("diff_sampling", (s, dir) =>
       DiffEngine.rangeStats(li(s, dir), Perturb.lineitemTarget(li(s, dir)),
-        lineitemSpec, DiffOptions(samplingNum = 3, samplingDen = 10), idTok)),
+        lineitemSpec, DiffOptions(samplingNum = 3, samplingDen = 10), idTok),
+      oracle = OracleSql.rangeStats(lineitemSpec, keptSrc("l_orderkey % 10 < 3"),
+        keptTgt("l_orderkey % 10 < 3"), skippedSql("l_orderkey % 10 >= 3"))),
     // O12: resume — pending work per bucket given a task_status journal
-    "diff_resume" -> ((s, dir) => {
+    Query("diff_resume", (s, dir) => {
       import s.implicits._
       val scan = DiffEngine.keyScan(li(s, dir), lineitemSpec, idTok)
       val keys = scan.withColumn("bucket", DiffEngine.bucketOf(scan, col("token"), 16))
@@ -72,36 +96,63 @@ object OpsQueries {
       Resume.pending(keys, journal)
         .groupBy("bucket").agg(count(lit(1)).as("n_pending"),
           min(col("token")).as("min_token"))
-    }),
+    },
+      oracle = s"""WITH keys AS (
+         |  SELECT DISTINCT l_orderkey, CAST(l_orderkey AS BIGINT) AS token,
+         |         CAST(l_orderkey % 16 AS BIGINT) AS bucket
+         |  FROM lineitem
+         |),
+         |j AS (SELECT * FROM (VALUES $journalValues) AS t(bucket, status, last_token)),
+         |p AS (
+         |  SELECT k.* FROM keys k LEFT JOIN j ON k.bucket = j.bucket
+         |  WHERE j.status IS NULL
+         |     OR (j.status = 'in_progress' AND (j.last_token IS NULL OR k.token > j.last_token))
+         |)
+         |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pending,
+         |       CAST(MIN(token) AS BIGINT) AS min_token
+         |FROM p GROUP BY bucket""".stripMargin),
     // O3: reverse-order read — last clustering row of sampled partitions
-    "diff_reverse_read" -> ((s, dir) =>
+    Query("diff_reverse_read", (s, dir) =>
       DiffEngine.reverseRead(
         li(s, dir).filter(col("l_orderkey") % 20 === 0), lineitemSpec)
         .filter(col("rev_rank") === 1)
-        .select("l_orderkey", "l_linenumber", "l_quantity")),
+        .select("l_orderkey", "l_linenumber", "l_quantity"),
+      oracle = """SELECT l_orderkey, l_linenumber, l_quantity FROM (
+        |  SELECT l_orderkey, l_linenumber, l_quantity,
+        |         ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber DESC) AS rn
+        |  FROM lineitem WHERE l_orderkey % 20 = 0
+        |) WHERE rn = 1""".stripMargin),
     // O3 wired: sampled reverse-read validation. The sample here is a
     // DuckDB-mirrorable key predicate (l_orderkey % 10 = 0) rather than
     // the engine's xxhash64 sampler — same sampled-subset semantics, and
     // the oracle can reproduce it exactly
-    "diff_reverse_validation" -> ((s, dir) =>
+    Query("diff_reverse_validation", (s, dir) =>
       DiffEngine.reverseValidation(
         li(s, dir).filter(col("l_orderkey") % 10 === 0),
         Perturb.lineitemTarget(li(s, dir)).filter(col("l_orderkey") % 10 === 0),
         lineitemSpec, probability = 1.0, idTok)
         .agg(count(lit(1)).as("n_checked"),
-          sum(when(!col("agree"), 1L).otherwise(0L)).as("n_disagree"))),
+          sum(when(!col("agree"), 1L).otherwise(0L)).as("n_disagree")),
+      oracle = OracleSql.reverseValidation(lineitemSpec,
+        s"SELECT * FROM (${Perturb.lineitemSrcSql}) WHERE l_orderkey % 10 = 0",
+        s"SELECT * FROM (${Perturb.lineitemTargetSql}) WHERE l_orderkey % 10 = 0")),
     // O19: schema auto-discovery — intersect minus disallowed, with one
     // side missing a table (region) and "events" disallowed
-    "schema_intersect" -> ((s, dir) => {
+    Query("schema_intersect", (s, dir) => {
       import s.implicits._
       val srcTables = ParquetSource(dir).listTables(s)
       val tgtTables = srcTables.filterNot(_ == "region")
       SchemaOps.intersect(srcTables, tgtTables, Set("events"))
         .toDF("table_name")
-    }),
+    },
+      // fixed corpus ⇒ the expected intersection is a constant set:
+      // all tables minus region (absent on target) minus events (disallowed)
+      oracle = """SELECT * FROM (VALUES ('customer'), ('documents'), ('embeddings'),
+        |  ('lineitem'), ('nation'), ('orders'), ('part'), ('supplier'))
+        |  AS t(table_name)""".stripMargin),
     // O22: mismatch summary across a two-table job (group-merge of
     // DBService.java:215-228) — one per-table diff each
-    "api_mismatch_summary" -> ((s, dir) => {
+    Query("api_mismatch_summary", (s, dir) => {
       val m1 = DiffEngine.mismatchesFromPartitions(
         tablePs(s, dir, "lineitem"), lineitemSpec, buckets = 100)
       val m2 = DiffEngine.mismatchesFromPartitions(
@@ -109,9 +160,16 @@ object OpsQueries {
       m1.select("table_name", "mismatch_type")
         .unionByName(m2.select("table_name", "mismatch_type"))
         .groupBy("table_name", "mismatch_type").agg(count(lit(1)).as("n"))
-    }),
+    },
+      oracle = s"""SELECT table_name, mismatch_type, CAST(COUNT(*) AS BIGINT) AS n FROM (
+         |  SELECT table_name, mismatch_type FROM (${OracleSql.mismatches(lineitemSpec,
+              Perturb.lineitemSrcSql, Perturb.lineitemTargetSql, 100)})
+         |  UNION ALL
+         |  SELECT table_name, mismatch_type FROM (${OracleSql.mismatches(ordersSpec,
+              Perturb.ordersSrcSql, Perturb.ordersTargetSql, 100)})
+         |) GROUP BY table_name, mismatch_type""".stripMargin),
     // O15: quarantine — null partition keys diverted with origin + reason
-    "diff_quarantine" -> ((s, dir) => {
+    Query("diff_quarantine", (s, dir) => {
       val withNulls = li(s, dir).withColumn("l_orderkey",
         when(col("l_partkey") % 97 === 0, lit(null)).otherwise(col("l_orderkey")))
       val split = graft.engine.Quarantine.split(withNulls, lineitemSpec, "source")
@@ -121,98 +179,27 @@ object OpsQueries {
             .withColumn("origin", lit("source"))
             .withColumn("error", lit("VALID"))
             .select("origin", "error", "n"))
-    }),
+    },
+      oracle = """SELECT 'source' AS origin, 'null_pk_l_orderkey' AS error,
+        |       CAST(COUNT(*) AS BIGINT) AS n
+        |FROM lineitem WHERE l_partkey % 97 = 0
+        |UNION ALL
+        |SELECT 'source' AS origin, 'VALID' AS error,
+        |       CAST(COUNT(*) AS BIGINT) AS n
+        |FROM lineitem WHERE l_partkey % 97 <> 0""".stripMargin),
     // O22/O8: per-table job results (job_results rows of a two-table job),
     // from its own per-table diffs — same derivation as the mismatch summary
-    "api_results_by_table" -> ((s, dir) => {
+    Query("api_results_by_table", (s, dir) => {
       val r1 = DiffEngine.rangeStatsFromPartitions(
         tablePs(s, dir, "lineitem"), lineitemSpec, noSkips(s))
       val r2 = DiffEngine.rangeStatsFromPartitions(
         tablePs(s, dir, "orders"), ordersSpec, noSkips(s))
       r1.unionByName(r2)
-    }),
+    },
+      oracle = s"""SELECT * FROM (${OracleSql.rangeStats(lineitemSpec,
+           Perturb.lineitemSrcSql, Perturb.lineitemTargetSql)})
+         |UNION ALL
+         |SELECT * FROM (${OracleSql.rangeStats(ordersSpec,
+           Perturb.ordersSrcSql, Perturb.ordersTargetSql)})""".stripMargin),
   )
-
-  def oracles: Map[String, String] = {
-    val filteredSrc =
-      s"SELECT * FROM lineitem WHERE l_orderkey NOT IN ($disallowedSqlList)"
-    val filteredTgt =
-      s"SELECT * FROM (${Perturb.lineitemTargetSql}) WHERE l_orderkey NOT IN ($disallowedSqlList)"
-    val skippedDisallowed =
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS skipped_partitions FROM (
-         |  SELECT l_orderkey FROM lineitem
-         |  UNION
-         |  SELECT l_orderkey FROM (${Perturb.lineitemTargetSql})
-         |) u WHERE l_orderkey IN ($disallowedSqlList)""".stripMargin
-    val sampledSrc = "SELECT * FROM lineitem WHERE l_orderkey % 10 < 3"
-    val sampledTgt =
-      s"SELECT * FROM (${Perturb.lineitemTargetSql}) WHERE l_orderkey % 10 < 3"
-    val skippedSampling =
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS skipped_partitions FROM (
-         |  SELECT l_orderkey FROM lineitem
-         |  UNION
-         |  SELECT l_orderkey FROM (${Perturb.lineitemTargetSql})
-         |) u WHERE l_orderkey % 10 >= 3""".stripMargin
-    val journalValues = journalFixture
-      .map { case (b, st, lt) => s"($b, '$st', ${lt.map(_.toString).getOrElse("NULL")})" }
-      .mkString(", ")
-    Map(
-      "diff_token_filter" -> OracleSql.rangeStats(lineitemSpec,
-        filteredSrc, filteredTgt, skippedDisallowed),
-      "diff_sampling" -> OracleSql.rangeStats(lineitemSpec,
-        sampledSrc, sampledTgt, skippedSampling),
-      "diff_resume" ->
-        s"""WITH keys AS (
-           |  SELECT DISTINCT l_orderkey, CAST(l_orderkey AS BIGINT) AS token,
-           |         CAST(l_orderkey % 16 AS BIGINT) AS bucket
-           |  FROM lineitem
-           |),
-           |j AS (SELECT * FROM (VALUES $journalValues) AS t(bucket, status, last_token)),
-           |p AS (
-           |  SELECT k.* FROM keys k LEFT JOIN j ON k.bucket = j.bucket
-           |  WHERE j.status IS NULL
-           |     OR (j.status = 'in_progress' AND (j.last_token IS NULL OR k.token > j.last_token))
-           |)
-           |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pending,
-           |       CAST(MIN(token) AS BIGINT) AS min_token
-           |FROM p GROUP BY bucket""".stripMargin,
-      "diff_reverse_validation" -> OracleSql.reverseValidation(lineitemSpec,
-        s"SELECT * FROM (${Perturb.lineitemSrcSql}) WHERE l_orderkey % 10 = 0",
-        s"SELECT * FROM (${Perturb.lineitemTargetSql}) WHERE l_orderkey % 10 = 0"),
-      "diff_reverse_read" ->
-        """SELECT l_orderkey, l_linenumber, l_quantity FROM (
-          |  SELECT l_orderkey, l_linenumber, l_quantity,
-          |         ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber DESC) AS rn
-          |  FROM lineitem WHERE l_orderkey % 20 = 0
-          |) WHERE rn = 1""".stripMargin,
-      // fixed corpus ⇒ the expected intersection is a constant set:
-      // all tables minus region (absent on target) minus events (disallowed)
-      "schema_intersect" ->
-        """SELECT * FROM (VALUES ('customer'), ('documents'), ('embeddings'),
-          |  ('lineitem'), ('nation'), ('orders'), ('part'), ('supplier'))
-          |  AS t(table_name)""".stripMargin,
-      "diff_quarantine" ->
-        """SELECT 'source' AS origin, 'null_pk_l_orderkey' AS error,
-          |       CAST(COUNT(*) AS BIGINT) AS n
-          |FROM lineitem WHERE l_partkey % 97 = 0
-          |UNION ALL
-          |SELECT 'source' AS origin, 'VALID' AS error,
-          |       CAST(COUNT(*) AS BIGINT) AS n
-          |FROM lineitem WHERE l_partkey % 97 <> 0""".stripMargin,
-      "api_mismatch_summary" ->
-        s"""SELECT table_name, mismatch_type, CAST(COUNT(*) AS BIGINT) AS n FROM (
-           |  SELECT table_name, mismatch_type FROM (${OracleSql.mismatches(lineitemSpec,
-                Perturb.lineitemSrcSql, Perturb.lineitemTargetSql, 100)})
-           |  UNION ALL
-           |  SELECT table_name, mismatch_type FROM (${OracleSql.mismatches(ordersSpec,
-                Perturb.ordersSrcSql, Perturb.ordersTargetSql, 100)})
-           |) GROUP BY table_name, mismatch_type""".stripMargin,
-      "api_results_by_table" ->
-        s"""SELECT * FROM (${OracleSql.rangeStats(lineitemSpec,
-             Perturb.lineitemSrcSql, Perturb.lineitemTargetSql)})
-           |UNION ALL
-           |SELECT * FROM (${OracleSql.rangeStats(ordersSpec,
-             Perturb.ordersSrcSql, Perturb.ordersTargetSql)})""".stripMargin,
-    )
-  }
 }

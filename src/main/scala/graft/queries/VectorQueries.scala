@@ -57,45 +57,108 @@ object VectorQueries {
        |FROM ($union)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def all: Seq[Query] = Seq(
     // brute-force top-5 cosine neighbors for 8 query vectors
-    "ann_topk" -> ((s, dir) => {
+    Query("ann_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.bruteForceTopK(
         e.filter(col("vec_id") < 8), e, "vec_id", "embedding", k = 5)
-    }),
+    },
+      oracle = """WITH q AS (
+        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+        |  FROM embeddings WHERE vec_id < 8
+        |),
+        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+        |s AS (
+        |  SELECT query_id, neighbor_id,
+        |         list_dot_product(qv, cv) /
+        |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS sim
+        |  FROM q, c WHERE query_id <> neighbor_id
+        |),
+        |r AS (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+        |  FROM s
+        |)
+        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
+        |FROM r WHERE rank <= 5""".stripMargin),
     // kNN-graph hubness audit: k-occurrence histogram over a 512-query
     // sample — hubs (fat tail) and antihubs (in_degree 0) are the
     // high-dimension retrieval pathology; integer-exact, full hash match
-    "embed_hubness" -> ((s, dir) => {
+    Query("embed_hubness", (s, dir) => {
       val e = emb(s, dir)
       Similarity.hubnessHistogram(e.filter(col("vec_id") < 512), e,
         "vec_id", "embedding", k = 5)
-    }),
+    },
+      // mirrors hubnessHistogram: same brute-force kNN arithmetic, then
+      // the integer k-occurrence histogram (antihubs via the left join)
+      oracle = """WITH q AS (
+        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+        |  FROM embeddings WHERE vec_id < 512
+        |),
+        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+        |s AS (
+        |  SELECT query_id, neighbor_id,
+        |         list_dot_product(qv, cv) /
+        |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS sim
+        |  FROM q, c WHERE query_id <> neighbor_id
+        |),
+        |r AS (
+        |  SELECT neighbor_id,
+        |         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+        |  FROM s
+        |),
+        |knn AS (SELECT neighbor_id FROM r WHERE rank <= 5),
+        |deg AS (
+        |  SELECT e.vec_id, CAST(COUNT(k.neighbor_id) AS BIGINT) AS in_degree
+        |  FROM embeddings e LEFT JOIN knn k ON e.vec_id = k.neighbor_id
+        |  GROUP BY e.vec_id
+        |)
+        |SELECT in_degree, CAST(COUNT(*) AS BIGINT) AS n_vectors
+        |FROM deg GROUP BY in_degree""".stripMargin),
     // per-label centroids, bit-exact via the pinned-order fold
-    "embed_centroids" -> ((s, dir) =>
+    Query("embed_centroids", (s, dir) =>
       graft.functions.Embeddings.labelCentroids(
-        emb(s, dir), "vec_id", "embedding", "label")),
+        emb(s, dir), "vec_id", "embedding", "label"),
+      // the same sequential fold in vec_id order — float addition order
+      // pinned, so the doubles match bit-for-bit
+      oracle = """WITH e AS (
+        |  SELECT label, vec_id, i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS v
+        |  FROM embeddings
+        |  CROSS JOIN (SELECT unnest(range(0, 64)) AS i) g
+        |),
+        |c AS (
+        |  SELECT label, pos,
+        |    SUM(v) OVER (PARTITION BY label, pos ORDER BY vec_id
+        |                 ROWS UNBOUNDED PRECEDING) AS cs,
+        |    ROW_NUMBER() OVER (PARTITION BY label, pos ORDER BY vec_id) AS rn,
+        |    COUNT(*) OVER (PARTITION BY label, pos) AS cnt
+        |  FROM e
+        |)
+        |SELECT label, pos, cs / cnt AS mean_v, CAST(cnt AS BIGINT) AS n_vecs
+        |FROM c WHERE rn = cnt""".stripMargin),
     // Matryoshka prefix-dimension retrieval eval: top-5 recall of
     // 8/16/32-dim prefixes vs the full 64-dim truth — all brute-exact,
     // so the verdict table hash-matches
-    "embed_prefix_recall" -> ((s, dir) => {
+    Query("embed_prefix_recall", (s, dir) => {
       val e = emb(s, dir)
       Similarity.prefixRecall(e.filter(col("vec_id") < 8), e,
         "vec_id", "embedding", k = 5, prefixes = Seq(8, 16, 32))
-    }),
+    },
+      // mirrors prefixRecall(k = 5, prefixes = 8/16/32)
+      oracle = prefixRecallSql(5, Seq(8, 16, 32))),
     // embedding-cosine near-dup pairs over a deterministic subset; the
     // subset is bounded by construction (quarter of a fixed table), so
     // the O(n²) size guard is skipped — its count() action exactly
     // doubled this query's cost in the r8 bench
-    "embed_neardup" -> ((s, dir) =>
+    Query("embed_neardup", (s, dir) =>
       Similarity.nearDupPairs(
         emb(s, dir).filter(col("vec_id") % 4 === 0),
-        "vec_id", "embedding", threshold = 0.4, blocks = 32, maxRows = -1L)),
+        "vec_id", "embedding", threshold = 0.4, blocks = 32, maxRows = -1L),
+      oracle = neardupOracleSql),
     // embedding semantic dedup end-to-end: near-dup pairs → connected
     // components → drop every non-canonical member; the kept id set is
     // what a SemDeDup-style pipeline ships downstream
-    "embed_dedup_canonical" -> ((s, dir) => {
+    Query("embed_dedup_canonical", (s, dir) => {
       val e = emb(s, dir).filter(col("vec_id") % 4 === 0)
       val pairs = Similarity.nearDupPairs(e, "vec_id", "embedding",
           threshold = 0.4, blocks = 32, maxRows = -1L)
@@ -104,10 +167,27 @@ object VectorQueries {
         .filter(col("id") =!= col("cluster_id"))
         .select(col("id").as("vec_id"))
       e.select("vec_id").join(dropIds, Seq("vec_id"), "left_anti")
-    }),
+    },
+      oracle = s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($neardupOracleSql)),
+         |e AS (
+         |  SELECT id_a AS src, id_b AS dst FROM p
+         |  UNION
+         |  SELECT id_b AS src, id_a AS dst FROM p
+         |),
+         |reach(id, lbl) AS (
+         |  SELECT src, src FROM e
+         |  UNION
+         |  SELECT e.src, r.lbl FROM e JOIN reach r ON e.dst = r.id
+         |),
+         |cl AS (SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id)
+         |SELECT v.vec_id FROM (
+         |  SELECT vec_id FROM embeddings WHERE vec_id % 4 = 0
+         |) v
+         |LEFT JOIN (SELECT id FROM cl WHERE id <> cluster_id) d ON v.vec_id = d.id
+         |WHERE d.id IS NULL""".stripMargin),
     // int8 quantization audit: per-vector scale + integer checksums of
     // the quantized vector (exact cross-engine — integer arithmetic)
-    "embed_quantize" -> ((s, dir) => {
+    Query("embed_quantize", (s, dir) => {
       import graft.functions.Embeddings
       // scale and the quantized vector materialize as COLUMNS first:
       // inlining absMax (an O(dims) interpreted array fold) inside
@@ -125,12 +205,17 @@ object VectorQueries {
           aggregate(col("__qi"), lit(0L),
             (acc, x) => acc + x.cast("long")).as("q_sum"),
           Similarity.dot(col("__q"), col("__q")).cast("long").as("q_norm2"))
-    }),
+    },
+      oracle = s"""WITH $quantCtes
+         |SELECT vec_id, scale,
+         |  CAST(list_sum(qv) AS BIGINT) AS q_sum,
+         |  CAST(list_dot_product(qv, qv) AS BIGINT) AS q_norm2
+         |FROM q""".stripMargin),
     // brute-force top-k over the QUANTIZED vectors: int8 dot products
     // are integer-exact, so unlike trained-float ANN the whole search
     // result hash-matches the oracle; recall vs the float truth is
     // bounded in ScalaTest
-    "ann_topk_q8" -> ((s, dir) => {
+    Query("ann_topk_q8", (s, dir) => {
       import graft.functions.Embeddings
       // scale as a column first — same O(dims²)-interpreted-inlining fix
       // as embed_quantize
@@ -141,25 +226,97 @@ object VectorQueries {
             .cast("array<double>").as("qv"))
       Similarity.bruteForceTopK(
         qe.filter(col("vec_id") < 8), qe, "vec_id", "qv", k = 5)
-    }),
+    },
+      oracle = s"""WITH $quantCtes,
+         |qq AS (SELECT vec_id AS query_id, qv AS qqv FROM q WHERE vec_id < 8),
+         |cc AS (SELECT vec_id AS neighbor_id, qv AS cqv FROM q),
+         |s AS (
+         |  SELECT query_id, neighbor_id,
+         |         list_dot_product(qqv, cqv) /
+         |           (sqrt(list_dot_product(qqv, qqv)) * sqrt(list_dot_product(cqv, cqv))) AS sim
+         |  FROM qq, cc WHERE query_id <> neighbor_id
+         |),
+         |r AS (
+         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+         |  FROM s
+         |)
+         |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
+         |FROM r WHERE rank <= 5""".stripMargin),
     // LSH-bucketed approximate top-k — the 100TB path (bucketed join,
     // no cross product); rows-only gate + recall ScalaTest
-    "ann_lsh" -> ((s, dir) =>
-      Similarity.lshTopK(emb(s, dir), "vec_id", "embedding", k = 5)),
+    Query("ann_lsh", (s, dir) =>
+      Similarity.lshTopK(emb(s, dir), "vec_id", "embedding", k = 5),
+      oracle = lshTopKOracleSql),
     // signed Johnson–Lindenstrauss projection of the ×64-quantized
     // vectors to 8 integer dims — dimension reduction that stays
     // bit-exact cross-engine (Achlioptas ±1 signs from splitmix64)
-    "embed_project" -> ((s, dir) =>
+    Query("embed_project", (s, dir) =>
       graft.functions.Embeddings.randomProjection(
-        emb(s, dir), "vec_id", "embedding", outDims = 8)),
+        emb(s, dir), "vec_id", "embedding", outDims = 8),
+      // mirrors randomProjection(outDims = 8): the same ±1 sign matrix is
+      // interpolated as literal signs over the shared ×64 grid idiom
+      oracle = {
+        import graft.functions.Embeddings
+        val ps = (0 until 8).map(d =>
+          s"CAST(${Embeddings.randomProjectionSql("cv", d)} AS BIGINT) AS p$d")
+          .mkString(",\n|  ")
+        s"""WITH g AS (
+           |  SELECT vec_id, list_transform(embedding,
+           |      x -> CAST(LEAST(GREATEST(FLOOR(x * 64 + 0.5), -127), 127) AS BIGINT)) AS cv
+           |  FROM embeddings)
+           |SELECT vec_id,
+           |  $ps
+           |FROM g""".stripMargin
+      }),
     // two-stage ANN: JL-projected integer-dot coarse shortlist (16
     // terms per pair instead of 64) → exact grid-cosine rerank; both stages
     // integer/grid-exact, so the WHOLE result hash-matches the oracle
-    "ann_project_topk" -> ((s, dir) => {
+    Query("ann_project_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.projectTopK(e.filter(col("vec_id") < 8), e,
         "vec_id", "embedding", k = 5, shortlist = 50)
-    }),
+    },
+      // mirrors projectTopK(k=5, shortlist=50, outDims=8): same literal
+      // sign sums for the coarse stage, grid-double cosine for the rerank
+      oracle = {
+        import graft.functions.Embeddings
+        val ps = (0 until 16).map(d =>
+          s"CAST(${Embeddings.randomProjectionSql("cv", d)} AS BIGINT) AS p$d")
+          .mkString(",\n|    ")
+        val coarse = (0 until 16).map(d => s"q.p$d * c.p$d").mkString(" + ")
+        s"""WITH g AS (
+           |  SELECT vec_id, list_transform(embedding,
+           |      x -> CAST(LEAST(GREATEST(FLOOR(x * 64 + 0.5), -127), 127) AS BIGINT)) AS cv
+           |  FROM embeddings),
+           |p AS (
+           |  SELECT vec_id,
+           |    $ps
+           |  FROM g),
+           |co AS (
+           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           |    $coarse AS coarse
+           |  FROM p q JOIN p c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
+           |sh AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+           |      ORDER BY coarse DESC, neighbor_id) AS r FROM co)
+           |  WHERE r <= 50),
+           |gd AS (
+           |  SELECT vec_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS dv
+           |  FROM g),
+           |nv AS (
+           |  SELECT vec_id, dv, sqrt(list_dot_product(dv, dv)) AS n FROM gd),
+           |rr AS (
+           |  SELECT s.query_id, s.neighbor_id,
+           |    list_dot_product(q.dv, c.dv) / (q.n * c.n) AS sim
+           |  FROM sh s JOIN nv q ON q.vec_id = s.query_id
+           |            JOIN nv c ON c.vec_id = s.neighbor_id),
+           |rk AS (
+           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+           |    ORDER BY sim DESC, neighbor_id) AS rank FROM rr)
+           |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
+           |FROM rk WHERE rank <= 5""".stripMargin
+      }),
     // IVF approximate top-k — coarse-quantizer lists, nprobe probing.
     // TRAINED centroids (means over doubles) are never bit-reproducible
     // cross-engine, so the raw neighbor list cannot be hash-matched;
@@ -169,7 +326,7 @@ object VectorQueries {
     // catches a broken quantizer/probe/join, not centroid jitter). The
     // oracle recomputes n_queries and asserts the verdict TRUE, the same
     // self-grading pattern as q_approx_distinct.
-    "ann_ivf" -> ((s, dir) => {
+    Query("ann_ivf", (s, dir) => {
       val e = emb(s, dir)
       val ivf = Similarity.ivfTopK(e, "vec_id", "embedding", k = 5,
         nlist = 16, nprobe = 4).filter(col("query_id") < 64)
@@ -187,13 +344,20 @@ object VectorQueries {
             .as("recall"))
         .select(col("n_queries"),
           (col("recall") >= 0.3).as("recall_floor_met"))
-    }),
+    },
+      // self-grading verdict (see the ann_ivf query comment): DuckDB owns
+      // n_queries; TRUE is the asserted recall verdict — if Spark's trained
+      // IVF ever drops below the 0.3 recall floor the flag flips and the
+      // hash gate trips
+      oracle = """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+        |       TRUE AS recall_floor_met
+        |FROM embeddings WHERE vec_id < 64""".stripMargin),
     // the LARGE-nlist IVF path (broadcast centroid RELATION, no plan
     // literal — Similarity.ivfTopKWithDf): same self-grading recall
     // verdict as ann_ivf, with literalMax forced below nlist so this
     // query exercises the 100 TB assignment shape end to end
     // (trainCentroidsDf sample training + chunked broadcast probe)
-    "ann_ivf_frame" -> ((s, dir) => {
+    Query("ann_ivf_frame", (s, dir) => {
       val e = emb(s, dir)
       val ivf = Similarity.ivfTopK(e, "vec_id", "embedding", k = 5,
         nlist = 16, nprobe = 4, literalMax = 8)
@@ -212,12 +376,17 @@ object VectorQueries {
             .as("recall"))
         .select(col("n_queries"),
           (col("recall") >= 0.3).as("recall_floor_met"))
-    }),
+    },
+      // same self-grading verdict for the broadcast-relation path
+      oracle = """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+        |       TRUE AS recall_floor_met
+        |FROM embeddings WHERE vec_id < 64""".stripMargin),
     // IVF MECHANICS value-checked: assignment, probe selection, candidate
     // join and rerank over FIXED literal centroids, hash-matched in DuckDB
-    "ann_ivf_fixed" -> ((s, dir) =>
+    Query("ann_ivf_fixed", (s, dir) =>
       Similarity.ivfTopKWith(emb(s, dir), "vec_id", "embedding", k = 5,
-        FixedCentroids, nprobe = 4)),
+        FixedCentroids, nprobe = 4),
+      oracle = ivfFixedOracleSql),
     // k-means clustering-quality report over the same fixed coarse
     // quantizer: per-cluster population, inertia (Σ squared euclidean
     // distance to the assigned centroid), and the assignment margin
@@ -226,7 +395,7 @@ object VectorQueries {
     // to the ×64 grid, centroids are the integer IvfPqGrid, so every
     // distance is a sum of squared longs — no float order-dependence
     // anywhere. One scan, per-row expressions, one 16-key groupBy
-    "ann_kmeans_quality" -> ((s, dir) => {
+    Query("ann_kmeans_quality", (s, dir) => {
       import graft.functions.IvfPq
       val e = emb(s, dir)
       // native kernels: quantization and the 16 squared distances are
@@ -251,12 +420,13 @@ object VectorQueries {
             .as("mean_d2"),
           (col("margin_sum").cast("double") / col("n_vectors").cast("double"))
             .as("mean_margin"))
-    }),
+    },
+      oracle = kmeansQualityOracleSql),
     // PQ MECHANICS value-checked: fixed-grid integer quantization,
     // nearest-codeword encoding (first index on ties), reconstruction
     // distance — integers end to end, hash-matched; the probe join ships
     // only the 8 subspace codes per corpus vector
-    "ann_pq_fixed" -> ((s, dir) => {
+    Query("ann_pq_fixed", (s, dir) => {
       import graft.functions.IvfPq
       import org.apache.spark.sql.expressions.Window
       val e = emb(s, dir)
@@ -280,12 +450,13 @@ object VectorQueries {
         .filter(col("rank") <= 20)
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           col("pq_dist"), col("rank"))
-    }),
+    },
+      oracle = pqOracleSql),
     // IVF+PQ MECHANICS value-checked: integer coarse assignment to the
     // ×64-grid centroids, PQ over the quantized-domain RESIDUAL, probe
     // top-4 lists, residual ADC rerank — the full billion-scale ANN
     // layout (inverted lists of 8-byte codes), integers end to end
-    "ann_ivfpq_fixed" -> ((s, dir) => {
+    Query("ann_ivfpq_fixed", (s, dir) => {
       import graft.functions.IvfPq
       import org.apache.spark.sql.expressions.Window
       val e = emb(s, dir)
@@ -327,7 +498,8 @@ object VectorQueries {
         .filter(col("rank") <= 10)
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           col("cid"), col("pq_dist"), col("rank"))
-    }),
+    },
+      oracle = ivfPqOracleSql),
     // SemDeDup-shaped semantic dedup: coarse k-means cells bound the
     // pair space (the published recipe clusters with faiss then dedups
     // WITHIN each cluster — never all-pairs), here with the integer-grid
@@ -336,16 +508,17 @@ object VectorQueries {
     // smaller-id neighbor above the threshold in its own cell. Per-task
     // work is O(cell²) with cells ~n/nlist — the documented SemDeDup
     // scale shape (nlist grows with corpus size).
-    "semantic_dedup_cells" -> ((s, dir) =>
+    Query("semantic_dedup_cells", (s, dir) =>
       Similarity.semanticDedupCells(emb(s, dir), "vec_id", "embedding",
-        IvfPqGrid, threshold = 0.92)),
+        IvfPqGrid, threshold = 0.92),
+      oracle = semanticDedupOracleSql),
     // binary-embedding ANN: 32-bit hyperplane sign sketch per vector,
     // neighbors ranked by Hamming distance (popcount of XOR) — the
     // 64-bytes-to-4-bytes compression story next to PQ, and INTEGER all
     // the way so the whole ranking hash-matches the oracle (float ANN
     // never does). The sketch computes in the scan; candidates join
     // against the 8-row query table broadcast
-    "ann_hamming" -> ((s, dir) => {
+    Query("ann_hamming", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val sk = emb(s, dir).select(col("vec_id"),
         graft.functions.Sketches.hyperplaneSketch(col("embedding"), 32, 64)
@@ -359,13 +532,14 @@ object VectorQueries {
           expr("CAST(bit_count(sk ^ qsk) AS BIGINT)").as("hamming"))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
-    }),
+    },
+      oracle = hammingOracleSql),
     // metadata-filtered ANN (the retrieval-stack "hybrid search" shape):
     // a text-quality predicate on the documents table restricts the
     // vector corpus via an id equi-join BEFORE any similarity work —
     // pushdown-style filtered search, queries drawn from the same
     // filtered set
-    "hybrid_search" -> ((s, dir) => {
+    Query("hybrid_search", (s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val keep = d.filter(
           graft.functions.TextAnalysis.qualityScore(col("text")) >= 0.4)
@@ -373,14 +547,33 @@ object VectorQueries {
       val e = emb(s, dir).join(keep, Seq("vec_id"))
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 16), e,
         "vec_id", "embedding", k = 5)
-    }),
+    },
+      oracle = {
+        val toks = "string_split(text, ' ')"
+        s"""WITH keep AS (
+           |  SELECT doc_id AS kid FROM documents
+           |  WHERE (${graft.functions.TextAnalysis.qualityScoreSql(toks)}) >= 0.4),
+           |e AS (
+           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+           |  FROM embeddings JOIN keep ON vec_id = kid),
+           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 16),
+           |s AS (
+           |  SELECT query_id, vec_id AS neighbor_id,
+           |    list_dot_product(qv, v) /
+           |      (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS sim
+           |  FROM q, e WHERE vec_id <> query_id),
+           |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+           |        ORDER BY sim DESC, neighbor_id) AS rank FROM s)
+           |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
+           |FROM r WHERE rank <= 5""".stripMargin
+      }),
     // reciprocal-rank fusion of the lexical (BM25) and semantic (cosine
     // top-k for the doc-0 embedding) rankings — the standard
     // score-free hybrid-retrieval combiner (rrf = Σ 1/(60 + rank)).
     // Both legs are 20-row frames after their own top-k, so the fusion
     // join, window and re-rank are driver-trivial; determinism comes
     // free (ranks are ints, 1/(60+r) is one IEEE division each)
-    "search_rrf" -> ((s, dir) => {
+    Query("search_rrf", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val bm = graft.functions.TermStats
         .bm25TopK(Tables.load(s, dir, "documents"), "doc_id", "text",
@@ -399,9 +592,39 @@ object VectorQueries {
           (leg(col("r_lex")) + leg(col("r_sem"))).as("rrf"))
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(10)
-    }),
+    },
+      // same two legs, same 1/(60+r) fusion
+      oracle = {
+        val bmSql = graft.functions.TermStats.bm25TopKSql(
+          "doc_id", "string_split(text, ' ')", TextQueries.Bm25Query, k = 20)
+        s"""WITH bm_raw AS ($bmSql),
+           |bm AS (
+           |  SELECT doc_id, CAST(ROW_NUMBER() OVER (
+           |    ORDER BY score_fp DESC, doc_id) AS INT) AS r_lex
+           |  FROM bm_raw),
+           |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+           |      FROM embeddings WHERE vec_id = 0),
+           |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
+           |      FROM embeddings),
+           |s AS (
+           |  SELECT query_id, neighbor_id,
+           |         list_dot_product(qv, cv) /
+           |           (sqrt(list_dot_product(qv, qv)) *
+           |            sqrt(list_dot_product(cv, cv))) AS sim
+           |  FROM q, c WHERE query_id <> neighbor_id),
+           |ann AS (
+           |  SELECT neighbor_id AS doc_id, CAST(rank AS INT) AS r_sem
+           |  FROM (SELECT neighbor_id, ROW_NUMBER() OVER (
+           |          ORDER BY sim DESC, neighbor_id) AS rank FROM s)
+           |  WHERE rank <= 20)
+           |SELECT COALESCE(bm.doc_id, ann.doc_id) AS doc_id, r_lex, r_sem,
+           |  COALESCE(CAST(1 AS DOUBLE) / CAST(60 + r_lex AS DOUBLE), 0.0) +
+           |    COALESCE(CAST(1 AS DOUBLE) / CAST(60 + r_sem AS DOUBLE), 0.0)
+           |    AS rrf
+           |FROM bm FULL OUTER JOIN ann ON bm.doc_id = ann.doc_id
+           |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin
+      }),
   )
-
 
   /** 16 deterministic unit-norm centroids (±1/8 per dimension via the
     * same splitmix sign source as the LSH planes, offset to decouple) —
@@ -654,241 +877,6 @@ object VectorQueries {
        |SELECT query_id, neighbor_id, hamming, CAST(rank AS BIGINT) AS rank
        |FROM r WHERE rank <= 5""".stripMargin
   }
-
-  def oracles: Map[String, String] = Map(
-    "ann_hamming" -> hammingOracleSql,
-    // mirrors search_rrf: same two legs, same 1/(60+r) fusion
-    "search_rrf" -> {
-      val bmSql = graft.functions.TermStats.bm25TopKSql(
-        "doc_id", "string_split(text, ' ')", TextQueries.Bm25Query, k = 20)
-      s"""WITH bm_raw AS ($bmSql),
-         |bm AS (
-         |  SELECT doc_id, CAST(ROW_NUMBER() OVER (
-         |    ORDER BY score_fp DESC, doc_id) AS INT) AS r_lex
-         |  FROM bm_raw),
-         |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-         |      FROM embeddings WHERE vec_id = 0),
-         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-         |      FROM embeddings),
-         |s AS (
-         |  SELECT query_id, neighbor_id,
-         |         list_dot_product(qv, cv) /
-         |           (sqrt(list_dot_product(qv, qv)) *
-         |            sqrt(list_dot_product(cv, cv))) AS sim
-         |  FROM q, c WHERE query_id <> neighbor_id),
-         |ann AS (
-         |  SELECT neighbor_id AS doc_id, CAST(rank AS INT) AS r_sem
-         |  FROM (SELECT neighbor_id, ROW_NUMBER() OVER (
-         |          ORDER BY sim DESC, neighbor_id) AS rank FROM s)
-         |  WHERE rank <= 20)
-         |SELECT COALESCE(bm.doc_id, ann.doc_id) AS doc_id, r_lex, r_sem,
-         |  COALESCE(CAST(1 AS DOUBLE) / CAST(60 + r_lex AS DOUBLE), 0.0) +
-         |    COALESCE(CAST(1 AS DOUBLE) / CAST(60 + r_sem AS DOUBLE), 0.0)
-         |    AS rrf
-         |FROM bm FULL OUTER JOIN ann ON bm.doc_id = ann.doc_id
-         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin
-    },
-    "hybrid_search" -> {
-      val toks = "string_split(text, ' ')"
-      s"""WITH keep AS (
-         |  SELECT doc_id AS kid FROM documents
-         |  WHERE (${graft.functions.TextAnalysis.qualityScoreSql(toks)}) >= 0.4),
-         |e AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings JOIN keep ON vec_id = kid),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 16),
-         |s AS (
-         |  SELECT query_id, vec_id AS neighbor_id,
-         |    list_dot_product(qv, v) /
-         |      (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS sim
-         |  FROM q, e WHERE vec_id <> query_id),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY sim DESC, neighbor_id) AS rank FROM s)
-         |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
-         |FROM r WHERE rank <= 5""".stripMargin
-    },
-    "semantic_dedup_cells" -> semanticDedupOracleSql,
-    "ann_pq_fixed" -> pqOracleSql,
-    "ann_ivfpq_fixed" -> ivfPqOracleSql,
-    "embed_quantize" ->
-      s"""WITH $quantCtes
-         |SELECT vec_id, scale,
-         |  CAST(list_sum(qv) AS BIGINT) AS q_sum,
-         |  CAST(list_dot_product(qv, qv) AS BIGINT) AS q_norm2
-         |FROM q""".stripMargin,
-    "ann_topk_q8" ->
-      s"""WITH $quantCtes,
-         |qq AS (SELECT vec_id AS query_id, qv AS qqv FROM q WHERE vec_id < 8),
-         |cc AS (SELECT vec_id AS neighbor_id, qv AS cqv FROM q),
-         |s AS (
-         |  SELECT query_id, neighbor_id,
-         |         list_dot_product(qqv, cqv) /
-         |           (sqrt(list_dot_product(qqv, qqv)) * sqrt(list_dot_product(cqv, cqv))) AS sim
-         |  FROM qq, cc WHERE query_id <> neighbor_id
-         |),
-         |r AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-         |  FROM s
-         |)
-         |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
-         |FROM r WHERE rank <= 5""".stripMargin,
-    // mirrors prefixRecall(k = 5, prefixes = 8/16/32)
-    "embed_prefix_recall" -> prefixRecallSql(5, Seq(8, 16, 32)),
-    // mirrors hubnessHistogram: same brute-force kNN arithmetic, then
-    // the integer k-occurrence histogram (antihubs via the left join)
-    "embed_hubness" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 512
-        |),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, neighbor_id,
-        |         list_dot_product(qv, cv) /
-        |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS sim
-        |  FROM q, c WHERE query_id <> neighbor_id
-        |),
-        |r AS (
-        |  SELECT neighbor_id,
-        |         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        |  FROM s
-        |),
-        |knn AS (SELECT neighbor_id FROM r WHERE rank <= 5),
-        |deg AS (
-        |  SELECT e.vec_id, CAST(COUNT(k.neighbor_id) AS BIGINT) AS in_degree
-        |  FROM embeddings e LEFT JOIN knn k ON e.vec_id = k.neighbor_id
-        |  GROUP BY e.vec_id
-        |)
-        |SELECT in_degree, CAST(COUNT(*) AS BIGINT) AS n_vectors
-        |FROM deg GROUP BY in_degree""".stripMargin,
-    "ann_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 8
-        |),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, neighbor_id,
-        |         list_dot_product(qv, cv) /
-        |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS sim
-        |  FROM q, c WHERE query_id <> neighbor_id
-        |),
-        |r AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        |  FROM s
-        |)
-        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
-        |FROM r WHERE rank <= 5""".stripMargin,
-    // the same sequential fold in vec_id order — float addition order
-    // pinned, so the doubles match bit-for-bit
-    "embed_centroids" ->
-      """WITH e AS (
-        |  SELECT label, vec_id, i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS v
-        |  FROM embeddings
-        |  CROSS JOIN (SELECT unnest(range(0, 64)) AS i) g
-        |),
-        |c AS (
-        |  SELECT label, pos,
-        |    SUM(v) OVER (PARTITION BY label, pos ORDER BY vec_id
-        |                 ROWS UNBOUNDED PRECEDING) AS cs,
-        |    ROW_NUMBER() OVER (PARTITION BY label, pos ORDER BY vec_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY label, pos) AS cnt
-        |  FROM e
-        |)
-        |SELECT label, pos, cs / cnt AS mean_v, CAST(cnt AS BIGINT) AS n_vecs
-        |FROM c WHERE rn = cnt""".stripMargin,
-    "embed_neardup" -> neardupOracleSql,
-    "ann_lsh" -> lshTopKOracleSql,
-    // mirrors randomProjection(outDims = 8): the same ±1 sign matrix is
-    // interpolated as literal signs over the shared ×64 grid idiom
-    "embed_project" -> {
-      import graft.functions.Embeddings
-      val ps = (0 until 8).map(d =>
-        s"CAST(${Embeddings.randomProjectionSql("cv", d)} AS BIGINT) AS p$d")
-        .mkString(",\n|  ")
-      s"""WITH g AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |      x -> CAST(LEAST(GREATEST(FLOOR(x * 64 + 0.5), -127), 127) AS BIGINT)) AS cv
-         |  FROM embeddings)
-         |SELECT vec_id,
-         |  $ps
-         |FROM g""".stripMargin
-    },
-    // mirrors projectTopK(k=5, shortlist=50, outDims=8): same literal
-    // sign sums for the coarse stage, grid-double cosine for the rerank
-    "ann_project_topk" -> {
-      import graft.functions.Embeddings
-      val ps = (0 until 16).map(d =>
-        s"CAST(${Embeddings.randomProjectionSql("cv", d)} AS BIGINT) AS p$d")
-        .mkString(",\n|    ")
-      val coarse = (0 until 16).map(d => s"q.p$d * c.p$d").mkString(" + ")
-      s"""WITH g AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |      x -> CAST(LEAST(GREATEST(FLOOR(x * 64 + 0.5), -127), 127) AS BIGINT)) AS cv
-         |  FROM embeddings),
-         |p AS (
-         |  SELECT vec_id,
-         |    $ps
-         |  FROM g),
-         |co AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    $coarse AS coarse
-         |  FROM p q JOIN p c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
-         |sh AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY coarse DESC, neighbor_id) AS r FROM co)
-         |  WHERE r <= 50),
-         |gd AS (
-         |  SELECT vec_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS dv
-         |  FROM g),
-         |nv AS (
-         |  SELECT vec_id, dv, sqrt(list_dot_product(dv, dv)) AS n FROM gd),
-         |rr AS (
-         |  SELECT s.query_id, s.neighbor_id,
-         |    list_dot_product(q.dv, c.dv) / (q.n * c.n) AS sim
-         |  FROM sh s JOIN nv q ON q.vec_id = s.query_id
-         |            JOIN nv c ON c.vec_id = s.neighbor_id),
-         |rk AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |    ORDER BY sim DESC, neighbor_id) AS rank FROM rr)
-         |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim
-         |FROM rk WHERE rank <= 5""".stripMargin
-    },
-    // self-grading verdict (see the ann_ivf query comment): DuckDB owns
-    // n_queries; TRUE is the asserted recall verdict — if Spark's trained
-    // IVF ever drops below the 0.3 recall floor the flag flips and the
-    // hash gate trips
-    "ann_ivf" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |       TRUE AS recall_floor_met
-        |FROM embeddings WHERE vec_id < 64""".stripMargin,
-    // same self-grading verdict for the broadcast-relation path
-    "ann_ivf_frame" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |       TRUE AS recall_floor_met
-        |FROM embeddings WHERE vec_id < 64""".stripMargin,
-    "ann_ivf_fixed" -> ivfFixedOracleSql,
-    "ann_kmeans_quality" -> kmeansQualityOracleSql,
-    "embed_dedup_canonical" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($neardupOracleSql)),
-         |e AS (
-         |  SELECT id_a AS src, id_b AS dst FROM p
-         |  UNION
-         |  SELECT id_b AS src, id_a AS dst FROM p
-         |),
-         |reach(id, lbl) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.src, r.lbl FROM e JOIN reach r ON e.dst = r.id
-         |),
-         |cl AS (SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id)
-         |SELECT v.vec_id FROM (
-         |  SELECT vec_id FROM embeddings WHERE vec_id % 4 = 0
-         |) v
-         |LEFT JOIN (SELECT id FROM cl WHERE id <> cluster_id) d ON v.vec_id = d.id
-         |WHERE d.id IS NULL""".stripMargin,
-  )
 
   /** Full DuckDB mirror of [[Similarity.lshTopK]] (bits=24, bands=3,
     * k=5): the hyperplane sketch is reproducible because bit i is just

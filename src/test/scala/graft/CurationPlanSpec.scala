@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.TextQueries
-
 /** Plan assertions for the composed curation pipelines — the queries
   * whose scale behavior depends on Catalyst/AQE picking the right
   * physical join, not just on the declared shape.
@@ -15,7 +13,7 @@ class CurationPlanSpec extends SparkSpec {
     // measures tiny; SMJ is the acceptable at-scale fallback), and a
     // BroadcastNestedLoopJoin anywhere in the final adaptive plan would
     // mean the join degenerated
-    val df = TextQueries.queries("curate_corpus_full")(spark, Sf)
+    val df = SparkEntry.queries("curate_corpus_full")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("LeftAnti"), plan.take(3000))
@@ -30,7 +28,7 @@ class CurationPlanSpec extends SparkSpec {
     // corpus explode doesn't run per reference; the totals side is a
     // 1-row broadcast (the only sanctioned cross join); the top-k must
     // be TakeOrdered, never a global sort
-    val df = TextQueries.queries("search_bm25")(spark, Sf)
+    val df = SparkEntry.queries("search_bm25")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan.take(3000))
@@ -44,7 +42,7 @@ class CurationPlanSpec extends SparkSpec {
     // canonicalization is parse_url expressions in the scan's project;
     // any Exchange means the URL work left the scan, any UDF breaks
     // whole-stage codegen on a per-row hot path
-    val df = TextQueries.queries("web_url_canonical")(spark, Sf)
+    val df = SparkEntry.queries("web_url_canonical")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(3000))
@@ -56,7 +54,7 @@ class CurationPlanSpec extends SparkSpec {
     // the ≤16-per-domain quota must plan as WindowGroupLimit (map-side
     // top-k heaps), the per-domain join-back and 1-row totals must
     // broadcast, and nothing may degenerate to a nested loop over data
-    val df = TextQueries.queries("web_domain_concentration")(spark, Sf)
+    val df = SparkEntry.queries("web_domain_concentration")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(3000))
@@ -68,7 +66,7 @@ class CurationPlanSpec extends SparkSpec {
     // group-by-canonical must partial-aggregate map-side (HashAggregate
     // below the exchange), and exactly one data exchange may exist —
     // the canonical-key one
-    val df = TextQueries.queries("web_url_dedup")(spark, Sf)
+    val df = SparkEntry.queries("web_url_dedup")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), plan.take(3000))
@@ -79,7 +77,7 @@ class CurationPlanSpec extends SparkSpec {
   test("vocab_bpe_encode plan: vocabulary join carries no broadcast hint") {
     // the vocab is corpus-derived (unbounded) — the word-key join must
     // come from AQE's size check, not a forced hint; and no nested loop
-    val df = TextQueries.queries("vocab_bpe_encode")(spark, Sf)
+    val df = SparkEntry.queries("vocab_bpe_encode")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
@@ -87,7 +85,7 @@ class CurationPlanSpec extends SparkSpec {
   }
 
   test("train_manifest_full: contiguous gap-free offsets, no nested loops") {
-    val df = TextQueries.queries("train_manifest_full")(spark, Sf)
+    val df = SparkEntry.queries("train_manifest_full")(spark, Sf)
     val rows = df.select("n_tokens", "start_offset", "end_offset")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._2)
@@ -110,11 +108,11 @@ class CurationPlanSpec extends SparkSpec {
     // the static planner must still produce a correct (if less optimal)
     // plan — this is the degraded-config resilience the no-hint design
     // claims. Results must match the AQE run exactly.
-    val withAqe = TextQueries.queries("curate_corpus_full")(spark, Sf)
+    val withAqe = SparkEntry.queries("curate_corpus_full")(spark, Sf)
       .collect().map(_.toString).sorted
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val noAqe = TextQueries.queries("curate_corpus_full")(spark, Sf)
+      val noAqe = SparkEntry.queries("curate_corpus_full")(spark, Sf)
         .collect().map(_.toString).sorted
       assert(noAqe.sameElements(withAqe))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -126,7 +124,7 @@ class CurationPlanSpec extends SparkSpec {
     // pick); a nested loop or cartesian would mean the blocking
     // degenerated into a pair join, which this operator by design
     // never performs
-    val df = TextQueries.queries("dedup_exact_substr")(spark, Sf)
+    val df = SparkEntry.queries("dedup_exact_substr")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
@@ -142,11 +140,11 @@ class CurationPlanSpec extends SparkSpec {
     // same degraded-config contract as curate_corpus_full: the unforced
     // mark join leans on AQE's runtime size check, and the static
     // planner must still produce the identical result
-    val withAqe = TextQueries.queries("dedup_exact_substr")(spark, Sf)
+    val withAqe = SparkEntry.queries("dedup_exact_substr")(spark, Sf)
       .collect().map(_.toString).sorted
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val noAqe = TextQueries.queries("dedup_exact_substr")(spark, Sf)
+      val noAqe = SparkEntry.queries("dedup_exact_substr")(spark, Sf)
         .collect().map(_.toString).sorted
       assert(noAqe.sameElements(withAqe))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -160,7 +158,7 @@ class CurationPlanSpec extends SparkSpec {
     // a global Sort). This pins both against a Spark-upgrade plan flip,
     // which on a power-user-skewed 100 TB event log would degrade the
     // query from two bounded heaps to a data-sized sort.
-    val df = graft.queries.AnalyticsQueries.queries("events_top_paths")(spark, Sf)
+    val df = SparkEntry.queries("events_top_paths")(spark, Sf)
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(3000))
@@ -176,7 +174,7 @@ class CurationPlanSpec extends SparkSpec {
   test("q_skyline: no data-sized single-partition window; result matches brute force") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     import org.apache.spark.sql.functions.col
-    val df = graft.queries.AnalyticsQueries.queries("q_skyline")(spark, Sf)
+    val df = SparkEntry.queries("q_skyline")(spark, Sf)
     // exactly one unpartitioned window in the optimized plan — the
     // bucket-carry running min — and its subtree must aggregate down to
     // the single-key bucket frame (<= 256 rows) before the window sees

@@ -567,7 +567,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("quality bands: per-band tokens reconcile and cumulate from the top") {
-    val got = TextQueries.queries("text_quality_bins")(spark, Sf)
+    val got = SparkEntry.queries("text_quality_bins")(spark, Sf)
       .select("band", "n_tokens", "cum_tokens_from_top")
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     val total = docs.select(sum(size(split(col("text"), " ")).cast("long")))
@@ -1227,7 +1227,7 @@ class DedupSimilaritySpec extends SparkSpec {
         e.filter(col("vec_id") < 4), e, "vec_id", "embedding", k = 5)
       .select(col("query_id"), col("neighbor_id"))
       .as[(Long, Long)].collect().toSet
-    val pq = graft.queries.VectorQueries.queries("ann_pq_fixed")(spark, Sf)
+    val pq = SparkEntry.queries("ann_pq_fixed")(spark, Sf)
       .select(col("query_id"), col("neighbor_id"))
       .as[(Long, Long)].collect().toSet
     val hit = truth.count(pq.contains)
@@ -1238,7 +1238,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("IVF+PQ: candidates confined to probed lists, ranks contiguous, recall measured") {
-    val out = graft.queries.VectorQueries.queries("ann_ivfpq_fixed")(spark, Sf)
+    val out = SparkEntry.queries("ann_ivfpq_fixed")(spark, Sf)
       .select("query_id", "neighbor_id", "cid", "rank")
       .as[(Long, Long, Long, Long)].collect()
     assert(out.nonEmpty)
@@ -1403,7 +1403,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val exact = raw.getAs[Long]("e").toDouble
     assert(math.abs(approx - exact) / exact < 0.05, s"approx=$approx exact=$exact")
     // the oracle-checked query publishes the deterministic verdict
-    val row = graft.queries.AnalyticsQueries.queries("q_approx_distinct")(spark, Sf)
+    val row = SparkEntry.queries("q_approx_distinct")(spark, Sf)
       .collect()(0)
     assert(row.getAs[Boolean]("approx_within_5pct"))
     assert(row.getAs[Long]("exact_parts").toDouble === exact)

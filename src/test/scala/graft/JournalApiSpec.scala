@@ -128,6 +128,32 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(!store.isRunning("a/b") && store.runLockOwner("a/b").isEmpty)
   }
 
+  test("runningJobs lists a held lock before its job_summary row is written") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val store = new MetadataStore(root)
+    val api = new ResultsApi(store)
+    // a first run between acquiring its lock and writing job_summary
+    assert(store.acquireRunLock("first") && !store.exists("job_summary"))
+    assert(api.runningJobs().as[String].collect().toSeq === Seq("first"))
+    store.releaseRunLock("first")
+    val src = ParquetSource(Sf)
+    // orders: the end-to-end test reads the JVM-wide lineitem metrics
+    val tgt = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame =
+        Perturb.ordersTarget(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    new DiffRunner(src, tgt, DiffJobConfig("done", Seq(Perturb.ordersSpec),
+      DiffOptions(buckets = 4), metadataRoot = root)).run()
+    assert(api.runningJobs().count() === 0)
+    // a second job's lock, its summary row not yet written next to "done"'s
+    assert(store.acquireRunLock("second"))
+    val running = api.runningJobs().collect()
+    assert(running.map(_.getAs[String]("job_id")).toSeq === Seq("second"))
+    assert(running.head.getAs[String]("start_time") === null)
+  }
+
   test("local frames written on the driver read back as Spark writes them") {
     implicit val s: SparkSession = spark
     // a job id that needs partition-path escaping

@@ -15,8 +15,11 @@ sbt -batch compile test
 # dirty_full runs traced: one diff job may submit at most MAX_JOBS Spark
 # jobs (21 once reads learned schemas and run counts from parquet footers
 # and the driver wrote the rows it holds), so a new fixed per-job cost
-# fails here
+# fails here. The oracle gate must check at least MIN_QUERIES queries, so
+# a query record lost from the registry, or a SPARK_GRAFT_ONLY selection,
+# fails instead of shrinking the gate
 MAX_JOBS=21
+MIN_QUERIES=243
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
   TRACE=$([ "$W" = dirty_full ] && echo 1 || echo 0)
@@ -38,7 +41,16 @@ echo "== verify vs duckdb oracle ($SF) =="
 # driver's own invocation is lenient-but-loud; see Verify.scala)
 SPARK_GRAFT_VERIFY_STRICT=1 \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch "runMain graft.Verify $SF $OUT"
-python3 tools/check_oracle.py "$SF" "$OUT"
+python3 tools/check_oracle.py "$SF" "$OUT" | tee "$OUT/check_oracle.log"
+# every registered query dumped, and both oracle keys of each (bare and
+# .parquet) passed
+python3 -c 'import json, re, sys
+v = json.load(open(sys.argv[1] + "/verify_failures.json"))
+n, dumped, want = v["registered"], v["dumped"], int(sys.argv[2])
+passed = int(re.search(r"== (\d+) pass", open(sys.argv[1] + "/check_oracle.log").read())[1])
+ok = dumped == n and n >= want and passed == 2 * n
+print(f"registered {n} (min {want}), dumped {dumped}, oracle passes {passed}")
+sys.exit(0 if ok else 1)' "$OUT" "$MIN_QUERIES"
 
 echo "== bench ($SF) =="
 REPORT="$OUT/bench_report.json"
