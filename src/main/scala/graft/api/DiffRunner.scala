@@ -2,7 +2,7 @@ package graft.api
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
-import scala.collection.mutable.ListBuffer
+import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -25,7 +25,8 @@ import graft.sources.SourceProvider
   *     job_summary + table_params
   *  2. tables run concurrently, at most `defaultParallelism` at once (the
   *     reference compares every table of a split in one executor task,
-  *     Differ.java:150-236): per table, partition stats as ONE persisted
+  *     Differ.java:150-236): per table, every bucket decided on the
+  *     driver from collected rows, partition stats as ONE persisted
   *     query; its journal writes keep their order — mismatches, then
   *     task_status (bucket progress), then bucket digests, then reverse
   *     checks and job_results
@@ -42,12 +43,13 @@ final case class DiffJobConfig(
     retry: graft.journal.RetryPolicy = graft.journal.RetryPolicy.NoRetry,
     // cross-RUN incremental mode: journal per-bucket side digests each
     // run; a later run of the same job_id re-diffs ONLY buckets whose
-    // digests changed on either side — unchanged buckets keep their
-    // journal rows (task_status latest-per-bucket totals and persisted
-    // mismatch rows ARE the replay). Subsumes the resume filter.
+    // digests changed on either side, compared on the driver — unchanged
+    // buckets keep their journal rows (task_status latest-per-bucket
+    // totals and persisted mismatch rows ARE the replay). Subsumes the
+    // resume filter; with digestFirst both share one digest pass.
     incremental: Boolean = false,
-    // single-RUN digest prefilter: compare per-bucket digests of the two
-    // sides first (a narrow ≤ buckets-row shuffle) and feed ONLY the
+    // single-RUN digest prefilter: digest both sides per bucket first (a
+    // narrow ≤ buckets-row shuffle, collected) and feed ONLY the
     // disagreeing buckets to the wide full-PK join; digest-equal buckets
     // journal their phase-1 arithmetic rows directly. On a
     // mostly-matching corpus the wide join shrinks to the dirty
@@ -218,166 +220,152 @@ final class DiffRunner(
     } finally store.releaseRunLock(config.jobId)
   }
 
-  /** One table's pipeline: quarantine → resume/digest restrictions →
-    * persisted partitionStats → journal sinks → totals. Its journal
-    * writes keep the reference's order: mismatches (and the repair
-    * script), then task_status, then bucket digests last.
+  /** One table's pipeline: quarantine → bucket decisions, on the driver
+    * from rows collected once → persisted partitionStats → journal sinks
+    * → totals. Its journal writes keep the reference's order: mismatches
+    * (and the repair script), then task_status, then bucket digests last.
     */
   private def diffTable(store: MetadataStore, options: DiffOptions,
       token: Seq[Column] => Column, runTs: Long,
       spec0: TableSpec): (String, RangeStats) = {
     import spark.implicits._
-    // every frame this table persists, freed however the table ends
-    val persisted = ListBuffer.empty[DataFrame]
-    def persist(df: DataFrame): DataFrame = { persisted += df; df.persist() }
-    try {
-      require(spec0.pk.nonEmpty,
-        s"table ${spec0.table}: partition key columns must be declared")
-      // each side is opened once: one file listing and schema read
-      val srcTable = source.table(spark, spec0.table)
-      val spec = spec0.bind(srcTable)
-      // O15: quarantine structurally invalid rows per side (origin
-      // tagged), journal them, diff the clean remainder
-      val sq = graft.engine.Quarantine.split(srcTable, spec, "source")
-      val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
-      store.write("errors",
-        sq.errors.unionByName(tq.errors)
+    require(spec0.pk.nonEmpty,
+      s"table ${spec0.table}: partition key columns must be declared")
+    // each side is opened once: one file listing and schema read
+    val srcTable = source.table(spark, spec0.table)
+    val spec = spec0.bind(srcTable)
+    // every row this run journals carries the table, the job id and the
+    // run's stamp; datasets are partitioned by job_id so per-job endpoint
+    // filters prune at the directory level
+    def journal(dataset: String, df: DataFrame,
+        partitionBy: Seq[String] = Seq("job_id")): Unit =
+      store.write(dataset, df
           .withColumn("table_name", lit(spec.table))
-          .withColumn("job_id", lit(config.jobId)))
-      // this table's rows of a journal dataset, newest run per bucket
-      def latestPerBucket(dataset: String) =
-        store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
-          .filter(col("table_name") === spec.table)
-      // bucket id sets are ≤ options.buckets longs: collected, then
-      // re-broadcast by `restrict` as one join per side
-      def buckets(df: DataFrame): Seq[Long] =
-        df.select(col("bucket").cast("long")).as[Long].collect().toSeq
-      def bucket(r: Row): Long = r.getAs[Number]("bucket").longValue
-      def local(rows: Seq[Row], schema: StructType): DataFrame =
-        spark.createDataFrame(rows.asJava, schema)
-      // this table's newest task_status row per bucket from earlier runs
-      // of this job, ≤ options.buckets rows: the resume skip set, and the
-      // totals of the buckets this run does not journal
-      val priorStatus: Seq[Row] =
-        if (store.exists("task_status")) latestPerBucket("task_status").collect().toSeq
-        else Nil
-      def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
-        DiffEngine.restrictBuckets(df, spec, options.buckets, token,
-          ids.toDF("bucket"), how)
-      val fsrc = DiffEngine.applyTokenFilters(sq.valid, spec, options, token)
-      val ftgt = DiffEngine.applyTokenFilters(tq.valid, spec, options, token)
-      // Incremental mode: digest both sides at the journal-bucket
-      // granularity (digest bucket rule == task_status bucket rule, so
-      // the latest-per-bucket totals below replay unchanged buckets from
-      // the previous run) and journal this run's digests for the next.
-      val curDigests =
-        if (config.incremental)
-          Some(persist(DiffEngine.sideDigests(fsrc, ftgt, spec,
-            options.buckets, token)))
-        else None
-      val priorDigests =
-        if (curDigests.isEmpty || !store.exists("bucket_digests")) None
-        else Some(latestPerBucket("bucket_digests"))
-      // The buckets this run does not re-compare; their journal rows
-      // stand. Incremental mode skips the digest-unchanged buckets.
-      // Otherwise this is O12 resume: the buckets a previous run of this
-      // job finished are skipped (rerun=true re-compares them —
-      // Differ.java:166-171). The runner journals only `done` rows, so
-      // there is no in-progress watermark to honour.
-      val skip: Seq[Long] =
-        if (config.incremental)
-          priorDigests.fold(Seq.empty[Long])(prior =>
-            buckets(DiffEngine.unchangedDigestBuckets(curDigests.get, prior)))
-        else if (config.rerun) Nil
-        else priorStatus.filter(_.getAs[String]("status") == Resume.StatusDone)
-          .map(bucket)
-      // RETIRED buckets: live in the prior digests, gone from both sides
-      // now. With no partitionStats rows they would never get a new
-      // journal row and the latest-per-bucket totals would replay their
-      // stale counters forever, so they get zero task_status rows and a
-      // tombstone digest (every digest field null). The tombstone never
-      // equals a current digest: a bucket whose rows come back is
-      // re-diffed, not replayed as zeros. Tombstoned buckets are not
-      // live, so they retire once.
-      val retired: Seq[Long] = (curDigests, priorDigests) match {
-        case (Some(cur), Some(prior)) =>
-          buckets(prior
-            .filter(col("src_rows").isNotNull || col("tgt_rows").isNotNull)
-            .join(cur, Seq("bucket"), "left_anti"))
-        case _ => Nil
-      }
-      def pending(df: DataFrame): DataFrame =
-        if (skip.isEmpty) df else restrict(df, skip, "left_anti")
-      // digest-first fast path: its ≤ options.buckets rows are collected
-      // once, and both the dirty set and the clean buckets' journal rows
-      // come from them. Only dirty buckets reach the diff.
-      val digestPre =
-        if (config.digestFirst)
-          Some(DiffEngine.digestProgress(pending(fsrc), pending(ftgt), spec,
-            options.buckets, token))
-        else None
-      val digestRows = digestPre.map(_.collect().toSeq)
-      def matched(r: Row): Boolean = r.getAs[Boolean]("digest_match")
-      val dirty = digestRows.map(_.filterNot(matched).map(bucket))
-      def diffed(df: DataFrame): DataFrame =
-        dirty.fold(pending(df))(restrict(pending(df), _, "left_semi"))
-      val src = diffed(fsrc)
-      val tgt = diffed(ftgt)
-      // ONE diff computation per table: persist the per-partition stats
-      // and derive progress, mismatches and totals from it (without the
-      // persist, each journal sink would re-run the join+agg)
-      val ps = persist(DiffEngine.partitionStats(src, tgt, spec, token,
-        tolerances = config.tolerances.getOrElse(spec.table, Map.empty)))
-      // every row this run journals carries the table, the job id and
-      // the run's stamp; datasets are partitioned by job_id so per-job
-      // endpoint filters prune at the directory level
-      def journal(dataset: String, df: DataFrame): Unit =
-        store.write(dataset, df
-            .withColumn("table_name", lit(spec.table))
-            .withColumn("job_id", lit(config.jobId))
-            .withColumn("run_ts", lit(runTs)),
-          partitionBy = Seq("job_id"))
+          .withColumn("job_id", lit(config.jobId))
+          .withColumn("run_ts", lit(runTs)),
+        partitionBy)
+    // O15: quarantine structurally invalid rows per side (origin tagged),
+    // journal them, diff the clean remainder. `errors` stays unpartitioned
+    // so roots journaled before its rows were stamped still read
+    val sq = graft.engine.Quarantine.split(srcTable, spec, "source")
+    val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
+    journal("errors", sq.errors.unionByName(tq.errors), partitionBy = Nil)
+    def bucket(r: Row): Long = r.getAs[Number]("bucket").longValue
+    def byBucket(df: DataFrame): SortedMap[Long, Row] =
+      SortedMap.from(df.collect().map(r => bucket(r) -> r))
+    def local(rows: Iterable[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, schema)
+    // this table's newest row per bucket of a journal dataset, from the
+    // earlier runs of this job: ≤ options.buckets rows
+    def prior(dataset: String): SortedMap[Long, Row] =
+      if (!store.exists(dataset)) SortedMap.empty
+      else byBucket(store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
+        .filter(col("table_name") === spec.table))
+    // the resume skip set, and the totals of the buckets this run does
+    // not journal
+    val priorStatus = prior("task_status")
+    val fsrc = DiffEngine.applyTokenFilters(sq.valid, spec, options, token)
+    val ftgt = DiffEngine.applyTokenFilters(tq.valid, spec, options, token)
+    // ONE digest pass, at the journal-bucket granularity (digest bucket
+    // rule == task_status bucket rule): digest-first's verdicts, which
+    // carry both sides' digests too, else incremental mode's side
+    // digests. Its ≤ options.buckets rows are collected once
+    val digestPass =
+      if (config.digestFirst)
+        Some(DiffEngine.digestProgress(fsrc, ftgt, spec, options.buckets, token))
+      else if (config.incremental)
+        Some(DiffEngine.sideDigests(fsrc, ftgt, spec, options.buckets, token))
+      else None
+    val digests = digestPass.fold(SortedMap.empty[Long, Row])(byBucket)
+    val priorDigests =
+      if (config.incremental) prior("bucket_digests") else SortedMap.empty[Long, Row]
+    def digestOf(r: Row): Seq[Any] = DiffEngine.DigestCols.map(r.getAs[Any])
+    // The buckets this run does not re-compare; their journal rows stand.
+    // Incremental mode skips the buckets whose digests are unchanged on
+    // both sides. Otherwise this is O12 resume: the buckets a previous
+    // run of this job finished are skipped (rerun=true re-compares them —
+    // Differ.java:166-171). The runner journals only `done` rows, so
+    // there is no in-progress watermark to honour.
+    val skip: Set[Long] =
+      if (config.incremental)
+        digests.keySet.filter(b => priorDigests.get(b).map(digestOf)
+          .contains(digestOf(digests(b))))
+      else if (config.rerun) Set.empty
+      else priorStatus.keySet.filter(
+        priorStatus(_).getAs[String]("status") == Resume.StatusDone)
+    // RETIRED buckets: live in the prior digests, gone from both sides
+    // now. With no partitionStats rows they would never get a new journal
+    // row and the latest-per-bucket totals would replay their stale
+    // counters forever, so they get zero task_status rows and a tombstone
+    // digest (every digest field null). The tombstone never equals a
+    // current digest: a bucket whose rows come back is re-diffed, not
+    // replayed as zeros. Tombstoned buckets are not live, so they retire
+    // once.
+    val retired = priorDigests.keySet.filter(b => !digests.contains(b) &&
+      digestOf(priorDigests(b)).exists(_ != null)).toSeq
+    // digest-first: the pending buckets whose digests agree journal their
+    // digest credit; only the disagreeing ones reach the diff
+    val (clean, dirty) =
+      if (!config.digestFirst) (Nil, Nil)
+      else digests.collect { case (b, r) if !skip(b) => r }.toSeq
+        .partition(_.getAs[Boolean]("digest_match"))
+    def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
+      DiffEngine.restrictBuckets(df, spec, options.buckets, token,
+        ids.toDF("bucket"), how)
+    def diffed(df: DataFrame): DataFrame =
+      if (config.digestFirst) restrict(df, dirty.map(bucket), "left_semi")
+      else if (skip.isEmpty) df
+      else restrict(df, skip.toSeq, "left_anti")
+    val src = diffed(fsrc)
+    val tgt = diffed(ftgt)
+    // ONE diff computation per table: persist the per-partition stats and
+    // derive progress, mismatches and totals from it (without the
+    // persist, each journal sink would re-run the join+agg)
+    val ps = DiffEngine.partitionStats(src, tgt, spec, token,
+      tolerances = config.tolerances.getOrElse(spec.table, Map.empty)).persist()
+    try {
       // checkpoint ordering mirrors the reference (mismatches recorded
       // BEFORE a range is marked complete, RangeComparator.java:201-241):
       // a crash between the writes must re-compare, never lose records.
       journal("mismatches",
         DiffEngine.mismatchesFromPartitions(ps, spec, options.buckets)
           .select("table_name", "bucket", "token", "mismatch_type"))
-      // repair script: recorded with the mismatches (same
-      // crash-safety rule — never after the range is marked done).
-      // Normalized to (token, action, statement) so the journal
-      // dataset has ONE schema across tables with different keys;
-      // token is the same per-partition address the mismatch rows
-      // carry, so an operator can join script rows to mismatch rows.
+      // repair script: recorded with the mismatches (same crash-safety
+      // rule — never after the range is marked done). Normalized to
+      // (token, action, statement) so the journal dataset has ONE schema
+      // across tables with different keys; token is the same
+      // per-partition address the mismatch rows carry, so an operator can
+      // join script rows to mismatch rows.
       if (config.repair)
         journal("repair_scripts",
           graft.engine.Repair.repairStatements(src, tgt, spec)
             .select(token(spec.pk.map(col)).as("token"), col("action"),
               col("statement")))
       // with digestFirst, ps covers only dirty buckets — clean buckets
-      // journal their digest-derived arithmetic rows; retired buckets
-      // journal zeros (their last_token reads null). The ≤ options.buckets
-      // rows are collected once: journaled from the driver, and summed
-      // into the totals below.
-      val progress = DiffEngine.bucketProgressFromPartitions(ps, spec,
-        options.buckets) +: digestPre.zip(digestRows).toSeq.map {
-          case (d, rows) => local(rows.filter(matched), d.schema).drop("digest_match")
-        }
+      // journal their digest credit; retired buckets journal zeros (their
+      // last_token reads null). The ≤ options.buckets rows are collected
+      // once: journaled from the driver, and summed into the totals below.
+      val credit = digestPass.filter(_ => clean.nonEmpty).map(d =>
+        local(clean, d.schema).drop("digest_match" +: DiffEngine.DigestCols: _*))
       val zeroes = retired.toDF("bucket")
         .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
-      val status = (progress :+ zeroes)
+      val status = (DiffEngine.bucketProgressFromPartitions(ps, spec,
+          options.buckets) +: credit.toSeq :+ zeroes)
         .reduce(_.unionByName(_, allowMissingColumns = true))
         .withColumn("status", lit(Resume.StatusDone))
       val statusRows = status.collect().toSeq
       journal("task_status", local(statusRows, status.schema))
-      // digests are journaled LAST: a crash before this point leaves
-      // the OLD digests in place, so the next incremental run still
-      // sees the affected buckets as changed and re-compares them —
-      // writing digests first would instead mask a half-journaled run
-      // as fully unchanged and lose its records permanently
-      curDigests.foreach { cur =>
-        journal("bucket_digests", cur.unionByName(retired.toDF("bucket"),
-          allowMissingColumns = true))
+      // digests are journaled LAST, from the driver: a crash before this
+      // point leaves the OLD digests in place, so the next incremental
+      // run still sees the affected buckets as changed and re-compares
+      // them — writing digests first would instead mask a half-journaled
+      // run as fully unchanged and lose its records permanently
+      if (config.incremental) {
+        val fields = "bucket" +: DiffEngine.DigestCols
+        journal("bucket_digests", local(
+          digests.values.map(r => Row.fromSeq(fields.map(r.getAs[Any]))) ++
+            retired.map(b => Row.fromSeq(b +: DiffEngine.DigestCols.map(_ => null))),
+          StructType(fields.map(digestPass.get.schema(_)))))
       }
       // O3: the sampled reverse-read validation pass
       // (DiffContext.java:54-57) — re-compare sampled partitions with
@@ -394,8 +382,7 @@ final class DiffRunner(
       // the buckets it did not journal (a resumed run covers only the
       // pending remainder). The run lock excludes every other writer of
       // this job, so no newer row can exist. Null counters count 0.
-      val journaled = statusRows.map(bucket).toSet
-      val counted = statusRows ++ priorStatus.filterNot(r => journaled(bucket(r)))
+      val counted = (priorStatus ++ statusRows.map(r => bucket(r) -> r)).values
       val sums = DiffEngine.Counters.map(c =>
         counted.map(r => Option(r.getAs[Number](c)).fold(0L)(_.longValue)).sum)
       val skipped =
@@ -406,7 +393,7 @@ final class DiffRunner(
         DiffRunner.TotalsSchema)
       journal("job_results", local(Seq(totals), totals.schema))
       spec.table -> MetadataStore.toRangeStats(totals)
-    } finally persisted.foreach(_.unpersist())
+    } finally ps.unpersist()
   }
 }
 

@@ -27,7 +27,6 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   // too: it never deletes mismatch rows).
   private def mismatch(jobId: String): DataFrame =
     store.latest("mismatches", jobId, Seq("table_name", "bucket", "token"))
-  private def errors: DataFrame = store.read("errors")
 
   /** GET /jobs/running (DiffJobsResource.java:60-66): every id whose run
     * lock is held, with its `job_summary` columns once they are written
@@ -74,23 +73,23 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     mismatch(jobId).groupBy("table_name", "mismatch_type")
       .agg(count(lit(1)).as("n"))
 
-  /** GET /jobs/{id}/errors (DiffJobsResource.java:131-137). */
+  /** GET /jobs/{id}/errors (DiffJobsResource.java:131-137): each table's
+    * newest run, as every run quarantines the table's rows again.
+    */
   def jobErrors(jobId: String): DataFrame =
-    errors.filter(col("job_id") === jobId)
+    store.latestUnpartitioned("errors", jobId, Seq("table_name"))
 
   /** GET /jobs/{id}/errors/summary — error counts per table
     * (DBService.java:230-247).
     */
   def errorSummary(jobId: String): DataFrame =
-    errors.filter(col("job_id") === jobId)
-      .groupBy("table_name").agg(count(lit(1)).as("n"))
+    jobErrors(jobId).groupBy("table_name").agg(count(lit(1)).as("n"))
 
   /** GET /jobs/{id}/errors/ranges — distinct errored tokens per table
     * (DBService.java:249-265).
     */
   def errorRanges(jobId: String): DataFrame =
-    errors.filter(col("job_id") === jobId)
-      .select("table_name", "token").distinct()
+    jobErrors(jobId).select("table_name", "token").distinct()
 
   /** GET /jobs/{id}/repair[/{table}] — the generated reconciliation
     * script (engine extension; the reference stops at reporting,

@@ -744,25 +744,13 @@ object DiffEngine {
       .join(dirty, expr(s"node DIV $fanout") === col("__parent"), "left_semi"))
   }
 
-  /** The [[sideDigests]] payload columns — the full set a bucket must
-    * match null-safely to count as unchanged. Public so journal-side
-    * consumers (DiffRunner) share one definition with
-    * [[unchangedDigestBuckets]] instead of drifting copies.
+  /** The [[sideDigests]] payload columns, which [[digestProgress]] rows
+    * carry too — the full set a bucket must match null-safely to count
+    * as unchanged across runs ([[incrementalDiff]], and the runner's
+    * incremental mode, which compares collected rows on the driver).
     */
   val DigestCols: Seq[String] =
     for (side <- Seq("src", "tgt"); f <- DigestFields) yield s"${side}_$f"
-
-  /** Buckets present in BOTH digest frames with every [[DigestCols]]
-    * field null-safe equal — the replay-eligible set of
-    * [[incrementalDiff]] and the runner's incremental mode.
-    */
-  def unchangedDigestBuckets(cur: DataFrame, prior: DataFrame): DataFrame = {
-    val p = prior.select(
-      col("bucket") +: DigestCols.map(c => col(c).as(s"__p_$c")): _*)
-    cur.join(p, Seq("bucket"))
-      .filter(DigestCols.map(c => col(c) <=> col(s"__p_$c")).reduce(_ && _))
-      .select("bucket")
-  }
 
   /** Cross-RUN incremental diff. Given the previous run's
     * [[sideDigests]] frame and its mismatch journal, re-diffs ONLY the
@@ -789,8 +777,12 @@ object DiffEngine {
     // broadcast replays the current-digest scans AND the caller's
     // prior-digest derivation. EAGER — same broadcast-timeout rationale
     // (and same executor-local-block caveat) as digestDiff's dirty set.
-    val unchanged = unchangedDigestBuckets(
-      sideDigests(src, tgt, spec, digestBuckets, token), priorDigests)
+    val prior = priorDigests.select(
+      col("bucket") +: DigestCols.map(c => col(c).as(s"__p_$c")): _*)
+    val unchanged = sideDigests(src, tgt, spec, digestBuckets, token)
+      .join(prior, Seq("bucket"))
+      .filter(DigestCols.map(c => col(c) <=> col(s"__p_$c")).reduce(_ && _))
+      .select("bucket")
       .localCheckpoint()
     def fresh(df: DataFrame) =
       restrictBuckets(df, spec, digestBuckets, token, unchanged, "left_anti")
@@ -801,17 +793,21 @@ object DiffEngine {
 
   /** Single-run digest prefilter at the JOURNAL bucket granularity — the
     * runner-facing cut of [[digestRangeStats]]. One row per bucket seen on
-    * either side: `digest_match` plus the phase-1 arithmetic progress a
-    * CLEAN bucket journals directly (every partition matched, so
-    * matched_partitions = distinct-pk count, matched_rows = rows,
-    * matched_values = rows × |regular|, last_token from the digest
-    * aggregate) — column-compatible with [[bucketProgressFromPartitions]],
-    * so the runner unions clean rows into task_status and restricts the
-    * wide diff to the dirty set. Counters are only meaningful where
-    * `digest_match`; dirty buckets re-run the full join. The shuffle here
-    * is ≤ 2 × `buckets` narrow rows (map-side partial aggregation) — on a
-    * mostly-matching 100 TB corpus this is what turns the journaling
-    * entry point's wide join into O(dirty fraction).
+    * either side: `(bucket, digest_match, <Counters>, last_token,
+    * <DigestCols>, table_name)`. The counters and `last_token` are the
+    * phase-1 arithmetic progress a CLEAN bucket journals directly (every
+    * partition matched, so matched_partitions = distinct-pk count,
+    * matched_rows = rows, matched_values = rows × |regular|, last_token
+    * from the digest aggregate) — column-compatible with
+    * [[bucketProgressFromPartitions]], so the runner unions clean rows
+    * into task_status and restricts the wide diff to the dirty set; the
+    * [[DigestCols]] are both sides' digests, so the same rows serve an
+    * incremental run as [[sideDigests]] would. Counters are only
+    * meaningful where `digest_match`; dirty buckets re-run the full
+    * join. The shuffle here is ≤ 2 × `buckets` narrow rows (map-side
+    * partial aggregation) — on a mostly-matching 100 TB corpus this is
+    * what turns the journaling entry point's wide join into O(dirty
+    * fraction).
     */
   def digestProgress(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame = {
@@ -824,9 +820,9 @@ object DiffEngine {
     digestSides(src, tgt, spec, buckets, token, Seq(
         countDistinct(spec.pk.head, spec.pk.tail: _*).as("parts"),
         max(col("__tok")).as("last_token")))
-      .select(col("bucket") +: digestMatch.as("digest_match") +:
-        Counters.map(c => credit.getOrElse(c, lit(0L)).as(c)) :+
-        col("src_last_token").as("last_token"): _*)
+      .select(Seq(col("bucket"), digestMatch.as("digest_match")) ++
+        Counters.map(c => credit.getOrElse(c, lit(0L)).as(c)) ++
+        (col("src_last_token").as("last_token") +: DigestCols.map(col)): _*)
       .withColumn("table_name", lit(spec.table))
   }
 

@@ -34,8 +34,8 @@ import graft.core.RangeStats
   *                           RangeComparator.java:231-241)
   *   <root>/mismatches/      one row per mismatched partition
   *                           (JobMetadataDb.java:572-585)
-  *   <root>/errors/          per-partition error detail
-  *                           (JobMetadataDb.java:587-607)
+  *   <root>/errors/          per-partition error detail, newest run per
+  *                           table served (JobMetadataDb.java:587-607)
   *   <root>/job_results/     final per-table RangeStats
   *                           (JobMetadataDb.java:609-617)
   *   <root>/bucket_digests/  per-bucket side digests of incremental runs
@@ -272,12 +272,27 @@ final class MetadataStore(val root: String,
   def latest(dataset: String, jobId: String, keys: Seq[String]): DataFrame =
     readJob(dataset, jobId) match {
       case (rows, true) => rows
-      case (rows, false) =>
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-        rows.withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
-          .drop("__rank")
+      case (rows, false) => newestRun(rows, keys)
     }
+
+  /** [[latest]] over a dataset that is not partitioned by `job_id`
+    * (`errors`): the dataset is read whole and filtered to `jobId`. A
+    * dataset journaled before its rows were stamped has no `run_ts`
+    * column, and its job's rows are served as they are.
+    */
+  def latestUnpartitioned(dataset: String, jobId: String,
+      keys: Seq[String]): DataFrame = {
+    val rows = read(dataset).filter(col("job_id") === jobId)
+    if (rows.columns.contains("run_ts")) newestRun(rows, keys) else rows
+  }
+
+  /** Each key's newest run; a null `run_ts` loses to any stamped row. */
+  private def newestRun(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
+    rows.withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
+      .drop("__rank")
+  }
 
   /** O21: the `running_jobs` LWT lock (`INSERT ... IF NOT EXISTS`,
     * JobMetadataDb.java:359-376) emulated with an atomic file create.

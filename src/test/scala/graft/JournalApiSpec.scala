@@ -42,7 +42,9 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
   }
 
   /** The call site of every Spark job `body` submits: the innermost
-    * `graft.` frame of its SQL execution, else of its last stage.
+    * `graft.` frame of its SQL execution, else of its last stage. A job
+    * of a journal write's execution names the dataset after it, as in
+    * `<frame> writes mismatches`.
     * Listener events arrive asynchronously but in order, so a marker job
     * run after `body` is delivered after every job `body` submitted;
     * waiting for it makes the list complete.
@@ -58,10 +60,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     def innermost(callSite: String): String =
       Option(callSite).toSeq.flatMap(_.split("\n")).map(_.trim.stripPrefix("at "))
         .find(_.startsWith("graft.")).getOrElse("")
+    // MetadataStore stages every append in `<dataset>/.staging-<uuid>`
+    val staged = "([^/\\s]+)/\\.staging-".r
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart =>
-          execSites.put(x.executionId, innermost(x.details))
+          execSites.put(x.executionId, innermost(x.details) +
+            staged.findFirstMatchIn(x.physicalPlanDescription)
+              .fold("")(m => s" writes ${m.group(1)}"))
         case _ =>
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -220,6 +226,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         Perturb.lineitemTarget(src.table(sp, name))
       def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
     }
+    // the accumulators are JVM-wide and summed over every run of the
+    // process (the reference's process-lifetime counters): this run's
+    // contribution is the change across it
+    def metric(name: String) =
+      graft.api.DiffMetrics.accumulator(spark, s"graft.lineitem.$name").value
+    val counters = Seq("matched_partitions", "mismatched_partitions",
+      "matched_values", "partitions_read")
+    val before = counters.map(c => c -> metric(c)).toMap
     var pre = false; var post = Option.empty[Long]
     val results = new DiffRunner(src, tgt,
       DiffJobConfig("job-e2e", Seq(Perturb.lineitemSpec),
@@ -253,12 +267,11 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(api.errorSummary("job-e2e").count() === 0)
     assert(api.errorRanges("job-e2e").count() === 0)
     // metrics parity (Differ.updateMetrics): per-table accumulator series
-    def metric(name: String) =
-      graft.api.DiffMetrics.accumulator(spark, s"graft.lineitem.$name").value
-    assert(metric("matched_partitions") === stats.matchedPartitions)
-    assert(metric("mismatched_partitions") === stats.mismatchedPartitions)
-    assert(metric("matched_values") === stats.matchedValues)
-    assert(metric("partitions_read") === stats.matchedPartitions +
+    def delta(name: String) = metric(name) - before(name)
+    assert(delta("matched_partitions") === stats.matchedPartitions)
+    assert(delta("mismatched_partitions") === stats.mismatchedPartitions)
+    assert(delta("matched_values") === stats.matchedValues)
+    assert(delta("partitions_read") === stats.matchedPartitions +
       stats.mismatchedPartitions + stats.onlyInSource + stats.onlyInTarget)
   }
 
@@ -1024,6 +1037,128 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(Files.exists(Paths.get(clean, "mismatches", "_schema")))
     assert(new ResultsApi(cleanStore).jobMismatches("clean-job").count() === 0)
     assert(cleanStore.read("mismatches").columns.contains("mismatch_type"))
+  }
+
+  test("incremental and digest-first runs decide their buckets on the driver: job counts pinned") {
+    implicit val s: SparkSession = spark
+    val src = ParquetSource(Sf)
+    def tgtOf(f: DataFrame => DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = f(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    // (incremental, digestFirst) -> most Spark jobs of (first run, re-run):
+    // the stale target, then the current one. Each digest pass is
+    // collected once and every bucket is decided from collected rows
+    // (parent measurement: incremental 12/20, both 17/26; the plain and
+    // digest-first-only runs did not change)
+    val bounds = Seq((false, false) -> (8, 9), (false, true) -> (13, 9),
+      (true, false) -> (11, 16), (true, true) -> (13, 17))
+    for (((incremental, digestFirst), (maxFirst, maxRerun)) <- bounds) {
+      val what = s"incremental=$incremental digestFirst=$digestFirst"
+      val cfg = DiffJobConfig("pinned", Seq(Perturb.lineitemSpec),
+        DiffOptions(buckets = 64), metadataRoot = tmpRoot(),
+        incremental = incremental, digestFirst = digestFirst)
+      val first = jobsOf(new DiffRunner(src, tgtOf(Perturb.lineitemTargetStale), cfg).run())
+      val rerun = jobsOf(new DiffRunner(src, tgtOf(Perturb.lineitemTarget), cfg).run())
+      assert(first.size <= maxFirst, s"$what, first run:\n${first.mkString("\n")}")
+      assert(rerun.size <= maxRerun, s"$what, re-run:\n${rerun.mkString("\n")}")
+      // bucket_digests rows are written by the driver
+      assert(!(first ++ rerun).exists(_.endsWith("writes bucket_digests")), what)
+      if (incremental)
+        assert(Files.exists(Paths.get(cfg.metadataRoot, "bucket_digests", "job_id=pinned")), what)
+    }
+  }
+
+  test("an interrupted digestFirst job resumes to an uninterrupted job's journal") {
+    implicit val s: SparkSession = spark
+    val src = ParquetSource(Sf)
+    val buckets = 64
+    val token = DiffEngine.tokenFunction("xxhash64")
+    def tgt(name: String, df: DataFrame): DataFrame =
+      if (name == "lineitem") Perturb.lineitemTargetStale(df) else Perturb.ordersTarget(df)
+    // the first run journals orders' even buckets only, as a run cut after
+    // journaling them would, and its lineitem source fails
+    def evenBuckets(df: DataFrame): DataFrame =
+      df.filter(DiffEngine.bucketOf(df, token(Seq(col("o_orderkey"))), buckets) % 2 === 0)
+    def provider(side: (String, DataFrame) => DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = side(name, src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    val cut = (name: String, df: DataFrame) =>
+      if (name == "lineitem") sys.error("lineitem source down") else evenBuckets(df)
+    val cutTgt = (name: String, df: DataFrame) =>
+      if (name == "lineitem") tgt(name, df) else evenBuckets(tgt(name, df))
+    def cfg(root: String) = DiffJobConfig("df-resume",
+      Seq(Perturb.ordersSpec, Perturb.lineitemSpec), DiffOptions(buckets = buckets),
+      metadataRoot = root, digestFirst = true)
+    // stats, newest task_status row per (table, bucket) and the mismatch set
+    def journaled(root: String) = {
+      val api = new ResultsApi(new MetadataStore(root))
+      def rows(df: DataFrame, cols: Seq[String]) =
+        df.select(cols.map(c => if (c.contains("token")) col(c).cast("string") else col(c)): _*)
+          .collect().map(_.toSeq).toSet
+      (rows(new MetadataStore(root).latest("task_status", "df-resume",
+          Seq("table_name", "bucket")),
+          Seq("table_name", "bucket", "status", "last_token") ++ DiffEngine.Counters),
+        rows(api.jobMismatches("df-resume"), Seq("table_name", "bucket", "token", "mismatch_type")))
+    }
+    val root = tmpRoot()
+    val e = intercept[Exception](
+      new DiffRunner(provider(cut), provider(cutTgt), cfg(root)).run())
+    assert(e.getMessage.contains("lineitem source down"), e.getMessage)
+    val resumed = new DiffRunner(provider((_, df) => df), provider(tgt), cfg(root)).run()
+    val wholeRoot = tmpRoot()
+    val whole = new DiffRunner(provider((_, df) => df), provider(tgt), cfg(wholeRoot)).run()
+    assert(resumed === whole)
+    val (status, mism) = journaled(root)
+    assert((status, mism) === journaled(wholeRoot))
+    assert(status.size === 2 * buckets && mism.nonEmpty)
+    // non-vacuous: the resumed run's pending orders buckets had both
+    // digest verdicts, and the interruption left half of them done
+    val verdicts = DiffEngine.digestProgress(src.table(spark, "orders"),
+        tgt("orders", src.table(spark, "orders")), Perturb.ordersSpec, buckets, token)
+      .filter(col("bucket") % 2 === 1).select("digest_match").as[Boolean].collect().toSet
+    assert(verdicts === Set(true, false))
+    assert(new MetadataStore(root).read("task_status")
+      .filter(col("table_name") === "orders").count() === buckets)
+  }
+
+  test("a re-run serves each table's quarantined rows of its newest run only") {
+    implicit val s: SparkSession = spark
+    val root = tmpRoot()
+    val src = ParquetSource(Sf)
+    // one null-key orders row per side
+    def withNullKey(df: DataFrame): DataFrame =
+      df.unionByName(df.limit(1).withColumn("o_orderkey", lit(null).cast("long")))
+    val side = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = withNullKey(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    def run(): Unit = new DiffRunner(side, side, DiffJobConfig("quarantined",
+      Seq(Perturb.ordersSpec), DiffOptions(buckets = 4), metadataRoot = root)).run()
+    val store = new MetadataStore(root)
+    val api = new ResultsApi(store)
+    def served = (api.jobErrors("quarantined").select("origin", "error").as[(String, String)]
+        .collect().sorted.toSeq,
+      api.errorSummary("quarantined").as[(String, Long)].collect().toSeq,
+      api.errorRanges("quarantined").count())
+    val want = (Seq(("source", "null_pk_o_orderkey"), ("target", "null_pk_o_orderkey")),
+      Seq(("orders", 2L)), 1L)
+    run()
+    assert(served === want)
+    // a plain resumed re-run quarantines the rows again; each table's
+    // newest run is served, and a row journaled before rows were stamped
+    // loses to it
+    run()
+    val unstamped = Seq(("source", "null_pk_o_orderkey", Option.empty[Long], "∅",
+        "orders", "quarantined")).toDF("origin", "error", "token", "pk", "table_name", "job_id")
+    store.write("errors", unstamped)
+    assert(store.read("errors").filter(col("job_id") === "quarantined").count() === 5)
+    assert(served === want)
+    // a root whose errors were all journaled unstamped serves them as read
+    val old = new MetadataStore(tmpRoot())
+    old.write("errors", unstamped)
+    assert(new ResultsApi(old).jobErrors("quarantined").count() === 1)
   }
 
   test("a partitioned parquet source reads as spark.read.parquet, without a job") {

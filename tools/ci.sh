@@ -12,26 +12,26 @@ sbt -batch compile test
 # the real job path: YAML -> DiffRunner -> journal -> ResultsApi, with
 # every counter and read-back checked against the generator's values;
 # dirty_full runs the full diff, clean_digest the digest_first prefilter.
-# dirty_full runs traced: one diff job may submit at most MAX_JOBS Spark
-# jobs (21 once reads learned schemas and run counts from parquet footers
-# and the driver wrote the rows it holds), so a new fixed per-job cost
-# fails here. The oracle gate must check at least MIN_QUERIES queries, so
-# a query record lost from the registry, or a SPARK_GRAFT_ONLY selection,
-# fails instead of shrinking the gate
-MAX_JOBS=21
+# Both run traced: one diff job may submit at most MAX_JOBS Spark jobs of
+# its workload (dirty_full 21 and clean_digest 31 once reads learned
+# schemas and run counts from parquet footers and the driver wrote the
+# rows it holds), so a new fixed per-job cost fails here. The oracle gate
+# must check at least MIN_QUERIES queries, so a query record lost from
+# the registry, or a SPARK_GRAFT_ONLY selection, fails instead of
+# shrinking the gate
 MIN_QUERIES=243
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
-  TRACE=$([ "$W" = dirty_full ] && echo 1 || echo 0)
+  MAX_JOBS=$([ "$W" = dirty_full ] && echo 21 || echo 31)
   LAST=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 10 \
-    --trace "$TRACE" | tail -n 1)
+    --trace 1 | tail -n 1)
   echo "$LAST"
   python3 -c 'import json, sys
 r = json.loads(sys.argv[1])
 ok = r.get("correct") is True and r.get("failed") == 0
 jobs = r.get("metrics", {}).get("spark.jobs", {}).get("value")
-if jobs is not None and jobs > int(sys.argv[2]):
-    print(f"spark.jobs {jobs:g} > {sys.argv[2]}")
+if jobs is None or jobs > int(sys.argv[2]):
+    print(f"spark.jobs {jobs} > {sys.argv[2]}")
     ok = False
 sys.exit(0 if ok else 1)' "$LAST" "$MAX_JOBS"
 done
