@@ -2,6 +2,8 @@ package graft.journal
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -46,6 +48,9 @@ import graft.core.RangeStats
   *
   * Reads run no Spark job to learn a schema: a read lists the dataset's
   * visible parquet files and merges their footer schemas on the driver.
+  * A read whose files total at most `spark.sql.autoBroadcastJoinThreshold`
+  * reads its rows on the driver too, into a local relation, so a collect
+  * of its filtered or projected rows runs no Spark job (see `load`).
   * [[latest]] reads one job's `job_id=<id>` directory only, so jobs
   * whose token columns differ in type share a root, and skips its window
   * when the footers' statistics show one run wrote the directory. Rows
@@ -83,10 +88,18 @@ final class MetadataStore(val root: String,
         stage(staged)(GraftParquetBridge.writeRows(spark, staged.toString,
           df.schema, Nil))
       }
+      // the marker is its one parquet file, without the local file
+      // system's hidden checksum file
+      val written = Files.list(staged)
+      try written.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(".")).foreach(Files.delete)
+      finally written.close()
+      // a rename onto another writer's marker fails as the platform
+      // reports it (on Linux a plain FileSystemException, "Directory not
+      // empty"); the marker then exists and this copy is dropped
       try Files.move(staged, marker)
       catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-            _: java.nio.file.DirectoryNotEmptyException =>
+        case _: java.nio.file.FileSystemException if Files.exists(marker) =>
           deleteRecursively(staged)
       }
     }
@@ -134,6 +147,14 @@ final class MetadataStore(val root: String,
             .parquet(staging.toString)
       }
     }
+    // an unpartitioned append of no rows still stages one zero-row file;
+    // like an empty partitioned append it publishes none, and `write`
+    // records the schema marker instead
+    if (partitionBy.isEmpty && footers(dataFiles(staging))
+        .forall(_.getParquetMetadata.getBlocks.asScala.forall(_.getRowCount == 0))) {
+      deleteRecursively(staging)
+      return 0
+    }
     // the publish is retried too, and is naturally resumable: each moved
     // file leaves the staging tree, so a re-attempt only moves the
     // remainder (REPLACE_EXISTING covers a rename that half-completed).
@@ -155,7 +176,6 @@ final class MetadataStore(val root: String,
     val walk = Files.walk(staging)
     val parts =
       try {
-        import scala.jdk.CollectionConverters._
         walk.iterator().asScala.filter(f => Files.isRegularFile(f) &&
           f.getFileName.toString.endsWith(".parquet")).toList
       } finally walk.close()
@@ -173,7 +193,6 @@ final class MetadataStore(val root: String,
     val walk = Files.walk(dir)
     val all =
       try {
-        import scala.jdk.CollectionConverters._
         walk.iterator().asScala.toList
       } finally walk.close()
     all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
@@ -182,17 +201,19 @@ final class MetadataStore(val root: String,
   /** Every row of the dataset `table`. Its visible parquet files are
     * listed once and their footer schemas merged on the driver (the
     * schema `mergeSchema = true` infers, so rows journaled by an older
-    * engine version with fewer columns read as nulls), and Spark reads
-    * the dataset with that schema: no read runs a schema-inference job.
-    * A dataset whose appends were all empty reads as its `_schema`
-    * marker, through the marker's own footer.
+    * engine version with fewer columns read as nulls), and the dataset is
+    * read with that schema: no read runs a schema-inference job. A
+    * dataset whose appends were all empty reads as its `_schema` marker,
+    * through the marker's own footer.
     */
   def read(table: String): DataFrame = {
     val base = Paths.get(path(table))
     val files = dataFiles(base)
     val marker = base.resolve("_schema")
-    if (files.isEmpty && Files.exists(marker)) load(marker, footers(dataFiles(marker)))
-    else load(base, footers(files))
+    val (dir, read) =
+      if (files.isEmpty && Files.exists(marker)) (marker, dataFiles(marker))
+      else (base, files)
+    load(dir, read, footers(read))
   }
 
   /** [[read]]: every read merges its files' footer schemas, so the flag
@@ -204,17 +225,30 @@ final class MetadataStore(val root: String,
   private def footers(files: Seq[FileStatus]): Seq[Footer] =
     GraftParquetBridge.footers(spark, files)
 
-  /** `dir` read with the merged schema of `footers` (its visible parquet
-    * files) plus `extra` columns. With no files Spark infers, and fails
-    * as it would on any unreadable directory.
+  /** `dir` read with the merged schema of `footers` (those of its visible
+    * parquet `files`) plus `extra` columns. This is the one place a read
+    * chooses between the driver and Spark. Files whose bytes, scaled by
+    * `spark.sql.files.fileCompressionFactor`, total at most
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's own test for a
+    * relation small enough to collect) are read on the driver into a
+    * local relation: filters and projections fold into it, and collecting
+    * them runs no Spark job. Larger reads, and every read while the
+    * threshold is -1, are Spark scans. With no files Spark infers, and
+    * fails as it would on any unreadable directory.
     */
-  private def load(dir: Path, footers: Seq[Footer],
+  private def load(dir: Path, files: Seq[FileStatus], footers: Seq[Footer],
       extra: Seq[StructField] = Nil,
       options: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.options(options)
-    GraftParquetBridge.footerSchema(spark, footers)
-      .fold(reader)(s => reader.schema(StructType(s ++ extra)))
-      .parquet(dir.toString)
+    val conf = GraftParquetBridge.conf(spark)
+    val threshold = conf.autoBroadcastJoinThreshold
+    GraftParquetBridge.footerSchema(spark, footers).map(s => StructType(s ++ extra)) match {
+      case Some(schema) if threshold >= 0 &&
+          files.map(_.getLen).sum * conf.fileCompressionFactor <= threshold =>
+        GraftParquetBridge.readLocal(spark, dir, files, footers, schema, options)
+      case schema =>
+        val reader = spark.read.options(options)
+        schema.fold(reader)(reader.schema).parquet(dir.toString)
+    }
   }
 
   /** `jobId`'s rows of a dataset partitioned by `job_id`: only its
@@ -231,9 +265,10 @@ final class MetadataStore(val root: String,
     val dir = base.resolve(
       ExternalCatalogUtils.getPartitionPathString("job_id", jobId))
     val jobCol = StructField("job_id", StringType)
-    val parts = footers(dataFiles(dir))
+    val files = dataFiles(dir)
+    val parts = footers(files)
     if (parts.nonEmpty)
-      (load(dir, parts, Seq(jobCol), Map("basePath" -> base.toString)),
+      (load(dir, files, parts, Seq(jobCol), Map("basePath" -> base.toString)),
         GraftParquetBridge.singleValue(parts, "run_ts"))
     else {
       val newest = dataFiles(base) match {
@@ -243,7 +278,7 @@ final class MetadataStore(val root: String,
       val empty = GraftParquetBridge.footerSchema(spark, footers(newest)) match {
         case Some(s) => spark.createDataFrame(java.util.Collections.emptyList[Row](),
           StructType(s.filterNot(_.name == jobCol.name) :+ jobCol))
-        case None => load(base, Nil)
+        case None => load(base, Nil, Nil)
       }
       (empty, true)
     }

@@ -2,33 +2,47 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import java.nio.file.{Files, Path}
 
-import scala.collection.mutable.ListBuffer
+import scala.collection.mutable.{LinkedHashMap, ListBuffer}
+import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, PartitioningAwareFileIndex,
+  PartitionSpec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.util.ThreadUtils
 
-/** Bridge to the `private[parquet]` footer readers and the file writer
-  * behind Spark's own parquet reads and writes. Spark runs them inside
-  * jobs; called here they run on the driver, so a reader that already
-  * listed its files learns their schema without a job, and rows the
-  * driver already holds are written without one.
+/** Bridge to the `private[parquet]` footer readers, the vectorized row
+  * reader and the file writer behind Spark's own parquet reads and
+  * writes. Spark runs them inside jobs; called here they run on the
+  * driver, so a reader that already listed its files learns their schema
+  * (and may read their rows) without a job, and rows the driver already
+  * holds are written without one.
   */
 object GraftParquetBridge {
 
-  private def state(spark: SparkSession) =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+  private def state(spark: SparkSession) = spark.asInstanceOf[ClassicSession].sessionState
+
+  /** The session's SQL configuration. */
+  def conf(spark: SparkSession): SQLConf = state(spark).conf
 
   /** The parquet data files under `base` that Spark's file index would
     * see — outside hidden (`.`/`_`-prefixed) dirs such as a journal's
@@ -67,16 +81,105 @@ object GraftParquetBridge {
     found.toList
   }
 
-  /** The footers of `files`, row groups and their column statistics
-    * included (Spark's own `readParquetFootersInParallel` skips the row
-    * groups: it needs only the schema).
+  // one pool for every footer read of the process: `ThreadUtils.parmap`
+  // would start (and stop) a pool per call
+  private lazy val footerPool = ExecutionContext.fromExecutorService(
+    ThreadUtils.newDaemonCachedThreadPool("readingParquetFooters", 8))
+
+  /** The footers of `files`, in their order, row groups and their column
+    * statistics included (Spark's own `readParquetFootersInParallel`
+    * skips the row groups: it needs only the schema).
     */
   def footers(spark: SparkSession, files: Seq[FileStatus]): Seq[Footer] = {
     val conf = state(spark).newHadoopConf()
-    ThreadUtils.parmap(files, "readingParquetFooters", 8) { f =>
-      new Footer(f.getPath, ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER))
+    files.map(f => Future(new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)))(footerPool))
+      .map(ThreadUtils.awaitResult(_, Duration.Inf))
+  }
+
+  /** The rows of the parquet `files` under `root`, read on the driver into
+    * a local relation: what `spark.read.options(options).schema(schema)
+    * .parquet(root)` reads, in the same columns. Spark's file index logic
+    * takes the partition columns from the files' `<col>=<value>`
+    * directories (typed by `schema` where it names them, else inferred),
+    * and Spark's vectorized parquet reader reads each file from its
+    * footer, one of `footers` (aligned with `files`), so no footer is read
+    * twice. The hadoop configuration is built once per call and never
+    * broadcast.
+    */
+  def readLocal(spark: SparkSession, root: Path, files: Seq[FileStatus],
+      footers: Seq[Footer], schema: StructType,
+      options: Map[String, String]): DataFrame = {
+    val session = spark.asInstanceOf[ClassicSession]
+    val sqlConf = conf(spark)
+    val index = new ListedFileIndex(session, options, schema,
+      new HPath(root.toString), files)
+    val partitionSchema = index.partitionSchema
+    val dataSchema = StructType(schema.filterNot(f =>
+      partitionSchema.exists(p => sqlConf.resolver(p.name, f.name)))).asNullable
+    val output = StructType(dataSchema ++ partitionSchema).asNullable
+    val hadoopConf = index.readConf
+    SetupHadoopConf.invoke(Format, hadoopConf, sqlConf, dataSchema)
+    val ctx = new TaskAttemptContextImpl(hadoopConf, new TaskAttemptID())
+    val footerOf = footers.map(f => f.getFile -> f.getParquetMetadata).toMap
+    val toUnsafe = UnsafeProjection.create(output)
+    val rows = index.listFiles(Nil, Nil).flatMap { dir =>
+      dir.files.flatMap { fs =>
+        val file = fs.fileStatus
+        val footer = footerOf(file.getPath)
+        val meta = footer.getFileMetaData.getKeyValueMetaData
+        val datetime = DataSourceUtils.datetimeRebaseSpec(meta.get,
+          sqlConf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
+        val int96 = DataSourceUtils.int96RebaseSpec(meta.get,
+          sqlConf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)
+        val count = footer.getBlocks.asScala.map(_.getRowCount).sum
+        // no zone: int96 timestamp conversion (off by default) applies
+        // only to files that writers other than Spark produced
+        val reader = new VectorizedParquetRecordReader(null,
+          datetime.mode.toString, datetime.timeZone, int96.mode.toString,
+          int96.timeZone, false,
+          math.max(1L, math.min(count, sqlConf.parquetVectorizedReaderBatchSize.toLong)).toInt)
+        try {
+          val input = HadoopInputFile.fromStatus(file, hadoopConf)
+          reader.initialize(new FileSplit(file.getPath, 0, file.getLen, Array.empty[String]),
+            ctx, Some(input), Some(input.newStream()), Some(footer))
+          reader.initBatch(partitionSchema, dir.values)
+          val out = ListBuffer.empty[InternalRow]
+          while (reader.nextKeyValue())
+            out += toUnsafe(reader.getCurrentValue.asInstanceOf[InternalRow]).copy()
+          out
+        } finally reader.close()
+      }
     }
+    Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(output), rows))
+  }
+
+  // ParquetFileFormat's own reader set-up of a hadoop configuration: the
+  // requested schema and the session flags its schema converter reads
+  private lazy val Format = new ParquetFileFormat
+  private lazy val SetupHadoopConf = {
+    val m = classOf[ParquetFileFormat].getDeclaredMethod("setupHadoopConf",
+      classOf[Configuration], classOf[SQLConf], classOf[StructType])
+    m.setAccessible(true)
+    m
+  }
+
+  /** A file index over files already listed: Spark's partition discovery
+    * and file selection, with no listing of its own.
+    */
+  private final class ListedFileIndex(spark: ClassicSession,
+      options: Map[String, String], schema: StructType, root: HPath,
+      files: Seq[FileStatus])
+      extends PartitioningAwareFileIndex(spark, options, Some(schema)) {
+    override val rootPaths: Seq[HPath] = Seq(root)
+    override val leafFiles: LinkedHashMap[HPath, FileStatus] =
+      LinkedHashMap.from(files.map(f => f.getPath -> f))
+    override val leafDirToChildrenFiles: Map[HPath, Array[FileStatus]] =
+      files.toArray.groupBy(_.getPath.getParent)
+    override lazy val partitionSpec: PartitionSpec = inferPartitioning()
+    override def refresh(): Unit = ()
+    /** The index's own configuration, the session's plus `options`. */
+    def readConf: Configuration = hadoopConf
   }
 
   /** The merge of `footers`' schemas — what `mergeSchema = true` infers

@@ -1016,6 +1016,10 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       unknown = Some(store.latest("task_status", "nope", Seq("table_name", "bucket")))
     }
     assert(reads.isEmpty, reads.mkString("\n"))
+    // nothing was quarantined: `errors` publishes no zero-row file, only
+    // its schema marker, and serves no row
+    assert(GraftParquetBridge.dataFiles(Paths.get(root, "errors")).isEmpty)
+    assert(api.jobErrors("count-job").count() === 0)
     assert(unknown.get.count() === 0 &&
       unknown.get.columns.toSet.contains("last_token"))
     // the journal's local frames are written on the driver
@@ -1039,6 +1043,91 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(cleanStore.read("mismatches").columns.contains("mismatch_type"))
   }
 
+  test("journal reads on the driver and through Spark serve the same rows") {
+    implicit val s: SparkSession = spark
+    val src = ParquetSource(Sf)
+    // one null-key orders row per side: quarantined into `errors`
+    def withNullKey(df: DataFrame): DataFrame =
+      df.unionByName(df.limit(1).withColumn("o_orderkey", lit(null).cast("long")))
+    def provider(f: DataFrame => DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = f(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    val dirty = provider(df => withNullKey(Perturb.ordersTarget(df)))
+    def run(root: String, id: String, tgt: SourceProvider, incremental: Boolean = false,
+        partitioner: String = "xxhash64"): Unit =
+      new DiffRunner(provider(withNullKey), tgt, DiffJobConfig(id, Seq(Perturb.ordersSpec),
+        DiffOptions(buckets = 16), metadataRoot = root, partitioner = partitioner,
+        incremental = incremental, repair = true)).run()
+    // bigint tokens: a job id that needs escaping, journaled by two
+    // incremental runs (a clean target, then a dirty one), next to a job
+    // one run wrote and a job_summary row of an older schema with nulls
+    val root = tmpRoot()
+    val (escaped, oneRun) = ("job/1 :x%=y", "one-run")
+    new MetadataStore(root).write("job_summary",
+      Seq(("old-job", Seq("orders"), 4, Option.empty[Double], "2024-01-01T00:00:00.000Z"))
+        .toDF("job_id", "keyspaces", "buckets", "reverse_read_probability", "start_time"))
+    run(root, escaped, provider(withNullKey), incremental = true)
+    run(root, escaped, dirty, incremental = true)
+    run(root, oneRun, dirty)
+    // string tokens, and an `errors` dataset that is only its marker
+    val random = tmpRoot()
+    new DiffRunner(src, provider(Perturb.ordersTarget), DiffJobConfig("r",
+      Seq(Perturb.ordersSpec), DiffOptions(buckets = 16), metadataRoot = random,
+      partitioner = "random")).run()
+    def schemaOf(root: String, t: String) = new MetadataStore(root).read(t).schema
+    assert(schemaOf(root, "bucket_digests")("src_sum").dataType.simpleString === "decimal(38,0)")
+    assert(schemaOf(root, "mismatches")("token").dataType.simpleString === "bigint")
+    assert(schemaOf(random, "mismatches")("token").dataType.simpleString === "string")
+    assert(GraftParquetBridge.dataFiles(Paths.get(random, "errors")).isEmpty &&
+      Files.exists(Paths.get(random, "errors", "_schema")))
+    // every dataset read whole, and every job's reads and endpoints
+    def served(root: String, ids: Seq[String]): Seq[(String, String, Seq[String])] = {
+      val store = new MetadataStore(root)
+      val api = new ResultsApi(store)
+      val datasets = new java.io.File(root).list().toSeq.filter(_ != "running_jobs").sorted
+      val byJob = ids.flatMap { id =>
+        Seq("task_status" -> Seq("bucket"), "bucket_digests" -> Seq("bucket"),
+            "mismatches" -> Seq("bucket", "token"), "repair_scripts" -> Seq("token"),
+            "job_results" -> Nil)
+          .filter(t => store.exists(t._1)).map { case (t, keys) => s"$id latest $t" ->
+            store.latest(t, id, "table_name" +: keys) } ++
+          Seq("job" -> api.job(id), "jobResults" -> api.jobResults(id),
+            "jobStatus" -> api.jobStatus(id), "jobMismatches" -> api.jobMismatches(id),
+            "mismatchSummary" -> api.mismatchSummary(id), "jobErrors" -> api.jobErrors(id),
+            "errorSummary" -> api.errorSummary(id), "errorRanges" -> api.errorRanges(id),
+            "jobRepair" -> api.jobRepair(id, Some("orders")))
+            .map { case (n, df) => s"$id $n" -> df }
+      }
+      (datasets.map(t => s"read $t" -> store.read(t)) ++ byJob ++
+          Seq("recentJobs" -> api.recentJobs(), "jobsByKeyspace" -> api.jobsByKeyspace("orders")))
+        .map { case (n, df) => (n, df.schema.toDDL, sortedRows(df)) }
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def onSpark[T](body: => T): T = {
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    for ((r, ids) <- Seq(root -> Seq(escaped, oneRun, "old-job", "nope"), random -> Seq("r"))) {
+      val local = served(r, ids)
+      val scanned = onSpark(served(r, ids))
+      assert(local.map(_._1) === scanned.map(_._1))
+      local.zip(scanned).foreach { case (l, s) => assert(l === s, l._1) }
+      assert(local.exists { case (n, _, rows) => n.endsWith("jobMismatches") && rows.nonEmpty })
+    }
+    assert(served(root, Seq(escaped)).collectFirst {
+      case (n, _, rows) if n.endsWith(" jobErrors") => rows.size } === Some(2))
+    // a one-run job's endpoints collect on the driver; only the
+    // aggregate runs on Spark. Under the -1 threshold every read scans
+    val api = new ResultsApi(new MetadataStore(root))
+    def endpoints(): Unit = Seq(api.job(oneRun), api.jobResults(oneRun),
+      api.jobStatus(oneRun), api.jobMismatches(oneRun)).foreach(_.collect())
+    assert(jobsOf(endpoints()).isEmpty)
+    assert(jobsOf(api.mismatchSummary(oneRun).collect()).size <= 2)
+    assert(onSpark(jobsOf(endpoints())).size >= 4)
+  }
+
   test("incremental and digest-first runs decide their buckets on the driver: job counts pinned") {
     implicit val s: SparkSession = spark
     val src = ParquetSource(Sf)
@@ -1048,11 +1137,11 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     }
     // (incremental, digestFirst) -> most Spark jobs of (first run, re-run):
     // the stale target, then the current one. Each digest pass is
-    // collected once and every bucket is decided from collected rows
-    // (parent measurement: incremental 12/20, both 17/26; the plain and
-    // digest-first-only runs did not change)
-    val bounds = Seq((false, false) -> (8, 9), (false, true) -> (13, 9),
-      (true, false) -> (11, 16), (true, true) -> (13, 17))
+    // collected once and every bucket is decided from collected rows. A
+    // re-run reads its stored params and prior rows on the driver
+    // (re-runs were 9/9/16/17 while they took a Spark job each)
+    val bounds = Seq((false, false) -> (8, 6), (false, true) -> (13, 6),
+      (true, false) -> (11, 12), (true, true) -> (13, 13))
     for (((incremental, digestFirst), (maxFirst, maxRerun)) <- bounds) {
       val what = s"incremental=$incremental digestFirst=$digestFirst"
       val cfg = DiffJobConfig("pinned", Seq(Perturb.lineitemSpec),
