@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.journal.MetadataStore
@@ -10,8 +11,9 @@ import graft.journal.MetadataStore
   * bucket fan-out with async gather (DBService.java:341-357) exists only
   * to dodge Cassandra wide partitions — here every endpoint is a 1-5 line
   * filter/group over one parquet dataset, and the "index tables"
-  * (by-cluster / by-keyspace / by-date duplicates) are pushed-down
-  * filters on job_summary.
+  * (by-cluster / by-keyspace / by-date duplicates) are filters on
+  * job_summary: pushed into the scan of a large journal, evaluated over
+  * the rows of a small one that the driver read.
   */
 final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
 
@@ -67,11 +69,20 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
   def jobMismatches(jobId: String): DataFrame = mismatch(jobId)
 
   /** Mismatch counts per (table, type) — the group-merge the API server
-    * does client-side (DBService.java:215-228).
+    * does client-side (DBService.java:215-228). Rows the driver read are
+    * counted there, as the reference's server counts them: a Spark
+    * aggregate over them ships them into tasks and runs two jobs.
     */
-  def mismatchSummary(jobId: String): DataFrame =
-    mismatch(jobId).groupBy("table_name", "mismatch_type")
-      .agg(count(lit(1)).as("n"))
+  def mismatchSummary(jobId: String): DataFrame = {
+    import spark.implicits._
+    val rows = mismatch(jobId)
+    if (rows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      rows.select("table_name", "mismatch_type").collect()
+        .groupMapReduce(r => (r.getString(0), r.getString(1)))(_ => 1L)(_ + _)
+        .toSeq.map { case ((t, m), n) => (t, m, n) }
+        .toDF("table_name", "mismatch_type", "n")
+    else rows.groupBy("table_name", "mismatch_type").agg(count(lit(1)).as("n"))
+  }
 
   /** GET /jobs/{id}/errors (DiffJobsResource.java:131-137): each table's
     * newest run, as every run quarantines the table's rows again.

@@ -154,15 +154,27 @@ object GraftParquetBridge {
     Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(output), rows))
   }
 
-  // ParquetFileFormat's own reader set-up of a hadoop configuration: the
-  // requested schema and the session flags its schema converter reads
-  private lazy val Format = new ParquetFileFormat
-  private lazy val SetupHadoopConf = {
-    val m = classOf[ParquetFileFormat].getDeclaredMethod("setupHadoopConf",
-      classOf[Configuration], classOf[SQLConf], classOf[StructType])
-    m.setAccessible(true)
-    m
-  }
+  private val Format = new ParquetFileFormat
+
+  /** ParquetFileFormat's own reader set-up of a hadoop configuration (the
+    * requested schema and the session flags its schema converter reads),
+    * which `readLocal` runs. It is `private` to the class, so the package
+    * of this bridge does not reach it and it is looked up by name and
+    * signature. The lookup runs when this object is first used, so a
+    * Spark version that renames the method or changes its parameters
+    * fails there, with this message, and not inside a read.
+    */
+  val SetupHadoopConf: java.lang.reflect.Method =
+    try {
+      val m = classOf[ParquetFileFormat].getDeclaredMethod("setupHadoopConf",
+        classOf[Configuration], classOf[SQLConf], classOf[StructType])
+      m.setAccessible(true)
+      m
+    } catch {
+      case e: NoSuchMethodException => throw new IllegalStateException(
+        "this Spark version has no ParquetFileFormat.setupHadoopConf(" +
+          "Configuration, SQLConf, StructType), which GraftParquetBridge.readLocal runs", e)
+    }
 
   /** A file index over files already listed: Spark's partition discovery
     * and file selection, with no listing of its own.

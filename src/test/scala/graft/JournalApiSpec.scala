@@ -1118,14 +1118,40 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     }
     assert(served(root, Seq(escaped)).collectFirst {
       case (n, _, rows) if n.endsWith(" jobErrors") => rows.size } === Some(2))
-    // a one-run job's endpoints collect on the driver; only the
-    // aggregate runs on Spark. Under the -1 threshold every read scans
+    // a one-run job's endpoints collect on the driver, its mismatches
+    // counted there too. Under the -1 threshold every read scans
     val api = new ResultsApi(new MetadataStore(root))
     def endpoints(): Unit = Seq(api.job(oneRun), api.jobResults(oneRun),
-      api.jobStatus(oneRun), api.jobMismatches(oneRun)).foreach(_.collect())
+      api.jobStatus(oneRun), api.jobMismatches(oneRun),
+      api.mismatchSummary(oneRun)).foreach(_.collect())
     assert(jobsOf(endpoints()).isEmpty)
-    assert(jobsOf(api.mismatchSummary(oneRun).collect()).size <= 2)
-    assert(onSpark(jobsOf(endpoints())).size >= 4)
+    assert(onSpark(jobsOf(endpoints())).size >= 5)
+  }
+
+  test("a journal read above the driver's bound is a Spark scan and serves the same counts") {
+    implicit val s: SparkSession = spark
+    val store = new MetadataStore(tmpRoot())
+    // one run's mismatches of a job: a third ONLY_IN_SOURCE
+    def mismatches(id: String, n: Long): Unit = store.write("mismatches",
+      spark.range(n).select(lit(id).as("job_id"), lit("orders").as("table_name"),
+        (col("id") % 16).cast("int").as("bucket"), (col("id") * 2654435761L).as("token"),
+        when(col("id") % 3 === 0, "ONLY_IN_SOURCE").otherwise("CONTENT_MISMATCH")
+          .as("mismatch_type"), lit(1L).as("run_ts")), partitionBy = Seq("job_id"))
+    assert(MetadataStore.DriverReadRows < 40000)
+    mismatches("big", 40000)
+    mismatches("small", 10)
+    val api = new ResultsApi(store)
+    assert(jobsOf(api.jobMismatches("small").collect()).isEmpty)
+    assert(jobsOf(api.jobMismatches("big").collect()).nonEmpty)
+    def counts(id: String): Map[String, Long] = api.mismatchSummary(id).collect()
+      .map(r => r.getAs[String]("mismatch_type") -> r.getAs[Long]("n")).toMap
+    assert(counts("big") === Map("ONLY_IN_SOURCE" -> 13334L, "CONTENT_MISMATCH" -> 26666L))
+    assert(counts("small") === Map("ONLY_IN_SOURCE" -> 4L, "CONTENT_MISMATCH" -> 6L))
+    assert(api.mismatchSummary("big").schema === api.mismatchSummary("small").schema)
+  }
+
+  test("the parquet bridge resolves Spark's private reader set-up by name") {
+    assert(GraftParquetBridge.SetupHadoopConf.getName === "setupHadoopConf")
   }
 
   test("incremental and digest-first runs decide their buckets on the driver: job counts pinned") {

@@ -13,17 +13,17 @@ sbt -batch compile test
 # every counter and read-back checked against the generator's values;
 # dirty_full runs the full diff, clean_digest the digest_first prefilter.
 # Both run traced: one diff job may submit at most MAX_JOBS Spark jobs of
-# its workload (dirty_full 18 and clean_digest 28 once reads learned
+# its workload (dirty_full 16 and clean_digest 26 once reads learned
 # schemas and run counts from parquet footers, the driver wrote the rows
-# it holds and small journal reads were answered on the driver), so a new
-# fixed per-job cost fails here. The oracle gate
+# it holds and small journal reads were answered and counted on the
+# driver), so a new fixed per-job cost fails here. The oracle gate
 # must check at least MIN_QUERIES queries, so a query record lost from
 # the registry, or a SPARK_GRAFT_ONLY selection, fails instead of
 # shrinking the gate
 MIN_QUERIES=243
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
-  MAX_JOBS=$([ "$W" = dirty_full ] && echo 18 || echo 28)
+  MAX_JOBS=$([ "$W" = dirty_full ] && echo 16 || echo 26)
   LAST=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 10 \
     --trace 1 | tail -n 1)
   echo "$LAST"
