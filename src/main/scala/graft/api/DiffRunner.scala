@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
-import graft.engine.DiffEngine
+import graft.engine.{BucketPlan, DiffEngine}
 import graft.journal.{MetadataStore, Resume}
 import graft.sources.SourceProvider
 
@@ -251,15 +251,13 @@ final class DiffRunner(
     val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
     journal("errors", sq.errors.unionByName(tq.errors), partitionBy = Nil)
     def bucket(r: Row): Long = r.getAs[Number]("bucket").longValue
-    def byBucket(df: DataFrame): SortedMap[Long, Row] =
-      SortedMap.from(df.collect().map(r => bucket(r) -> r))
     def local(rows: Iterable[Row], schema: StructType): DataFrame =
       spark.createDataFrame(rows.toSeq.asJava, schema)
     // this table's newest row per bucket of a journal dataset, from the
     // earlier runs of this job: ≤ options.buckets rows
     def prior(dataset: String): SortedMap[Long, Row] =
       if (!store.exists(dataset)) SortedMap.empty
-      else byBucket(store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
+      else BucketPlan.byBucket(store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
         .filter(col("table_name") === spec.table))
     // the resume skip set, and the totals of the buckets this run does
     // not journal
@@ -276,48 +274,13 @@ final class DiffRunner(
       else if (config.incremental)
         Some(DiffEngine.sideDigests(fsrc, ftgt, spec, options.buckets, token))
       else None
-    val digests = digestPass.fold(SortedMap.empty[Long, Row])(byBucket)
-    val priorDigests =
-      if (config.incremental) prior("bucket_digests") else SortedMap.empty[Long, Row]
-    def digestOf(r: Row): Seq[Any] = DiffEngine.DigestCols.map(r.getAs[Any])
-    // The buckets this run does not re-compare; their journal rows stand.
-    // Incremental mode skips the buckets whose digests are unchanged on
-    // both sides. Otherwise this is O12 resume: the buckets a previous
-    // run of this job finished are skipped (rerun=true re-compares them —
-    // Differ.java:166-171). The runner journals only `done` rows, so
-    // there is no in-progress watermark to honour.
-    val skip: Set[Long] =
-      if (config.incremental)
-        digests.keySet.filter(b => priorDigests.get(b).map(digestOf)
-          .contains(digestOf(digests(b))))
-      else if (config.rerun) Set.empty
-      else priorStatus.keySet.filter(
-        priorStatus(_).getAs[String]("status") == Resume.StatusDone)
-    // RETIRED buckets: live in the prior digests, gone from both sides
-    // now. With no partitionStats rows they would never get a new journal
-    // row and the latest-per-bucket totals would replay their stale
-    // counters forever, so they get zero task_status rows and a tombstone
-    // digest (every digest field null). The tombstone never equals a
-    // current digest: a bucket whose rows come back is re-diffed, not
-    // replayed as zeros. Tombstoned buckets are not live, so they retire
-    // once.
-    val retired = priorDigests.keySet.filter(b => !digests.contains(b) &&
-      digestOf(priorDigests(b)).exists(_ != null)).toSeq
-    // digest-first: the pending buckets whose digests agree journal their
-    // digest credit; only the disagreeing ones reach the diff
-    val (clean, dirty) =
-      if (!config.digestFirst) (Nil, Nil)
-      else digests.collect { case (b, r) if !skip(b) => r }.toSeq
-        .partition(_.getAs[Boolean]("digest_match"))
-    def restrict(df: DataFrame, ids: Seq[Long], how: String): DataFrame =
-      DiffEngine.restrictBuckets(df, spec, options.buckets, token,
-        ids.toDF("bucket"), how)
-    def diffed(df: DataFrame): DataFrame =
-      if (config.digestFirst) restrict(df, dirty.map(bucket), "left_semi")
-      else if (skip.isEmpty) df
-      else restrict(df, skip.toSeq, "left_anti")
-    val src = diffed(fsrc)
-    val tgt = diffed(ftgt)
+    val digests = digestPass.fold(SortedMap.empty[Long, Row])(BucketPlan.byBucket)
+    val plan = BucketPlan.decide(digests,
+      priorDigests = Option.when(config.incremental)(prior("bucket_digests")),
+      priorStatus = priorStatus, rerun = config.rerun,
+      digestFirst = config.digestFirst)
+    val src = plan.restrict(fsrc, spec, options.buckets, token)
+    val tgt = plan.restrict(ftgt, spec, options.buckets, token)
     // ONE diff computation per table: persist the per-partition stats and
     // derive progress, mismatches and totals from it (without the
     // persist, each journal sink would re-run the join+agg)
@@ -345,9 +308,9 @@ final class DiffRunner(
       // journal their digest credit; retired buckets journal zeros (their
       // last_token reads null). The ≤ options.buckets rows are collected
       // once: journaled from the driver, and summed into the totals below.
-      val credit = digestPass.filter(_ => clean.nonEmpty).map(d =>
-        local(clean, d.schema).drop("digest_match" +: DiffEngine.DigestCols: _*))
-      val zeroes = retired.toDF("bucket")
+      val credit = digestPass.filter(_ => plan.clean.nonEmpty).map(d =>
+        local(plan.clean, d.schema).drop("digest_match" +: DiffEngine.DigestCols: _*))
+      val zeroes = plan.retired.toDF("bucket")
         .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
       val status = (DiffEngine.bucketProgressFromPartitions(ps, spec,
           options.buckets) +: credit.toSeq :+ zeroes)
@@ -364,7 +327,7 @@ final class DiffRunner(
         val fields = "bucket" +: DiffEngine.DigestCols
         journal("bucket_digests", local(
           digests.values.map(r => Row.fromSeq(fields.map(r.getAs[Any]))) ++
-            retired.map(b => Row.fromSeq(b +: DiffEngine.DigestCols.map(_ => null))),
+            plan.tombstones,
           StructType(fields.map(digestPass.get.schema(_)))))
       }
       // O3: the sampled reverse-read validation pass

@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,8 +38,9 @@ import graft.core.{Classification => C, DiffOptions, TableSpec}
   * Scale notes (100 TB): the only wide shuffle is the join on the full
   * primary key; the `groupBy(pk)` that follows ships only pre-aggregated
   * per-partition counter rows (map-side combine), and the final RangeStats
-  * agg ships one row per shuffle partition. No driver-side iteration,
-  * no collect, no per-key point reads.
+  * agg ships one row per shuffle partition. No driver-side iteration
+  * over data rows, no per-key point reads; the digest ops collect only
+  * their ≤ `buckets` digest rows, which [[BucketPlan]] decides from.
   */
 object DiffEngine {
 
@@ -562,9 +565,10 @@ object DiffEngine {
   // aggregate whose shuffle is `buckets` rows per side, regardless of
   // data size.
   //
-  // Every digest op below is a composition of three pieces: [[sideDigest]]
-  // (one side's per-bucket aggregate), [[digestMatch]] (the verdict) and
-  // [[restrictBuckets]] (the broadcast bucket filter).
+  // Every digest op below is a composition of four pieces: [[sideDigest]]
+  // (one side's per-bucket aggregate), [[digestMatch]] (the verdict),
+  // [[BucketPlan]] (the driver-side decision over the collected digest
+  // rows) and [[restrictBuckets]] (the broadcast bucket filter).
 
   /** Order-independent full-row content hash. Each column is hashed
     * separately with its ordinal as a leading seed and the per-column
@@ -607,12 +611,17 @@ object DiffEngine {
           bit_xor(col("__h")).as("xor") +: extra: _*)
   }
 
-  /** Both sides' [[sideDigest]]s full-outer joined on `bucket`, every
-    * digest and `srcExtra` column prefixed `src_`/`tgt_`. A bucket seen on
-    * one side only reads null on the other.
+  /** Side-by-side per-bucket digests of BOTH sides — the journalable
+    * unit of [[incrementalDiff]]: `(bucket, src_rows, src_sum, src_xor,
+    * tgt_rows, tgt_sum, tgt_xor)`, one row per bucket seen on either
+    * side (absent side reads null), plus the `srcExtra` aggregates of the
+    * source side, prefixed `src_`. Persist this frame with a run's
+    * journal and the next run can prove per-bucket that NOTHING changed
+    * on either side since — something the reference's per-token resume
+    * watermark (JobMetadataDb.java:292-315) cannot express.
     */
-  private def digestSides(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      buckets: Int, token: Seq[Column] => Column,
+  def sideDigests(src: DataFrame, tgt: DataFrame, spec: TableSpec,
+      buckets: Int, token: Seq[Column] => Column = defaultToken,
       srcExtra: Seq[Column] = Nil): DataFrame = {
     def side(df: DataFrame, name: String, extra: Seq[Column]) = {
       val d = sideDigest(df, spec, buckets, token, extra)
@@ -629,18 +638,18 @@ object DiffEngine {
     DigestFields.map(f => col(s"src_$f") <=> col(s"tgt_$f")).reduce(_ && _)
 
   /** `df` restricted by a broadcast join of each row's bucket against
-    * `bucketIds` (a one-column frame of bucket ids): `left_semi` keeps
-    * the listed buckets, `left_anti` drops them. The id set is at most
-    * `buckets` narrow rows, so it broadcasts and the rows of every other
-    * bucket are shed before any shuffle. Callers that restrict both sides
-    * materialize `bucketIds` once first (see [[digestDiff]]).
+    * `bucketIds`: `left_semi` keeps the listed buckets, `left_anti` drops
+    * them. The ids are driver-side, at most `buckets` of them, so the
+    * build side is a local relation that broadcasts without a job, and
+    * the rows of every other bucket are shed before any shuffle.
     */
   def restrictBuckets(df: DataFrame, spec: TableSpec, buckets: Int,
-      token: Seq[Column] => Column, bucketIds: DataFrame,
+      token: Seq[Column] => Column, bucketIds: Iterable[Long],
       how: String): DataFrame = {
     require(how == "left_semi" || how == "left_anti",
       s"bucket restriction is left_semi or left_anti, got $how")
-    val ids = bucketIds.select(col(bucketIds.columns.head).as("__bucket_id"))
+    import df.sparkSession.implicits._
+    val ids = bucketIds.toSeq.toDF("__bucket_id")
     df.join(broadcast(ids),
       bucketOf(df, token(spec.pk.map(col)), buckets) === col("__bucket_id"), how)
   }
@@ -650,7 +659,7 @@ object DiffEngine {
     */
   def digestCompare(src: DataFrame, tgt: DataFrame, spec: TableSpec,
       buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame =
-    digestSides(src, tgt, spec, buckets, token).select(col("bucket"),
+    sideDigests(src, tgt, spec, buckets, token).select(col("bucket"),
       coalesce(col("src_rows"), lit(0L)).as("src_rows"),
       coalesce(col("tgt_rows"), lit(0L)).as("tgt_rows"),
       digestMatch.as("digest_match"))
@@ -664,40 +673,18 @@ object DiffEngine {
     * shuffle stays a few MB. Output and semantics are identical to
     * [[mismatches]] — every mismatched partition lives in a bucket whose
     * digest necessarily disagrees — which is exactly what the
-    * `diff_digest_mismatches` oracle asserts.
+    * `diff_digest_mismatches` oracle asserts. The phase-1 verdicts are
+    * collected once, and [[BucketPlan]] picks the dirty set.
     */
   def digestDiff(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
       token: Seq[Column] => Column = defaultToken): DataFrame = {
     val spec = spec0.bind(src)
-    // ≤ digestBuckets narrow rows, referenced by BOTH restrict sides —
-    // materialized once, else each side's broadcast re-runs the whole
-    // phase-1 digest subtree (2 full scans + 2 digest shuffles per
-    // reference). EAGER deliberately: the first consumer is a forced
-    // broadcast, and a lazy checkpoint would run the full phase-1 scans
-    // inside the broadcast build, racing spark.sql.broadcastTimeout at
-    // scale (guide: compute/cache the small side first). Executor-local
-    // blocks are not recomputable — on a decommission-prone cluster,
-    // swap in reliable checkpoints as dupClusters' reliable=true does.
-    val dirty = digestCompare(src, tgt, spec, digestBuckets, token)
-      .filter(!col("digest_match")).select("bucket")
-      .localCheckpoint()
-    def restrict(df: DataFrame) =
-      restrictBuckets(df, spec, digestBuckets, token, dirty, "left_semi")
+    val plan = BucketPlan.decide(BucketPlan.byBucket(
+      digestCompare(src, tgt, spec, digestBuckets, token)), digestFirst = true)
+    def restrict(df: DataFrame) = plan.restrict(df, spec, digestBuckets, token)
     mismatches(restrict(src), restrict(tgt), spec, opts, token)
   }
-
-  /** Side-by-side per-bucket digests of BOTH sides — the journalable
-    * unit of [[incrementalDiff]]: `(bucket, src_rows, src_sum, src_xor,
-    * tgt_rows, tgt_sum, tgt_xor)`, one row per bucket seen on either
-    * side (absent side reads null). Persist this frame with a run's
-    * journal and the next run can prove per-bucket that NOTHING changed
-    * on either side since — something the reference's per-token resume
-    * watermark (JobMetadataDb.java:292-315) cannot express.
-    */
-  def sideDigests(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      buckets: Int, token: Seq[Column] => Column = defaultToken): DataFrame =
-    digestSides(src, tgt, spec, buckets, token)
 
   /** Two-level Merkle digest tree: roll the per-bucket digests up into
     * `buckets / fanout` super-nodes (counts and decimal sums ADD, xors
@@ -726,28 +713,29 @@ object DiffEngine {
     require(fanout >= 2 && buckets % fanout == 0,
       "buckets must be a positive multiple of fanout")
     val spec = spec0.bind(src)
-    // ≤ buckets rows; materialized once, read by both levels. A side's
+    // ≤ buckets rows, collected once and read by both levels. A side's
     // absent bucket reads null, which sum and bit_xor skip — so rolling
     // the joined leaves equals joining the rolled sides.
-    val leaves = sideDigests(src, tgt, spec, buckets, token)
-      .withColumnRenamed("bucket", "node").localCheckpoint()
+    val d = sideDigests(src, tgt, spec, buckets, token)
+    val leaves = src.sparkSession.createDataFrame(d.collect().toSeq.asJava, d.schema)
     def verdicts(df: DataFrame, level: Int) = df.select(lit(level).as("level"),
-      col("node"), coalesce(col("src_rows"), lit(0L)).as("src_rows"),
+      col("bucket").as("node"), coalesce(col("src_rows"), lit(0L)).as("src_rows"),
       coalesce(col("tgt_rows"), lit(0L)).as("tgt_rows"),
       digestMatch.as("digest_match"))
     val roll = DigestCols.map { c =>
       (if (c.endsWith("_xor")) bit_xor(col(c)) else sum(col(c))).as(c) }
-    val supers = verdicts(leaves.groupBy(expr(s"node DIV $fanout").as("node"))
-      .agg(roll.head, roll.tail: _*), 0)
-    val dirty = supers.filter(!col("digest_match")).select(col("node").as("__parent"))
-    supers.unionByName(verdicts(leaves, 1)
-      .join(dirty, expr(s"node DIV $fanout") === col("__parent"), "left_semi"))
+    val supers = leaves.groupBy(expr(s"bucket DIV $fanout").as("bucket"))
+      .agg(roll.head, roll.tail: _*)
+    // the descent: the leaves under the supers whose digests disagree
+    val dirty = BucketPlan.decide(BucketPlan.byBucket(
+      supers.withColumn("digest_match", digestMatch)), digestFirst = true).dirty
+    verdicts(supers, 0).unionByName(verdicts(leaves, 1)
+      .filter(expr(s"bucket DIV $fanout").isin(dirty: _*)))
   }
 
   /** The [[sideDigests]] payload columns, which [[digestProgress]] rows
     * carry too — the full set a bucket must match null-safely to count
-    * as unchanged across runs ([[incrementalDiff]], and the runner's
-    * incremental mode, which compares collected rows on the driver).
+    * as unchanged across runs ([[BucketPlan.decide]]).
     */
   val DigestCols: Seq[String] =
     for (side <- Seq("src", "tgt"); f <- DigestFields) yield s"${side}_$f"
@@ -763,31 +751,22 @@ object DiffEngine {
     * A bucket counts as unchanged only when present in BOTH frames with
     * every digest field null-safe equal; buckets new, gone, or touched
     * on either side all take the fresh path (a gone bucket has no
-    * current rows, so its fresh diff is correctly empty). The unchanged
-    * set broadcasts: an anti join restricts the fresh diff, a semi join
-    * (on the mismatch row's token) selects the replay.
+    * current rows, so its fresh diff is correctly empty). Both digest
+    * frames are collected once and [[BucketPlan]] takes the unchanged
+    * set as its skip set: its broadcast anti join restricts the fresh
+    * diff, a semi join (on the mismatch row's token) selects the replay.
     */
   def incrementalDiff(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       priorDigests: DataFrame, priorMismatches: DataFrame,
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
       token: Seq[Column] => Column = defaultToken): DataFrame = {
     val spec = spec0.bind(src)
-    // ≤ digestBuckets narrow rows behind THREE broadcasts (both fresh
-    // sides + the replay semi-join): one materialization, or each
-    // broadcast replays the current-digest scans AND the caller's
-    // prior-digest derivation. EAGER — same broadcast-timeout rationale
-    // (and same executor-local-block caveat) as digestDiff's dirty set.
-    val prior = priorDigests.select(
-      col("bucket") +: DigestCols.map(c => col(c).as(s"__p_$c")): _*)
-    val unchanged = sideDigests(src, tgt, spec, digestBuckets, token)
-      .join(prior, Seq("bucket"))
-      .filter(DigestCols.map(c => col(c) <=> col(s"__p_$c")).reduce(_ && _))
-      .select("bucket")
-      .localCheckpoint()
-    def fresh(df: DataFrame) =
-      restrictBuckets(df, spec, digestBuckets, token, unchanged, "left_anti")
+    val plan = BucketPlan.decide(BucketPlan.byBucket(
+        sideDigests(src, tgt, spec, digestBuckets, token)),
+      priorDigests = Some(BucketPlan.byBucket(priorDigests)))
+    def fresh(df: DataFrame) = plan.restrict(df, spec, digestBuckets, token)
     val replay = restrictBuckets(priorMismatches, spec, digestBuckets,
-      _ => col("token"), unchanged, "left_semi")
+      _ => col("token"), plan.skip, "left_semi")
     mismatches(fresh(src), fresh(tgt), spec, opts, token).unionByName(replay)
   }
 
@@ -817,7 +796,7 @@ object DiffEngine {
       "matched_partitions" -> coalesce(col("src_parts"), lit(0L)),
       "matched_rows" -> rows,
       "matched_values" -> rows * lit(spec.regular.size.toLong))
-    digestSides(src, tgt, spec, buckets, token, Seq(
+    sideDigests(src, tgt, spec, buckets, token, Seq(
         countDistinct(spec.pk.head, spec.pk.tail: _*).as("parts"),
         max(col("__tok")).as("last_token")))
       .select(Seq(col("bucket"), digestMatch.as("digest_match")) ++
@@ -836,7 +815,9 @@ object DiffEngine {
     * mostly-matching corpus the wide shuffle shrinks to the dirty
     * fraction; the extra cost is the phase-1 distinct-pk partial
     * aggregate, which ships one narrow row per partition instead of
-    * every data row with payloads.
+    * every data row with payloads. The phase-1 rows are collected once:
+    * [[BucketPlan]] splits them into the clean credit, a local frame, and
+    * the dirty set.
     */
   def digestRangeStats(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
@@ -845,19 +826,13 @@ object DiffEngine {
     spec.validateSides(src, tgt)
     val fs = applyTokenFilters(src, spec, opts, token)
     val ft = applyTokenFilters(tgt, spec, opts, token)
-    // ≤ digestBuckets narrow rows feeding THREE consumers (the clean
-    // credit, and the dirty set behind both restrict sides) — without
-    // the barrier each consumer re-runs phase 1's two full digest scans.
-    // EAGER — the dirty set broadcasts, same broadcast-timeout rationale
-    // as digestDiff.
     val progress = digestProgress(fs, ft, spec, digestBuckets, token)
-      .localCheckpoint()
-    val dirty = progress.filter(!col("digest_match")).select("bucket")
-    def restrict(df: DataFrame) =
-      restrictBuckets(df, spec, digestBuckets, token, dirty, "left_semi")
+    val plan = BucketPlan.decide(BucketPlan.byBucket(progress), digestFirst = true)
+    def restrict(df: DataFrame) = plan.restrict(df, spec, digestBuckets, token)
     val ps = partitionStats(restrict(fs), restrict(ft), spec, token)
+    val credit = src.sparkSession.createDataFrame(plan.clean.asJava, progress.schema)
     withSkipped(ps.select(partitionCounters: _*).unionByName(
-        progress.filter(col("digest_match")).select(Counters.map(col): _*)),
+        credit.select(Counters.map(col): _*)),
       spec, skippedCount(src, tgt, spec, opts, token))
   }
 

@@ -30,18 +30,4 @@ object StreamingDedup {
       .withColumn("content_hash", Dedup.contentHash(col(textCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("content_hash")
-
-  /** Windowed ingest monitor: per event-time window, arriving docs and
-    * distinct contents — the live duplication-rate signal (total -
-    * distinct = duplicates caught in that window).
-    */
-  def ingestRate(stream: DataFrame, textCol: String, tsCol: String,
-      windowLen: String = "1 minute",
-      watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withColumn("content_hash", Dedup.contentHash(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen))
-      .agg(count(lit(1)).as("docs"),
-        approx_count_distinct(col("content_hash")).as("approx_distinct"))
 }

@@ -77,15 +77,4 @@ object StreamingDiff {
       xxhash64(regStruct).as("rowHash"),
       current_timestamp().as("ts"))
   }
-
-  /** Windowed mismatch-rate monitor over the verdict stream — the
-    * streaming analog of the journal's running counters (O13): per
-    * 1-minute event-time window, counts per classification with a
-    * watermark bounding state.
-    */
-  def mismatchRate(verdicts: DataFrame, tsCol: String = "ts"): DataFrame =
-    verdicts
-      .withWatermark(tsCol, "10 minutes")
-      .groupBy(window(col(tsCol), "1 minute"), col("classification"))
-      .agg(count(lit(1)).as("n"))
 }

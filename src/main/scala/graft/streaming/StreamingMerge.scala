@@ -116,16 +116,4 @@ object StreamingMerge {
       when(col(opCol) === "delete", lit(""))
         .otherwise(to_json(struct(spec.regular.map(col): _*))).as("payload"),
       col(tsCol).as("ts"))
-
-  /** Windowed change-rate monitor over a change stream — ops per
-    * event-time window per kind, watermark-bounded (the ingest-side
-    * health signal: a delete spike or upsert flood shows here first).
-    */
-  def opRate(changes: DataFrame, tsCol: String = "ts",
-      windowLen: String = "1 minute",
-      watermark: String = "10 minutes"): DataFrame =
-    changes
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen), col("op"))
-      .agg(count(lit(1)).as("n"))
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
@@ -16,7 +15,7 @@ class ApiServerSpec extends SparkSpec with NoLeakedPersists {
 
   test("HTTP results server serves journal queries as JSON") {
     implicit val s: SparkSession = spark
-    val root = Files.createTempDirectory("graft-api").toString
+    val root = tempDir("graft-api")
     val src = ParquetSource(Sf)
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String) = Perturb.ordersTarget(src.table(sp, name))
@@ -58,7 +57,7 @@ class ApiServerSpec extends SparkSpec with NoLeakedPersists {
 
   test("format-agnostic source: diff over csv equals diff over parquet") {
     implicit val s: SparkSession = spark
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv")
     val orders = graft.engine.Tables.load(spark, Sf, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus") // csv-safe subset
     orders.coalesce(1).write.mode("overwrite")

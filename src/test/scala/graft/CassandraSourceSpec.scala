@@ -212,7 +212,7 @@ class CassandraSourceSpec extends SparkSpec with NoLeakedPersists {
         src.table(sp, name).filter(col("event_id") % 97 =!= 0)
       def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-cql-e2e").toString
+    val root = tempDir("graft-cql-e2e")
     val stats = new DiffRunner(src, tgt,
       DiffJobConfig("cql-e2e", Seq(spec), DiffOptions(buckets = 8),
         metadataRoot = root)).run()("events")

@@ -32,7 +32,7 @@ class FixtureCanarySpec extends SparkSpec {
   }
 
   test("Tables.events: nanos-as-long encoding normalizes to the instant") {
-    val dir = java.nio.file.Files.createTempDirectory("canary-nanos").toString
+    val dir = tempDir("canary-nanos")
     writeEvents(dir, lit(Micros * 1000L)) // raw long nanoseconds
     val (dt, us) = loadedMicros(dir)
     assert(dt === TimestampType)
@@ -40,7 +40,7 @@ class FixtureCanarySpec extends SparkSpec {
   }
 
   test("Tables.events: TIMESTAMP(MICROS) UTC encoding passes through") {
-    val dir = java.nio.file.Files.createTempDirectory("canary-micros").toString
+    val dir = tempDir("canary-micros")
     writeEvents(dir, timestamp_micros(lit(Micros)))
     val (dt, us) = loadedMicros(dir)
     assert(dt === TimestampType)
@@ -48,7 +48,7 @@ class FixtureCanarySpec extends SparkSpec {
   }
 
   test("Tables.events: TIMESTAMP_NTZ encoding casts bit-exactly under UTC") {
-    val dir = java.nio.file.Files.createTempDirectory("canary-ntz").toString
+    val dir = tempDir("canary-ntz")
     writeEvents(dir, timestamp_micros(lit(Micros)).cast(TimestampNTZType))
     val (dt, us) = loadedMicros(dir)
     assert(dt === TimestampType)

@@ -17,9 +17,6 @@ import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
 class JournalApiSpec extends SparkSpec with NoLeakedPersists {
   import spark.implicits._
 
-  private def tmpRoot(): String =
-    Files.createTempDirectory("graft-meta").toString
-
   /** The stats `run()` returned equal the counter sums over each table's
     * newest task_status row per bucket, and the table's served
     * job_results row.
@@ -41,57 +38,6 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     }
   }
 
-  /** The call site of every Spark job `body` submits: the innermost
-    * `graft.` frame of its SQL execution, else of its last stage. A job
-    * of a journal write's execution names the dataset after it, as in
-    * `<frame> writes mismatches`.
-    * Listener events arrive asynchronously but in order, so a marker job
-    * run after `body` is delivered after every job `body` submitted;
-    * waiting for it makes the list complete.
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-      SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val marker = s"marker-${java.util.UUID.randomUUID}"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    def innermost(callSite: String): String =
-      Option(callSite).toSeq.flatMap(_.split("\n")).map(_.trim.stripPrefix("at "))
-        .find(_.startsWith("graft.")).getOrElse("")
-    // MetadataStore stages every append in `<dataset>/.staging-<uuid>`
-    val staged = "([^/\\s]+)/\\.staging-".r
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart =>
-          execSites.put(x.executionId, innermost(x.details) +
-            staged.findFirstMatchIn(x.physicalPlanDescription)
-              .fold("")(m => s" writes ${m.group(1)}"))
-        case _ =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == marker)
-          markerSeen.countDown()
-        else sites.add(Option(p).flatMap(p =>
-            Option(p.getProperty("spark.sql.execution.id")))
-          .flatMap(id => Option(execSites.get(id.toLong)))
-          .getOrElse(innermost(e.stageInfos.maxBy(_.stageId).details)))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, "job count marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    sites.asScala.toList
-  }
-
   /** Does `df`'s physical plan hold a window or an exchange? */
   private def windowOrExchange(df: DataFrame): Boolean = {
     def names(p: SparkPlan): Seq[String] = p match {
@@ -107,7 +53,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("run lock: second acquire fails until released (LWT semantics)") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     assert(store.acquireRunLock("job1"))
     assert(!store.acquireRunLock("job1"))
@@ -136,7 +82,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("runningJobs lists a held lock before its job_summary row is written") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     val api = new ResultsApi(store)
     // a first run between acquiring its lock and writing job_summary
@@ -176,8 +122,8 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         "sampling_num", "ratio", "run_ts")
     for ((t, df) <- Seq("table_params" -> params, "job_summary" -> summary);
         partitionBy <- Seq(Nil, Seq("job_id"))) {
-      val driver = new MetadataStore(tmpRoot())
-      val sparkWritten = new MetadataStore(tmpRoot())
+      val driver = new MetadataStore(tempDir("graft-meta"))
+      val sparkWritten = new MetadataStore(tempDir("graft-meta"))
       assert(jobsOf(driver.write(t, df, partitionBy)).isEmpty)
       // coalesce(1) keeps the frame off the driver path: a Spark write
       assert(jobsOf(sparkWritten.write(t, df.coalesce(1), partitionBy)).nonEmpty)
@@ -219,7 +165,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("DiffRunner end-to-end: journals stats, mismatches and results; hooks fire") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val tgt = new SourceProvider { // perturbed view of the same corpus
       def table(sp: SparkSession, name: String): DataFrame =
@@ -277,7 +223,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("re-running a finished job id resumes to nothing; rerun=true re-compares") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val mkConfig = (rerun: Boolean) => DiffJobConfig("resume-job",
       Seq(Perturb.ordersSpec), DiffOptions(buckets = 4),
@@ -313,7 +259,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("incremental run re-diffs only digest-changed buckets and replays the rest") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     def tgtOf(f: DataFrame => DataFrame) = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame = f(src.table(sp, name))
@@ -346,7 +292,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(secondRunBuckets(0) > 0 && secondRunBuckets(0) < bucketsRun1,
       s"run2 wrote ${secondRunBuckets(0)} of $bucketsRun1 buckets")
     // totals must equal a from-scratch full diff of the current pair
-    val fullRoot = tmpRoot()
+    val fullRoot = tempDir("graft-meta")
     val full = new DiffRunner(src, tgtOf(Perturb.lineitemTarget),
       DiffJobConfig("full-job", Seq(Perturb.lineitemSpec),
         DiffOptions(buckets = buckets), metadataRoot = fullRoot)).run()("lineitem")
@@ -371,7 +317,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val incShrunk = incRun(srcShrunk, shrunkTgt)
     val fullShrunk = new DiffRunner(srcShrunk, shrunkTgt,
       DiffJobConfig("full-shrunk", Seq(Perturb.lineitemSpec),
-        DiffOptions(buckets = buckets), metadataRoot = tmpRoot())).run()("lineitem")
+        DiffOptions(buckets = buckets), metadataRoot = tempDir("graft-meta"))).run()("lineitem")
     assert(incShrunk === fullShrunk)
     // retirement really happened: the latest journal rows include
     // zeroed-out buckets
@@ -390,7 +336,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("mismatch reads: latest classification wins per (job, table, bucket, token)") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     // reference PK ((job_id, bucket), table, token): mismatch_type is a
     // VALUE — re-recording a token upserts, latest classification wins
@@ -444,7 +390,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("re-run keeps the stored bucket count (params immutability)") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     new DiffRunner(src, src, DiffJobConfig("params-job", Seq(Perturb.ordersSpec),
       DiffOptions(buckets = 4), metadataRoot = root)).run()
@@ -460,7 +406,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("re-run keeps ALL stored params: filters, sampling, table list") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val first = new DiffRunner(src, src,
       DiffJobConfig("params-full", Seq(Perturb.ordersSpec),
@@ -478,7 +424,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("re-run restores the FULL stored table set — omitted tables still diffed") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val first = new DiffRunner(src, src,
       DiffJobConfig("stored-set", Seq(Perturb.ordersSpec, Perturb.lineitemSpec),
@@ -497,7 +443,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("journal appends publish atomically: stale staging invisible, appends exact") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     store.write("probe", Seq((1L, "a")).toDF("x", "y"))
     // a crashed attempt's leftover `.staging-*` dir must never be read
@@ -523,7 +469,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("concurrent appends to one partitioned dataset read back as their union") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     // half the writers append EMPTY frames, racing on the one `_schema`
     // marker, while the others publish data and drop their staging dirs
@@ -555,7 +501,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("a failing table: the others finish journaling, then the run throws and unlocks") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     // two tables whose parquet is missing fail at once; orders must
     // still journal every bucket before run() rethrows
@@ -578,7 +524,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("an interrupted job resumes only the unfinished table") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame =
@@ -613,7 +559,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     // a second run stamped its own rows: the window keeps the newest
     assert(windowOrExchange(latestStatus))
     assert(statusRows("orders") === ordersRows)
-    val whole = new DiffRunner(src, tgt, mk(tmpRoot())).run()
+    val whole = new DiffRunner(src, tgt, mk(tempDir("graft-meta"))).run()
     assert(resumed === whole)
     assert(whole("lineitem").mismatchedPartitions > 0 &&
       whole("orders").mismatchedPartitions > 0)
@@ -624,7 +570,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("fully-matched job: every journal table reads back, empties included") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     // identical sides + reverse validation on: mismatches AND
     // reverse_checks are both EMPTY partitioned sinks — they must still
@@ -663,7 +609,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("repair=true journals the reconciliation script, served by the API") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame =
@@ -690,7 +636,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(api.jobRepair("repair-job").count() === script.length)
     assert(api.jobRepair("repair-job", Some("nope")).count() === 0)
     // a journal with no repair dataset serves an empty script, not a throw
-    val root2 = tmpRoot()
+    val root2 = tempDir("graft-meta")
     new DiffRunner(src, src, DiffJobConfig("norepair", Seq(Perturb.ordersSpec),
       DiffOptions(buckets = 4), metadataRoot = root2)).run()
     assert(new ResultsApi(new MetadataStore(root2)).jobRepair("norepair").count() === 0)
@@ -698,7 +644,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("param restore tolerates a job_summary written by an older schema") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     // an older engine version journaled fewer columns: restore must use
     // what is stored (buckets=4) and fall back to config for the rest
@@ -716,7 +662,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("reverse-read validation pass journals verdict disagreements") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     // unequal duplicate-full-PK counts: forward pairing matches values,
     // reverse pairing mismatches them — the one genuinely order-sensitive
     // diff outcome; the validation pass must journal it
@@ -742,7 +688,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("job lifecycle runs on RandomPartitioner tokens end-to-end") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val stats = new DiffRunner(src, src,
       DiffJobConfig("random-job", Seq(Perturb.ordersSpec),
@@ -751,7 +697,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     // token choice cannot change the verdict counters
     val base = new DiffRunner(src, src,
       DiffJobConfig("xxh-job", Seq(Perturb.ordersSpec),
-        DiffOptions(buckets = 4), metadataRoot = tmpRoot())).run()("orders")
+        DiffOptions(buckets = 4), metadataRoot = tempDir("graft-meta"))).run()("orders")
     assert(stats === base)
     // the journal carries the 127-bit tokens as 39-char decimal strings
     val store = new MetadataStore(root)
@@ -773,7 +719,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("concurrent run of the same job id is refused") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
     store.acquireRunLock("busy")
     val src = ParquetSource(Sf)
@@ -810,7 +756,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       assert(verdicts === Set(true, false), s"$partitioner: vacuous digest split")
       // per run: stats, latest-per-bucket task_status counters, mismatches
       def job(digestFirst: Boolean) = {
-        val root = tmpRoot()
+        val root = tempDir("graft-meta")
         val cfg = DiffJobConfig("df-eq", Seq(Perturb.lineitemSpec),
           DiffOptions(buckets = buckets), metadataRoot = root,
           partitioner = partitioner, incremental = true,
@@ -883,7 +829,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       try {
         val stats = new DiffRunner(src, tgt,
           DiffJobConfig(job, Seq(Perturb.lineitemSpec),
-            DiffOptions(buckets = 8), metadataRoot = tmpRoot(),
+            DiffOptions(buckets = 8), metadataRoot = tempDir("graft-meta"),
             digestFirst = digest)).run()("lineitem")
         (stats, settled(l))
       } finally spark.sparkContext.removeSparkListener(l)
@@ -958,11 +904,11 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         "repair" -> rows(api.jobRepair(id), repair: _*),
         "repairOrders" -> rows(api.jobRepair(id, Some("orders")), repair: _*))
     }
-    val shared = tmpRoot()
+    val shared = tempDir("graft-meta")
     val a = job(shared, "a", "random")
     val b = job(shared, "b", "xxhash64")
     val aAgain = job(shared, "a", "random") // resumes: every bucket done
-    val (freshA, freshB) = (tmpRoot(), tmpRoot())
+    val (freshA, freshB) = (tempDir("graft-meta"), tempDir("graft-meta"))
     val alone = Map("a" -> job(freshA, "a", "random"),
       "b" -> job(freshB, "b", "xxhash64"))
     assert(a === alone("a") && aAgain === alone("a") && b === alone("b"))
@@ -979,7 +925,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("journal reads run no Spark job; a one-table run's job count is pinned") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     val tgt = new SourceProvider {
       def table(sp: SparkSession, name: String): DataFrame =
@@ -1031,7 +977,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     }.isEmpty)
     // a fully matching run journals empty mismatches: their schema
     // marker is written on the driver too, and reads back
-    val clean = tmpRoot()
+    val clean = tempDir("graft-meta")
     val cleanRun = jobsOf {
       new DiffRunner(src, src, DiffJobConfig("clean-job", Seq(Perturb.ordersSpec),
         DiffOptions(buckets = 4), metadataRoot = clean)).run()
@@ -1062,7 +1008,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     // bigint tokens: a job id that needs escaping, journaled by two
     // incremental runs (a clean target, then a dirty one), next to a job
     // one run wrote and a job_summary row of an older schema with nulls
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val (escaped, oneRun) = ("job/1 :x%=y", "one-run")
     new MetadataStore(root).write("job_summary",
       Seq(("old-job", Seq("orders"), 4, Option.empty[Double], "2024-01-01T00:00:00.000Z"))
@@ -1071,7 +1017,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     run(root, escaped, dirty, incremental = true)
     run(root, oneRun, dirty)
     // string tokens, and an `errors` dataset that is only its marker
-    val random = tmpRoot()
+    val random = tempDir("graft-meta")
     new DiffRunner(src, provider(Perturb.ordersTarget), DiffJobConfig("r",
       Seq(Perturb.ordersSpec), DiffOptions(buckets = 16), metadataRoot = random,
       partitioner = "random")).run()
@@ -1130,7 +1076,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("a journal read above the driver's bound is a Spark scan and serves the same counts") {
     implicit val s: SparkSession = spark
-    val store = new MetadataStore(tmpRoot())
+    val store = new MetadataStore(tempDir("graft-meta"))
     // one run's mismatches of a job: a third ONLY_IN_SOURCE
     def mismatches(id: String, n: Long): Unit = store.write("mismatches",
       spark.range(n).select(lit(id).as("job_id"), lit("orders").as("table_name"),
@@ -1171,7 +1117,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     for (((incremental, digestFirst), (maxFirst, maxRerun)) <- bounds) {
       val what = s"incremental=$incremental digestFirst=$digestFirst"
       val cfg = DiffJobConfig("pinned", Seq(Perturb.lineitemSpec),
-        DiffOptions(buckets = 64), metadataRoot = tmpRoot(),
+        DiffOptions(buckets = 64), metadataRoot = tempDir("graft-meta"),
         incremental = incremental, digestFirst = digestFirst)
       val first = jobsOf(new DiffRunner(src, tgtOf(Perturb.lineitemTargetStale), cfg).run())
       val rerun = jobsOf(new DiffRunner(src, tgtOf(Perturb.lineitemTarget), cfg).run())
@@ -1217,12 +1163,12 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
           Seq("table_name", "bucket", "status", "last_token") ++ DiffEngine.Counters),
         rows(api.jobMismatches("df-resume"), Seq("table_name", "bucket", "token", "mismatch_type")))
     }
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val e = intercept[Exception](
       new DiffRunner(provider(cut), provider(cutTgt), cfg(root)).run())
     assert(e.getMessage.contains("lineitem source down"), e.getMessage)
     val resumed = new DiffRunner(provider((_, df) => df), provider(tgt), cfg(root)).run()
-    val wholeRoot = tmpRoot()
+    val wholeRoot = tempDir("graft-meta")
     val whole = new DiffRunner(provider((_, df) => df), provider(tgt), cfg(wholeRoot)).run()
     assert(resumed === whole)
     val (status, mism) = journaled(root)
@@ -1240,7 +1186,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
 
   test("a re-run serves each table's quarantined rows of its newest run only") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val src = ParquetSource(Sf)
     // one null-key orders row per side
     def withNullKey(df: DataFrame): DataFrame =
@@ -1271,14 +1217,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(store.read("errors").filter(col("job_id") === "quarantined").count() === 5)
     assert(served === want)
     // a root whose errors were all journaled unstamped serves them as read
-    val old = new MetadataStore(tmpRoot())
+    val old = new MetadataStore(tempDir("graft-meta"))
     old.write("errors", unstamped)
     assert(new ResultsApi(old).jobErrors("quarantined").count() === 1)
   }
 
   test("a partitioned parquet source reads as spark.read.parquet, without a job") {
     implicit val s: SparkSession = spark
-    val root = tmpRoot()
+    val root = tempDir("graft-meta")
     val rows = (0 until 20).map(i => (i.toLong, s"v$i", i % 3, s"r${i % 2}"))
       .toDF("id", "v", "year", "region")
     rows.write.partitionBy("year", "region").parquet(s"$root/events.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -13,7 +11,7 @@ class ShardSinkSpec extends SparkSpec {
   private lazy val docs = Tables.load(spark, Sf, "documents")
 
   test("shard write: complete, deterministic, manifest-auditable") {
-    val dir = Files.createTempDirectory("graft-shards").toString
+    val dir = tempDir("graft-shards")
     val m1 = ShardSink.writeShards(docs, "doc_id", dir, nShards = 4)
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDecimal(2))))
       .toMap
@@ -48,7 +46,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("audit flags a corrupted shard") {
-    val dir = Files.createTempDirectory("graft-shards2").toString
+    val dir = tempDir("graft-shards2")
     ShardSink.writeShards(docs, "doc_id", dir, nShards = 2)
     // corrupt: drop shard 0's data files entirely
     val shard0 = new java.io.File(s"$dir/shard=0")

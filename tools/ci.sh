@@ -7,7 +7,19 @@ SF="${1:-/root/testdata/sf0.001}"
 OUT=$(mktemp -d /tmp/graft-verify.XXXX)
 
 echo "== compile + test =="
+# the suites delete every directory they make under the temp directory
+# (/tmp, the forked test JVM's java.io.tmpdir): a run that leaves a
+# graft-* or canary-* directory behind fails
+leftovers() {
+  find /tmp -mindepth 1 -maxdepth 1 -type d \( -name 'graft-*' -o -name 'canary-*' \) | wc -l
+}
+BEFORE=$(leftovers)
 sbt -batch compile test
+AFTER=$(leftovers)
+if [ "$AFTER" -gt "$BEFORE" ]; then
+  echo "tests left $((AFTER - BEFORE)) graft-*/canary-* directories under /tmp"
+  exit 1
+fi
 
 # the real job path: YAML -> DiffRunner -> journal -> ResultsApi, with
 # every counter and read-back checked against the generator's values;
