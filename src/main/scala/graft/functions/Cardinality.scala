@@ -127,11 +127,9 @@ object Cardinality {
     hllEstimateSql(hllRegistersSql(srcSql, keyCols, valueCol, p), keyCols, p)
 
   /** alpha_m · m² · 2^S as one double constant, rendered shortest-repr
-    * into both engines so they parse the identical value. Shared with
-    * [[graft.streaming.StreamingCardinality]] so the streaming snapshot
-    * is bit-identical to the batch estimate.
+    * into both engines so they parse the identical value.
     */
-  private[graft] def estimatorConst(p: Int): Double = {
+  private def estimatorConst(p: Int): Double = {
     val m = (1 << p).toDouble
     val alpha = 0.7213 / (1.0 + 1.079 / m)
     alpha * m * m * math.pow(2.0, 61 - p)

@@ -68,7 +68,6 @@ object Decontaminate {
     * lambda INTERPRETED with a linear map scan per element —
     * O(entries × words) boxed probes, measured at 3.8 s of
     * decontaminate_bloom's 5.1 s sf0.1 floor; the kernel is O(entries).
-    * Shared by the batch prober and the stream-static streaming path.
     */
   def bloomFilterRow(bench: DataFrame, textCol: String, n: Int,
       mBits: Int, k: Int): DataFrame = {

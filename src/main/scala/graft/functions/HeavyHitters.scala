@@ -7,11 +7,9 @@ import org.apache.spark.sql.functions._
 /** Batch heavy hitters: a mergeable Misra–Gries summary plus an exact
   * recount pass — the standard two-phase "frequent items" plan
   * (Misra & Gries 1982; mergeability per Agarwal et al., "Mergeable
-  * Summaries", PODS '12). Complements the STREAMING space-saving
-  * variant in `streaming/StreamingHeavyHitters.scala` with the batch
-  * shape a corpus-profiling pipeline wants: an EXACT answer to "every
-  * term with frequency >= num/den of the corpus", at a cost that never
-  * shuffles the vocabulary.
+  * Summaries", PODS '12), in the shape a corpus-profiling pipeline
+  * wants: an EXACT answer to "every term with frequency >= num/den of
+  * the corpus", at a cost that never shuffles the vocabulary.
   *
   * Why not a plain `groupBy(term)`? Its exchange carries one row per
   * DISTINCT TERM PER MAP PARTITION — at web scale (10^8+ token types,

@@ -141,9 +141,7 @@ object Sessions {
   }
 
   /** Session-level rollup via the built-in `session_window` grouping
-    * (merge-on-overlap semantics; window end = last event + gap). The
-    * same declarative shape runs under Structured Streaming with a
-    * watermark — see [[graft.streaming.StreamingSessions]].
+    * (merge-on-overlap semantics; window end = last event + gap).
     */
   def sessionStats(events: DataFrame, userCol: String, tsCol: String,
       gap: String, valueCol: String): DataFrame =

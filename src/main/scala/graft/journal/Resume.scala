@@ -1,19 +1,21 @@
 package graft.journal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** O12: checkpoint/resume. The reference journals `last_token` per
-  * (split, table) and, on re-run, skips finished splits
+/** O12: the reference's mid-split resume rule. The reference journals
+  * `last_token` per (split, table) and, on re-run, skips finished splits
   * (`lastToken == split.end`) and restarts in-progress ones from
   * `last_token` (Differ.java:153-171, 262-285; JobMetadataDb.java:182-217).
   *
-  * Our granularity is the journal bucket: `task_status` holds one row per
-  * (table_name, bucket) with `status` ∈ {done, in_progress} and the
-  * highest completed token (`last_token`). Resume is an anti-join of the
-  * work-set against completed buckets plus a watermark filter inside
-  * in-progress buckets — no driver-side loops, prunes at the scan when
-  * the work-set is bucket-partitioned.
+  * [[pending]] is that rule at journal-bucket granularity: an anti-join of
+  * the work-set against `done` buckets plus a `last_token` watermark filter
+  * inside `in_progress` ones. The diff job does not call it: `DiffRunner`
+  * journals only whole `done` buckets (no `in_progress` watermark) and
+  * decides what a re-run skips with `BucketPlan.decide` over those rows.
+  * `pending` is kept for the oracle-gated `diff_resume` query and for
+  * committing a table in bucket waves (ROADMAP item 4), where a crash can
+  * leave a bucket half done.
   */
 object Resume {
 

@@ -1,34 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
-/** Shuffle-free diff via bucketed snapshots — the 100 TB lever for the
-  * diff join.
-  *
-  * The reference's equal-width token splits (DiffJob.java:231-267) exist
-  * to shard work; Spark's analog that also ELIMINATES the join shuffle is
-  * bucketing: when both snapshots are written bucketed and sorted by the
-  * partition key with the same bucket count, the full-outer diff join
-  * reads co-located buckets directly — no Exchange on either side, the
-  * dominant cost at scale. Snapshot writers (the things producing the
-  * parquet from Cassandra) should bucket by pk; the diff then streams.
+/** The Z-order (Morton) clustering key of two columns, [[zValue]], and
+  * its DuckDB mirror [[zValueSql]], which the gated `events_zorder`
+  * query checks against each other.
   */
 object Bucketing {
-
-  /** Write a snapshot as a bucketed+sorted table (catalog-managed — Spark
-    * only honors bucket metadata through the catalog).
-    */
-  def writeBucketed(df: DataFrame, tableName: String, keyCols: Seq[String],
-      buckets: Int): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keyCols.head, keyCols.drop(1): _*)
-      .sortBy(keyCols.head, keyCols.drop(1): _*)
-      .format("parquet")
-      .saveAsTable(tableName)
-
-  def readBucketed(spark: SparkSession, tableName: String): DataFrame =
-    spark.table(tableName)
 
   /** Morton (Z-order) interleave of the low `bits` bits of two
     * non-negative long columns — the multi-dimensional clustering key a
@@ -39,9 +18,7 @@ object Bucketing {
     * Pure integer bit expressions — codegen'd, bit-reproducible
     * cross-engine.
     */
-  def zValue(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      bits: Int = 16): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
+  def zValue(a: Column, b: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 31, "need 1 <= bits <= 31")
     val mask = (1L << bits) - 1
     val la = a.bitwiseAND(lit(mask))

@@ -26,10 +26,14 @@ class BucketingSpec extends SparkSpec {
         rm(loc)
       }
     }
-    Bucketing.writeBucketed(src, "bspec_src", Seq("pk", "c1"), 4)
-    Bucketing.writeBucketed(tgt, "bspec_tgt", Seq("pk", "c1"), 4)
-    val bs = Bucketing.readBucketed(spark, "bspec_src")
-    val bt = Bucketing.readBucketed(spark, "bspec_tgt")
+    // bucketed + sorted by the key through the catalog: Spark honors
+    // bucket metadata only on catalog tables
+    Seq(src -> "bspec_src", tgt -> "bspec_tgt").foreach { case (df, t) =>
+      df.write.mode("overwrite").bucketBy(4, "pk", "c1").sortBy("pk", "c1")
+        .format("parquet").saveAsTable(t)
+    }
+    val bs = spark.table("bspec_src")
+    val bt = spark.table("bspec_tgt")
 
     val rl = DiffEngine.rowLevel(bs, bt, spec)
     val plan = rl.queryExecution.executedPlan.toString

@@ -49,4 +49,27 @@ class CardinalitySpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(both("x") === solo("x"))
   }
+
+  test("null values occupy one phantom register and add no harmonic term") {
+    val p = 8
+    val m = 1 << p
+    val sBits = 60 - p + 1
+    val longs: Seq[java.lang.Long] = (1L to 600L).map(java.lang.Long.valueOf)
+    val vals = (longs ++ Seq(null, null)).toDF("v")
+    // the null hash lands in one extra register row with a null bucket
+    val regs = Cardinality.hllRegisters(vals, Seq.empty, "v", p)
+    val nonNull = Cardinality.hllRegisters(longs.toDF("v"), Seq.empty, "v", p)
+      .as[(Long, Int)].collect()
+    assert(regs.count() === nonNull.length + 1)
+    assert(regs.filter(col("__b").isNull).count() === 1)
+    // estimate by hand: the phantom register counts as occupied, so one
+    // empty register's 2^S term drops, and it contributes nothing itself
+    val zOcc = nonNull.map { case (_, mj) => 1L << (sBits - mj) }.sum
+    val z = zOcc + (m - nonNull.length - 1).toLong * (1L << sBits)
+    val alpha = 0.7213 / (1.0 + 1.079 / m)
+    val expected = alpha * m * m * math.pow(2.0, 61 - p) / z.toDouble
+    val est = Cardinality.hllNdv(vals, Seq.empty, "v", p)
+      .collect().head.getDouble(0)
+    assert(est === expected) // exact: the same long sum, one division
+  }
 }

@@ -85,80 +85,6 @@ class SessionsSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(plan).length === 1, plan.take(3000))
   }
 
-  test("streaming funnel: late events refine snapshots to the batch result") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = graft.streaming.StreamingFunnel.funnelUpdates(
-        input.toDS().toDF("user_id", "event_type", "ts"),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"),
-        watermark = "1 hour")
-      .writeStream.format("memory").queryName("funnel")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      // batch 1: click + purchase but no view yet — funnel depth 0
-      input.addData((1L, "click", ts("2024-01-01 00:02:00")),
-        (1L, "purchase", ts("2024-01-01 00:03:00")),
-        (2L, "view", ts("2024-01-01 00:00:00")))
-      q.processAllAvailable()
-      val snap1 = spark.table("funnel")
-        .groupBy("user_id").agg(max("stages_completed").as("d"))
-        .as[(Long, Long)].collect().toMap
-      assert(snap1 === Map(1L -> 0L, 2L -> 1L))
-      // batch 2: user 1's view arrives LATE (within the watermark) and
-      // retroactively completes the whole chain from retained candidates
-      input.addData((1L, "view", ts("2024-01-01 00:01:00")))
-      q.processAllAvailable()
-      val last = spark.table("funnel").filter(col("user_id") === 1L)
-        .orderBy(col("stages_completed").desc).head()
-      assert(last.getAs[Long]("stages_completed") === 3L)
-      // the converged chain instants equal the batch operator's
-      val batchMicros = Sessions.funnel(
-          Seq((1L, "click", ts("2024-01-01 00:02:00")),
-            (1L, "purchase", ts("2024-01-01 00:03:00")),
-            (1L, "view", ts("2024-01-01 00:01:00")))
-            .toDF("user_id", "event_type", "ts"),
-          "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
-        .select(unix_micros(col("t_view")), unix_micros(col("t_click")),
-          unix_micros(col("t_purchase")))
-        .as[(Long, Long, Long)].head()
-      assert(last.getAs[Seq[Long]]("stage_micros") ===
-        Seq(batchMicros._1, batchMicros._2, batchMicros._3))
-    } finally q.stop()
-  }
-
-  test("streaming sessions: append emits a session once its window closes") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val q = graft.streaming.StreamingSessions.sessionStats(
-        input.toDS().toDF("user_id", "ts", "value"),
-        "user_id", "ts", gap = "5 minutes", valueCol = "value",
-        watermark = "10 seconds")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // one session for user 1: [00:00, 00:02 + 5min]
-      input.addData((1L, ts("2024-01-01 00:00:00"), 1.0),
-        (1L, ts("2024-01-01 00:02:00"), 2.0))
-      q.processAllAvailable()
-      // nothing emitted yet — the watermark has not passed the session end
-      assert(spark.table("sessions").count() === 0)
-      // far-future event advances the watermark past it; session 1 closes
-      input.addData((2L, ts("2024-01-01 06:00:00"), 4.0))
-      q.processAllAvailable()
-      input.addData((2L, ts("2024-01-01 12:00:00"), 8.0))
-      q.processAllAvailable()
-      val got = spark.table("sessions")
-        .select("user_id", "session_start", "session_end", "n_events", "sum_value")
-        .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSet
-      assert(got.contains(
-        (1L, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:07:00"), 2L, 3.0)))
-    } finally q.stop()
-  }
-
   test("packing: shard offsets are gapless from 0; sequence spans are exact") {
     import graft.functions.Packing
     val docs = Seq((0L, 5L), (2L, 10L), (4L, 3L), (1L, 7L), (3L, 2L))

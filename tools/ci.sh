@@ -1,10 +1,16 @@
 #!/usr/bin/env bash
-# Full local gate: compile, tests, oracle check at a scale factor, bench.
+# Full local gate: reachability, compile, tests, oracle check at a scale
+# factor, bench.
 # Usage: tools/ci.sh [sf-dir]   (default /root/testdata/sf0.001)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.001}"
 OUT=$(mktemp -d /tmp/graft-verify.XXXX)
+
+echo "== reachability =="
+# every top-level definition of main Scala is reached from an entry
+# point, perfbench or an allowlisted exception (reasons in the script)
+python3 tools/check_reach.py
 
 echo "== compile + test =="
 # the suites delete every directory they make under the temp directory
