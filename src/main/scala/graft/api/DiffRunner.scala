@@ -6,9 +6,8 @@ import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
 import graft.engine.{BucketPlan, DiffEngine}
@@ -26,10 +25,12 @@ import graft.sources.SourceProvider
   *  2. tables run concurrently, at most `defaultParallelism` at once (the
   *     reference compares every table of a split in one executor task,
   *     Differ.java:150-236): per table, every bucket decided on the
-  *     driver from collected rows, partition stats as ONE persisted
-  *     query; its journal writes keep their order — mismatches, then
-  *     task_status (bucket progress), then bucket digests, then reverse
-  *     checks and job_results
+  *     driver from collected rows ([[BucketPlan]]), partition stats and
+  *     per-bucket counter rows from `DiffEngine.bucketStats`, the stats
+  *     persisted as ONE query; its journal writes keep their order —
+  *     mismatches, then task_status (the counter rows, collected once),
+  *     then bucket digests, then reverse checks and job_results, the
+  *     newest counter row per bucket summed by `RangeStats.sum`
   *  3. once EVERY table has ended: metrics, post-hooks (final per-table
   *     stats), lock release — a failed table rethrows only then
   */
@@ -228,7 +229,6 @@ final class DiffRunner(
   private def diffTable(store: MetadataStore, options: DiffOptions,
       token: Seq[Column] => Column, runTs: Long,
       spec0: TableSpec): (String, RangeStats) = {
-    import spark.implicits._
     require(spec0.pk.nonEmpty,
       s"table ${spec0.table}: partition key columns must be declared")
     // each side is opened once: one file listing and schema read
@@ -259,8 +259,8 @@ final class DiffRunner(
       if (!store.exists(dataset)) SortedMap.empty
       else BucketPlan.byBucket(store.latest(dataset, config.jobId, Seq("table_name", "bucket"))
         .filter(col("table_name") === spec.table))
-    // the resume skip set, and the totals of the buckets this run does
-    // not journal
+    // the resume skip set, and the counter rows of the buckets this run
+    // does not journal
     val priorStatus = prior("task_status")
     val fsrc = DiffEngine.applyTokenFilters(sq.valid, spec, options, token)
     val ftgt = DiffEngine.applyTokenFilters(tq.valid, spec, options, token)
@@ -279,13 +279,15 @@ final class DiffRunner(
       priorDigests = Option.when(config.incremental)(prior("bucket_digests")),
       priorStatus = priorStatus, rerun = config.rerun,
       digestFirst = config.digestFirst)
-    val src = plan.restrict(fsrc, spec, options.buckets, token)
-    val tgt = plan.restrict(ftgt, spec, options.buckets, token)
+    def restricted(df: DataFrame) = plan.restrict(df, spec, options.buckets, token)
     // ONE diff computation per table: persist the per-partition stats and
-    // derive progress, mismatches and totals from it (without the
-    // persist, each journal sink would re-run the join+agg)
-    val ps = DiffEngine.partitionStats(src, tgt, spec, token,
-      tolerances = config.tolerances.getOrElse(spec.table, Map.empty)).persist()
+    // derive mismatches and counter rows from it (without the persist,
+    // each journal sink would re-run the join+agg). With digestFirst, ps
+    // covers only dirty buckets; the counter rows add the clean buckets'
+    // digest credit and zeros for the retired buckets
+    val (partitions, counters) = DiffEngine.bucketStats(fsrc, ftgt, spec, plan,
+      options.buckets, token, config.tolerances.getOrElse(spec.table, Map.empty))
+    val ps = partitions.persist()
     try {
       // checkpoint ordering mirrors the reference (mismatches recorded
       // BEFORE a range is marked complete, RangeComparator.java:201-241):
@@ -301,21 +303,12 @@ final class DiffRunner(
       // join script rows to mismatch rows.
       if (config.repair)
         journal("repair_scripts",
-          graft.engine.Repair.repairStatements(src, tgt, spec)
+          graft.engine.Repair.repairStatements(restricted(fsrc), restricted(ftgt), spec)
             .select(token(spec.pk.map(col)).as("token"), col("action"),
               col("statement")))
-      // with digestFirst, ps covers only dirty buckets — clean buckets
-      // journal their digest credit; retired buckets journal zeros (their
-      // last_token reads null). The ≤ options.buckets rows are collected
-      // once: journaled from the driver, and summed into the totals below.
-      val credit = digestPass.filter(_ => plan.clean.nonEmpty).map(d =>
-        local(plan.clean, d.schema).drop("digest_match" +: DiffEngine.DigestCols: _*))
-      val zeroes = plan.retired.toDF("bucket")
-        .select(col("bucket") +: DiffEngine.Counters.map(lit(0L).as(_)): _*)
-      val status = (DiffEngine.bucketProgressFromPartitions(ps, spec,
-          options.buckets) +: credit.toSeq :+ zeroes)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .withColumn("status", lit(Resume.StatusDone))
+      // the ≤ options.buckets counter rows are collected once: journaled
+      // from the driver, and summed into the totals below
+      val status = counters.withColumn("status", lit(Resume.StatusDone))
       val statusRows = status.collect().toSeq
       journal("task_status", local(statusRows, status.schema))
       // digests are journaled LAST, from the driver: a crash before this
@@ -335,7 +328,7 @@ final class DiffRunner(
       // reversed duplicate pairing; journal any verdict disagreement
       if (options.reverseReadProbability > 0.0)
         journal("reverse_checks",
-          DiffEngine.reverseValidation(src, tgt, spec,
+          DiffEngine.reverseValidation(restricted(fsrc), restricted(ftgt), spec,
               options.reverseReadProbability, token)
             .filter(!col("agree"))
             .select(col("token"), col("fwd_classification"),
@@ -344,28 +337,17 @@ final class DiffRunner(
       // runs of this job_id — this run's rows, plus the earlier rows of
       // the buckets it did not journal (a resumed run covers only the
       // pending remainder). The run lock excludes every other writer of
-      // this job, so no newer row can exist. Null counters count 0.
-      val counted = (priorStatus ++ statusRows.map(r => bucket(r) -> r)).values
-      val sums = DiffEngine.Counters.map(c =>
-        counted.map(r => Option(r.getAs[Number](c)).fold(0L)(_.longValue)).sum)
-      val skipped =
-        if (!options.filtersTokens) 0L
-        else DiffEngine.skippedPartitions(sq.valid, tq.valid, spec, options,
-          token).count()
-      val totals = new GenericRowWithSchema((sums :+ skipped).toArray,
-        DiffRunner.TotalsSchema)
-      journal("job_results", local(Seq(totals), totals.schema))
-      spec.table -> MetadataStore.toRangeStats(totals)
+      // this job, so no newer row can exist.
+      val totals = RangeStats.sum(
+        (priorStatus ++ statusRows.map(r => bucket(r) -> r)).values,
+        DiffEngine.skippedCount(sq.valid, tq.valid, spec, options, token))
+      journal("job_results", local(Seq(totals.toRow(spec.table)), RangeStats.RowSchema))
+      spec.table -> totals
     } finally ps.unpersist()
   }
 }
 
 object DiffRunner {
-
-  /** A job_results row: the summed counters, then skipped partitions. */
-  private val TotalsSchema = StructType(
-    DiffEngine.Counters.map(StructField(_, LongType, nullable = false)))
-    .add("skipped_partitions", LongType)
 
   /** `body` over every table on a pool this call creates and shuts down,
     * `min(tables, parallelism)` threads. The calling thread submits every

@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.io.{File, FileInputStream}
+import java.nio.file.{Files, Paths}
 import java.util.{List => JList, Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -43,6 +43,9 @@ import graft.core.{DiffOptions, TableSpec}
   * |                                | wide join reads only dirty buckets |
   * | generate_repair                | journal a CQL repair script served |
   * |                                | by GET /jobs/{id}/repair           |
+  * | tolerances                     | per-table per-column ε: a float    |
+  * |                                | cell within ε of its pair matches; |
+  * |                                | rejected with digest_first         |
   */
 final case class JobConfig(
     keyspaceTables: Seq[String],
@@ -91,11 +94,8 @@ final case class JobConfig(
 
 object JobConfig {
 
-  def load(path: String): JobConfig = {
-    val in = new FileInputStream(new File(path))
-    try fromYamlMap(new Yaml().load[JMap[String, Object]](in))
-    finally in.close()
-  }
+  def load(path: String): JobConfig =
+    loadString(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
 
   def loadString(yaml: String): JobConfig =
     fromYamlMap(new Yaml().load[JMap[String, Object]](yaml))

@@ -66,24 +66,7 @@ object Classification {
   val OnlyInTarget = "ONLY_IN_TARGET"
   val PartitionMismatch = "PARTITION_MISMATCH"
   val Matched = "MATCHED"
-  val Skipped = "SKIPPED"
 }
-
-/** The nine counters of the reference's `RangeStats`
-  * (spark-job/.../RangeStats.java:29-198). The engine sums them in Spark
-  * (`DiffEngine.counterSums`), where the reference merges them by hand
-  * (`accumulate(RangeStats)`, RangeStats.java:167-178).
-  */
-final case class RangeStats(
-    matchedPartitions: Long = 0L,
-    mismatchedPartitions: Long = 0L,
-    onlyInSource: Long = 0L,
-    onlyInTarget: Long = 0L,
-    matchedRows: Long = 0L,
-    matchedValues: Long = 0L,
-    mismatchedValues: Long = 0L,
-    skippedPartitions: Long = 0L,
-    errorPartitions: Long = 0L)
 
 /** Options governing one diff run — the data-path subset of the reference's
   * `JobConfiguration` (common/.../JobConfiguration.java:33-110).

@@ -4,7 +4,7 @@ import scala.collection.immutable.SortedMap
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
-import graft.core.TableSpec
+import graft.core.{RangeStats, TableSpec}
 import graft.journal.Resume
 
 /** Which buckets of one table a diff compares. The reference decides each
@@ -32,6 +32,17 @@ final case class BucketPlan(skip: Set[Long], retired: Seq[Long],
     restriction.fold(df) { case (how, ids) =>
       DiffEngine.restrictBuckets(df, spec, buckets, token, ids, how) }
 
+  /** The counter rows this plan journals without a join, in
+    * [[DiffEngine.bucketProgressFromPartitions]] columns: each clean
+    * bucket's digest credit, then zero counters (and a null `last_token`)
+    * per retired bucket, whose stale counters would otherwise replay.
+    */
+  def counterRows(table: String): Seq[Row] = {
+    val cols = "bucket" +: RangeStats.Counters :+ "last_token"
+    clean.map(r => Row.fromSeq(cols.map(r.getAs[Any]) :+ table)) ++
+      retired.map(b => Row.fromSeq(b +: RangeStats.Counters.map(_ => 0L) :+ null :+ table))
+  }
+
   /** A `bucket_digests` row per retired bucket: the bucket, then every
     * [[DiffEngine.DigestCols]] field null.
     */
@@ -40,6 +51,9 @@ final case class BucketPlan(skip: Set[Long], retired: Seq[Long],
 }
 
 object BucketPlan {
+
+  /** Every bucket compared: nothing skipped, retired or credited. */
+  val All: BucketPlan = BucketPlan(Set.empty, Nil, Nil, Nil, None)
 
   /** The plan of one table. With `priorDigests` (incremental mode) the
     * skip set is the buckets present in both runs with every

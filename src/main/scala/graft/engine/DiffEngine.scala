@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Classification => C, DiffOptions, TableSpec}
+import graft.core.{Classification => C, DiffOptions, RangeStats, TableSpec}
 
 /** The diff dataflow, Spark-first.
   *
@@ -27,7 +27,9 @@ import graft.core.{Classification => C, DiffOptions, TableSpec}
   *                 │
   *        groupBy(pk): partition stats + class        // O7  (partial agg map-side)
   *                 │
-  *        global agg → RangeStats row                 // O8  (final agg)
+  *        groupBy(bucket): counter rows               // O13 (≤ buckets rows)
+  *                 │
+  *        RangeStats.sum on the driver                // O8  (accumulate)
   * }}}
   *
   * Catalyst picks sort-merge for the big join, does map-side partial
@@ -37,10 +39,11 @@ import graft.core.{Classification => C, DiffOptions, TableSpec}
   *
   * Scale notes (100 TB): the only wide shuffle is the join on the full
   * primary key; the `groupBy(pk)` that follows ships only pre-aggregated
-  * per-partition counter rows (map-side combine), and the final RangeStats
-  * agg ships one row per shuffle partition. No driver-side iteration
-  * over data rows, no per-key point reads; the digest ops collect only
-  * their ≤ `buckets` digest rows, which [[BucketPlan]] decides from.
+  * per-partition counter rows (map-side combine), and the per-bucket
+  * counter agg ships ≤ `buckets` rows, which the driver sums. No
+  * driver-side iteration over data rows, no per-key point reads; the
+  * digest ops collect only their ≤ `buckets` digest rows, which
+  * [[BucketPlan]] decides from.
   */
 object DiffEngine {
 
@@ -129,15 +132,13 @@ object DiffEngine {
     keys.filter(rejected)
   }
 
-  /** One-row `skipped_partitions` frame: [[skippedPartitions]] counted,
-    * or a literal 0 without its dual key scan when nothing filters tokens.
+  /** [[skippedPartitions]] counted, or 0 without its dual key scan when
+    * nothing filters tokens.
     */
-  private def skippedCount(src: DataFrame, tgt: DataFrame, spec: TableSpec,
-      opts: DiffOptions, token: Seq[Column] => Column): DataFrame =
-    if (!opts.filtersTokens)
-      src.sparkSession.range(1).select(lit(0L).as("skipped_partitions"))
-    else skippedPartitions(src, tgt, spec, opts, token)
-      .agg(count(lit(1)).as("skipped_partitions"))
+  def skippedCount(src: DataFrame, tgt: DataFrame, spec: TableSpec,
+      opts: DiffOptions, token: Seq[Column] => Column): Long =
+    if (!opts.filtersTokens) 0L
+    else skippedPartitions(src, tgt, spec, opts, token).count()
 
   /** Whether a token expression over `df` yields strings
     * (RandomPartitioner's 127-bit decimals) rather than numbers.
@@ -389,9 +390,10 @@ object DiffEngine {
       .withColumn("token", token(spec.pk.map(col)))
   }
 
-  /** O8: the final RangeStats aggregation — one row of the nine counters
-    * (RangeStats.java:29-198; monoid merge at DiffJob.java:184). Spark
-    * runs this as partial+final HashAggregate automatically.
+  /** O8: the table's RangeStats (RangeStats.java:29-198) as one row of
+    * [[RangeStats.RowSchema]]: its per-bucket counter rows
+    * ([[bucketStats]]), collected and summed by [[RangeStats.sum]] as the
+    * runner sums its journal, plus the skipped count.
     *
     * Rows/values of one-sided partitions are not counted — the reference
     * never runs a PartitionComparator for them (RangeComparator.java:115-123).
@@ -400,51 +402,52 @@ object DiffEngine {
       opts: DiffOptions = DiffOptions(),
       token: Seq[Column] => Column = defaultToken,
       tolerances: Map[String, Double] = Map.empty): DataFrame = {
-    val fs = applyTokenFilters(src, spec, opts, token)
-    val ft = applyTokenFilters(tgt, spec, opts, token)
-    val ps = partitionStats(fs, ft, spec, token, tolerances = tolerances)
-    rangeStatsFromPartitions(ps, spec, skippedCount(src, tgt, spec, opts, token))
+    val (_, counters) = bucketStats(applyTokenFilters(src, spec, opts, token),
+      applyTokenFilters(tgt, spec, opts, token), spec, BucketPlan.All,
+      opts.buckets, token, tolerances)
+    statsRow(counters, spec, skippedCount(src, tgt, spec, opts, token))
   }
 
-  /** The seven summable RangeStats counters, in journal column order —
-    * every counter row (task_status, digest credit, stats) carries them.
+  /** One table's diff under `plan`: the partitionStats of both sides
+    * restricted by the plan, and the table's per-bucket counter rows —
+    * [[bucketProgressFromPartitions]] of those stats plus the rows the
+    * plan journals without a join ([[BucketPlan.counterRows]]). The
+    * runner journals the counter rows; the stats queries sum them.
     */
-  val Counters: Seq[String] = Seq("matched_partitions",
-    "mismatched_partitions", "only_in_source", "only_in_target",
-    "matched_rows", "matched_values", "mismatched_values")
+  def bucketStats(src: DataFrame, tgt: DataFrame, spec: TableSpec,
+      plan: BucketPlan, buckets: Int, token: Seq[Column] => Column,
+      tolerances: Map[String, Double] = Map.empty): (DataFrame, DataFrame) = {
+    def restrict(df: DataFrame) = plan.restrict(df, spec, buckets, token)
+    val ps = partitionStats(restrict(src), restrict(tgt), spec, token,
+      tolerances = tolerances)
+    val progress = bucketProgressFromPartitions(ps, spec, buckets)
+    (ps, progress.unionByName(src.sparkSession.createDataFrame(
+      plan.counterRows(spec.table).asJava, progress.schema)))
+  }
 
-  /** Aggregate sums of [[Counters]] over counter rows; 0 over no rows. */
+  /** [[RangeStats.sum]] of `counters`, at most `buckets` rows, and
+    * `skipped`, as `spec`'s one stats row.
+    */
+  private def statsRow(counters: DataFrame, spec: TableSpec,
+      skipped: Long): DataFrame =
+    counters.sparkSession.createDataFrame(Seq(RangeStats.sum(
+      counters.collect(), skipped).toRow(spec.table)).asJava, RangeStats.RowSchema)
+
+  /** Aggregate sums of [[RangeStats.Counters]] over counter rows; 0 over
+    * no rows.
+    */
   val counterSums: Seq[Column] =
-    Counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
+    RangeStats.Counters.map(c => coalesce(sum(col(c)), lit(0L)).as(c))
 
-  /** One partitionStats row as its [[Counters]] contribution. */
+  /** One partitionStats row as its [[RangeStats.Counters]] contribution. */
   private def partitionCounters: Seq[Column] = {
     val both = col("in_src") && col("in_tgt")
     def is(cls: String) = when(col("classification") === cls, 1L).otherwise(0L)
     def ifBoth(c: String) = when(both, col(c)).otherwise(0L)
     Seq(is(C.Matched), is(C.PartitionMismatch), is(C.OnlyInSource),
       is(C.OnlyInTarget), ifBoth("matched_rows"), ifBoth("matched_values"),
-      ifBoth("mismatched_values")).zip(Counters).map { case (e, n) => e.as(n) }
+      ifBoth("mismatched_values")).zip(RangeStats.Counters).map { case (e, n) => e.as(n) }
   }
-
-  /** Final RangeStats aggregation over a (possibly persisted)
-    * partitionStats frame — lets callers that need stats AND mismatches
-    * AND progress derive all three from one computed frame instead of
-    * re-running the diff join per sink.
-    */
-  def rangeStatsFromPartitions(ps: DataFrame, spec: TableSpec,
-      skipped: DataFrame): DataFrame =
-    withSkipped(ps.select(partitionCounters: _*), spec, skipped)
-
-  /** [[counterSums]] of counter rows with the skipped counter attached —
-    * both sides are single-row aggregates, so the cross join is a
-    * broadcast nested loop over 1 row.
-    */
-  private def withSkipped(counterRows: DataFrame, spec: TableSpec,
-      skipped: DataFrame): DataFrame =
-    counterRows.agg(counterSums.head, counterSums.tail: _*)
-      .crossJoin(skipped)
-      .withColumn("table_name", lit(spec.table))
 
   /** [[mismatches]] over a precomputed partitionStats frame. */
   def mismatchesFromPartitions(ps: DataFrame, spec: TableSpec, buckets: Int): DataFrame =
@@ -777,13 +780,12 @@ object DiffEngine {
     * phase-1 arithmetic progress a CLEAN bucket journals directly (every
     * partition matched, so matched_partitions = distinct-pk count,
     * matched_rows = rows, matched_values = rows × |regular|, last_token
-    * from the digest aggregate) — column-compatible with
-    * [[bucketProgressFromPartitions]], so the runner unions clean rows
-    * into task_status and restricts the wide diff to the dirty set; the
-    * [[DigestCols]] are both sides' digests, so the same rows serve an
-    * incremental run as [[sideDigests]] would. Counters are only
-    * meaningful where `digest_match`; dirty buckets re-run the full
-    * join. The shuffle here is ≤ 2 × `buckets` narrow rows (map-side
+    * from the digest aggregate) — [[BucketPlan.counterRows]] journals a
+    * clean bucket's row as its task_status credit, and the wide diff is
+    * restricted to the dirty set; the [[DigestCols]] are both sides'
+    * digests, so the same rows serve an incremental run as
+    * [[sideDigests]] would. Counters are only meaningful where
+    * `digest_match`; dirty buckets re-run the full join. The shuffle here is ≤ 2 × `buckets` narrow rows (map-side
     * partial aggregation) — on a mostly-matching 100 TB corpus this is
     * what turns the journaling entry point's wide join into O(dirty
     * fraction).
@@ -800,24 +802,24 @@ object DiffEngine {
         countDistinct(spec.pk.head, spec.pk.tail: _*).as("parts"),
         max(col("__tok")).as("last_token")))
       .select(Seq(col("bucket"), digestMatch.as("digest_match")) ++
-        Counters.map(c => credit.getOrElse(c, lit(0L)).as(c)) ++
+        RangeStats.Counters.map(c => credit.getOrElse(c, lit(0L)).as(c)) ++
         (col("src_last_token").as("last_token") +: DigestCols.map(col)): _*)
       .withColumn("table_name", lit(spec.table))
   }
 
   /** [[rangeStats]] through the digest prefilter — the headline query's
-    * 100 TB shape. Clean buckets never reach the join: their counter
-    * contribution is the [[digestProgress]] credit (every partition
-    * matched, every row matched, every value matched — `rows ×
-    * |regular|`), with the per-bucket distinct-pk count carried by
-    * phase 1. Only dirty buckets run [[partitionStats]]. The result is
-    * bit-identical to [[rangeStats]] (same oracle), but on a
+    * 100 TB shape, and the runner's with `digestFirst`. Clean buckets
+    * never reach the join: their counter rows are the [[digestProgress]]
+    * credit (every partition matched, every row matched, every value
+    * matched — `rows × |regular|`), with the per-bucket distinct-pk count
+    * carried by phase 1. Only dirty buckets run [[partitionStats]]. The
+    * result is bit-identical to [[rangeStats]] (same oracle), but on a
     * mostly-matching corpus the wide shuffle shrinks to the dirty
     * fraction; the extra cost is the phase-1 distinct-pk partial
     * aggregate, which ships one narrow row per partition instead of
     * every data row with payloads. The phase-1 rows are collected once:
-    * [[BucketPlan]] splits them into the clean credit, a local frame, and
-    * the dirty set.
+    * [[BucketPlan]] splits them into the clean credit and the dirty set,
+    * and [[bucketStats]] joins only the dirty buckets.
     */
   def digestRangeStats(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
       opts: DiffOptions = DiffOptions(), digestBuckets: Int = 4096,
@@ -826,14 +828,10 @@ object DiffEngine {
     spec.validateSides(src, tgt)
     val fs = applyTokenFilters(src, spec, opts, token)
     val ft = applyTokenFilters(tgt, spec, opts, token)
-    val progress = digestProgress(fs, ft, spec, digestBuckets, token)
-    val plan = BucketPlan.decide(BucketPlan.byBucket(progress), digestFirst = true)
-    def restrict(df: DataFrame) = plan.restrict(df, spec, digestBuckets, token)
-    val ps = partitionStats(restrict(fs), restrict(ft), spec, token)
-    val credit = src.sparkSession.createDataFrame(plan.clean.asJava, progress.schema)
-    withSkipped(ps.select(partitionCounters: _*).unionByName(
-        credit.select(Counters.map(col): _*)),
-      spec, skippedCount(src, tgt, spec, opts, token))
+    val plan = BucketPlan.decide(BucketPlan.byBucket(
+      digestProgress(fs, ft, spec, digestBuckets, token)), digestFirst = true)
+    val (_, counters) = bucketStats(fs, ft, spec, plan, digestBuckets, token)
+    statsRow(counters, spec, skippedCount(src, tgt, spec, opts, token))
   }
 
   /** THREE-replica reconciliation — the N-way extension of the 2-way

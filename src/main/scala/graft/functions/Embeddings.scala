@@ -8,19 +8,11 @@ import org.apache.spark.sql.functions._
   * means), the building block of class analysis, cluster drift checks,
   * and label-conditioned near-dup thresholds.
   *
-  * Two shapes with one semantics:
-  *
-  *  - [[labelCentroids]] — oracle-exact: element sums evaluate as a
-  *    SEQUENTIAL fold in pinned `vec_id` order (window cumsum), so the
-  *    float-addition order — and therefore every last bit of the double
-  *    result — is identical in any engine that follows the same order.
-  *    Costs a (label, dim) shuffle without map-side combine.
-  *  - [[labelCentroidsAgg]] — the at-scale shape: plain groupBy avg
-  *    with partial aggregation (combiner runs map-side, the exchange
-  *    carries one partial per (label, dim, input partition)). Float
-  *    addition order is partition-dependent, so results agree with the
-  *    exact shape only to rounding (~1e-9 relative); the parity spec
-  *    bounds the drift.
+  * [[labelCentroids]] is oracle-exact: element sums evaluate as a
+  * SEQUENTIAL fold in pinned `vec_id` order (window cumsum), so the
+  * float-addition order — and therefore every last bit of the double
+  * result — is identical in any engine that follows the same order. It
+  * costs a (label, dim) shuffle without map-side combine.
   *
   * Output long-form: (label, pos, mean_v, n_vecs) — reassembly into an
   * array column is a `collect_list` over pos when callers want it.
@@ -33,10 +25,8 @@ object Embeddings {
         posexplode(col(vecCol)).as(Seq("pos", "v")))
       .select(col(labelCol), col(idCol),
         col("pos").cast("long").as("pos"), col("v").cast("double").as("v"))
-      // drop null elements HERE so both shapes agree on them: the window
-      // shape's sum skips nulls but its count(*) would not, while avg
-      // divides by the non-null count — a ragged/null element would
-      // otherwise push the two shapes apart by far more than rounding
+      // drop null elements HERE: the window sum skips nulls but its
+      // count(*) would not, so a ragged/null element would skew the mean
       .filter(col("v").isNotNull)
 
   /** Deterministic bit-exact centroids (see object doc). */
@@ -55,13 +45,6 @@ object Embeddings {
         (col("cs") / col("cnt")).as("mean_v"),
         col("cnt").as("n_vecs"))
   }
-
-  /** Partial-aggregation centroids — the shape to run at 100 TB. */
-  def labelCentroidsAgg(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String): DataFrame =
-    exploded(df, idCol, vecCol, labelCol)
-      .groupBy(col(labelCol), col("pos"))
-      .agg(avg(col("v")).as("mean_v"), count(lit(1)).as("n_vecs"))
 
   // --- int8 quantization -------------------------------------------------
   //
@@ -154,37 +137,11 @@ object Embeddings {
 
   def pqEncode(vec: Column): Column = pqEncodeAt(i => q64(vec, i))
 
-  /** Integer PQ search distance: squared L2 between the query's
-    * elements (via `at`) and the reconstruction of `codes` —
-    * numerically identical to the classic per-subspace LUT sum, with
-    * the LUT lookups inlined as codebook-literal indexing.
-    */
-  def pqDistanceAt(at: Int => Column, codes: Column): Column = {
-    val cb = pqCodebook
-    (0 until PqM).flatMap { m =>
-      val cw = typedlit(cb(m).map(_.toSeq).toSeq)
-      (0 until PqDsub).map { d =>
-        val cwd = element_at(
-          element_at(cw, element_at(codes, m + 1).cast("int")), d + 1)
-          .cast("long")
-        val diff = at(m * PqDsub + d) - cwd
-        diff * diff
-      }
-    }.reduce(_ + _)
-  }
-
-  def pqDistance(queryVec: Column, codes: Column): Column =
-    pqDistanceAt(i => q64(queryVec, i), codes)
-
-  /** The ×64 grid value of element i of a float vector — public face of
-    * the PQ quantizer for composition (IVF+PQ residuals).
-    */
-  def grid64(vec: Column, i: Int): Column = q64(vec, i)
-
   /** Signed Johnson–Lindenstrauss random projection: out dim d is
-    * `Σ_i sign(d, i) · grid64(vec, i)` with the deterministic ±1 signs
-    * of [[Similarity.planeSign]] (splitmix64 — no RNG state, identical
-    * on every engine). Projecting the ×64-quantized vector keeps the
+    * `Σ_i sign(d, i) · q(vec, i)`, q the ×64 grid value of element i,
+    * with the deterministic ±1 signs of [[Similarity.planeSign]]
+    * (splitmix64 — no RNG state, identical on every engine).
+    * Projecting the ×64-quantized vector keeps the
     * arithmetic INTEGER, so projections are bit-exact cross-engine and
     * the operator is oracle-gateable — the classic dense-JL dimension
     * reduction (Achlioptas' ±1 construction) that prefilters ANN /

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
 
 /** Native kernels for the fixed-codebook IVF+PQ mechanics — the same
   * integer arithmetic as the declarative `Embeddings.pqEncodeColsAt` /
-  * `pqDistanceAt` / grid-score expression chains, value-identical (the
+  * PQ-distance / grid-score expression chains, value-identical (the
   * DuckDB oracles are unchanged), but each stage is ONE expression node
   * instead of a 64–1024-term tree.
   *
@@ -29,7 +29,7 @@ object IvfPq {
 
   /** ×64 fixed-grid quantization of a float/double vector:
     * clamp(floor(v·64 + 0.5), ±127) per element — the kernel form of
-    * `Embeddings.grid64` applied to every element.
+    * the `Embeddings` PQ quantizer applied to every element.
     */
   def gridQuant(vec: Column): Column =
     GraftColumnBridge.column(

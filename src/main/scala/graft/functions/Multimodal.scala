@@ -402,9 +402,8 @@ object Multimodal {
     * before the self-join (the maxShingleDf convention): pairs that
     * collide ONLY on dropped bands are missed, so the ≤3-bit
     * pigeonhole guarantee holds exactly for pairs with at least one
-    * surviving shared band — the documented trade on hot bands. The
-    * dropped bands are enumerable via [[aHashHotBands]]. The df window
-    * partitions on the join key, so the cap reuses the join's
+    * surviving shared band — the documented trade on hot bands. The df
+    * window partitions on the join key, so the cap reuses the join's
     * exchange. No all-pairs join exists.
     */
   def aHashNearDup(hashes: DataFrame, maxDist: Int = 3,
@@ -436,8 +435,8 @@ object Multimodal {
       .filter(col("hamming") <= maxDist)
   }
 
-  /** The 4×16-bit band explode shared by [[aHashNearDup]] and
-    * [[aHashHotBands]]: one row per (doc, band position).
+  /** The 4×16-bit band explode of [[aHashNearDup]]: one row per (doc,
+    * band position).
     */
   private def aHashBands(hashes: DataFrame): DataFrame =
     hashes.select(col("doc_id"), col("hash_hi"), col("hash_lo"),
@@ -448,18 +447,6 @@ object Multimodal {
           expr("hash_hi div 65536"))))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_val")
-
-  /** The bands [[aHashNearDup]] would DROP at `maxBandDf` — the audit
-    * report for the hot-band cap: (band_idx, band_val, df), one row per
-    * dropped band, df descending. A monochrome-image cluster shows up
-    * here as four bands with df = cluster size.
-    */
-  def aHashHotBands(hashes: DataFrame, maxBandDf: Int = 4096): DataFrame =
-    aHashBands(hashes)
-      .groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxBandDf)
-      .orderBy(col("df").desc, col("band_idx"), col("band_val"))
 
   /** Real audio codec over `javax.sound.sampled` — pure JDK, the audio
     * analog of [[ImageCodec]]. 16-bit mono PCM inside a WAV container

@@ -20,8 +20,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Brute-force top-k cosine neighbors — the correctness baseline.
     * Queries are broadcast (small side); corpus streams once; ranking is
     * a per-query window. Norms are computed once per row, not per pair.

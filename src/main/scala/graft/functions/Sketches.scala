@@ -56,7 +56,7 @@ object Sketches {
       HyperplaneSketchExpr(GraftColumnBridge.expression(vec), bits, dims))
 
   /** Signed JL projection of the ×64-grid-quantized vector: out dim d =
-    * Σ_j sign(d, j) · grid64(vec[j]) — one tight loop per row. The
+    * Σ_j sign(d, j) · grid(vec[j]) — one tight loop per row. The
     * declarative 16×64 element_at formulation leaves the optimizer free
     * to re-inline the grid array into every term (the PQ codegen trap);
     * the kernel guarantees one evaluation per row at any scale. Signs

@@ -15,8 +15,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.RangeStats
-
 /** The job journal — the reference's 12-table `cassandradiff` metadata
   * keyspace (JobMetadataDb.java:493-652) as parquet tables under one root.
   * Cassandra-specific artifacts (bucket fan-out to dodge wide partitions,
@@ -357,8 +355,6 @@ final class MetadataStore(val root: String,
   /** O21: `markNotRunning` / lock release (JobMetadataDb.java:461-490). */
   def releaseRunLock(jobId: String): Unit = Files.deleteIfExists(lockFile(jobId))
 
-  def isRunning(jobId: String): Boolean = Files.exists(lockFile(jobId))
-
   private def lockFile(jobId: String): Path = Paths.get(root, "running_jobs",
     ExternalCatalogUtils.escapePathName(jobId) + MetadataStore.LockSuffix)
 }
@@ -381,17 +377,4 @@ object MetadataStore {
   /** The job id a `running_jobs` lock file name stands for. */
   def lockedJobId(fileName: String): String =
     ExternalCatalogUtils.unescapePathName(fileName.stripSuffix(LockSuffix))
-
-  /** Typed view of a job_results/task_status counter row. */
-  def toRangeStats(row: org.apache.spark.sql.Row): RangeStats = RangeStats(
-    matchedPartitions = row.getAs[Long]("matched_partitions"),
-    mismatchedPartitions = row.getAs[Long]("mismatched_partitions"),
-    onlyInSource = row.getAs[Long]("only_in_source"),
-    onlyInTarget = row.getAs[Long]("only_in_target"),
-    matchedRows = row.getAs[Long]("matched_rows"),
-    matchedValues = row.getAs[Long]("matched_values"),
-    mismatchedValues = row.getAs[Long]("mismatched_values"),
-    skippedPartitions =
-      if (row.schema.fieldNames.contains("skipped_partitions"))
-        row.getAs[Long]("skipped_partitions") else 0L)
 }

@@ -28,10 +28,9 @@ object OpsQueries {
     * diff from the parquet inputs. (An earlier JVM-lifetime persisted
     * cache here — the production persist-once-derive-all shape
     * DiffRunner still uses — let repeated bench/verify invocations of
-    * api_mismatch_summary / api_results_by_table skip the diff
-    * entirely, so their timings no longer measured the engine. Within
-    * a single query plan each frame is referenced exactly once, so
-    * nothing is lost by rebuilding.)
+    * api_mismatch_summary skip the diff entirely, so their timings no
+    * longer measured the engine. Within a single query plan each frame
+    * is referenced exactly once, so nothing is lost by rebuilding.)
     */
   private def tablePs(s: SparkSession, dir: String, table: String): DataFrame =
     table match {
@@ -42,9 +41,6 @@ object OpsQueries {
         DiffEngine.partitionStats(ord(s, dir), Perturb.ordersTarget(ord(s, dir)),
           ordersSpec, idTok)
     }
-
-  private def noSkips(s: SparkSession): DataFrame =
-    s.range(1).select(lit(0L).as("skipped_partitions"))
 
   /** journal fixture for the resume query: buckets 0-5 done, 6-7
     * in-progress with watermarks, 8-15 untouched.
@@ -187,15 +183,13 @@ object OpsQueries {
         |SELECT 'source' AS origin, 'VALID' AS error,
         |       CAST(COUNT(*) AS BIGINT) AS n
         |FROM lineitem WHERE l_partkey % 97 <> 0""".stripMargin),
-    // O22/O8: per-table job results (job_results rows of a two-table job),
-    // from its own per-table diffs — same derivation as the mismatch summary
-    Query("api_results_by_table", (s, dir) => {
-      val r1 = DiffEngine.rangeStatsFromPartitions(
-        tablePs(s, dir, "lineitem"), lineitemSpec, noSkips(s))
-      val r2 = DiffEngine.rangeStatsFromPartitions(
-        tablePs(s, dir, "orders"), ordersSpec, noSkips(s))
-      r1.unionByName(r2)
-    },
+    // O22/O8: per-table job results (job_results rows of a two-table job):
+    // each table's counter rows summed as the runner sums its journal
+    Query("api_results_by_table", (s, dir) =>
+      DiffEngine.rangeStats(li(s, dir), Perturb.lineitemTarget(li(s, dir)),
+        lineitemSpec, DiffOptions(), idTok).unionByName(
+        DiffEngine.rangeStats(ord(s, dir), Perturb.ordersTarget(ord(s, dir)),
+          ordersSpec, DiffOptions(), idTok)),
       oracle = s"""SELECT * FROM (${OracleSql.rangeStats(lineitemSpec,
            Perturb.lineitemSrcSql, Perturb.lineitemTargetSql)})
          |UNION ALL

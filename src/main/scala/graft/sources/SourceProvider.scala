@@ -40,32 +40,12 @@ final case class ParquetSource(root: String) extends SourceProvider {
   }
 }
 
-/** Generic file-format source: `<root>/<table>.<ext>` for any Spark
-  * DataSource format (csv, json, orc, parquet, ...), with reader options
-  * (e.g. `header`/`inferSchema` for csv). Demonstrates that the engine is
-  * format-agnostic — the diff never sees anything but DataFrames.
-  */
-final case class FormatSource(root: String, format: String,
-    options: Map[String, String] = Map.empty) extends SourceProvider {
-  private val ext = format
-  override def table(spark: SparkSession, name: String): DataFrame =
-    spark.read.format(format).options(options).load(s"$root/$name.$ext")
-  override def listTables(spark: SparkSession): Seq[String] = {
-    val dir = new java.io.File(root)
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(s".$ext"))
-      .map(_.getName.stripSuffix(s".$ext")).sorted.toSeq
-  }
-}
-
-/** O19: schema auto-discovery — intersect/difference of the two sides'
+/** O19: schema auto-discovery — the intersection of the two sides'
   * table sets minus a keyspace/table reject-list (Schema.java:27-75,
-  * invoked DiffJob.java:104-116). Warns (returns) asymmetric tables
-  * instead of failing, like the reference.
+  * invoked DiffJob.java:104-116). A table on one side only is left out
+  * instead of failing the job, like the reference.
   */
 object SchemaOps {
   def intersect(src: Seq[String], tgt: Seq[String], disallowed: Set[String] = Set.empty): Seq[String] =
     (src.toSet & tgt.toSet -- disallowed).toSeq.sorted
-  def difference(src: Seq[String], tgt: Seq[String]): Seq[String] =
-    ((src.toSet -- tgt.toSet) | (tgt.toSet -- src.toSet)).toSeq.sorted
 }

@@ -9,7 +9,7 @@ import graft.api.{DiffApiServer, DiffJobConfig, DiffRunner}
 import graft.core.DiffOptions
 import graft.engine.Perturb
 import graft.journal.MetadataStore
-import graft.sources.{FormatSource, ParquetSource, SourceProvider}
+import graft.sources.{ParquetSource, SourceProvider}
 
 class ApiServerSpec extends SparkSpec with NoLeakedPersists {
 
@@ -53,23 +53,5 @@ class ApiServerSpec extends SparkSpec with NoLeakedPersists {
       val (c8, repairNone) = get("/jobs/api-job/repair/nope")
       assert(c8 === 200 && !repairNone.contains("\"statement\""))
     } finally srv.stop()
-  }
-
-  test("format-agnostic source: diff over csv equals diff over parquet") {
-    implicit val s: SparkSession = spark
-    val dir = tempDir("graft-csv")
-    val orders = graft.engine.Tables.load(spark, Sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_orderstatus") // csv-safe subset
-    orders.coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(s"$dir/orders.csv")
-    val csvSrc = FormatSource(dir, "csv",
-      Map("header" -> "true", "inferSchema" -> "true"))
-    val spec = graft.core.TableSpec("orders", Seq("o_orderkey"), uniqueKey = true)
-    val stats = graft.engine.DiffEngine.rangeStats(
-      csvSrc.table(spark, "orders"), csvSrc.table(spark, "orders"),
-      spec, DiffOptions(), graft.engine.DiffEngine.identityToken).collect()(0)
-    assert(stats.getAs[Long]("matched_partitions") === orders.count())
-    assert(stats.getAs[Long]("mismatched_partitions") === 0)
-    assert(csvSrc.listTables(spark) === Seq("orders"))
   }
 }

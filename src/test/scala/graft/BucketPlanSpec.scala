@@ -6,11 +6,13 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
+import graft.core.RangeStats
 import graft.engine.{BucketPlan, DiffEngine}
 import graft.journal.Resume
 
 /** [[BucketPlan.decide]] on hand-built rows: every bucket decision of the
-  * runner and the digest queries, with no Spark job.
+  * runner and the digest queries, and the counter rows a plan journals,
+  * summed by [[RangeStats]], with no Spark job.
   */
 class BucketPlanSpec extends SparkSpec {
 
@@ -90,6 +92,7 @@ class BucketPlanSpec extends SparkSpec {
       priorDigests = Some(prior)))
     assert(plan.retired === Seq(5L))
     assert(plan.tombstones === Seq(Row.fromSeq(5L +: DiffEngine.DigestCols.map(_ => null))))
+    assert(plan.counterRows("t") === Seq(Row.fromSeq(5L +: Seq.fill(7)(0L) :+ null :+ "t")))
     assert(plan.skip === Set(7L))
     // journaled, the tombstone is a prior digest that does not retire again
     val next = noJobs(BucketPlan.decide(SortedMap.empty,
@@ -118,5 +121,32 @@ class BucketPlanSpec extends SparkSpec {
     val allClean = noJobs(BucketPlan.decide(byBucket(digest(0, Some(1), Some(1))),
       digestFirst = true))
     assert(allClean.restriction === Some("left_semi" -> Nil))
+  }
+
+  test("counter rows: null or absent counters read 0; the sum is a monoid") {
+    // a clean bucket's digest credit row, as digestProgress shapes it
+    val creditSchema = StructType(Seq(StructField("bucket", LongType),
+      StructField("digest_match", BooleanType)) ++
+      (RangeStats.Counters :+ "last_token").map(StructField(_, LongType)))
+    val credit = new GenericRowWithSchema(
+      (Seq[Any](2L, true) ++ (1L to 7L) :+ 42L).toArray, creditSchema)
+    val plan = BucketPlan(Set.empty, Nil, Seq(credit), Nil, None)
+    assert(plan.counterRows("t") === Seq(Row.fromSeq(2L +: (1L to 7L) :+ 42L :+ "t")))
+    // a task_status row with null counters, and an older row holding
+    // two counters and no skipped_partitions
+    val nulls = new GenericRowWithSchema(Array[Any](1L, null, 3L, null, 5L, 6L, null, null),
+      StructType((RangeStats.Counters :+ "skipped_partitions").map(StructField(_, LongType))))
+    val older = new GenericRowWithSchema(Array[Any](2L, 4L), StructType(Seq(
+      StructField("matched_partitions", LongType), StructField("matched_rows", LongType))))
+    assert(RangeStats.fromRow(nulls) === RangeStats(1, 0, 3, 0, 5, 6, 0, 0, 0))
+    assert(RangeStats.fromRow(older) === RangeStats(matchedPartitions = 2, matchedRows = 4))
+    assert(RangeStats.sum(Seq(nulls, older), skipped = 9) ===
+      RangeStats(3, 0, 3, 0, 9, 6, 0, 9, 0))
+    assert(RangeStats.sum(Nil, skipped = 0) === RangeStats())
+    val (a, b, c) = (RangeStats(1, 2, 3, 4, 5, 6, 7, 8, 9),
+      RangeStats(10, 0, 30, 0, 50, 0, 70, 0, 90), RangeStats(0, 200, 0, 400, 0, 600, 0, 800, 0))
+    assert(a + RangeStats() === a && RangeStats() + a === a)
+    assert((a + b) + c === a + (b + c))
+    assert(a + b + c === RangeStats(11, 202, 33, 404, 55, 606, 77, 808, 99))
   }
 }

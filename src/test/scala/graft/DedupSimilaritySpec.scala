@@ -599,13 +599,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!plan.contains("Exchange"), plan.take(1000))
   }
 
-  test("cosine: self-similarity is exactly 1 for unit consistency") {
-    val e = Tables.load(spark, Sf, "embeddings").limit(5)
-    val sims = e.select(Similarity.cosine(col("embedding"), col("embedding")).as("s"))
-      .as[Double].collect()
-    sims.foreach(s => assert(math.abs(s - 1.0) < 1e-12))
-  }
-
   test("brute-force topk is ordered and excludes self") {
     val e = Tables.load(spark, Sf, "embeddings")
     val tk = Similarity.bruteForceTopK(e.filter(col("vec_id") < 2), e,
@@ -826,24 +819,6 @@ class DedupSimilaritySpec extends SparkSpec {
       .bloomNgramHits(corpus, bench, "doc_id", "text", n = 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-  }
-
-  test("centroids: exact fold and partial-agg shapes agree to rounding") {
-    import graft.functions.Embeddings
-    val e = Tables.load(spark, Sf, "embeddings")
-    val exact = Embeddings.labelCentroids(e, "vec_id", "embedding", "label")
-      .select("label", "pos", "mean_v").as[(Int, Long, Double)]
-      .collect().map { case (l, p, v) => (l, p) -> v }.toMap
-    val agg = Embeddings.labelCentroidsAgg(e, "vec_id", "embedding", "label")
-      .select("label", "pos", "mean_v").as[(Int, Long, Double)]
-      .collect().map { case (l, p, v) => (l, p) -> v }.toMap
-    assert(exact.keySet === agg.keySet && exact.nonEmpty)
-    val worst = exact.keysIterator
-      .map(k => math.abs(exact(k) - agg(k))).max
-    // same semantics, different float-addition association: only
-    // rounding apart. A real divergence (wrong group, dropped rows)
-    // shows up orders of magnitude above this bound.
-    assert(worst < 1e-9, s"max |exact - agg| = $worst")
   }
 
   test("chunking: short docs one chunk, windows tile with overlap, ends clamped") {
@@ -1212,11 +1187,13 @@ class DedupSimilaritySpec extends SparkSpec {
       c => c < 1 || c > Embeddings.PqKsub)).count()
     assert(bad === 0)
     // the encoded reconstruction is optimal per subspace: distance to own
-    // codes <= distance to a deliberately wrong code assignment
+    // codes <= distance to a deliberately wrong code assignment, by the
+    // ADC kernel of ann_pq_fixed
+    val grid = graft.functions.IvfPq.gridQuant(col("embedding"))
     val own = e.join(codes, "vec_id")
       .select(col("vec_id"),
-        Embeddings.pqDistance(col("embedding"), col("codes")).as("d_own"),
-        Embeddings.pqDistance(col("embedding"),
+        graft.functions.IvfPq.pqAdc(grid, col("codes")).as("d_own"),
+        graft.functions.IvfPq.pqAdc(grid,
           transform(col("codes"),
             c => pmod(c, lit(Embeddings.PqKsub.toLong)) + 1L)).as("d_other"))
     assert(own.filter(col("d_own") > col("d_other")).count() === 0)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{Classification => C, DiffOptions, TableSpec}
-import graft.engine.DiffEngine
+import graft.engine.{BucketPlan, DiffEngine}
 
 /** Operator-level diff semantics on hand-built tables — mirrors the
   * reference's unit matrix (RangeComparatorTest / PartitionComparatorTest
@@ -53,6 +53,9 @@ class DiffEngineSpec extends SparkSpec {
     assert(stats.getAs[Long]("only_in_source") === 2)
     assert(stats.getAs[Long]("matched_partitions") === 0)
     assert(stats.getAs[Long]("matched_rows") === 0)
+    // both sides empty: no counter rows, one all-zero row, table kept
+    val none = DiffEngine.rangeStats(tgt, tgt, wideSpec, DiffOptions(), idTok).collect()
+    assert(none.map(_.toSeq).toSeq === Seq(Seq.fill(8)(0L) :+ "wide1"))
   }
 
   test("row present in one side only => PARTITION_MISMATCH") {
@@ -218,19 +221,20 @@ class DiffEngineSpec extends SparkSpec {
 
   test("diff plan regression: one full-data shuffle per side, counters after") {
     val li = graft.engine.Tables.load(spark, Sf, "lineitem")
-    val q = DiffEngine.rangeStats(li, graft.engine.Perturb.lineitemTarget(li),
-      graft.engine.Perturb.lineitemSpec, DiffOptions(), idTok)
+    // rangeStats sums the counter rows of bucketStats on the driver
+    val (_, q) = DiffEngine.bucketStats(li, graft.engine.Perturb.lineitemTarget(li),
+      graft.engine.Perturb.lineitemSpec, BucketPlan.All, 100, idTok)
     val plan = q.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // window/join shuffle per side + partition-stats agg + final agg; any
+    // window/join shuffle per side + partition-stats agg + bucket agg; any
     // fifth exchange means the join stopped reusing the window partitioning
     val shuffles = "\\(\\d+\\) Exchange".r.findAllIn(plan).length
     assert(shuffles === 4, s"expected 4 shuffles in:\n$plan")
     val fullData = "hashpartitioning\\(l_orderkey#\\d+L?, l_linenumber#\\d+".r
       .findAllIn(plan).length
     assert(fullData === 2, s"one (pk, clustering) shuffle per side in:\n$plan")
-    assert("SinglePartition".r.findAllIn(plan).length === 1,
-      s"final RangeStats agg gathers to one row in:\n$plan")
+    assert("hashpartitioning\\(bucket#".r.findAllIn(plan).length === 1,
+      s"the counter agg ships at most one row per bucket in:\n$plan")
   }
 
   test("ordered-stats plan regression: 3 pk shuffles, counters-only post-join exchange") {
@@ -464,13 +468,15 @@ class DiffEngineSpec extends SparkSpec {
       digestBuckets = 512, token = idTok))
     restrictsByBroadcast(p2, "digestDiff")
     assert(exchanges(p2) === 3, s"digestDiff exchanges in:\n$p2")
-    // phase 2 of digestRangeStats: one pk-keyed exchange per side (the
-    // full-PK join reuses it), the pk groupBy, and ONE single-partition
-    // final aggregate over dirty counters and clean credit together
-    val p3 = plan(DiffEngine.digestRangeStats(li, tgt, spec, DiffOptions(),
-      digestBuckets = 512, token = idTok))
-    restrictsByBroadcast(p3, "digestRangeStats")
-    assert(exchanges(p3) === 4, s"digestRangeStats exchanges in:\n$p3")
+    // phase 2 of digestRangeStats and the digestFirst runner: the counter
+    // rows of bucketStats under the digest plan — one pk-keyed exchange
+    // per side (the full-PK join reuses it), the pk groupBy, and the
+    // bucket groupBy of the dirty counters; the clean credit is local
+    val digestPlan = BucketPlan.decide(BucketPlan.byBucket(
+      DiffEngine.digestProgress(li, tgt, spec, 512, idTok)), digestFirst = true)
+    val p3 = plan(DiffEngine.bucketStats(li, tgt, spec, digestPlan, 512, idTok)._2)
+    restrictsByBroadcast(p3, "bucketStats")
+    assert(exchanges(p3) === 4, s"bucketStats exchanges in:\n$p3")
   }
 
   test("every digest op rejects a non-positive bucket count") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 import graft.api.{DiffJobConfig, DiffRunner, ResultsApi}
-import graft.core.DiffOptions
+import graft.core.{DiffOptions, RangeStats}
 import graft.engine.{DiffEngine, Perturb}
 import graft.journal.{MetadataStore, Resume}
 import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
@@ -22,18 +22,18 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     * job_results row.
     */
   private def assertTotalsMatchJournal(root: String, jobId: String,
-      stats: Map[String, graft.core.RangeStats]): Unit = {
+      stats: Map[String, RangeStats]): Unit = {
     implicit val s: SparkSession = spark
     val store = new MetadataStore(root)
     val served = new ResultsApi(store).jobResults(jobId).collect()
-      .map(r => r.getAs[String]("table_name") -> MetadataStore.toRangeStats(r))
+      .map(r => r.getAs[String]("table_name") -> RangeStats.fromRow(r))
     assert(served.toMap === stats && served.length === stats.size)
     val sums = DiffEngine.counterSums
     stats.foreach { case (table, st) =>
       val journal = store.latest("task_status", jobId, Seq("table_name", "bucket"))
         .filter(col("table_name") === table)
         .agg(sums.head, sums.tail: _*).collect()(0)
-      assert(MetadataStore.toRangeStats(journal) === st.copy(skippedPartitions = 0L),
+      assert(RangeStats.fromRow(journal) === st.copy(skippedPartitions = 0L),
         s"$jobId/$table: task_status sums")
     }
   }
@@ -57,14 +57,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val store = new MetadataStore(root)
     assert(store.acquireRunLock("job1"))
     assert(!store.acquireRunLock("job1"))
-    assert(store.isRunning("job1"))
+    assert(store.runLockOwner("job1").isDefined)
     store.releaseRunLock("job1")
     assert(store.acquireRunLock("job1"))
     // ids that are not plain file names lock one escaped file inside
     // running_jobs, and the API serves them unescaped
     for (id <- Seq("a/b", "../x")) {
       assert(store.acquireRunLock(id), id)
-      assert(!store.acquireRunLock(id) && store.isRunning(id), id)
+      assert(!store.acquireRunLock(id) && store.runLockOwner(id).isDefined, id)
     }
     assert(new java.io.File(root, "running_jobs").list().toSet ===
       Set("job1.lock", "a%2Fb.lock", "..%2Fx.lock"))
@@ -77,7 +77,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(owner.contains(s"pid=${ProcessHandle.current.pid} ") &&
       owner.contains("host=") && owner.contains("started="), owner)
     store.releaseRunLock("a/b")
-    assert(!store.isRunning("a/b") && store.runLockOwner("a/b").isEmpty)
+    assert(store.runLockOwner("a/b").isEmpty)
   }
 
   test("runningJobs lists a held lock before its job_summary row is written") {
@@ -198,7 +198,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(api.jobResults("job-e2e").count() === 1)
     assert(api.mismatchSummary("job-e2e").count() === 3) // 3 mismatch types
     assert(api.jobStatus("job-e2e").count() === 8)       // one row per bucket
-    assert(!store.isRunning("job-e2e"))                  // lock released
+    assert(store.runLockOwner("job-e2e").isEmpty)        // lock released
     // job_summary-backed endpoints (the reference's index-table queries)
     assert(api.job("job-e2e").count() === 1)
     assert(api.recentJobs().count() === 1)
@@ -513,7 +513,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(e.getMessage.contains("no_such_a"), e.getMessage)
     assert(e.getSuppressed.map(_.getMessage).exists(_.contains("no_such_b")))
     val store = new MetadataStore(root)
-    assert(!store.isRunning("half-job"))
+    assert(store.runLockOwner("half-job").isEmpty)
     assert(store.read("task_status")
       .filter(col("job_id") === "half-job" && col("table_name") === "orders")
       .select("bucket").distinct().count() === 4)
@@ -728,14 +728,13 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val e = intercept[IllegalArgumentException](runner.run())
     // the refusal names the lock's owner
     assert(e.getMessage.contains(store.runLockOwner("busy").get), e.getMessage)
-    assert(store.isRunning("busy"))
+    assert(store.runLockOwner("busy").isDefined)
   }
 
-  test("schema ops: intersect drops disallowed + asymmetric; difference reports both sides") {
+  test("schema ops: intersect drops disallowed and one-sided tables") {
     val a = Seq("t1", "t2", "t3", "sys")
     val b = Seq("t2", "t3", "t4", "sys")
     assert(SchemaOps.intersect(a, b, Set("sys")) === Seq("t2", "t3"))
-    assert(SchemaOps.difference(a, b) === Seq("t1", "t4"))
   }
 
   test("digestFirst on and off journal the same results: both partitioners, first run and incremental re-run") {
@@ -768,7 +767,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
           val latest = store.read("task_status")
             .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
             .select(col("bucket") +: col("last_token").cast("string") +:
-              DiffEngine.Counters.map(col): _*)
+              RangeStats.Counters.map(col): _*)
           val mism = new ResultsApi(store).jobMismatches("df-eq")
             .select(col("bucket"), col("token").cast("string"), col("mismatch_type"))
           (latest.collect().map(_.toSeq).toSet, mism.collect().map(_.toSeq).toSet)
@@ -893,7 +892,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
       Map(
         "job" -> rows(api.job(id), "job_id", "partitioner", "buckets"),
         "results" -> rows(api.jobResults(id),
-          "table_name" +: DiffEngine.Counters :+ "skipped_partitions": _*),
+          "table_name" +: RangeStats.Counters :+ "skipped_partitions": _*),
         "status" -> rows(api.jobStatus(id), "table_name", "bucket", "status", "last_token"),
         "mismatches" -> rows(api.jobMismatches(id), "table_name", "bucket", "token",
           "mismatch_type"),
@@ -1160,7 +1159,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
           .collect().map(_.toSeq).toSet
       (rows(new MetadataStore(root).latest("task_status", "df-resume",
           Seq("table_name", "bucket")),
-          Seq("table_name", "bucket", "status", "last_token") ++ DiffEngine.Counters),
+          Seq("table_name", "bucket", "status", "last_token") ++ RangeStats.Counters),
         rows(api.jobMismatches("df-resume"), Seq("table_name", "bucket", "token", "mismatch_type")))
     }
     val root = tempDir("graft-meta")

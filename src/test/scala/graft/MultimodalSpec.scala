@@ -37,14 +37,6 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.head.getInt(2) === 1)
   }
 
-  test("aHashHotBands: reports exactly the four dropped cluster bands") {
-    val hot = Multimodal.aHashHotBands(hashes, maxBandDf = 10)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    assert(hot.length === 4)
-    assert(hot.forall(_._3 == 50L))
-    assert(hot.map(_._1).sorted.toSeq === Seq(0, 1, 2, 3))
-  }
-
   test("aHashNearDup: a cap at the cluster size is a no-op (<=, not <)") {
     val atSize = Multimodal.aHashNearDup(hashes, maxDist = 3, maxBandDf = 50)
     assert(atSize.count() === 50L * 49 / 2 + 1)

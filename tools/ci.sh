@@ -9,7 +9,8 @@ OUT=$(mktemp -d /tmp/graft-verify.XXXX)
 
 echo "== reachability =="
 # every top-level definition of main Scala is reached from an entry
-# point, perfbench or an allowlisted exception (reasons in the script)
+# point, perfbench or an allowlisted exception, and every non-private
+# member is used outside its definition (reasons in the script)
 python3 tools/check_reach.py
 
 echo "== compile + test =="
