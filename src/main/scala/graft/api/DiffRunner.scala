@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.core.{DiffOptions, RangeStats, TableSpec}
 import graft.engine.{BucketPlan, DiffEngine}
-import graft.journal.{MetadataStore, Resume}
+import graft.journal.MetadataStore
 import graft.sources.SourceProvider
 
 /** One diff job over a set of tables — the reference's programmatic entry
@@ -20,8 +20,8 @@ import graft.sources.SourceProvider
   * DiffJob.java:73-84).
   *
   * Lifecycle (mirrors SURVEY §3.1 steps 2-9, minus what Catalyst now owns):
-  *  1. acquire the run lock (O21); restore stored params; journal
-  *     job_summary + table_params
+  *  1. acquire the run lock (O21); restore the stored params from the
+  *     job's job_summary row, or journal that row on a first run
   *  2. tables run concurrently, at most `defaultParallelism` at once (the
   *     reference compares every table of a split in one executor task,
   *     Differ.java:150-236): per table, every bucket decided on the
@@ -90,127 +90,34 @@ final class DiffRunner(
         s"${store.runLockOwner(config.jobId).getOrElse("an owner that just released it")})")
     try {
       preJobHooks.foreach(_())
-      import spark.implicits._
+      // every row this run journals carries the job id and the run's one
+      // stamp, so a job directory one run wrote holds a single run_ts
+      val runTs = System.currentTimeMillis()
+      def journal(dataset: String, df: DataFrame): Unit = store.write(dataset,
+        df.withColumn("job_id", lit(config.jobId)).withColumn("run_ts", lit(runTs)))
       // O21 params immutability: a re-run of an existing job_id keeps ALL
       // stored job params — tables, token filters, sampling, reverse-read
-      // probability, buckets — regardless of the new config, matching the
-      // reference's getJobParams reuse (JobMetadataDb.java:432-490;
-      // DiffJob.java:136-143, 213-229). A re-run with conflicting options
-      // must not silently diverge from the journal's semantics.
-      // per-column fallback: a journal written by an older engine version
-      // (fewer columns) must restore the params it HAS and fall back to
-      // the submitted config for the rest, not throw on fieldIndex of an
-      // absent column
-      val priorSummary =
-        if (store.exists("job_summary"))
-          store.read("job_summary")
-            .filter(col("job_id") === config.jobId)
-            .collect().headOption
-        else None
-      def restore[T](row: org.apache.spark.sql.Row, name: String, dflt: T): T =
-        if (row.schema.fieldNames.contains(name) && !row.isNullAt(row.fieldIndex(name)))
-          row.getAs[T](name)
-        else dflt
-      def restoreSeq[T](row: org.apache.spark.sql.Row, name: String,
-          dflt: Seq[T]): Seq[T] =
-        if (row.schema.fieldNames.contains(name) && !row.isNullAt(row.fieldIndex(name)))
-          row.getSeq[T](row.fieldIndex(name)).toSeq
-        else dflt
-      val options = priorSummary match {
-        case Some(row) => graft.core.DiffOptions(
-          buckets = restore(row, "buckets", config.options.buckets),
-          disallowedTokens = restoreSeq(row, "disallowed_tokens",
-            config.options.disallowedTokens),
-          specificTokens = restoreSeq(row, "specific_tokens",
-            config.options.specificTokens),
-          samplingNum = restore(row, "sampling_num", config.options.samplingNum),
-          samplingDen = restore(row, "sampling_den", config.options.samplingDen),
-          reverseReadProbability = restore(row, "reverse_read_probability",
-            config.options.reverseReadProbability))
-        case None => config.options
-      }
-      val tables = priorSummary match {
-        case Some(row) =>
-          // Params immutability covers the TABLE SET too: the reference
-          // re-runs the full stored set regardless of what the new
-          // submission lists (JobMetadataDb.java:432-490; DiffJob.java:
-          // 136-143). Column roles are persisted per table in
-          // `table_params`, so stored specs are reconstructed outright and
-          // the stored set wins — a table omitted from the re-run config
-          // is still diffed. Journals written before `table_params`
-          // existed fall back to intersecting stored names with the
-          // submitted specs (the only roles available).
-          val storedSpecs =
-            if (store.exists("table_params"))
-              store.read("table_params")
-                .filter(col("job_id") === config.jobId)
-                .collect().toSeq
-            else Seq.empty
-          if (storedSpecs.nonEmpty)
-            storedSpecs.map(r => graft.core.TableSpec(
-              table = r.getAs[String]("table_name"),
-              pk = restoreSeq(r, "pk", Nil),
-              clustering = restoreSeq(r, "clustering", Nil),
-              regular = restoreSeq(r, "regular", Nil),
-              uniqueKey = restore(r, "unique_key", false)))
-              .sortBy(_.table)
-          else {
-            val stored = restoreSeq(row, "keyspaces",
-              config.tables.map(_.table)).toSet
-            config.tables.filter(t => stored(t.table))
-          }
-        case None => config.tables
-      }
-      val partitioner = priorSummary match {
-        case Some(row) => restore(row, "partitioner", config.partitioner)
-        case None => config.partitioner
-      }
+      // probability, buckets, partitioner — regardless of the new config,
+      // matching the reference's getJobParams reuse
+      // (JobMetadataDb.java:432-490; DiffJob.java:136-143, 213-229). A
+      // re-run with conflicting options must not silently diverge from the
+      // journal's semantics. The params are the job's one job_summary row,
+      // published by its first run in one append
+      val stored =
+        if (!store.exists("job_summary")) None
+        else store.latest("job_summary", config.jobId, Nil).collect().headOption
+      val (options, tables, partitioner) = stored.fold(
+        (config.options, config.tables, config.partitioner))(DiffRunner.params)
+      if (stored.isEmpty)
+        journal("job_summary", spark.createDataFrame(
+          java.util.List.of(DiffRunner.summary(config, source, target)),
+          DiffRunner.SummarySchema))
       val token = DiffEngine.tokenFunction(partitioner)
-      if (priorSummary.isEmpty)
-        // job_summary row: params + start metadata (JobMetadataDb.java:496-544;
-        // the reference's by-date/by-cluster index tables become pushed-down
-        // filters over these columns)
-        store.write("job_summary", Seq((
-          config.jobId,
-          source.getClass.getSimpleName,
-          target.getClass.getSimpleName,
-          config.tables.map(_.table),
-          options.buckets,
-          options.disallowedTokens,
-          options.specificTokens,
-          options.samplingNum,
-          options.samplingDen,
-          options.reverseReadProbability,
-          partitioner,
-          // fixed-width render: lexicographic order == chronological
-          // (Instant.toString varies fractional digits and breaks sorts)
-          java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-            .withZone(java.time.ZoneOffset.UTC)
-            .format(java.time.Instant.now()))).toDF(
-          "job_id", "source_cluster", "target_cluster", "keyspaces",
-          "buckets", "disallowed_tokens", "specific_tokens",
-          "sampling_num", "sampling_den", "reverse_read_probability",
-          "partitioner", "start_time"))
-      if (priorSummary.isEmpty)
-        // per-table column roles, so a re-run can reconstruct the stored
-        // TableSpecs without trusting the resubmitted config (the
-        // reference stores qualified table names and refetches roles from
-        // cluster metadata, TableSpec.java:71-89; file sources have no
-        // metadata service, so roles live in the journal)
-        store.write("table_params", config.tables.map(t =>
-            (config.jobId, t.table, t.pk, t.clustering, t.regular,
-              t.uniqueKey))
-          .toDF("job_id", "table_name", "pk", "clustering", "regular",
-            "unique_key"))
-      // every row this run journals carries the run's one stamp, so a
-      // job directory one run wrote holds a single run_ts
-      val runTs = System.currentTimeMillis()
       // tables run concurrently: one table's driver-side planning, file
       // publishing and small-job scheduling overlap the other's tasks
       val results = DiffRunner.concurrently(tables,
         spark.sparkContext.defaultParallelism)(
-        diffTable(store, options, token, runTs, _)).toMap
+        diffTable(store, options, token, journal, _)).toMap
       // metrics parity: the reference's per-table counter series
       // (Differ.updateMetrics) as named Spark accumulators
       results.foreach { case (table, stats) =>
@@ -227,29 +134,22 @@ final class DiffRunner(
     * (and the repair script), then task_status, then bucket digests last.
     */
   private def diffTable(store: MetadataStore, options: DiffOptions,
-      token: Seq[Column] => Column, runTs: Long,
+      token: Seq[Column] => Column, journalJob: (String, DataFrame) => Unit,
       spec0: TableSpec): (String, RangeStats) = {
     require(spec0.pk.nonEmpty,
       s"table ${spec0.table}: partition key columns must be declared")
     // each side is opened once: one file listing and schema read
     val srcTable = source.table(spark, spec0.table)
     val spec = spec0.bind(srcTable)
-    // every row this run journals carries the table, the job id and the
-    // run's stamp; datasets are partitioned by job_id so per-job endpoint
-    // filters prune at the directory level
-    def journal(dataset: String, df: DataFrame,
-        partitionBy: Seq[String] = Seq("job_id")): Unit =
-      store.write(dataset, df
-          .withColumn("table_name", lit(spec.table))
-          .withColumn("job_id", lit(config.jobId))
-          .withColumn("run_ts", lit(runTs)),
-        partitionBy)
+    // every row this table journals carries its name too
+    def journal(dataset: String, df: DataFrame): Unit =
+      journalJob(dataset, df.withColumn("table_name", lit(spec.table)))
+    val tolerances = config.tolerances.getOrElse(spec.table, Map.empty[String, Double])
     // O15: quarantine structurally invalid rows per side (origin tagged),
-    // journal them, diff the clean remainder. `errors` stays unpartitioned
-    // so roots journaled before its rows were stamped still read
+    // journal them, diff the clean remainder
     val sq = graft.engine.Quarantine.split(srcTable, spec, "source")
     val tq = graft.engine.Quarantine.split(target.table(spark, spec.table), spec, "target")
-    journal("errors", sq.errors.unionByName(tq.errors), partitionBy = Nil)
+    journal("errors", sq.errors.unionByName(tq.errors))
     def bucket(r: Row): Long = r.getAs[Number]("bucket").longValue
     def local(rows: Iterable[Row], schema: StructType): DataFrame =
       spark.createDataFrame(rows.toSeq.asJava, schema)
@@ -286,7 +186,7 @@ final class DiffRunner(
     // covers only dirty buckets; the counter rows add the clean buckets'
     // digest credit and zeros for the retired buckets
     val (partitions, counters) = DiffEngine.bucketStats(fsrc, ftgt, spec, plan,
-      options.buckets, token, config.tolerances.getOrElse(spec.table, Map.empty))
+      options.buckets, token, tolerances)
     val ps = partitions.persist()
     try {
       // checkpoint ordering mirrors the reference (mismatches recorded
@@ -300,15 +200,17 @@ final class DiffRunner(
       // (token, action, statement) so the journal dataset has ONE schema
       // across tables with different keys; token is the same
       // per-partition address the mismatch rows carry, so an operator can
-      // join script rows to mismatch rows.
+      // join script rows to mismatch rows. A cell within its column's
+      // tolerance is matched here as in the counters: it gets no UPDATE.
       if (config.repair)
         journal("repair_scripts",
-          graft.engine.Repair.repairStatements(restricted(fsrc), restricted(ftgt), spec)
+          graft.engine.Repair.repairStatements(restricted(fsrc), restricted(ftgt), spec,
+              tolerances)
             .select(token(spec.pk.map(col)).as("token"), col("action"),
               col("statement")))
       // the ≤ options.buckets counter rows are collected once: journaled
       // from the driver, and summed into the totals below
-      val status = counters.withColumn("status", lit(Resume.StatusDone))
+      val status = counters.withColumn("status", lit(BucketPlan.StatusDone))
       val statusRows = status.collect().toSeq
       journal("task_status", local(statusRows, status.schema))
       // digests are journaled LAST, from the driver: a crash before this
@@ -348,6 +250,52 @@ final class DiffRunner(
 }
 
 object DiffRunner {
+
+  /** A job's `job_summary` row: its params and start metadata
+    * (JobMetadataDb.java:496-544; the reference's by-date, by-cluster
+    * and by-keyspace index tables become filters over these columns).
+    * `table_specs` holds each table's column roles, so a re-run rebuilds
+    * the stored specs without trusting the resubmitted config (the
+    * reference stores table names and refetches roles from cluster
+    * metadata, TableSpec.java:71-89; file sources have no metadata
+    * service). The journal adds `job_id` and `run_ts`.
+    */
+  private val SummarySchema = StructType.fromDDL(
+    "source_cluster STRING, target_cluster STRING, keyspaces ARRAY<STRING>, " +
+      "buckets INT, disallowed_tokens ARRAY<BIGINT>, specific_tokens ARRAY<BIGINT>, " +
+      "sampling_num INT, sampling_den INT, reverse_read_probability DOUBLE, " +
+      "partitioner STRING, start_time STRING, table_specs ARRAY<STRUCT<" +
+      "table_name: STRING, pk: ARRAY<STRING>, clustering: ARRAY<STRING>, " +
+      "regular: ARRAY<STRING>, unique_key: BOOLEAN>>")
+
+  /** `config`'s [[SummarySchema]] row, started now. */
+  private def summary(config: DiffJobConfig, source: SourceProvider,
+      target: SourceProvider): Row = {
+    val o = config.options
+    Row(source.getClass.getSimpleName, target.getClass.getSimpleName,
+      config.tables.map(_.table), o.buckets, o.disallowedTokens, o.specificTokens,
+      o.samplingNum, o.samplingDen, o.reverseReadProbability, config.partitioner,
+      // fixed-width render: lexicographic order == chronological
+      // (Instant.toString varies fractional digits and breaks sorts)
+      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+        .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()),
+      config.tables.map(t => Row(t.table, t.pk, t.clustering, t.regular, t.uniqueKey)))
+  }
+
+  /** The options, tables and partitioner a `job_summary` row stores. */
+  private def params(r: Row): (DiffOptions, Seq[TableSpec], String) = {
+    def seq[T](row: Row, name: String): Seq[T] = row.getSeq[T](row.fieldIndex(name)).toSeq
+    (DiffOptions(
+      buckets = r.getAs[Int]("buckets"),
+      disallowedTokens = seq(r, "disallowed_tokens"),
+      specificTokens = seq(r, "specific_tokens"),
+      samplingNum = r.getAs[Int]("sampling_num"),
+      samplingDen = r.getAs[Int]("sampling_den"),
+      reverseReadProbability = r.getAs[Double]("reverse_read_probability")),
+      seq[Row](r, "table_specs").map(t => TableSpec(t.getAs[String]("table_name"),
+        seq(t, "pk"), seq(t, "clustering"), seq(t, "regular"), t.getAs[Boolean]("unique_key"))),
+      r.getAs[String]("partitioner"))
+  }
 
   /** `body` over every table on a pool this call creates and shuts down,
     * `min(tables, parallelism)` threads. The calling thread submits every

@@ -13,12 +13,12 @@ import graft.journal.MetadataStore
   * filter/group over one parquet dataset, and the "index tables"
   * (by-cluster / by-keyspace / by-date duplicates) are filters on
   * job_summary: pushed into the scan of a large journal, evaluated over
-  * the rows of a small one that the driver read.
+  * the rows of a small one that the driver read. Every per-job endpoint
+  * reads the job's own directory through `MetadataStore.latest`.
   */
 final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
 
-  // every read merges its files' footer schemas: a journal accumulates
-  // rows across engine versions, and the API serves them all
+  // the one read across jobs: every job's job_summary row
   private def summary: DataFrame = store.read("job_summary")
   // The reference journals mismatches as CQL UPSERTS with PRIMARY KEY
   // ((job_id, bucket), qualified_table_name, mismatching_token) —
@@ -50,7 +50,7 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     summary.orderBy(col("start_time").desc).limit(n)
 
   /** GET /jobs/{id} (DiffJobsResource.java:95-101). */
-  def job(jobId: String): DataFrame = summary.filter(col("job_id") === jobId)
+  def job(jobId: String): DataFrame = store.latest("job_summary", jobId, Nil)
 
   /** GET /jobs/{id}/results (DiffJobsResource.java:104-110). Journals are
     * append-only across resumes/re-runs; serve the newest row per table.
@@ -88,7 +88,7 @@ final class ResultsApi(store: MetadataStore)(implicit spark: SparkSession) {
     * newest run, as every run quarantines the table's rows again.
     */
   def jobErrors(jobId: String): DataFrame =
-    store.latestUnpartitioned("errors", jobId, Seq("table_name"))
+    store.latest("errors", jobId, Seq("table_name"))
 
   /** GET /jobs/{id}/errors/summary — error counts per table
     * (DBService.java:230-247).

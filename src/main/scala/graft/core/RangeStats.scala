@@ -3,8 +3,11 @@ package graft.core
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** The nine counters of the reference's `RangeStats`
-  * (spark-job/.../RangeStats.java:29-198). A table's stats are the sum
+/** The counters of the reference's `RangeStats`
+  * (spark-job/.../RangeStats.java:29-198): the seven summable
+  * [[RangeStats.Counters]] and the skipped count. The reference's
+  * error-partition counter has no field: quarantined rows are journaled
+  * to `errors` and served by the errors endpoints. A table's stats are the sum
   * of its per-bucket counter rows (`task_status`) and its skipped count,
   * merged by [[+]], the reference's `accumulate`
   * (RangeStats.java:157-178), once per table on the driver, as the
@@ -19,8 +22,7 @@ final case class RangeStats(
     matchedRows: Long = 0L,
     matchedValues: Long = 0L,
     mismatchedValues: Long = 0L,
-    skippedPartitions: Long = 0L,
-    errorPartitions: Long = 0L) {
+    skippedPartitions: Long = 0L) {
 
   /** The reference's `accumulate`: every counter summed. `RangeStats()`
     * is its identity.
@@ -30,7 +32,7 @@ final case class RangeStats(
 
   /** `table`'s `job_results` row, in [[RangeStats.RowSchema]]. */
   def toRow(table: String): Row =
-    Row.fromSeq(values.take(RangeStats.Counters.size + 1) :+ table)
+    Row.fromSeq(values :+ table)
 
   private def values: IndexedSeq[Long] =
     productIterator.map(_.asInstanceOf[Long]).toIndexedSeq
@@ -46,7 +48,7 @@ object RangeStats {
     "matched_rows", "matched_values", "mismatched_values")
 
   /** The column of each field, in field order. */
-  private val Columns = Counters ++ Seq("skipped_partitions", "error_partitions")
+  private val Columns = Counters :+ "skipped_partitions"
 
   /** A `job_results` row: the [[Counters]], the skipped count, the table. */
   val RowSchema: StructType = StructType(
@@ -68,5 +70,5 @@ object RangeStats {
     rows.foldLeft(RangeStats(skippedPartitions = skipped))(_ + fromRow(_))
 
   private def of(v: IndexedSeq[Long]): RangeStats =
-    RangeStats(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8))
+    RangeStats(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7))
 }

@@ -5,7 +5,6 @@ import scala.collection.immutable.SortedMap
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
 import graft.core.{RangeStats, TableSpec}
-import graft.journal.Resume
 
 /** Which buckets of one table a diff compares. The reference decides each
   * range's fate in one place (RangeComparator, SURVEY O12/O13); here
@@ -52,15 +51,19 @@ final case class BucketPlan(skip: Set[Long], retired: Seq[Long],
 
 object BucketPlan {
 
+  /** The `task_status` status of a journaled bucket: every row the runner
+    * journals is a whole bucket, so there is no in-progress watermark.
+    */
+  val StatusDone = "done"
+
   /** Every bucket compared: nothing skipped, retired or credited. */
   val All: BucketPlan = BucketPlan(Set.empty, Nil, Nil, Nil, None)
 
   /** The plan of one table. With `priorDigests` (incremental mode) the
     * skip set is the buckets present in both runs with every
     * [[DiffEngine.DigestCols]] field null-safe equal; otherwise it is O12
-    * resume, the buckets whose prior status is `done` (`rerun` re-compares
-    * them, Differ.java:166-171; the runner journals only `done` rows, so
-    * there is no in-progress watermark). A retired bucket has no
+    * resume, the buckets whose prior status is [[StatusDone]] (`rerun`
+    * re-compares them, Differ.java:166-171). A retired bucket has no
     * partitionStats rows, so its stale counters would replay forever: it
     * journals zero counters and a tombstone digest, which never equals a
     * current digest (a bucket whose rows come back is re-diffed) and is
@@ -82,7 +85,7 @@ object BucketPlan {
           .contains(digestOf(digests(b))))
       else if (rerun) Set.empty
       else priorStatus.keySet.filter(
-        priorStatus(_).getAs[String]("status") == Resume.StatusDone)
+        priorStatus(_).getAs[String]("status") == StatusDone)
     val retired = prior.keySet.filter(b => !digests.contains(b) &&
       digestOf(prior(b)).exists(_ != null)).toSeq.sorted
     val (clean, dirty) =

@@ -93,7 +93,8 @@ object OracleSql {
        |)""".stripMargin
   }
 
-  /** Full RangeStats oracle (O8) — one row, nine counters.
+  /** Full RangeStats oracle (O8) — one row: the seven counters and the
+    * skipped count.
     * `skippedSql` supplies the skipped-partition count subquery (defaults
     * to 0 when no token filters are active).
     */

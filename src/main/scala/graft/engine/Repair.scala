@@ -107,14 +107,15 @@ object Repair {
 
   /** The repair script for one table pair. Output: primary-key columns,
     * `action` ∈ {INSERT, UPDATE, DELETE}, `statement` (terminated CQL).
-    * Matched rows produce nothing.
+    * Matched rows produce nothing; a cell within its column's ε in
+    * `tolerances` is matched, as the diff counts it.
     */
-  def repairStatements(src: DataFrame, tgt: DataFrame,
-      spec0: TableSpec): DataFrame = {
+  def repairStatements(src: DataFrame, tgt: DataFrame, spec0: TableSpec,
+      tolerances: Map[String, Double] = Map.empty): DataFrame = {
     val spec = spec0.bind(src)
     val types: Map[String, DataType] =
       src.schema.fields.map(f => f.name -> f.dataType).toMap
-    val rl = DiffEngine.rowLevel(src, tgt, spec)
+    val rl = DiffEngine.rowLevel(src, tgt, spec, tolerances = tolerances)
 
     val whereClause = concat_ws(" AND ",
       spec.primaryKey.map(k =>

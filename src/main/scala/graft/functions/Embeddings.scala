@@ -81,7 +81,8 @@ object Embeddings {
   // argmin tie-break, and every distance are bit-reproducible
   // cross-engine — same pattern as ann_ivf_fixed: literal codebook =
   // full mechanics oracle-checked; per-subspace k-means training slots
-  // in upstream exactly like [[Similarity.trainCentroids]].
+  // in upstream exactly like [[Similarity.trainCentroids]]. The encode
+  // and distance kernels over this codebook are [[IvfPq]]'s.
 
   val PqM = 8; val PqKsub = 8; val PqDsub = 8
 
@@ -93,49 +94,6 @@ object Embeddings {
   def pqCodebook: Array[Array[Array[Int]]] =
     Array.tabulate(PqM, PqKsub, PqDsub)((m, c, d) =>
       Similarity.planeSign(1000 + m * PqKsub + c, d).toInt * 48)
-
-  /** Fixed-grid integer quantization of element `i` (0-based):
-    * clamp(floor(v·64 + 0.5), ±127) — the common grid PQ distances are
-    * computed on (explicit half-up floor, the cross-engine idiom).
-    */
-  private def q64(vec: Column, i: Int): Column =
-    least(greatest(floor(element_at(vec, i + 1).cast("double") * 64 + lit(0.5)),
-      lit(-127L)), lit(127L))
-
-  private def subDistAt(at: Int => Column, m: Int, c: Int): Column = {
-    val cb = pqCodebook
-    (0 until PqDsub).map { d =>
-      val diff = at(m * PqDsub + d) - lit(cb(m)(c)(d).toLong)
-      diff * diff
-    }.reduce(_ + _)
-  }
-
-  /** PQ codes over an arbitrary integer element accessor (0-based): per
-    * subspace the 1-based index of the nearest codeword (first index on
-    * ties) — an array<long> of length [[PqM]], the only payload the
-    * corpus ships at search time. Unrolled integer expressions — no
-    * lambdas on the encode path. The accessor form lets IVF+PQ encode
-    * RESIDUALS (grid value minus the assigned coarse centroid) with the
-    * same machinery.
-    */
-  def pqEncodeAt(at: Int => Column): Column = array(pqEncodeColsAt(at): _*)
-
-  /** The per-subspace code columns of [[pqEncodeAt]], one Column per
-    * subspace. Materialize these as SEPARATE projection columns (then
-    * `array` the column refs) when the accessor is non-trivial: codegen
-    * splits a projection's expression LIST into one method per
-    * expression, but cannot split inside a single CreateArray tree — a
-    * monolithic 8-subspace encode exceeds the JVM's 64 KB method limit
-    * under ANSI's overflow-checked arithmetic and drops the stage to
-    * interpreted eval.
-    */
-  def pqEncodeColsAt(at: Int => Column): Seq[Column] =
-    (0 until PqM).map { m =>
-      val dists = array((0 until PqKsub).map(c => subDistAt(at, m, c)): _*)
-      array_position(dists, array_min(dists))
-    }
-
-  def pqEncode(vec: Column): Column = pqEncodeAt(i => q64(vec, i))
 
   /** Signed Johnson–Lindenstrauss random projection: out dim d is
     * `Σ_i sign(d, i) · q(vec, i)`, q the ×64 grid value of element i,

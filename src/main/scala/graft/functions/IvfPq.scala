@@ -8,11 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Native kernels for the fixed-codebook IVF+PQ mechanics — the same
-  * integer arithmetic as the declarative `Embeddings.pqEncodeColsAt` /
-  * PQ-distance / grid-score expression chains, value-identical (the
-  * DuckDB oracles are unchanged), but each stage is ONE expression node
-  * instead of a 64–1024-term tree.
+/** Native kernels for the fixed-codebook IVF+PQ mechanics — the integer
+  * arithmetic of the unrolled PQ-encode / PQ-distance / grid-score
+  * expressions the DuckDB oracles of `VectorQueries` spell out,
+  * value-identical, but each stage is ONE expression node instead of a
+  * 64–1024-term tree.
   *
   * Why: profiling ann_ivfpq_fixed (r13's #3 honest-tail cost, 3.6 s)
   * showed its Spark JOBS total ~0.4 s — the rest was DRIVER-side
@@ -28,8 +28,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
 object IvfPq {
 
   /** ×64 fixed-grid quantization of a float/double vector:
-    * clamp(floor(v·64 + 0.5), ±127) per element — the kernel form of
-    * the `Embeddings` PQ quantizer applied to every element.
+    * clamp(floor(v·64 + 0.5), ±127) per element — the grid
+    * [[Embeddings.pqCodebook]] is laid out on.
     */
   def gridQuant(vec: Column): Column =
     GraftColumnBridge.column(

@@ -22,20 +22,21 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * partitioned parquet dataset and every "index" is a filter Spark pushes
   * down.
   *
-  * Layout (datasets but `job_summary`, `table_params` and `errors` are
-  * partitioned by `job_id`):
-  *   <root>/job_summary/     job params + start metadata (job_summary +
-  *                           job_start_index tables, JobMetadataDb.java:496-544)
-  *   <root>/table_params/    per-table column roles, so a re-run rebuilds
-  *                           the stored table specs
+  * Layout: every dataset is partitioned by `job_id`, so a job's rows are
+  * its `job_id=<id>` directory, and every row carries the `run_ts` of the
+  * run that journaled it:
+  *   <root>/job_summary/     one row per job: its params, start metadata
+  *                           and, in `table_specs`, each table's column
+  *                           roles (job_summary + job_start_index tables,
+  *                           JobMetadataDb.java:496-544)
   *   <root>/task_status/     per (table, bucket) progress: running stats +
   *                           last_token watermark (job_status,
   *                           JobMetadataDb.java:546-570; checkpoint
   *                           RangeComparator.java:231-241)
   *   <root>/mismatches/      one row per mismatched partition
   *                           (JobMetadataDb.java:572-585)
-  *   <root>/errors/          per-partition error detail, newest run per
-  *                           table served (JobMetadataDb.java:587-607)
+  *   <root>/errors/          per-partition error detail
+  *                           (JobMetadataDb.java:587-607)
   *   <root>/job_results/     final per-table RangeStats
   *                           (JobMetadataDb.java:609-617)
   *   <root>/bucket_digests/  per-bucket side digests of incremental runs
@@ -43,6 +44,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *   <root>/reverse_checks/  reverse-read verdict disagreements
   *   <root>/running_jobs/<escaped job_id>.lock   the concurrency lock
   *                           (O21), holding its owner
+  *
+  * There are two reads: [[latest]], every per-job read, and [[read]], the
+  * one read across jobs (the `job_summary` listings).
   *
   * Reads run no Spark job to learn a schema: a read lists the dataset's
   * visible parquet files and merges their footer schemas on the driver.
@@ -56,10 +60,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 final class MetadataStore(val root: String,
     retry: RetryPolicy = RetryPolicy.NoRetry)(implicit spark: SparkSession) {
+  import MetadataStore.JobCol
 
   private def path(table: String): String = s"$root/$table"
 
-  /** Append `df` to the journal dataset `table` in one pass over `df`.
+  /** Append `df` to the journal dataset `table` in one pass over `df`,
+    * partitioned by `job_id` unless `partitionBy` says otherwise.
     * A dynamic-partition write of an EMPTY frame emits no files at all,
     * leaving a directory spark.read cannot infer a schema from (the
     * healthy outcomes — clean diff ⇒ empty mismatches, agreeing reverse
@@ -69,7 +75,8 @@ final class MetadataStore(val root: String,
     * later real appends are unaffected); `read` falls back to it when the
     * dataset holds no data files.
     */
-  def write(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit =
+  def write(table: String, df: DataFrame,
+      partitionBy: Seq[String] = Seq("job_id")): Unit =
     if (appendAtomic(table, df, partitionBy) == 0) writeSchemaMarker(table, df)
 
   /** Concurrent writers of the same empty dataset each stage the marker
@@ -127,7 +134,7 @@ final class MetadataStore(val root: String,
     * number of parquet part files published.
     *
     * Rows the driver already holds (the optimized plan is a local
-    * relation: job summaries, table params, task status, job results)
+    * relation: job summaries, task status, job results)
     * are written on the driver, in the layout Spark's writer gives one
     * task's rows; every other frame goes through a Spark write job.
     */
@@ -144,14 +151,6 @@ final class MetadataStore(val root: String,
           (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
             .parquet(staging.toString)
       }
-    }
-    // an unpartitioned append of no rows still stages one zero-row file;
-    // like an empty partitioned append it publishes none, and `write`
-    // records the schema marker instead
-    if (partitionBy.isEmpty && footers(dataFiles(staging))
-        .forall(_.getParquetMetadata.getBlocks.asScala.forall(_.getRowCount == 0))) {
-      deleteRecursively(staging)
-      return 0
     }
     // the publish is retried too, and is naturally resumable: each moved
     // file leaves the staging tree, so a re-attempt only moves the
@@ -196,22 +195,26 @@ final class MetadataStore(val root: String,
     all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
   }
 
-  /** Every row of the dataset `table`. Its visible parquet files are
-    * listed once and their footer schemas merged on the driver (the
-    * schema `mergeSchema = true` infers, so rows journaled by an older
-    * engine version with fewer columns read as nulls), and the dataset is
-    * read with that schema: no read runs a schema-inference job. A
-    * dataset whose appends were all empty reads as its `_schema` marker,
-    * through the marker's own footer.
+  /** Every row of the dataset `table`, across jobs. Its visible parquet
+    * files are listed once and their footer schemas merged on the driver,
+    * and the dataset is read with that schema: no read runs a
+    * schema-inference job. In a dataset partitioned by `job_id` (every
+    * journal dataset), `job_id` is a string, as [[latest]] types it,
+    * whatever Spark would infer from its directory names ("007" stays
+    * "007"). A dataset whose appends were all empty reads as its
+    * `_schema` marker, through the marker's own footer.
     */
   def read(table: String): DataFrame = {
     val base = Paths.get(path(table))
     val files = dataFiles(base)
     val marker = base.resolve("_schema")
-    val (dir, read) =
-      if (files.isEmpty && Files.exists(marker)) (marker, dataFiles(marker))
-      else (base, files)
-    load(dir, read, footers(read))
+    if (files.isEmpty && Files.exists(marker)) {
+      val markerFiles = dataFiles(marker)
+      load(marker, markerFiles, footers(markerFiles))
+    } else {
+      val byJob = files.exists(_.getPath.getParent.getName.startsWith("job_id="))
+      load(base, files, footers(files), if (byJob) Seq(JobCol) else Nil)
+    }
   }
 
   /** [[read]]: every read merges its files' footer schemas, so the flag
@@ -265,11 +268,10 @@ final class MetadataStore(val root: String,
     val base = Paths.get(path(dataset))
     val dir = base.resolve(
       ExternalCatalogUtils.getPartitionPathString("job_id", jobId))
-    val jobCol = StructField("job_id", StringType)
     val files = dataFiles(dir)
     val parts = footers(files)
     if (parts.nonEmpty)
-      (load(dir, files, parts, Seq(jobCol), Map("basePath" -> base.toString)),
+      (load(dir, files, parts, Seq(JobCol), Map("basePath" -> base.toString)),
         GraftParquetBridge.singleValue(parts, "run_ts"))
     else {
       val newest = dataFiles(base) match {
@@ -278,7 +280,7 @@ final class MetadataStore(val root: String,
       }
       val empty = GraftParquetBridge.footerSchema(spark, footers(newest)) match {
         case Some(s) => spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          StructType(s.filterNot(_.name == jobCol.name) :+ jobCol))
+          StructType(s.filterNot(_.name == JobCol.name) :+ JobCol))
         case None => load(base, Nil, Nil)
       }
       (empty, true)
@@ -308,27 +310,11 @@ final class MetadataStore(val root: String,
   def latest(dataset: String, jobId: String, keys: Seq[String]): DataFrame =
     readJob(dataset, jobId) match {
       case (rows, true) => rows
-      case (rows, false) => newestRun(rows, keys)
+      case (rows, false) =>
+        val w = Window.partitionBy(keys.map(col): _*).orderBy(col("run_ts").desc_nulls_last)
+        rows.withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
+          .drop("__rank")
     }
-
-  /** [[latest]] over a dataset that is not partitioned by `job_id`
-    * (`errors`): the dataset is read whole and filtered to `jobId`. A
-    * dataset journaled before its rows were stamped has no `run_ts`
-    * column, and its job's rows are served as they are.
-    */
-  def latestUnpartitioned(dataset: String, jobId: String,
-      keys: Seq[String]): DataFrame = {
-    val rows = read(dataset).filter(col("job_id") === jobId)
-    if (rows.columns.contains("run_ts")) newestRun(rows, keys) else rows
-  }
-
-  /** Each key's newest run; a null `run_ts` loses to any stamped row. */
-  private def newestRun(rows: DataFrame, keys: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(coalesce(col("run_ts"), lit(0L)).desc)
-    rows.withColumn("__rank", dense_rank().over(w)).filter(col("__rank") === 1)
-      .drop("__rank")
-  }
 
   /** O21: the `running_jobs` LWT lock (`INSERT ... IF NOT EXISTS`,
     * JobMetadataDb.java:359-376) emulated with an atomic file create.
@@ -361,6 +347,9 @@ final class MetadataStore(val root: String,
 
 object MetadataStore {
   private val LockSuffix = ".lock"
+
+  /** The partition column of every dataset, read as a string. */
+  private val JobCol = StructField("job_id", StringType)
 
   /** The most rows a journal read decodes on the driver. The driver
     * decodes every column of every row, one row at a time, and a window

@@ -1,11 +1,12 @@
 package graft.queries
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.DiffOptions
-import graft.engine.{DiffEngine, OracleSql, Perturb, Tables}
-import graft.journal.Resume
+import graft.engine.{BucketPlan, DiffEngine, OracleSql, Perturb, Tables}
 import graft.sources.{ParquetSource, SchemaOps}
 
 /** Job-control operator queries: token filters (O9), sampling (O10),
@@ -42,18 +43,10 @@ object OpsQueries {
           ordersSpec, idTok)
     }
 
-  /** journal fixture for the resume query: buckets 0-5 done, 6-7
-    * in-progress with watermarks, 8-15 untouched.
+  /** task_status fixture for the resume query: buckets 0-5 done, 6-15
+    * untouched.
     */
-  private val journalFixture: Seq[(Long, String, Option[Long])] =
-    (0L to 5L).map(b => (b, Resume.StatusDone, None: Option[Long])) ++
-      Seq((6L, Resume.StatusInProgress, Some(3000L)),
-        (7L, Resume.StatusInProgress, Some(6000L)))
-
-  /** The journal fixture as the rows of a DuckDB VALUES list. */
-  private val journalValues = journalFixture
-    .map { case (b, st, lt) => s"($b, '$st', ${lt.map(_.toString).getOrElse("NULL")})" }
-    .mkString(", ")
+  private val doneBuckets: Seq[Long] = 0L to 5L
 
   /** DuckDB side of a key filter: each side's rows whose key passes
     * `keep`, and the skipped-partitions counter of the keys `drop` names.
@@ -83,13 +76,15 @@ object OpsQueries {
         lineitemSpec, DiffOptions(samplingNum = 3, samplingDen = 10), idTok),
       oracle = OracleSql.rangeStats(lineitemSpec, keptSrc("l_orderkey % 10 < 3"),
         keptTgt("l_orderkey % 10 < 3"), skippedSql("l_orderkey % 10 >= 3"))),
-    // O12: resume — pending work per bucket given a task_status journal
+    // O12: resume — pending work per bucket given a task_status journal,
+    // by the runner's own rule: BucketPlan.decide, then its restriction
     Query("diff_resume", (s, dir) => {
       import s.implicits._
       val scan = DiffEngine.keyScan(li(s, dir), lineitemSpec, idTok)
       val keys = scan.withColumn("bucket", DiffEngine.bucketOf(scan, col("token"), 16))
-      val journal = journalFixture.toDF("bucket", "status", "last_token")
-      Resume.pending(keys, journal)
+      val plan = BucketPlan.decide(SortedMap.empty, priorStatus = BucketPlan.byBucket(
+        doneBuckets.map(b => (b, BucketPlan.StatusDone)).toDF("bucket", "status")))
+      plan.restrict(keys, lineitemSpec, 16, idTok)
         .groupBy("bucket").agg(count(lit(1)).as("n_pending"),
           min(col("token")).as("min_token"))
     },
@@ -98,11 +93,11 @@ object OpsQueries {
          |         CAST(l_orderkey % 16 AS BIGINT) AS bucket
          |  FROM lineitem
          |),
-         |j AS (SELECT * FROM (VALUES $journalValues) AS t(bucket, status, last_token)),
+         |j AS (SELECT * FROM (VALUES ${doneBuckets.map(b => s"($b, 'done')").mkString(", ")})
+         |  AS t(bucket, status)),
          |p AS (
          |  SELECT k.* FROM keys k LEFT JOIN j ON k.bucket = j.bucket
          |  WHERE j.status IS NULL
-         |     OR (j.status = 'in_progress' AND (j.last_token IS NULL OR k.token > j.last_token))
          |)
          |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pending,
          |       CAST(MIN(token) AS BIGINT) AS min_token

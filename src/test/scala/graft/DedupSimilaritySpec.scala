@@ -1180,8 +1180,8 @@ class DedupSimilaritySpec extends SparkSpec {
   test("PQ: codes in range, self-reconstruction is subspace-optimal, recall measured") {
     import graft.functions.Embeddings
     val e = Tables.load(spark, Sf, "embeddings")
-    val codes = e.select(col("vec_id"),
-      Embeddings.pqEncode(col("embedding")).as("codes"))
+    val codes = e.select(col("vec_id"), graft.functions.IvfPq.pqEncode(
+      graft.functions.IvfPq.gridQuant(col("embedding"))).as("codes"))
     // every code is a valid 1-based codeword index
     val bad = codes.filter(exists(col("codes"),
       c => c < 1 || c > Embeddings.PqKsub)).count()

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
@@ -10,8 +13,8 @@ import org.apache.spark.sql.functions._
 
 import graft.api.{DiffJobConfig, DiffRunner, ResultsApi}
 import graft.core.{DiffOptions, RangeStats}
-import graft.engine.{DiffEngine, Perturb}
-import graft.journal.{MetadataStore, Resume}
+import graft.engine.{BucketPlan, DiffEngine, Perturb}
+import graft.journal.MetadataStore
 import graft.sources.{ParquetSource, SchemaOps, SourceProvider}
 
 class JournalApiSpec extends SparkSpec with NoLeakedPersists {
@@ -69,8 +72,9 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     assert(new java.io.File(root, "running_jobs").list().toSet ===
       Set("job1.lock", "a%2Fb.lock", "..%2Fx.lock"))
     assert(new java.io.File(root).list().toSet === Set("running_jobs"))
-    store.write("job_summary", Seq("job1", "a/b", "../x", "idle").toDF("job_id"))
-    assert(new ResultsApi(store).runningJobs().as[String].collect().toSet ===
+    store.write("job_summary", Seq("job1", "a/b", "../x", "idle")
+      .map((_, "2024-01-01T00:00:00.000Z")).toDF("job_id", "start_time"))
+    assert(new ResultsApi(store).runningJobs().select("job_id").as[String].collect().toSet ===
       Set("job1", "a/b", "../x"))
     // the lock names its owner
     val owner = store.runLockOwner("a/b").get
@@ -110,17 +114,17 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     implicit val s: SparkSession = spark
     // a job id that needs partition-path escaping
     val id = "job/1 :x%=y"
-    val params = Seq(
-      (id, "t1", Seq("a", "b"), Seq.empty[String], Seq("c"), true, 7L),
-      (id, "t2", Seq("k"), Seq("c1", "c2"), Seq.empty[String], false, 7L))
-      .toDF("job_id", "table_name", "pk", "clustering", "regular",
-        "unique_key", "run_ts")
+    // arrays of structs, as job_summary's table_specs
+    val specs = Seq(
+      (id, "t1", Seq(("a", Seq("b", "c"), true)), 7L),
+      (id, "t2", Seq(("k", Seq.empty[String], false), ("k2", Seq("c1"), true)), 7L))
+      .toDF("job_id", "table_name", "table_specs", "run_ts")
     val summary = Seq(
       (id, "t1", 4, 0.25, Option(3), Option.empty[Double], 7L),
       (id, "t2", 16, 1.0, None, Some(-0.5), 7L))
       .toDF("job_id", "table_name", "buckets", "reverse_read_probability",
         "sampling_num", "ratio", "run_ts")
-    for ((t, df) <- Seq("table_params" -> params, "job_summary" -> summary);
+    for ((t, df) <- Seq("specs" -> specs, "job_summary" -> summary);
         partitionBy <- Seq(Nil, Seq("job_id"))) {
       val driver = new MetadataStore(tempDir("graft-meta"))
       val sparkWritten = new MetadataStore(tempDir("graft-meta"))
@@ -152,15 +156,16 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     }
   }
 
-  test("resume: done buckets skipped, in-progress watermarked, rerun ignores journal") {
-    val work = (0L to 9L).map(t => (t, t % 2)).toDF("token", "bucket")
-    val journal = Seq(
-      (0L, Resume.StatusDone, Option.empty[Long]),
-      (1L, Resume.StatusInProgress, Some(5L))).toDF("bucket", "status", "last_token")
-    val pending = Resume.pending(work, journal).as[(Long, Long)].collect().toSet
-    // bucket 0 done -> gone; bucket 1 keeps tokens > 5
-    assert(pending === Set((7L, 1L), (9L, 1L)))
-    assert(Resume.pending(work, journal, rerun = true).count() === 10)
+  test("resume: done buckets skipped, rerun ignores journal") {
+    val work = (0L to 9L).toDF("k")
+    val done = BucketPlan.byBucket(Seq((0L, BucketPlan.StatusDone)).toDF("bucket", "status"))
+    def pending(rerun: Boolean): Set[Long] =
+      BucketPlan.decide(SortedMap.empty, priorStatus = done, rerun = rerun)
+        .restrict(work, graft.core.TableSpec("t", Seq("k")), 2, DiffEngine.identityToken)
+        .as[Long].collect().toSet
+    // bucket 0 done -> its keys are gone
+    assert(pending(rerun = false) === Set(1L, 3L, 5L, 7L, 9L))
+    assert(pending(rerun = true) === (0L to 9L).toSet)
   }
 
   test("DiffRunner end-to-end: journals stats, mismatches and results; hooks fire") {
@@ -411,15 +416,21 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     val first = new DiffRunner(src, src,
       DiffJobConfig("params-full", Seq(Perturb.ordersSpec),
         DiffOptions(buckets = 4), metadataRoot = root)).run()("orders")
-    // re-run with conflicting sampling + token filters + an extra table:
-    // the stored params must win or the journal's semantics silently change
+    // re-run with conflicting sampling + token filters + reverse reads +
+    // partitioner + an extra table: the stored params must win or the
+    // journal's semantics silently change
     val rerun = new DiffRunner(src, src,
       DiffJobConfig("params-full", Seq(Perturb.ordersSpec, Perturb.lineitemSpec),
         DiffOptions(buckets = 99, samplingNum = 1, samplingDen = 1000,
-          disallowedTokens = Seq(1L, 2L, 3L)),
-        metadataRoot = root, rerun = true)).run()
+          disallowedTokens = Seq(1L, 2L, 3L), reverseReadProbability = 1.0),
+        metadataRoot = root, rerun = true, partitioner = "random")).run()
     assert(!rerun.contains("lineitem")) // table not in the stored job
     assert(rerun("orders") === first)   // same scope ⇒ identical stats
+    // no reverse-read pass, and xxhash64's bigint tokens
+    val store = new MetadataStore(root)
+    assert(!store.exists("reverse_checks"))
+    assert(store.latest("task_status", "params-full", Seq("table_name", "bucket"))
+      .schema("last_token").dataType.simpleString === "bigint")
   }
 
   test("re-run restores the FULL stored table set — omitted tables still diffed") {
@@ -431,7 +442,7 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         DiffOptions(buckets = 4), metadataRoot = root)).run()
     assert(first.keySet === Set("orders", "lineitem"))
     // a re-run submitted WITHOUT lineitem must still diff it: column roles
-    // are reconstructed from the table_params journal, so the stored set
+    // are reconstructed from the job_summary row's table_specs, so the stored set
     // wins outright (reference params immutability, JobMetadataDb.java:432-490)
     val rerun = new DiffRunner(src, src,
       DiffJobConfig("stored-set", Seq(Perturb.ordersSpec),
@@ -445,14 +456,14 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     implicit val s: SparkSession = spark
     val root = tempDir("graft-meta")
     val store = new MetadataStore(root)
-    store.write("probe", Seq((1L, "a")).toDF("x", "y"))
+    store.write("probe", Seq((1L, "a")).toDF("x", "y"), partitionBy = Nil)
     // a crashed attempt's leftover `.staging-*` dir must never be read
     // back as journal rows (hidden dirs are outside Spark's file index)
     Seq((99L, "dead")).toDF("x", "y").write
       .parquet(java.nio.file.Paths.get(root, "probe", ".staging-dead").toString)
     assert(store.read("probe").count() === 1)
     // a second append lands NEXT TO the first (publish must not overwrite)
-    store.write("probe", Seq((2L, "b")).toDF("x", "y"))
+    store.write("probe", Seq((2L, "b")).toDF("x", "y"), partitionBy = Nil)
     assert(store.read("probe").as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b")))
     // partitioned appends keep their job_id directory layout through the
@@ -640,24 +651,6 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     new DiffRunner(src, src, DiffJobConfig("norepair", Seq(Perturb.ordersSpec),
       DiffOptions(buckets = 4), metadataRoot = root2)).run()
     assert(new ResultsApi(new MetadataStore(root2)).jobRepair("norepair").count() === 0)
-  }
-
-  test("param restore tolerates a job_summary written by an older schema") {
-    implicit val s: SparkSession = spark
-    val root = tempDir("graft-meta")
-    val store = new MetadataStore(root)
-    // an older engine version journaled fewer columns: restore must use
-    // what is stored (buckets=4) and fall back to config for the rest
-    store.write("job_summary",
-      Seq(("old-job", Seq("orders"), 4, "xxhash64", "2024-01-01T00:00:00.000Z"))
-        .toDF("job_id", "keyspaces", "buckets", "partitioner", "start_time"))
-    val src = ParquetSource(Sf)
-    val stats = new DiffRunner(src, src,
-      DiffJobConfig("old-job", Seq(Perturb.ordersSpec),
-        DiffOptions(buckets = 99), metadataRoot = root)).run()("orders")
-    assert(stats.matchedPartitions > 0)
-    assert(store.read("task_status").filter(col("job_id") === "old-job")
-      .select("bucket").distinct().count() === 4) // stored value wins
   }
 
   test("reverse-read validation pass journals verdict disagreements") {
@@ -1006,12 +999,13 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
         incremental = incremental, repair = true)).run()
     // bigint tokens: a job id that needs escaping, journaled by two
     // incremental runs (a clean target, then a dirty one), next to a job
-    // one run wrote and a job_summary row of an older schema with nulls
+    // one run wrote and a job_summary row of fewer columns, with nulls
     val root = tempDir("graft-meta")
     val (escaped, oneRun) = ("job/1 :x%=y", "one-run")
     new MetadataStore(root).write("job_summary",
-      Seq(("old-job", Seq("orders"), 4, Option.empty[Double], "2024-01-01T00:00:00.000Z"))
-        .toDF("job_id", "keyspaces", "buckets", "reverse_read_probability", "start_time"))
+      Seq(("old-job", Seq("orders"), 4, Option.empty[Double], "2024-01-01T00:00:00.000Z", 1L))
+        .toDF("job_id", "keyspaces", "buckets", "reverse_read_probability", "start_time",
+          "run_ts"))
     run(root, escaped, provider(withNullKey), incremental = true)
     run(root, escaped, dirty, incremental = true)
     run(root, oneRun, dirty)
@@ -1207,18 +1201,88 @@ class JournalApiSpec extends SparkSpec with NoLeakedPersists {
     run()
     assert(served === want)
     // a plain resumed re-run quarantines the rows again; each table's
-    // newest run is served, and a row journaled before rows were stamped
-    // loses to it
+    // newest run is served
     run()
-    val unstamped = Seq(("source", "null_pk_o_orderkey", Option.empty[Long], "∅",
-        "orders", "quarantined")).toDF("origin", "error", "token", "pk", "table_name", "job_id")
-    store.write("errors", unstamped)
-    assert(store.read("errors").filter(col("job_id") === "quarantined").count() === 5)
+    assert(store.read("errors").filter(col("job_id") === "quarantined").count() === 4)
     assert(served === want)
-    // a root whose errors were all journaled unstamped serves them as read
-    val old = new MetadataStore(tempDir("graft-meta"))
-    old.write("errors", unstamped)
-    assert(new ResultsApi(old).jobErrors("quarantined").count() === 1)
+  }
+
+  test("every journal dataset holds only job_id directories; ids read back as written") {
+    implicit val s: SparkSession = spark
+    val root = tempDir("graft-meta")
+    val src = ParquetSource(Sf)
+    def provider(f: DataFrame => DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = f(src.table(sp, name))
+      def listTables(sp: SparkSession): Seq[String] = src.listTables(sp)
+    }
+    // one null-key orders row: quarantined into `errors`
+    def withNullKey(df: DataFrame): DataFrame =
+      df.unionByName(df.limit(1).withColumn("o_orderkey", lit(null).cast("long")))
+    // a plain job, an incremental job with a repair script and a job that
+    // quarantines rows; Spark would infer "007" as the integer 7
+    val (plain, incremental, quarantined) = ("007", "job/1 :x%=y", "quarantined")
+    def run(id: String, side: DataFrame => DataFrame, incremental: Boolean = false): Unit =
+      new DiffRunner(provider(side), provider(df => side(Perturb.ordersTarget(df))),
+        DiffJobConfig(id, Seq(Perturb.ordersSpec),
+          DiffOptions(buckets = 4, reverseReadProbability = 1.0), metadataRoot = root,
+          incremental = incremental, repair = incremental)).run()
+    run(plain, identity)
+    run(incremental, identity, incremental = true)
+    run(quarantined, withNullKey)
+    val ids = Seq(plain, incremental, quarantined)
+    def dir(id: String) = ExternalCatalogUtils.getPartitionPathString("job_id", id)
+    def visible(t: String): Set[String] = new java.io.File(root, t).list()
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    val datasets = new java.io.File(root).list().toSet - "running_jobs"
+    assert(datasets === Set("job_summary", "task_status", "mismatches", "errors",
+      "job_results", "bucket_digests", "repair_scripts", "reverse_checks"))
+    for (t <- datasets) assert(visible(t).subsetOf(ids.map(dir).toSet), t)
+    for (t <- Seq("job_summary", "task_status", "mismatches", "job_results"))
+      assert(visible(t) === ids.map(dir).toSet, t)
+    assert(visible("errors") === Set(dir(quarantined)))
+    assert(visible("repair_scripts") === Set(dir(incremental)))
+    assert(visible("bucket_digests") === Set(dir(incremental)))
+    // job, recentJobs and runningJobs serve each id as the string it is,
+    // from the driver and from a Spark scan
+    val store = new MetadataStore(root)
+    val api = new ResultsApi(store)
+    ids.foreach(id => assert(store.acquireRunLock(id), id))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (threshold <- Seq(spark.conf.get(key), "-1")) {
+      val saved = spark.conf.get(key)
+      spark.conf.set(key, threshold)
+      try {
+        for (id <- ids)
+          assert(api.job(id).select("job_id").as[String].collect().toSeq === Seq(id), id)
+        assert(api.recentJobs().select("job_id").as[String].collect().toSet === ids.toSet)
+        val running = api.runningJobs().collect()
+        assert(running.map(_.getAs[String]("job_id")).toSet === ids.toSet)
+        // each lock joins its own job_summary row
+        assert(running.forall(_.getAs[String]("start_time") != null), threshold)
+      } finally spark.conf.set(key, saved)
+    }
+    ids.foreach(store.releaseRunLock)
+  }
+
+  test("repair=true honours per-column tolerances: a cell within its epsilon gets no UPDATE") {
+    implicit val s: SparkSession = spark
+    val spec = graft.core.TableSpec("t", Seq("pk"), Nil, Seq("v"))
+    def provider(df: DataFrame) = new SourceProvider {
+      def table(sp: SparkSession, name: String): DataFrame = df
+      def listTables(sp: SparkSession): Seq[String] = Seq("t")
+    }
+    // pk 1 is off by 0.05, inside the 0.1 tolerance; pk 2 by 0.5, outside it
+    val src = Seq((1L, 1.0), (2L, 2.0)).toDF("pk", "v")
+    val tgt = Seq((1L, 1.05), (2L, 2.5)).toDF("pk", "v")
+    val root = tempDir("graft-meta")
+    val stats = new DiffRunner(provider(src), provider(tgt), DiffJobConfig("tol-repair",
+      Seq(spec), DiffOptions(buckets = 4), metadataRoot = root, repair = true,
+      tolerances = Map("t" -> Map("v" -> 0.1)))).run()("t")
+    assert(stats.matchedPartitions === 1 && stats.mismatchedPartitions === 1)
+    val api = new ResultsApi(new MetadataStore(root))
+    assert(api.jobMismatches("tol-repair").count() === 1)
+    assert(api.jobRepair("tol-repair").select("action", "statement").as[(String, String)]
+      .collect().toSeq === Seq(("UPDATE", "UPDATE t SET v = 2.00 WHERE pk = 2;")))
   }
 
   test("a partitioned parquet source reads as spark.read.parquet, without a job") {

@@ -35,11 +35,15 @@ fi
 # its workload (dirty_full 16 and clean_digest 26 once reads learned
 # schemas and run counts from parquet footers, the driver wrote the rows
 # it holds and small journal reads were answered and counted on the
-# driver), so a new fixed per-job cost fails here. The oracle gate
+# driver), so a new fixed per-job cost fails here. Its journal may hold
+# at most MAX_FILES files (14 on both workloads once a job's params were one
+# job_summary row and every dataset was partitioned by job_id), so a
+# layout change that adds a file per job fails here too. The oracle gate
 # must check at least MIN_QUERIES queries, so a query record lost from
 # the registry, or a SPARK_GRAFT_ONLY selection, fails instead of
 # shrinking the gate
 MIN_QUERIES=243
+MAX_FILES=14
 for W in dirty_full clean_digest; do
   echo "== diff job end to end (perfbench $W smoke) =="
   MAX_JOBS=$([ "$W" = dirty_full ] && echo 16 || echo 26)
@@ -49,11 +53,12 @@ for W in dirty_full clean_digest; do
   python3 -c 'import json, sys
 r = json.loads(sys.argv[1])
 ok = r.get("correct") is True and r.get("failed") == 0
-jobs = r.get("metrics", {}).get("spark.jobs", {}).get("value")
-if jobs is None or jobs > int(sys.argv[2]):
-    print(f"spark.jobs {jobs} > {sys.argv[2]}")
-    ok = False
-sys.exit(0 if ok else 1)' "$LAST" "$MAX_JOBS"
+for metric, bound in (("spark.jobs", sys.argv[2]), ("journal.files", sys.argv[3])):
+    value = r.get("metrics", {}).get(metric, {}).get("value")
+    if value is None or value > int(bound):
+        print(f"{metric} {value} > {bound}")
+        ok = False
+sys.exit(0 if ok else 1)' "$LAST" "$MAX_JOBS" "$MAX_FILES"
 done
 
 echo "== verify vs duckdb oracle ($SF) =="
